@@ -1,6 +1,6 @@
 """Per-document annotation: the full P1→P2→P3/P4→N1→L1-L5→O1 chain.
 
-This is the black-box kernel the Spark ``mapInPandas`` stage applies per
+This is the black-box kernel the Spark ``mapInArrow`` stage applies per
 Arrow batch (SURVEY §3.1 lifecycle).  It is Spark-free so it can be
 golden-tested directly against the reference's documented semantics
 (reference entrypoint: medcat/cat.py:492-536 CAT.__call__ →

@@ -15,7 +15,7 @@ medcat/ner/vocab_based_annotator.py:13-65 exactly:
      (``len(name) >= upper_case_limit_len`` or single all-uppercase token);
      optional ``check_upper_case_names`` rejects lowercased acronyms.
 
-Runs inside ``mapInPandas`` batches against the broadcast
+Runs inside ``mapInArrow`` batches against the broadcast
 {name2cuis, snames, name_isupper} dictionaries (SURVEY §2.4): candidate
 generation is unbounded variable-length matching with skips, not
 expressible as a bounded relational join.

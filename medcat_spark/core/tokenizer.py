@@ -18,7 +18,7 @@ prefix/suffix/infix classes are all ``[^A-Za-z0-9@]``, which means
 The P2 tagger (medcat/preprocessing/taggers.py:37-52) flags
 ``is_punct`` / ``to_skip`` per token.
 
-These run inside Arrow-batched ``mapInPandas`` stages; keeping them as
+These run inside Arrow-batched ``mapInArrow`` stages; keeping them as
 plain functions over lists makes them unit-testable without Spark.
 """
 

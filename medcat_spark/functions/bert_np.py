@@ -30,6 +30,9 @@ from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 
+from medcat_spark.functions.scorer import (decide, pad_ids, predict_chunked,
+                                           score)
+
 _erf = np.frompyfunc(math.erf, 1, 1)
 
 
@@ -208,8 +211,8 @@ def chunked_pair_predict(model, input_ids, e1_e2_start,
     """Shared relation-pair prediction: chunk rows so attention
     temporaries stay inside ``_PAIR_TEMP_BYTES``, trim each chunk's
     columns to its real max length (padding is mask-invariant —
-    pytest ``test_padded_batch_equals_individual``), then softmax →
-    ``[(label, conf4dp), ...]``."""
+    pytest ``test_padded_batch_equals_individual``), then
+    :func:`scorer.decide` → ``[(label, conf4dp), ...]``."""
     ids = np.asarray(input_ids)
     B, L = ids.shape
     starts = np.asarray(e1_e2_start)
@@ -226,12 +229,8 @@ def chunked_pair_predict(model, input_ids, e1_e2_start,
         m = mask[ofs:end]
         real = np.flatnonzero(m.max(axis=0) > 0)
         Lc = int(real[-1]) + 1 if real.size else 1
-        lg = model.logits(ids[ofs:end, :Lc], starts[ofs:end], m[:, :Lc])
-        best = lg.argmax(axis=1)
-        e = np.exp(lg - lg.max(axis=1, keepdims=True))
-        conf = e[np.arange(len(lg)), best] / e.sum(axis=1)
-        out.extend((model.labels[i], round(float(c), 4))
-                   for i, c in zip(best, conf))
+        out.extend(decide(model.labels, model.logits(
+            ids[ofs:end, :Lc], starts[ofs:end], m[:, :Lc])))
         ofs = end
     return out
 
@@ -333,17 +332,10 @@ class BertMetaModel:
         return cls(enc, fc, labels, use_fc2=use_fc2, use_fc3=use_fc3, **kw)
 
     def forward_id_windows(self, id_windows, centers) -> np.ndarray:
-        B = len(id_windows)
-        L = max((len(w) for w in id_windows), default=1) or 1
-        ids = np.full((B, L), self.pad_id, dtype=np.int64)
-        mask = np.zeros((B, L))
-        V = self.encoder.word.shape[0]
-        for r, w in enumerate(id_windows):
-            for c, tid in enumerate(w):
-                ids[r, c] = tid if 0 <= tid < V else self.pad_id
-                mask[r, c] = 1.0
+        ids, mask = pad_ids(id_windows, self.pad_id, self.pad_id,
+                            self.encoder.word.shape[0])
         seq, pooled = self.encoder.forward(ids, mask)
-        x = np.empty((B, seq.shape[2]))
+        x = np.empty((len(id_windows), seq.shape[2]))
         for b, (cf, cl) in enumerate(centers):
             x[b] = seq[b, cf:cl + 1].max(axis=0)
         x = np.concatenate([x, pooled], axis=1)
@@ -358,17 +350,8 @@ class BertMetaModel:
         return x @ self.fc["fc4.weight"].T + self.fc["fc4.bias"]
 
     def predict_batch_ids(self, id_windows, centers):
-        out = []
-        for ofs in range(0, len(id_windows), self.MAX_FORWARD_BATCH):
-            lg = self.forward_id_windows(
-                id_windows[ofs:ofs + self.MAX_FORWARD_BATCH],
-                centers[ofs:ofs + self.MAX_FORWARD_BATCH])
-            best = lg.argmax(axis=1)
-            e = np.exp(lg - lg.max(axis=1, keepdims=True))
-            conf = e[np.arange(len(lg)), best] / e.sum(axis=1)
-            out.extend((self.labels[i], round(float(c), 4))
-                       for i, c in zip(best, conf))
-        return out
+        return predict_chunked(self.labels, self.forward_id_windows,
+                               self.MAX_FORWARD_BATCH, id_windows, centers)
 
 
 class BertTokenClassifier:
@@ -401,8 +384,8 @@ class BertTokenClassifier:
 
 
 # ---------------------------------------------------------------------------
-# Spark scorer: relation classification over candidate entity pairs
-# (reference rel_dataset.py:73-75 marked-sequence format
+# relation classification over candidate entity pairs (reference
+# rel_dataset.py:73-75 marked-sequence format
 # "..[s1] ent1 [e1]..[s2] ent2 [e2].."; e1_e2_start = positions of the
 # [s1]/[s2] marker tokens, config_rel_cat.py:54)
 
@@ -414,7 +397,7 @@ def mark_pair_sequence(ids, ra, rb, tag_ids, cntx_l: int, cntx_r: int,
     reference drops those relations).  ``ra``/``rb`` are the entities'
     (first, last) token indices; markers [s1]..[e1]/[s2]..[e2] are
     spliced around them, optional [CLS]/[SEP] framing.  Shared by the
-    inference scorer (:func:`_score_pairs_bert`) and the trainer
+    inference scorer (:mod:`scorer`, head ``rel_bert``) and the trainer
     (:mod:`bert_train`) so both see byte-identical inputs."""
     s1, e1m, s2, e2m = tag_ids
     off = 1 if cls_id is not None else 0
@@ -435,120 +418,10 @@ def mark_pair_sequence(ids, ra, rb, tag_ids, cntx_l: int, cntx_r: int,
     return seq, ra[0] - lo + off, rb[0] - lo + 2 + off
 
 
-def _score_pairs_bert(bc):
-    import pandas as pd
-
-    def fn(batches):
-        from bisect import bisect_right
-        model: "RelCatBertModel" = bc.value
-        tok = model.tokenizer
-        s1, e1m, s2, e2m = model.tag_ids
-        # loop-invariant model parameters (hoisted out of the pair loop)
-        cntx_l = getattr(model, "cntx_left", getattr(model, "cntx", 15))
-        cntx_r = getattr(model, "cntx_right", cntx_l)
-        win_chars = getattr(model, "window_size_chars", 300)
-        max_len = getattr(model, "max_seq_length", 512)
-        pos_tab = getattr(getattr(model, "encoder", None), "pos", None)
-        if pos_tab is not None:   # BERT position-table bound
-            max_len = min(max_len, pos_tab.shape[0])
-        # the reference rel tokenizer wrapper is built with
-        # add_special_tokens=True (utils/relation_extraction/
-        # tokenizer.py:89): [CLS] ... [SEP] framing when the vocab
-        # defines them (RoBERTa-style <s>/</s> accepted too); packs
-        # whose vocab lacks special tokens keep the bare sequence
-        vocab = getattr(tok, "vocab", None) or {}
-        cls_id = sep_id = None
-        for c_t, s_t in (("[CLS]", "[SEP]"), ("<s>", "</s>")):
-            if c_t in vocab and s_t in vocab:
-                cls_id, sep_id = vocab[c_t], vocab[s_t]
-                break
-        for pdf in batches:
-            meta: List[tuple] = []
-            seqs: List[List[int]] = []
-            starts: List[Tuple[int, int]] = []
-            for row in pdf.itertuples(index=False):
-                ids, spans = tok.encode_with_offsets(row.text or "")
-                if not ids:
-                    continue
-                tok_starts = [s for s, _e in spans]
-
-                def tok_range(start: int, end: int):
-                    cf = bisect_right(tok_starts, start) - 1
-                    if cf < 0 or spans[cf][1] <= start:
-                        return None
-                    cl = max(cf, bisect_right(tok_starts, end - 1) - 1)
-                    return cf, cl
-                ents = sorted(
-                    ({"start": int(x["start"]),
-                      "end": int(x.get("end") or x["start"] + 1),
-                      "cui": x["cui"]} for x in row.ents),
-                    key=lambda x: (x["start"], x["cui"]))
-                doc_text = row.text or ""
-                for i, a in enumerate(ents):
-                    for b in ents[i + 1:]:
-                        # reference bound: CHAR distance between entity
-                        # start positions (rel_dataset.py:216); ents are
-                        # start-sorted so later b's only get farther
-                        if b["start"] - a["start"] > win_chars:
-                            break
-                        # reference also requires DIFFERENT surface text
-                        # (rel_dataset.py:217 ent1_token != ent2_token)
-                        if doc_text[a["start"]:a["end"]] == \
-                                doc_text[b["start"]:b["end"]]:
-                            continue
-                        ra = tok_range(a["start"], a["end"])
-                        rb = tok_range(b["start"], b["end"])
-                        if ra is None or rb is None or rb[0] <= ra[1]:
-                            continue
-                        res = mark_pair_sequence(
-                            ids, ra, rb, (s1, e1m, s2, e2m), cntx_l,
-                            cntx_r, max_len, cls_id, sep_id)
-                        if res is None:
-                            continue
-                        seq, p1, p2 = res
-                        meta.append((str(row.doc_id), a["start"], b["start"],
-                                     a["cui"], b["cui"]))
-                        seqs.append(seq)
-                        starts.append((p1, p2))
-            if not meta:
-                continue
-            B = len(seqs)
-            L = max(len(s) for s in seqs)
-            ids_arr = np.zeros((B, L), dtype=np.int64)
-            mask = np.zeros((B, L))
-            for r, s in enumerate(seqs):
-                ids_arr[r, :len(s)] = s
-                mask[r, :len(s)] = 1.0
-            preds = model.predict(ids_arr, np.asarray(starts), mask)
-            yield pd.DataFrame({
-                "doc_id": [m[0] for m in meta],
-                "start1": [m[1] for m in meta],
-                "start2": [m[2] for m in meta],
-                "ent1_cui": [m[3] for m in meta],
-                "ent2_cui": [m[4] for m in meta],
-                "relation": [p[0] for p in preds],
-                "confidence": [p[1] for p in preds]})
-    return fn
-
-
 def relations_bert(ann, docs, bc, text_col: str = "text"):
     """Relation rows from the REAL BERT pair classifier (broadcast
     weights, one tokenize per doc, Arrow-batched padded forward)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (DoubleType, IntegerType, StringType,
-                                   StructField, StructType)
-    schema = StructType([
-        StructField("doc_id", StringType()),
-        StructField("start1", IntegerType()),
-        StructField("start2", IntegerType()),
-        StructField("ent1_cui", StringType()),
-        StructField("ent2_cui", StringType()),
-        StructField("relation", StringType()),
-        StructField("confidence", DoubleType()),
-    ])
-    from medcat_spark.functions.meta_model import docs_with_ents
-    return (docs_with_ents(ann, docs, text_col)
-            .mapInPandas(_score_pairs_bert(bc), schema=schema))
+    return score(ann, docs, bc, "rel_bert", text_col)
 
 
 def relcat_bert_fixture_model():

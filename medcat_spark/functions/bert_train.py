@@ -45,6 +45,7 @@ from medcat_spark.functions.bert_np import (BertEncoder, BertLayer,
                                             RelCatBertModel, _erf, gelu)
 from medcat_spark.functions.lstm_train import (_clip_total_norm, _f1_report,
                                                class_weights_balanced)
+from medcat_spark.functions.scorer import pad_ids
 
 # sample = (marked token ids, (p1, p2) marker starts, label id)
 Sample = Tuple[List[int], Tuple[int, int], int]
@@ -230,16 +231,9 @@ def relcat_forward_backward(model: RelCatBertModel, batch: Sequence[Sample],
     """Weighted-CE loss + gradients for the full RelCAT model over one
     minibatch of marked sequences.  Returns (loss, grads, logits)."""
     B = len(batch)
-    L = max(len(s[0]) for s in batch)
-    ids = np.zeros((B, L), dtype=np.int64)
-    mask = np.zeros((B, L))
-    starts = np.zeros((B, 2), dtype=np.int64)
-    y = np.empty(B, dtype=np.int64)
-    for r, (w, (p1, p2), lbl) in enumerate(batch):
-        ids[r, :len(w)] = w
-        mask[r, :len(w)] = 1.0
-        starts[r] = (p1, p2)
-        y[r] = lbl
+    ids, mask = pad_ids([w for w, _, _ in batch])
+    starts = np.array([p for _, p, _ in batch], dtype=np.int64)
+    y = np.array([lbl for _, _, lbl in batch], dtype=np.int64)
     seq, pooled, cache = encoder_forward_cache(model.encoder, ids, mask)
     H = seq.shape[2]
     tags = getattr(model, "tag_ids", None)
@@ -488,31 +482,16 @@ def mct_relation_samples(spark, mct_path: str, model: RelCatBertModel,
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import json as _json
-        from bisect import bisect_right
+        from medcat_spark.functions.scorer import TokenIndex, special_framing
         tok, tag_ids, cntx_l, cntx_r, max_len = bc.value
-        vocab = getattr(tok, "vocab", None) or {}
-        cls_id = sep_id = None
-        for c_t, s_t in (("[CLS]", "[SEP]"), ("<s>", "</s>")):
-            if c_t in vocab and s_t in vocab:
-                cls_id, sep_id = vocab[c_t], vocab[s_t]
-                break
+        cls_id, sep_id = special_framing(tok)
         for pdf in batches:
             out = {"doc_id": [], "ids": [], "p1": [], "p2": [],
                    "label": []}
             for row in pdf.itertuples(index=False):
-                text = str(row.text or "")
-                ids, spans = tok.encode_with_offsets(text)
-                if not ids:
+                doc = TokenIndex(str(row.text or ""), tok)
+                if not doc.toks:
                     continue
-                tok_starts = [s for s, _e in spans]
-
-                def tok_range(start, end):
-                    cf = bisect_right(tok_starts, start) - 1
-                    if cf < 0 or spans[cf][1] <= start:
-                        return None
-                    cl = max(cf, bisect_right(tok_starts, end - 1) - 1)
-                    return cf, cl
-
                 rels = _json.loads(row.rels_json) if row.rels_json else []
                 pairs = []
                 covered = set()
@@ -543,11 +522,11 @@ def mct_relation_samples(spark, mct_path: str, model: RelCatBertModel,
                             covered.add(key)
                             n_other += 1
                 for a, b, label in pairs:
-                    ra, rb = tok_range(*a), tok_range(*b)
+                    ra, rb = doc.range(*a), doc.range(*b)
                     if ra is None or rb is None or rb[0] <= ra[1]:
                         continue
                     res = mark_pair_sequence(
-                        ids, ra, rb, tag_ids, cntx_l, cntx_r, max_len,
+                        doc.toks, ra, rb, tag_ids, cntx_l, cntx_r, max_len,
                         cls_id, sep_id)
                     if res is None:
                         continue
@@ -590,18 +569,10 @@ def bert_meta_forward_backward(model, batch, class_weights):
     max-pool ⊕ pooled CLS → fc1(+relu)[→fc2(+relu)[→fc3(+relu)]] → fc4.
     Returns (loss, grads, logits); grad keys = bert_meta_params keys."""
     B = len(batch)
-    L = max(len(s[0]) for s in batch)
-    ids = np.full((B, L), model.pad_id, dtype=np.int64)
-    mask = np.zeros((B, L))
-    V = model.encoder.word.shape[0]
-    centers = []
-    y = np.empty(B, dtype=np.int64)
-    for r, (w, (cf, cl), lbl) in enumerate(batch):
-        for c, tid in enumerate(w):
-            ids[r, c] = tid if 0 <= tid < V else model.pad_id
-            mask[r, c] = 1.0
-        centers.append((cf, min(cl, len(w) - 1)))
-        y[r] = lbl
+    ids, mask = pad_ids([w for w, _, _ in batch], model.pad_id, model.pad_id,
+                        model.encoder.word.shape[0])
+    centers = [(cf, min(cl, len(w) - 1)) for w, (cf, cl), _ in batch]
+    y = np.array([lbl for _, _, lbl in batch], dtype=np.int64)
     seq, pooled, cache = encoder_forward_cache(model.encoder, ids, mask)
     H = seq.shape[2]
     pool = np.empty((B, H))
@@ -747,14 +718,9 @@ def train_bert_meta(model, data, *, nepochs: int = 50, lr: float = 1e-4,
 def token_classifier_forward_backward(model, batch, class_weights=None):
     """(ids, per-token label ids with -100 = ignored) batches → loss +
     gradients for encoder + classifier head."""
-    B = len(batch)
-    L = max(len(s[0]) for s in batch)
-    ids = np.zeros((B, L), dtype=np.int64)
-    mask = np.zeros((B, L))
-    y = np.full((B, L), -100, dtype=np.int64)
-    for r, (w, labels) in enumerate(batch):
-        ids[r, :len(w)] = w
-        mask[r, :len(w)] = 1.0
+    ids, mask = pad_ids([w for w, _ in batch])
+    y = np.full(ids.shape, -100, dtype=np.int64)
+    for r, (_w, labels) in enumerate(batch):
         y[r, :len(labels)] = labels
     seq, _pooled, cache = encoder_forward_cache(model.encoder, ids, mask)
     logits = seq @ model.cls_w.T + model.cls_b          # (B, L, C)
@@ -777,7 +743,7 @@ def token_classifier_forward_backward(model, batch, class_weights=None):
     dkept /= wsum
     dflat = np.zeros_like(flat_lg)
     dflat[keep] = dkept
-    dlogits = dflat.reshape(B, L, C)
+    dlogits = dflat.reshape(logits.shape)
     grads: Dict[str, np.ndarray] = {}
     dseq, grads["classifier.weight"], grads["classifier.bias"] = \
         _linear_bwd(dlogits, seq, model.cls_w)

@@ -26,13 +26,13 @@ driver hash-verifies the whole stateful path end to end.
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, List, Optional, Sequence, Tuple
+from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from medcat_spark.functions.meta_model import _SCHEMA, _META_CACHE
+from medcat_spark.functions.meta_model import sql_decide, sql_mentions
+from medcat_spark.functions.scorer import pad_ids, predict_chunked, score
 
 CNTX_LEFT = 2
 CNTX_RIGHT = 2
@@ -169,212 +169,52 @@ class LstmMetaModel:
         return sd
 
     # -- forward ---------------------------------------------------------
-    def _ids(self, windows: Sequence[Sequence[str]]):
-        B = len(windows)
-        L = max((len(w) for w in windows), default=1) or 1
-        ids = np.full((B, L), self.pad_id, dtype=np.int64)
-        mask = np.zeros((B, L))
-        for r, w in enumerate(windows):
-            for cpos, t in enumerate(w):
-                ids[r, cpos] = self.token2id.get(t, self.unk_id)
-                mask[r, cpos] = 1.0
-        return ids, mask
+    def _ids(self, windows: Sequence[Sequence[str]]) -> List[List[int]]:
+        return [[self.token2id.get(t, self.unk_id) for t in w]
+                for w in windows]
 
     def forward_windows(self, windows: Sequence[Sequence[str]],
                         centers: Sequence[Tuple[int, int]]) -> np.ndarray:
-        """Logits (B, C); ``centers[b] = (first, last)`` token index of the
-        entity inside window b (max-pooled, models.py:73-79)."""
-        ids, mask = self._ids(windows)
-        X = self.E[ids]
-        for fwd, bwd in self.layers:
-            outs = [_run_direction(X, mask, fwd, reverse=False)]
-            if bwd is not None:
-                outs.append(_run_direction(X, mask, bwd, reverse=True))
-            X = np.concatenate(outs, axis=2) if len(outs) > 1 else outs[0]
-        pooled = np.empty((len(windows), X.shape[2]))
-        for b, (cf, cl) in enumerate(centers):
-            pooled[b] = X[b, cf:cl + 1].max(axis=0)
-        return pooled @ self.fc_W.T + self.fc_b
+        """Logits (B, C) over whitespace-token windows (OOV → unk_id);
+        ``centers[b] = (first, last)`` token index of the entity inside
+        window b (max-pooled, models.py:73-79)."""
+        return self.forward_id_windows(self._ids(windows), centers)
 
     def predict_batch(self, windows: Sequence[Sequence[str]],
                       centers: Sequence[Tuple[int, int]]):
-        out: List[Tuple[str, float]] = []
-        for ofs in range(0, len(windows), self.MAX_FORWARD_BATCH):
-            lg = self.forward_windows(windows[ofs:ofs + self.MAX_FORWARD_BATCH],
-                                      centers[ofs:ofs + self.MAX_FORWARD_BATCH])
-            out.extend(self._decide(lg))
-        return out
-
-    def _decide(self, lg: np.ndarray):
-        best = lg.argmax(axis=1)
-        e = np.exp(lg - lg.max(axis=1, keepdims=True))
-        conf = e[np.arange(len(lg)), best] / e.sum(axis=1)
-        return [(self.labels[i], round(float(c), 4))
-                for i, c in zip(best, conf)]
+        return self.predict_batch_ids(self._ids(windows), centers)
 
     # -- token-id path (BBPE token space, reference semantics) ----------
     def forward_id_windows(self, id_windows: Sequence[Sequence[int]],
                            centers: Sequence[Tuple[int, int]]) -> np.ndarray:
-        B = len(id_windows)
-        L = max((len(w) for w in id_windows), default=1) or 1
-        ids = np.full((B, L), self.pad_id, dtype=np.int64)
-        mask = np.zeros((B, L))
-        V = self.E.shape[0]
-        for r, w in enumerate(id_windows):
-            for cpos, tid in enumerate(w):
-                ids[r, cpos] = tid if 0 <= tid < V else self.unk_id
-                mask[r, cpos] = 1.0
+        ids, mask = pad_ids(id_windows, self.pad_id, self.unk_id,
+                            self.E.shape[0])
         X = self.E[ids]
         for fwd, bwd in self.layers:
             outs = [_run_direction(X, mask, fwd, reverse=False)]
             if bwd is not None:
                 outs.append(_run_direction(X, mask, bwd, reverse=True))
             X = np.concatenate(outs, axis=2) if len(outs) > 1 else outs[0]
-        pooled = np.empty((B, X.shape[2]))
+        pooled = np.empty((len(id_windows), X.shape[2]))
         for b, (cf, cl) in enumerate(centers):
             pooled[b] = X[b, cf:cl + 1].max(axis=0)
         return pooled @ self.fc_W.T + self.fc_b
 
     def predict_batch_ids(self, id_windows: Sequence[Sequence[int]],
                           centers: Sequence[Tuple[int, int]]):
-        out: List[Tuple[str, float]] = []
-        for ofs in range(0, len(id_windows), self.MAX_FORWARD_BATCH):
-            lg = self.forward_id_windows(
-                id_windows[ofs:ofs + self.MAX_FORWARD_BATCH],
-                centers[ofs:ofs + self.MAX_FORWARD_BATCH])
-            out.extend(self._decide(lg))
-        return out
-
-
-# ---------------------------------------------------------------------------
-# Spark scorer — same window plumbing as the linear/MLP heads
-
-
-def _score_batches_lstm(bc, meta_name: str):
-    def fn(batches) -> Iterator:
-        import pyarrow as pa
-        from medcat_spark.functions.meta_model import _arrow_doc_rows
-        from medcat_spark.pipeline import to_arrow_schema
-        arrow_schema = to_arrow_schema(_SCHEMA)
-        key = ("lstm", getattr(bc, "_path", None) or id(bc))
-        model: LstmMetaModel = _META_CACHE.get(key)
-        if model is None:
-            model = bc.value
-            # one-entry bound like meta_model._score_batches: without
-            # the clear, every broadcast component leaks a full model
-            # per long-lived executor (and a reused id() could alias)
-            _META_CACHE.clear()
-            _META_CACHE[key] = model
-        from bisect import bisect_right
-        if model.tokenizer is not None:
-            yield from _score_token_space(model, meta_name, batches)
-            return
-        if not hasattr(model, "predict_batch"):
-            raise ValueError(
-                f"{type(model).__name__} has no tokenizer and no "
-                "whitespace-token scorer — meta components that work in "
-                "token-id space (BertMetaModel) need their tokenizer "
-                "files (bbpe-*/vocab.txt) present in the pack")
-        for rb in batches:
-            rows_meta: List[Tuple[str, int, str]] = []
-            windows: List[List[str]] = []
-            centers: List[Tuple[int, int]] = []
-            for doc_id, doc_ents, text in _arrow_doc_rows(rb):
-                toks = (text or "").split(" ")
-                starts, tok_starts, pos = {}, [], 0
-                for i, t in enumerate(toks):
-                    starts[pos] = i
-                    tok_starts.append(pos)
-                    pos += len(t) + 1
-                for ent in doc_ents:
-                    center = starts.get(ent["start"])
-                    if center is None:
-                        continue
-                    end = ent.get("end")
-                    if end is None or end != end:
-                        last = center
-                    else:
-                        last = max(center,
-                                   bisect_right(tok_starts, int(end) - 1) - 1)
-                    lo = max(0, center - model.cntx_left)
-                    hi = min(len(toks), last + 1 + model.cntx_right)
-                    rows_meta.append((str(doc_id), int(ent["start"]),
-                                      ent["cui"]))
-                    windows.append(toks[lo:hi])
-                    centers.append((center - lo, last - lo))
-            if not rows_meta:
-                continue
-            preds = model.predict_batch(windows, centers)
-            yield pa.RecordBatch.from_pydict({
-                "doc_id": [r[0] for r in rows_meta],
-                "start": [r[1] for r in rows_meta],
-                "cui": [r[2] for r in rows_meta],
-                "meta_name": [meta_name] * len(rows_meta),
-                "value": [p[0] for p in preds],
-                "confidence": [p[1] for p in preds]},
-                schema=arrow_schema)
-    return fn
-
-
-def _score_token_space(model: LstmMetaModel, meta_name: str,
-                       batches):
-    """Reference semantics with a real BBPE tokenizer: the document is
-    tokenized ONCE (ids + char offsets), entity centers are located by
-    char-span overlap, windows are slices in TOKEN space
-    (utils/meta_cat/data_utils.py:80-115 prepare_document)."""
-    import pyarrow as pa
-    from bisect import bisect_right
-    from medcat_spark.functions.meta_model import _arrow_doc_rows
-    from medcat_spark.pipeline import to_arrow_schema
-    arrow_schema = to_arrow_schema(_SCHEMA)
-    tok = model.tokenizer
-    for rb in batches:
-        rows_meta: List[Tuple[str, int, str]] = []
-        id_windows: List[List[int]] = []
-        centers: List[Tuple[int, int]] = []
-        for doc_id, doc_ents, text in _arrow_doc_rows(rb):
-            ids, spans = tok.encode_with_offsets(text or "")
-            if not ids:
-                continue
-            tok_starts = [s for s, _e in spans]
-            for ent in doc_ents:
-                start = int(ent["start"])
-                end = ent.get("end")
-                if end is None or end != end:
-                    end = start + 1
-                # first token whose span covers `start`; last token
-                # beginning before `end`
-                cf = bisect_right(tok_starts, start) - 1
-                if cf < 0 or spans[cf][1] <= start:
-                    continue
-                cl = bisect_right(tok_starts, int(end) - 1) - 1
-                cl = max(cf, cl)
-                lo = max(0, cf - model.cntx_left)
-                hi = min(len(ids), cl + 1 + model.cntx_right)
-                rows_meta.append((str(doc_id), start, ent["cui"]))
-                id_windows.append(ids[lo:hi])
-                centers.append((cf - lo, cl - lo))
-        if not rows_meta:
-            continue
-        preds = model.predict_batch_ids(id_windows, centers)
-        yield pa.RecordBatch.from_pydict({
-            "doc_id": [r[0] for r in rows_meta],
-            "start": [r[1] for r in rows_meta],
-            "cui": [r[2] for r in rows_meta],
-            "meta_name": [meta_name] * len(rows_meta),
-            "value": [p[0] for p in preds],
-            "confidence": [p[1] for p in preds]},
-            schema=arrow_schema)
+        return predict_chunked(self.labels, self.forward_id_windows,
+                               self.MAX_FORWARD_BATCH, id_windows, centers)
 
 
 def meta_annotations_lstm(ann: DataFrame, docs: DataFrame, bc,
                           meta_name: str = "Negation",
                           text_col: str = "text") -> DataFrame:
-    """Score each annotation window with the broadcast LSTM — one
-    groupBy(doc) shuffle, broadcast weights, Arrow-batched forward."""
-    from medcat_spark.functions.meta_model import docs_with_ents
-    return (docs_with_ents(ann, docs, text_col)
-            .mapInArrow(_score_batches_lstm(bc, meta_name), schema=_SCHEMA))
+    """Score each annotation window with the broadcast LSTM (or any
+    centered meta head, e.g. BertMetaModel) — one groupBy(doc) shuffle,
+    broadcast weights, Arrow-batched forward; token-id windows when the
+    model carries a tokenizer (reference semantics,
+    utils/meta_cat/data_utils.py:80-115 prepare_document)."""
+    return score(ann, docs, bc, "centered", text_col, meta_name)
 
 
 # ---------------------------------------------------------------------------
@@ -543,34 +383,10 @@ def oracle_sql_for_lstm(model: LstmMetaModel, toks_cte: str, dict_sql: str,
         terms += [f"({float(model.fc_W[c, H + j])!r})*pb_{j}"
                   for j in range(H)]
         logits.append("+".join(terms) + f"+({float(model.fc_b[c])!r}) AS l{c}")
-
-    def _win_cond(i: int) -> str:
-        conds = [f"l{i} > l{j}" for j in range(i)] + \
-                [f"l{i} >= l{j}" for j in range(i + 1, C)]
-        return " AND ".join(conds) if conds else "TRUE"
-
-    best = "CASE " + " ".join(
-        f"WHEN {_win_cond(i)} THEN '{model.labels[i]}'"
-        for i in range(C)) + " END"
-    best_logit = "CASE " + " ".join(
-        f"WHEN {_win_cond(i)} THEN l{i}" for i in range(C)) + " END"
-    exps = "+".join(f"exp(l{j} - mx)" for j in range(C))
-    bi_union = "" if bi_dict_sql is None else f"""
-      UNION ALL
-      SELECT p.doc_id, p.start, p.pos, p.pos + 1, d.cui
-      FROM pos p JOIN {bi_dict_sql} ON p.tok = d.w1 AND p.nxt = d.w2"""
+    best, conf = sql_decide(model.labels, "mx")
     steps_sql = ",\n".join(step_ctes)
 
-    return f"""
-WITH {toks_cte},
-pos AS (
-  SELECT doc_id, tok, nxt, pos,
-         COALESCE(SUM(length(tok) + 1) OVER (
-             PARTITION BY doc_id ORDER BY pos
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start
-  FROM tokn),
-m AS (SELECT p.doc_id, p.start, p.pos AS ent_pos, p.pos AS ent_last, d.cui
-      FROM pos p JOIN {dict_sql} ON p.tok = d.name{bi_union}),
+    return f"""{sql_mentions(toks_cte, dict_sql, bi_dict_sql)}
 win AS (SELECT m.*, GREATEST(1, ent_pos - {model.cntx_left}) AS lo FROM m),
 wt AS (SELECT w.doc_id, w.start, w.cui,
               w.ent_pos - w.lo AS cf, w.ent_last - w.lo AS cl,
@@ -591,6 +407,6 @@ lg AS (SELECT *, GREATEST({", ".join(f"l{i}" for i in range(C))}) AS mx
 SELECT doc_id, CAST(start AS INT) AS start, cui,
        '{meta_name}' AS meta_name,
        {best} AS value,
-       ROUND(exp(({best_logit}) - mx) / ({exps}), 4) AS confidence
+       {conf} AS confidence
 FROM lg
 """

@@ -49,6 +49,7 @@ import numpy as np
 import pandas as pd
 
 from medcat_spark.functions.lstm_meta import LstmCell, LstmMetaModel
+from medcat_spark.functions.scorer import pad_ids
 
 # sample = (window token ids, (center_first, center_last), label id)
 Sample = Tuple[List[int], Tuple[int, int], int]
@@ -324,19 +325,10 @@ def _backward_dir(dOut: np.ndarray, X: np.ndarray, cache, cell: LstmCell):
 
 
 def _pad_batch(model: LstmMetaModel, batch: Sequence[Sample]):
-    B = len(batch)
-    L = max(len(s[0]) for s in batch)
-    ids = np.full((B, L), model.pad_id, dtype=np.int64)
-    mask = np.zeros((B, L))
-    V = model.E.shape[0]
-    centers = []
-    y = np.empty(B, dtype=np.int64)
-    for r, (w, (cf, cl), lbl) in enumerate(batch):
-        for cpos, tid in enumerate(w):
-            ids[r, cpos] = tid if 0 <= tid < V else model.unk_id
-            mask[r, cpos] = 1.0
-        centers.append((cf, min(cl, len(w) - 1)))
-        y[r] = lbl
+    ids, mask = pad_ids([w for w, _, _ in batch], model.pad_id, model.unk_id,
+                        model.E.shape[0])
+    centers = [(cf, min(cl, len(w) - 1)) for w, (cf, cl), _ in batch]
+    y = np.array([lbl for _, _, lbl in batch], dtype=np.int64)
     return ids, mask, centers, y
 
 

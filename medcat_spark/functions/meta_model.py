@@ -21,8 +21,9 @@ expressible as SQL (join the token→scores table, AVG per window, add
 bias) — so the driver's DuckDB oracle can verify the classifier
 end-to-end with fixed weights.  Swapping a torch scorer in changes only
 ``MetaCatModel.predict`` — the Spark plumbing (broadcast model,
-per-executor cache, Arrow-batched ``mapInPandas``, one tokenize per
-document for all its entities) is the production shape.
+Arrow-batched ``mapInArrow``, one tokenize per document for all its
+entities; :mod:`medcat_spark.functions.scorer`) is the production
+shape.
 
 OOV window tokens contribute a zero vector; the mean divides by the
 FULL window length (zeros included), matching the SQL oracle's
@@ -31,13 +32,14 @@ FULL window length (zeros included), matching the SQL oracle's
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, List, Optional, Sequence, Tuple
+from functools import lru_cache
+from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import (DoubleType, IntegerType, StringType,
-                               StructField, StructType)
+
+from medcat_spark.functions.scorer import (docs_with_ents,  # noqa: F401
+                                           pad_ids, predict_chunked, score)
 
 CNTX_LEFT = 15   # reference config_meta_cat.py:55
 CNTX_RIGHT = 10  # reference config_meta_cat.py:57
@@ -75,6 +77,29 @@ class MetaCatModel:
         # softmax confidence (2-class: sigmoid of margin)
         e = np.exp(lg - lg.max())
         return self.labels[i], float(e[i] / e.sum())
+
+    def prefix_scores(self, toks: Sequence[str]) -> np.ndarray:
+        return prefix_scores(self.token_scores, toks, len(self.labels))
+
+    def forward_prefix(self, windows) -> np.ndarray:
+        """(B, C) logits for windows given as (P, lo, hi) over a doc's
+        :meth:`prefix_scores` — each window mean is one slice
+        difference, O(T + E) per doc instead of O(E * window)."""
+        return np.array([(P[hi] - P[lo]) / (hi - lo)
+                         for P, lo, hi in windows]) + self.bias
+
+
+def prefix_scores(token_scores: Dict[str, np.ndarray], toks: Sequence[str],
+                  n_cls: int) -> np.ndarray:
+    """(T + 1, C) prefix sums of per-token class scores.  Exact-0.0 rows
+    for OOV tokens keep float sums identical to the direct loop."""
+    P = np.zeros((len(toks) + 1, n_cls))
+    for i, t in enumerate(toks):
+        s = token_scores.get(t)
+        if s is not None:
+            P[i + 1] = s
+    np.cumsum(P, axis=0, out=P)
+    return P
 
 
 def train_meta_model(windows: List[Tuple[List[str], str]], labels: List[str],
@@ -129,17 +154,13 @@ _TESTDATA_WORDS = ("spark merge window vector stream filter the fast key "
                    "column big a").split()
 _NEGATION_CUES = ("slow", "small")
 
-_FIXTURE_CACHE: Optional[MetaCatModel] = None
 
-
+@lru_cache(maxsize=None)
 def negation_fixture_model() -> MetaCatModel:
     """Deterministic fixture-trained Negation classifier: windows drawn
     from the testdata vocabulary, labeled negated iff a cue word is
     present, trained once per process (seeded; same weights every call,
     so queries() and oracle_sql() agree)."""
-    global _FIXTURE_CACHE
-    if _FIXTURE_CACHE is not None:
-        return _FIXTURE_CACHE
     import random
     rng = random.Random(20260816)
     windows: List[Tuple[List[str], str]] = []
@@ -153,102 +174,8 @@ def negation_fixture_model() -> MetaCatModel:
         w2 = [rng.choice(non_cue) for _ in range(ln - 1)]
         w2.insert(rng.randrange(len(w2) + 1), rng.choice(_NEGATION_CUES))
         windows.append((w2, "negated"))
-    _FIXTURE_CACHE = train_meta_model(
+    return train_meta_model(
         windows, ["present", "negated"], dim=64, epochs=1500, lr=4.0, seed=13)
-    return _FIXTURE_CACHE
-
-
-_SCHEMA = StructType([
-    StructField("doc_id", StringType()),
-    StructField("start", IntegerType()),
-    StructField("cui", StringType()),
-    StructField("meta_name", StringType()),
-    StructField("value", StringType()),
-    StructField("confidence", DoubleType()),
-])
-
-# per-executor model cache (same device as pipeline._MODEL_CACHE)
-_META_CACHE: dict = {}
-
-
-def _arrow_doc_rows(rb):
-    """(doc_id, ents, text) tuples from one Arrow batch — the scorer
-    input rows without a pandas DataFrame in between (struct fields
-    arrive as plain dicts, null end as None)."""
-    return zip(rb.column("doc_id").to_pylist(),
-               rb.column("ents").to_pylist(),
-               rb.column("text").to_pylist())
-
-
-def _arrow_out_schema():
-    from medcat_spark.pipeline import to_arrow_schema
-    return to_arrow_schema(_SCHEMA)
-
-
-def _score_batches(bc, meta_name: str):
-    def fn(batches) -> Iterator:
-        import pyarrow as pa
-        arrow_schema = _arrow_out_schema()
-        key = getattr(bc, "_path", None) or id(bc)
-        model: MetaCatModel = _META_CACHE.get(key)
-        if model is None:
-            model = bc.value
-            _META_CACHE.clear()
-            _META_CACHE[key] = model
-        scores = model.token_scores
-        bias = model.bias
-        labels = model.labels
-        n_cls = len(labels)
-        from bisect import bisect_right
-        for rb in batches:
-            out = {f.name: [] for f in _SCHEMA.fields}
-            for doc_id, ents, text in _arrow_doc_rows(rb):
-                toks = (text or "").split(" ")
-                starts, tok_starts, pos = {}, [], 0
-                for i, t in enumerate(toks):
-                    starts[pos] = i
-                    tok_starts.append(pos)
-                    pos += len(t) + 1
-                # prefix sums over per-token class scores: each entity's
-                # window mean is one slice difference — O(T + E) per doc
-                # instead of O(E * window).  Exact-0.0 rows for OOV
-                # tokens keep float sums identical to the direct loop.
-                P = np.zeros((len(toks) + 1, n_cls))
-                for i, t in enumerate(toks):
-                    s = scores.get(t)
-                    if s is not None:
-                        P[i + 1] = s
-                np.cumsum(P, axis=0, out=P)
-                for ent in ents:
-                    center = starts.get(ent["start"])
-                    if center is None:
-                        continue
-                    # window = [first_ent_token - cntx_left,
-                    #           last_ent_token + cntx_right] (reference
-                    # meta_cat.py prepare_document) — multi-token entities
-                    # keep their full right context.  Last entity token =
-                    # the token containing end-1 (unigram when end absent).
-                    end = ent.get("end")
-                    if end is None or end != end:   # null / NaN → unigram
-                        last = center
-                    else:
-                        last = max(center,
-                                   bisect_right(tok_starts, int(end) - 1) - 1)
-                    lo = max(0, center - model.cntx_left)
-                    hi = min(len(toks), last + 1 + model.cntx_right)
-                    lg = (P[hi] - P[lo]) / (hi - lo) + bias
-                    i_best = int(np.argmax(lg))
-                    e = np.exp(lg - lg.max())
-                    out["doc_id"].append(str(doc_id))
-                    out["start"].append(int(ent["start"]))
-                    out["cui"].append(ent["cui"])
-                    out["meta_name"].append(meta_name)
-                    out["value"].append(labels[i_best])
-                    out["confidence"].append(
-                        round(float(e[i_best] / e.sum()), 4))
-            if out["doc_id"]:
-                yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
-    return fn
 
 
 def meta_annotations_model(ann: DataFrame, docs: DataFrame, bc,
@@ -263,50 +190,7 @@ def meta_annotations_model(ann: DataFrame, docs: DataFrame, bc,
     GPU-stage-separation the reference uses for MetaCAT batching
     (cat.py:1249-1257).
     """
-    joined = docs_with_ents(ann, docs, text_col)
-    return joined.mapInArrow(_score_batches(bc, meta_name), schema=_SCHEMA)
-
-
-def docs_with_ents(ann, docs, text_col: str = "text",
-                   num_partitions: Optional[int] = None):
-    """(doc_id, ents, text) scoring input shared by every neural scorer
-    (meta linear/MLP/LSTM/BERT, RelCAT linear/RNN/BERT).
-
-    The explicit repartition is load-bearing: the join output is tiny
-    in BYTES (KBs per doc) but heavy in downstream COMPUTE (a model
-    forward per entity/pair), and AQE coalesces post-shuffle partitions
-    by byte size — at bench scale it folded the whole relation-scoring
-    stage into ONE task (measured: the 4-layer BERT pair bench ran 31
-    minutes single-core before this fix).  Spark cannot see Python-UDF
-    cost, so the stage is partitioned explicitly by doc_id; AQE does
-    not re-coalesce a user-specified partition count.  At 100 TB the
-    same holds: partition count must track document count, not the few
-    bytes of (doc_id, spans) metadata."""
-    end_col = (F.col("end").cast("int") if "end" in ann.columns
-               else F.lit(None).cast("int")).alias("end")
-    ents = (ann.select(F.col("doc_id").cast("string").alias("doc_id"),
-                       F.col("start"), end_col, F.col("cui"))
-            .groupBy("doc_id")
-            .agg(F.collect_list(F.struct("start", "end", "cui"))
-                 .alias("ents")))
-    src = docs.select(F.col("doc_id").cast("string").alias("doc_id"),
-                      F.col(text_col).alias("text"))
-    joined = ents.join(src, "doc_id")
-    if num_partitions is None:
-        num_partitions = int(ann.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"))
-    # Repartition on xxhash64(doc_id), NOT doc_id: the join output is
-    # already hash-partitioned by doc_id (the groupBy exchange), so a
-    # repartition(n, doc_id) is planned as a no-op (EnsureRequirements
-    # removes the redundant exchange) and AQE then coalesces the
-    # groupBy's own exchange by BYTE size — measured at bench scale the
-    # whole model-forward stage collapsed to ONE task (1.9-2.0 s
-    # single-core out of each scorer's 2.4 s).  Hashing the key makes
-    # the exchange semantically distinct (so it survives planning) and
-    # user-specified (so AQE leaves its partition count alone), which
-    # is the documented intent: partition count must track document
-    # count, not the few bytes of (doc_id, spans) metadata.
-    return joined.repartition(num_partitions, F.xxhash64("doc_id"))
+    return score(ann, docs, bc, "linear", text_col, meta_name)
 
 
 def meta_annotations_multi(ann: DataFrame, docs: DataFrame,
@@ -395,25 +279,15 @@ class MlpMetaModel:
         G = self.E[idx] * emb_mask                      # (B, L, D)
         return G.sum(axis=1) / lens[:, None]
 
-    # Bound on windows per forward pass.  The (B, L, D) gather is the
-    # peak allocation; chunking keeps it ~50 MB so executor arenas are
-    # reused instead of freshly page-faulted (first-touch faults on
-    # large fresh mmaps cost ~100x on some virtualized kernels), and it
-    # is exactly the batch_size_eval knob a torch scorer needs
-    # (reference meta_cat.py config general.batch_size_eval).
+    # Bound on windows per forward pass: keeps the (B, L, D) gather
+    # ~50 MB (first-touch faults on large fresh mmaps cost ~100x on
+    # some virtualized kernels; see scorer.predict_chunked).
     MAX_FORWARD_BATCH = 8192
 
     def predict_batch(self, windows: Sequence[Sequence[str]]):
-        out: List[Tuple[str, float]] = []
-        for ofs in range(0, len(windows), self.MAX_FORWARD_BATCH):
-            chunk = windows[ofs:ofs + self.MAX_FORWARD_BATCH]
-            lg = self.forward(self.pool(chunk))
-            best = lg.argmax(axis=1)
-            e = np.exp(lg - lg.max(axis=1, keepdims=True))
-            conf = e[np.arange(len(lg)), best] / e.sum(axis=1)
-            out.extend((self.labels[i], round(float(c), 4))
-                       for i, c in zip(best, conf))
-        return out
+        return predict_chunked(self.labels,
+                               lambda w: self.forward(self.pool(w)),
+                               self.MAX_FORWARD_BATCH, windows)
 
     def predict(self, window: Sequence[str]) -> Tuple[str, float]:
         return self.predict_batch([window])[0]
@@ -468,18 +342,13 @@ def train_mlp_meta_model(windows: List[Tuple[List[str], str]],
                         cntx_left, cntx_right)
 
 
-_MLP_FIXTURE_CACHE: Optional[MlpMetaModel] = None
-
-
+@lru_cache(maxsize=None)
 def negation_mlp_fixture_model() -> MlpMetaModel:
     """Deterministic fixture-trained NONLINEAR Negation classifier over
     the testdata vocabulary: negated iff EXACTLY ONE cue word ('slow'
     xor 'small') is in the window — not linearly separable in the
     mean-pooled bag-of-words space, so solving it proves the hidden
     layer is live (tests assert the accuracy)."""
-    global _MLP_FIXTURE_CACHE
-    if _MLP_FIXTURE_CACHE is not None:
-        return _MLP_FIXTURE_CACHE
     import random
     rng = random.Random(20260817)
     non_cue = [w for w in _TESTDATA_WORDS if w not in _NEGATION_CUES]
@@ -496,93 +365,27 @@ def negation_mlp_fixture_model() -> MlpMetaModel:
         w2[pos[0]] = "slow"
         w2[pos[1]] = "small"
         windows.append((w2, "present"))                    # both cues
-    _MLP_FIXTURE_CACHE = train_mlp_meta_model(
+    return train_mlp_meta_model(
         windows, ["present", "negated"], dim=32, hidden=16,
         epochs=2500, lr=2.0, seed=17)
-    return _MLP_FIXTURE_CACHE
-
-
-_MLP_CACHE: dict = {}
-
-
-def _score_batches_mlp(bc, meta_name: str):
-    def fn(batches) -> Iterator:
-        import pyarrow as pa
-        arrow_schema = _arrow_out_schema()
-        from bisect import bisect_right
-        key = getattr(bc, "_path", None) or id(bc)
-        model: MlpMetaModel = _MLP_CACHE.get(key)
-        if model is None:
-            model = bc.value
-            _MLP_CACHE.clear()
-            _MLP_CACHE[key] = model
-        for rb in batches:
-            out = {f.name: [] for f in _SCHEMA.fields}
-            windows: List[List[str]] = []
-            for doc_id, ents, text in _arrow_doc_rows(rb):
-                toks = (text or "").split(" ")
-                starts, tok_starts, pos = {}, [], 0
-                for i, t in enumerate(toks):
-                    starts[pos] = i
-                    tok_starts.append(pos)
-                    pos += len(t) + 1
-                for ent in ents:
-                    center = starts.get(ent["start"])
-                    if center is None:
-                        continue
-                    end = ent.get("end")
-                    if end is None or end != end:
-                        last = center
-                    else:
-                        last = max(center,
-                                   bisect_right(tok_starts, int(end) - 1) - 1)
-                    lo = max(0, center - model.cntx_left)
-                    hi = min(len(toks), last + 1 + model.cntx_right)
-                    windows.append(toks[lo:hi])
-                    out["doc_id"].append(str(doc_id))
-                    out["start"].append(int(ent["start"]))
-                    out["cui"].append(ent["cui"])
-                    out["meta_name"].append(meta_name)
-            if out["doc_id"]:
-                # ONE padded forward pass for the whole Arrow batch —
-                # the shape a torch scorer consumes unchanged
-                preds = model.predict_batch(windows)
-                out["value"] = [v for v, _ in preds]
-                out["confidence"] = [c for _, c in preds]
-                yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
-    return fn
 
 
 def meta_annotations_mlp(ann: DataFrame, docs: DataFrame, bc,
                          meta_name: str = "Negation",
                          text_col: str = "text") -> DataFrame:
     """meta_annotations_model with the nonlinear scorer — identical plan
-    shape (one groupBy + text join + one mapInPandas), different model."""
-    joined = docs_with_ents(ann, docs, text_col)
-    return joined.mapInArrow(_score_batches_mlp(bc, meta_name),
-                             schema=_SCHEMA)
+    shape (one groupBy + text join + one mapInArrow), different model;
+    any model with ``predict_batch(windows)`` fits."""
+    return score(ann, docs, bc, "pooled", text_col, meta_name)
 
 
-def oracle_sql_for_model(model: MetaCatModel, toks_cte: str, dict_sql: str,
-                         meta_name: str = "Negation",
-                         bi_dict_sql: Optional[str] = None) -> str:
-    """Generate the DuckDB oracle reproducing the scorer exactly:
-    same window ([first_ent_token - cntx_left, last_ent_token +
-    cntx_right]), same per-token scores, same mean+bias+argmax.
-    ``bi_dict_sql`` optionally adds two-token entities (d(w1, w2, cui))
-    so the multi-token right-edge semantics are oracle-exercised."""
-    rows = ",".join(
-        "('%s',%s)" % (t.replace("'", "''"),
-                       ",".join(repr(float(x)) for x in s))
-        for t, s in sorted(model.token_scores.items()))
-    cols = ",".join(f"s{i}" for i in range(len(model.labels)))
-    avg = ",".join(
-        f"SUM(COALESCE(s.s{i}, 0.0))/COUNT(*) + ({float(model.bias[i])!r}) "
-        f"AS l{i}" for i in range(len(model.labels)))
-    # argmax with first-wins tie-break = numpy argmax: class i wins iff
-    # it strictly beats all earlier classes' "wins" — i.e. no earlier
-    # class has l_earlier >= l_i and no later class has l_later > l_i
-    n = len(model.labels)
+def sql_decide(labels: Sequence[str], max_col: str) -> Tuple[str, str]:
+    """SQL twin of :func:`scorer.decide` over logit columns l0..l{C-1}
+    and their max ``max_col`` → (argmax label, 4-dp softmax confidence)
+    expressions.  First-wins ties = numpy argmax: class i wins iff no
+    earlier class has l_earlier >= l_i and no later class has
+    l_later > l_i."""
+    n = len(labels)
 
     def _win_cond(i: int) -> str:
         conds = [f"l{i} > l{j}" for j in range(i)] + \
@@ -590,12 +393,19 @@ def oracle_sql_for_model(model: MetaCatModel, toks_cte: str, dict_sql: str,
         return " AND ".join(conds) if conds else "TRUE"
 
     best = "CASE " + " ".join(
-        f"WHEN {_win_cond(i)} THEN '{model.labels[i]}'"
-        for i in range(n)) + " END"
+        f"WHEN {_win_cond(i)} THEN '{labels[i]}'" for i in range(n)) + " END"
     best_logit = "CASE " + " ".join(
         f"WHEN {_win_cond(i)} THEN l{i}" for i in range(n)) + " END"
-    # softmax confidence of the argmax class
-    exps = "+".join(f"exp(l{j} - m)" for j in range(n))
+    exps = "+".join(f"exp(l{j} - {max_col})" for j in range(n))
+    return best, f"ROUND(exp(({best_logit}) - {max_col}) / ({exps}), 4)"
+
+
+def sql_mentions(toks_cte: str, dict_sql: str,
+                 bi_dict_sql: Optional[str] = None) -> str:
+    """Oracle prefix shared by the meta heads: token char starts (pos)
+    and dictionary mentions (m) with their first/last token;
+    ``bi_dict_sql`` optionally adds two-token entities (d(w1, w2, cui))
+    so the multi-token right-edge semantics are oracle-exercised."""
     bi_union = "" if bi_dict_sql is None else f"""
       UNION ALL
       SELECT p.doc_id, p.start, p.pos, p.pos + 1, d.cui
@@ -609,7 +419,26 @@ pos AS (
              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start
   FROM tokn),
 m AS (SELECT p.doc_id, p.start, p.pos AS ent_pos, p.pos AS ent_last, d.cui
-      FROM pos p JOIN {dict_sql} ON p.tok = d.name{bi_union}),
+      FROM pos p JOIN {dict_sql} ON p.tok = d.name{bi_union}),"""
+
+
+def oracle_sql_for_model(model: MetaCatModel, toks_cte: str, dict_sql: str,
+                         meta_name: str = "Negation",
+                         bi_dict_sql: Optional[str] = None) -> str:
+    """Generate the DuckDB oracle reproducing the scorer exactly:
+    same window ([first_ent_token - cntx_left, last_ent_token +
+    cntx_right]), same per-token scores, same mean+bias+argmax
+    (``bi_dict_sql``: see :func:`sql_mentions`)."""
+    rows = ",".join(
+        "('%s',%s)" % (t.replace("'", "''"),
+                       ",".join(repr(float(x)) for x in s))
+        for t, s in sorted(model.token_scores.items()))
+    cols = ",".join(f"s{i}" for i in range(len(model.labels)))
+    avg = ",".join(
+        f"SUM(COALESCE(s.s{i}, 0.0))/COUNT(*) + ({float(model.bias[i])!r}) "
+        f"AS l{i}" for i in range(len(model.labels)))
+    best, conf = sql_decide(model.labels, "m")
+    return f"""{sql_mentions(toks_cte, dict_sql, bi_dict_sql)}
 sc(tok, {cols}) AS (VALUES {rows}),
 w AS (SELECT m.doc_id, m.start, m.cui, p.tok
       FROM m JOIN pos p ON p.doc_id = m.doc_id
@@ -622,7 +451,7 @@ lg AS (SELECT *, GREATEST({", ".join(f"l{i}" for i in range(len(model.labels)))}
 SELECT doc_id, CAST(start AS INT) AS start, cui,
        '{meta_name}' AS meta_name,
        {best} AS value,
-       ROUND(exp(({best_logit}) - m) / ({exps}), 4) AS confidence
+       {conf} AS confidence
 FROM lg
 """
 
@@ -650,34 +479,10 @@ def oracle_sql_for_mlp(model: MlpMetaModel, toks_cte: str, dict_sql: str,
     b2_rows = ",".join(f"({c + 1},{float(model.b2[c])!r})"
                        for c in range(n))
     dims = ",".join(f"({d + 1})" for d in range(model.E.shape[1]))
-
-    def _win_cond(i: int) -> str:
-        conds = [f"l{i} > l{j}" for j in range(i)] + \
-                [f"l{i} >= l{j}" for j in range(i + 1, n)]
-        return " AND ".join(conds) if conds else "TRUE"
-
-    best = "CASE " + " ".join(
-        f"WHEN {_win_cond(i)} THEN '{model.labels[i]}'"
-        for i in range(n)) + " END"
-    best_logit = "CASE " + " ".join(
-        f"WHEN {_win_cond(i)} THEN l{i}" for i in range(n)) + " END"
-    exps = "+".join(f"exp(l{j} - mx)" for j in range(n))
+    best, conf = sql_decide(model.labels, "mx")
     lcols = ",".join(
         f"MAX(CASE WHEN c = {i + 1} THEN l END) AS l{i}" for i in range(n))
-    bi_union = "" if bi_dict_sql is None else f"""
-      UNION ALL
-      SELECT p.doc_id, p.start, p.pos, p.pos + 1, d.cui
-      FROM pos p JOIN {bi_dict_sql} ON p.tok = d.w1 AND p.nxt = d.w2"""
-    return f"""
-WITH {toks_cte},
-pos AS (
-  SELECT doc_id, tok, nxt, pos,
-         COALESCE(SUM(length(tok) + 1) OVER (
-             PARTITION BY doc_id ORDER BY pos
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start
-  FROM tokn),
-m AS (SELECT p.doc_id, p.start, p.pos AS ent_pos, p.pos AS ent_last, d.cui
-      FROM pos p JOIN {dict_sql} ON p.tok = d.name{bi_union}),
+    return f"""{sql_mentions(toks_cte, dict_sql, bi_dict_sql)}
 w AS (SELECT m.doc_id, m.start, m.cui, p.tok
       FROM m JOIN pos p ON p.doc_id = m.doc_id
         AND p.pos >= m.ent_pos - {model.cntx_left}
@@ -716,7 +521,7 @@ lg AS (SELECT *, GREATEST({", ".join(f"l{i}" for i in range(n))}) AS mx
 SELECT doc_id, CAST(start AS INT) AS start, cui,
        '{meta_name}' AS meta_name,
        {best} AS value,
-       ROUND(exp(({best_logit}) - mx) / ({exps}), 4) AS confidence
+       {conf} AS confidence
 FROM lg
 """
 
@@ -725,7 +530,7 @@ FROM lg
 # STATEFUL sequence scorer — the BiLSTM-shape proof the MLP cannot give.
 #
 # A bidirectional Elman RNN in pure numpy behind the same broadcast +
-# mapInPandas plumbing: per-timestep tanh recurrence, forward+backward
+# mapInArrow plumbing: per-timestep tanh recurrence, forward+backward
 # final states -> linear head.  Padded positions CARRY state (the
 # packed-sequence semantics a torch BiLSTM uses), so ragged batches
 # score identically to per-window calls — asserted in tests.
@@ -761,14 +566,9 @@ class RnnMetaModel:
         self.cntx_right = cntx_right
 
     def embed(self, windows: Sequence[Sequence[str]]):
-        B = len(windows)
-        L = max((len(w) for w in windows), default=1) or 1
-        idx = np.zeros((B, L), dtype=np.int64)
-        mask = np.zeros((B, L))
-        for r, w in enumerate(windows):
-            for c, t in enumerate(w):
-                idx[r, c] = self.tok2i.get(t, 0)
-                mask[r, c] = 1.0        # in-window position (OOV -> E[0])
+        # every in-window position is masked in (OOV -> E[0])
+        idx, mask = pad_ids([[self.tok2i.get(t, 0) for t in w]
+                             for w in windows])
         return self.E[idx], mask        # (B, L, D), (B, L)
 
     @staticmethod
@@ -790,15 +590,8 @@ class RnnMetaModel:
         return np.concatenate([hf, hb], axis=1) @ self.Wo.T + self.bo
 
     def predict_batch(self, windows: Sequence[Sequence[str]]):
-        out: List[Tuple[str, float]] = []
-        for ofs in range(0, len(windows), self.MAX_FORWARD_BATCH):
-            lg = self.forward_windows(windows[ofs:ofs + self.MAX_FORWARD_BATCH])
-            best = lg.argmax(axis=1)
-            e = np.exp(lg - lg.max(axis=1, keepdims=True))
-            conf = e[np.arange(len(lg)), best] / e.sum(axis=1)
-            out.extend((self.labels[i], round(float(c), 4))
-                       for i, c in zip(best, conf))
-        return out
+        return predict_chunked(self.labels, self.forward_windows,
+                               self.MAX_FORWARD_BATCH, windows)
 
     def predict(self, window: Sequence[str]) -> Tuple[str, float]:
         return self.predict_batch([window])[0]
@@ -890,9 +683,6 @@ def train_rnn_meta_model(seqs: List[Tuple[List[str], str]],
                         cntx_left, cntx_right)
 
 
-_RNN_FIXTURE_CACHE: Optional[RnnMetaModel] = None
-
-
 def order_task_sequences(n_pairs: int = 120, length: int = 8,
                          seed: int = 5):
     """Order-swapped pairs with IDENTICAL token multisets: 'neg' before
@@ -920,12 +710,10 @@ def order_task_sequences(n_pairs: int = 120, length: int = 8,
     return pairs
 
 
+@lru_cache(maxsize=None)
 def negation_rnn_fixture_model() -> RnnMetaModel:
-    global _RNN_FIXTURE_CACHE
-    if _RNN_FIXTURE_CACHE is None:
-        _RNN_FIXTURE_CACHE = train_rnn_meta_model(
-            order_task_sequences(), ["present", "negated"])
-    return _RNN_FIXTURE_CACHE
+    return train_rnn_meta_model(order_task_sequences(),
+                                ["present", "negated"])
 
 
 def meta_annotations_rnn(ann: DataFrame, docs: DataFrame, bc,

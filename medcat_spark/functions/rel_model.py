@@ -23,13 +23,15 @@ rel_cat's sorted ent pairs).
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, List, Optional, Sequence, Tuple
+from functools import lru_cache
+from typing import Dict, List, Sequence, Tuple
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import (DoubleType, IntegerType, StringType,
-                               StructField, StructType)
+
+from medcat_spark.functions.meta_model import (_TESTDATA_WORDS, prefix_scores,
+                                               sql_decide)
+from medcat_spark.functions.scorer import score
 
 MAX_PAIR_DISTANCE = 10  # tokens between candidate entity pairs
 
@@ -61,6 +63,18 @@ class RelCatModel:
         i = int(np.argmax(lg))
         e = np.exp(lg - lg.max())
         return self.labels[i], float(e[i] / e.sum())
+
+    def prefix_scores(self, toks: Sequence[str]) -> np.ndarray:
+        return prefix_scores(self.token_scores, toks, len(self.labels))
+
+    def forward_prefix(self, pairs) -> np.ndarray:
+        """(B, C) logits for token pairs given as (P, pa, pb) over a
+        doc's :meth:`prefix_scores`: the between-tokens bag sum is one
+        slice difference."""
+        return np.array([
+            (P[pb] - P[pa + 1]) / max(pb - pa - 1, 1)
+            + self.dist_w * ((pb - pa) / self.max_distance)
+            for P, pa, pb in pairs]) + self.bias
 
 
 def train_rel_model(samples: List[Tuple[List[str], int, str]],
@@ -110,20 +124,12 @@ def train_rel_model(samples: List[Tuple[List[str], int, str]],
 
 # deterministic fixture model over the testdata vocabulary: a connector
 # word between two mentions ⇒ 'interacts_with', else 'cooccurs_with'
-_TESTDATA_WORDS = ("spark merge window vector stream filter the fast key "
-                   "order sort table scan part small hash join batch dup "
-                   "group query row data slow customer line value agg "
-                   "column big a").split()
 _CONNECTORS = ("join", "merge")
 REL_LABELS = ["cooccurs_with", "interacts_with"]
 
-_FIXTURE_CACHE: Optional[RelCatModel] = None
 
-
+@lru_cache(maxsize=None)
 def relation_fixture_model() -> RelCatModel:
-    global _FIXTURE_CACHE
-    if _FIXTURE_CACHE is not None:
-        return _FIXTURE_CACHE
     import random
     rng = random.Random(20260817)
     non_conn = [w for w in _TESTDATA_WORDS if w not in _CONNECTORS]
@@ -135,88 +141,7 @@ def relation_fixture_model() -> RelCatModel:
         tk2 = [rng.choice(non_conn) for _ in range(max(ln - 1, 0))]
         tk2.insert(rng.randrange(len(tk2) + 1), rng.choice(_CONNECTORS))
         samples.append((tk2, len(tk2) + 1, "interacts_with"))
-    _FIXTURE_CACHE = train_rel_model(samples, REL_LABELS)
-    return _FIXTURE_CACHE
-
-
-_SCHEMA = StructType([
-    StructField("doc_id", StringType()),
-    StructField("start1", IntegerType()),
-    StructField("start2", IntegerType()),
-    StructField("ent1_cui", StringType()),
-    StructField("ent2_cui", StringType()),
-    StructField("relation", StringType()),
-    StructField("confidence", DoubleType()),
-])
-
-_REL_CACHE: dict = {}
-
-
-def _score_batches(bc):
-    def fn(batches) -> Iterator:
-        import pyarrow as _pyarrow
-        from medcat_spark.functions.meta_model import _arrow_doc_rows
-        from medcat_spark.pipeline import to_arrow_schema
-        arrow_schema = to_arrow_schema(_SCHEMA)
-        key = getattr(bc, "_path", None) or id(bc)
-        model: RelCatModel = _REL_CACHE.get(key)
-        if model is None:
-            model = bc.value
-            _REL_CACHE.clear()
-            _REL_CACHE[key] = model
-        scores = model.token_scores
-        bias = model.bias
-        dist_w = model.dist_w
-        labels = model.labels
-        n_cls = len(labels)
-        max_d = model.max_distance
-        for rb in batches:
-            out = {f.name: [] for f in _SCHEMA.fields}
-            for doc_id, doc_ents, text in _arrow_doc_rows(rb):
-                toks = (text or "").split(" ")
-                starts, pos = {}, 0
-                for i, t in enumerate(toks):
-                    starts[pos] = i
-                    pos += len(t) + 1
-                ents = sorted(
-                    ((starts.get(e["start"]), e) for e in doc_ents
-                     if starts.get(e["start"]) is not None),
-                    key=lambda x: x[0])
-                if len(ents) < 2:
-                    continue
-                # prefix sums: between-token bag sum for (pa, pb) is one
-                # slice difference (see meta_model._score_batches note)
-                P = np.zeros((len(toks) + 1, n_cls))
-                for i, t in enumerate(toks):
-                    s = scores.get(t)
-                    if s is not None:
-                        P[i + 1] = s
-                np.cumsum(P, axis=0, out=P)
-                for i in range(len(ents)):
-                    pa, ea = ents[i]
-                    for j in range(i + 1, len(ents)):
-                        pb, eb = ents[j]
-                        d = pb - pa
-                        if d <= 0:
-                            continue
-                        if d > max_d:
-                            break
-                        lg = ((P[pb] - P[pa + 1]) / max(d - 1, 1)
-                              + dist_w * (d / max_d) + bias)
-                        i_best = int(np.argmax(lg))
-                        e = np.exp(lg - lg.max())
-                        out["doc_id"].append(str(doc_id))
-                        out["start1"].append(int(ea["start"]))
-                        out["start2"].append(int(eb["start"]))
-                        out["ent1_cui"].append(ea["cui"])
-                        out["ent2_cui"].append(eb["cui"])
-                        out["relation"].append(labels[i_best])
-                        out["confidence"].append(
-                            round(float(e[i_best] / e.sum()), 4))
-            if out["doc_id"]:
-                yield _pyarrow.RecordBatch.from_pydict(out,
-                                                       schema=arrow_schema)
-    return fn
+    return train_rel_model(samples, REL_LABELS)
 
 
 def relations_model(ann: DataFrame, docs: DataFrame, bc,
@@ -230,9 +155,7 @@ def relations_model(ann: DataFrame, docs: DataFrame, bc,
     grouped per doc, text joined once, one tokenize per doc for ALL its
     pairs inside an Arrow batch.
     """
-    from medcat_spark.functions.meta_model import docs_with_ents
-    return docs_with_ents(ann, docs, text_col).mapInArrow(
-        _score_batches(bc), schema=_SCHEMA)
+    return score(ann, docs, bc, "rel_linear", text_col)
 
 
 def oracle_sql_for_model(model: RelCatModel, toks_cte: str,
@@ -250,18 +173,7 @@ def oracle_sql_for_model(model: RelCatModel, toks_cte: str,
         f" + ({float(model.dist_w[i])!r}) * (ANY_VALUE(dist) * 1.0 / {model.max_distance})"
         f" + ({float(model.bias[i])!r}) AS l{i}"
         for i in range(n))
-
-    def _win_cond(i: int) -> str:
-        conds = [f"l{i} > l{j}" for j in range(i)] + \
-                [f"l{i} >= l{j}" for j in range(i + 1, n)]
-        return " AND ".join(conds) if conds else "TRUE"
-
-    best = "CASE " + " ".join(
-        f"WHEN {_win_cond(i)} THEN '{model.labels[i]}'"
-        for i in range(n)) + " END"
-    best_logit = "CASE " + " ".join(
-        f"WHEN {_win_cond(i)} THEN l{i}" for i in range(n)) + " END"
-    exps = "+".join(f"exp(l{j} - mx)" for j in range(n))
+    best, conf = sql_decide(model.labels, "mx")
     return f"""
 WITH {toks_cte},
 pos AS (
@@ -290,7 +202,7 @@ lgt AS (SELECT *, GREATEST({", ".join(f"l{i}" for i in range(n))}) AS mx
 SELECT doc_id, CAST(start1 AS INT) AS start1, CAST(start2 AS INT) AS start2,
        ent1_cui, ent2_cui,
        {best} AS relation,
-       ROUND(exp(({best_logit}) - mx) / ({exps}), 4) AS confidence
+       {conf} AS confidence
 FROM lgt
 """
 
@@ -331,70 +243,15 @@ def rel_direction_sequences(n_pairs: int = 120, length: int = 12,
     return out
 
 
-_REL_RNN_CACHE = None
-
-
+@lru_cache(maxsize=None)
 def rel_rnn_fixture_model():
     """RnnMetaModel trained on the directional task (the sequence-
     classifier machinery is shared with the meta scorer — exactly the
     torch-swap contract: same head shape, different input marking)."""
-    global _REL_RNN_CACHE
-    if _REL_RNN_CACHE is None:
-        from medcat_spark.functions.meta_model import train_rnn_meta_model
-        _REL_RNN_CACHE = train_rnn_meta_model(
-            rel_direction_sequences(), ["forward", "reverse"],
-            dim=12, hidden=14, epochs=500, lr=0.5, seed=29)
-    return _REL_RNN_CACHE
-
-
-def _score_batches_rnn(bc, cntx: int = 2):
-    def fn(batches) -> Iterator:
-        import pyarrow as _pyarrow
-        from medcat_spark.functions.meta_model import _arrow_doc_rows
-        from medcat_spark.pipeline import to_arrow_schema
-        arrow_schema = to_arrow_schema(_SCHEMA)
-        model = bc.value
-        max_d = 24
-        for rb in batches:
-            out = {f.name: [] for f in _SCHEMA.fields}
-            seqs = []
-            for doc_id, doc_ents, text in _arrow_doc_rows(rb):
-                toks = (text or "").split(" ")
-                starts, pos = {}, 0
-                for i, t in enumerate(toks):
-                    starts[pos] = i
-                    pos += len(t) + 1
-                ents = sorted(
-                    ((starts.get(e["start"]), e) for e in doc_ents
-                     if starts.get(e["start"]) is not None),
-                    key=lambda x: x[0])
-                for i in range(len(ents)):
-                    pa, ea = ents[i]
-                    for j in range(i + 1, len(ents)):
-                        pb, eb = ents[j]
-                        d = pb - pa
-                        if d <= 0:
-                            continue
-                        if d > max_d:
-                            break
-                        lo = max(0, pa - cntx)
-                        hi = min(len(toks), pb + 1 + cntx)
-                        marked = (toks[lo:pa] + ["<e1>"]
-                                  + toks[pa:pb] + ["<e2>"]
-                                  + toks[pb:hi])
-                        seqs.append(marked)
-                        out["doc_id"].append(str(doc_id))
-                        out["start1"].append(int(ea["start"]))
-                        out["start2"].append(int(eb["start"]))
-                        out["ent1_cui"].append(ea["cui"])
-                        out["ent2_cui"].append(eb["cui"])
-            if out["doc_id"]:
-                preds = model.predict_batch(seqs)
-                out["relation"] = [v for v, _ in preds]
-                out["confidence"] = [c for _, c in preds]
-                yield _pyarrow.RecordBatch.from_pydict(out,
-                                                      schema=arrow_schema)
-    return fn
+    from medcat_spark.functions.meta_model import train_rnn_meta_model
+    return train_rnn_meta_model(
+        rel_direction_sequences(), ["forward", "reverse"],
+        dim=12, hidden=14, epochs=500, lr=0.5, seed=29)
 
 
 def relations_rnn(ann: DataFrame, docs: DataFrame, bc,
@@ -402,6 +259,4 @@ def relations_rnn(ann: DataFrame, docs: DataFrame, bc,
     """relations_model with the STATEFUL marked-sequence scorer —
     identical plan shape; one padded recurrent forward per Arrow batch
     over all of its pairs' marked windows."""
-    from medcat_spark.functions.meta_model import docs_with_ents
-    return docs_with_ents(ann, docs, text_col).mapInArrow(
-        _score_batches_rnn(bc), schema=_SCHEMA)
+    return score(ann, docs, bc, "rel_marked", text_col)

@@ -1,7 +1,7 @@
 """The annotation job: documents DataFrame → annotations DataFrame.
 
 Spark lifecycle (SURVEY §3.1-3.2): ``docs → salted repartition →
-mapInPandas(annotate_batch) → annotation rows → broadcast-joined
+mapInArrow(annotate_batch) → annotation rows → broadcast-joined
 projections → triple aggregation → snapshot write``.  The reference's
 multiprocessing machinery (cat.py:1304-1470) maps 1:1 onto Spark:
 partitions ≈ char-budget batches, executors ≈ worker processes, Arrow

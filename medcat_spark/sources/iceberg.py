@@ -688,24 +688,29 @@ def _transform_column(df, p: Dict[str, Any]):
             "long" if stype == "long" else "int")
     n = int(transform[7:-1])
 
-    def _bucket_series(s):
-        import numpy as np
-        import pandas as pd
-        if stype in ("int", "long"):
-            # numpy murmur3 over the whole Arrow batch (8-byte LE
-            # longs, spec encoding) instead of a per-element lambda
-            arr = s.to_numpy()
-            mask = pd.isna(arr)
-            vals = np.where(mask, 0, arr).astype(np.int64)
-            h = murmur3_32_long_np(vals)
+    if stype in ("int", "long"):
+        def _bucket_longs(vals, is_null):
+            # numpy murmur3 over the whole Arrow batch (8-byte LE longs,
+            # spec encoding).  The UDF gets a null-free long plus a null
+            # flag: a nullable integer column arrives as float64, which
+            # rounds values above 2^53 before they are hashed.
+            import numpy as np
+            import pandas as pd
+            h = murmur3_32_long_np(vals.to_numpy(dtype=np.int64))
             out = ((h & np.uint32(0x7FFFFFFF)) % np.uint32(n))
             res = pd.Series(out.astype("int64")).astype("Int32")
-            res[np.asarray(mask)] = pd.NA
+            res[is_null.to_numpy(dtype=bool)] = pd.NA
             return res
+        return F.pandas_udf(_bucket_longs, "int")(
+            F.coalesce(col.cast("long"), F.lit(0).cast("long")),
+            col.isNull())
+
+    def _bucket_strings(s):
+        import pandas as pd
         return pd.Series(
             [None if v is None else bucket_value(v, n, stype)
              for v in s], dtype="object")
-    return F.pandas_udf(_bucket_series, "int")(col)
+    return F.pandas_udf(_bucket_strings, "int")(col)
 
 
 # ---------------------------------------------------------------------------

@@ -100,7 +100,7 @@ def test_token_space_window_extraction(bbpe_lstm):
     want = m.predict_batch_ids([ids[lo:hi]], [(cf - lo, cl - lo)])[0]
 
     import pandas as pd
-    from medcat_spark.functions.lstm_meta import _score_batches_lstm
+    from medcat_spark.functions.scorer import kernel
 
     class _Bc:  # broadcast stub
         value = m
@@ -108,7 +108,7 @@ def test_token_space_window_extraction(bbpe_lstm):
     rb = pa.RecordBatch.from_pandas(pd.DataFrame({
         "doc_id": ["d1"], "text": [text],
         "ents": [[{"start": start, "end": end, "cui": "C1"}]]}))
-    out = list(_score_batches_lstm(_Bc(), "Negation")(iter([rb])))
+    out = list(kernel(_Bc(), "centered", "Negation")(iter([rb])))
     assert len(out) == 1
     row = out[0].to_pandas().iloc[0]
     assert (row["value"], row["confidence"]) == want
@@ -130,7 +130,7 @@ def test_multitoken_entity_center_range(bbpe_lstm):
     want = m.predict_batch_ids([ids[lo:hi]], [(cf - lo, cl - lo)])[0]
 
     import pandas as pd
-    from medcat_spark.functions.lstm_meta import _score_batches_lstm
+    from medcat_spark.functions.scorer import kernel
 
     class _Bc:
         value = m
@@ -138,7 +138,7 @@ def test_multitoken_entity_center_range(bbpe_lstm):
     rb = pa.RecordBatch.from_pandas(pd.DataFrame({
         "doc_id": ["d1"], "text": [text],
         "ents": [[{"start": start, "end": end, "cui": "C9"}]]}))
-    out = list(_score_batches_lstm(_Bc(), "Negation")(iter([rb])))
+    out = list(kernel(_Bc(), "centered", "Negation")(iter([rb])))
     row = out[0].to_pandas().iloc[0]
     assert (row["value"], row["confidence"]) == want
 

@@ -59,17 +59,19 @@ def test_new_operator_plans_are_scale_safe(spark, docs_df, fixture_models):
         "doc_id string, text string")
 
     # token tagger: the score table must come in as a broadcast join and
-    # the whole scoring path stays JVM-side (no *InPandas)
+    # the whole scoring path stays JVM-side (no *InPandas / MapInArrow)
     m = ner_fixture_model()
     spans = tag_spans(docs, m, score_table(spark, m))
     p = _plan(spans)
     assert "BroadcastHashJoin" in p
     assert "InPandas" not in p and "BatchEvalPython" not in p
+    assert "MapInArrow" not in p
 
     # deid splice: also all-JVM
     p2 = _plan(deid_text(docs, spans.selectExpr(
         "doc_id", "start", "end", "label AS cui")))
     assert "InPandas" not in p2 and "CartesianProduct" not in p2
+    assert "MapInArrow" not in p2
 
     # LSH near-dup: bucket join, never a cartesian product
     import numpy as np
@@ -80,11 +82,12 @@ def test_new_operator_plans_are_scale_safe(spark, docs_df, fixture_models):
     p3 = _plan(simf.pairwise_cosine_lsh(emb, probe_dims=4, n_flips=1))
     assert "CartesianProduct" not in p3
 
-    # co-occurrence: annotate executes once (checkpointed scan, zero
-    # MapInPandas under the self-join)
+    # co-occurrence: annotate executes once (checkpointed scan: exactly
+    # one Python kernel node, the annotate MapInArrow)
     cdb, vocab = fixture_models
     from medcat_spark.config import EngineConfig
     from medcat_spark.pipeline import annotate, broadcast_model
     bc = broadcast_model(spark, cdb, vocab, EngineConfig())
     cooc = cooccurrence_triples(annotate(docs_df, bc))
     assert _plan(cooc).count("MapInPandas") == 0
+    assert _plan(cooc).count("MapInArrow") == 1

@@ -51,3 +51,4 @@ def test_no_udf_in_plan(spark, frames):
         .queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "MapInPandas" not in plan
+    assert "MapInArrow" not in plan
