@@ -2,17 +2,14 @@
 
   spark-submit --py-files dist/medcat_spark.zip jobs/run_kg.py \
       --docs /path/docs.parquet --model-pack /path/pack \
-      --out /path/kg --partitions 512 [--max-docs N] [--bucketed 32]
+      --out /path/kg --partitions 512 [--max-docs N]
 
-Resumable: re-running with the same --out continues from the last
-committed snapshot (anti-join on processed doc_ids).  Build the zip with
-``python tools/package.py``.
-
-``--bucketed N`` additionally persists the committed annotations as a
-doc_id-bucketed managed table (the Iceberg ``bucket(N, doc_id)``
-analogue) and derives the co-occurrence triples from it, so the self-
-join runs WITHOUT an Exchange on the join key — the manifest records
-the resulting shuffle count as evidence.
+Writes Iceberg tables under --out: ``annotations``, ``lineage`` and
+``processed_docs`` (sources/iceberg.IcebergKgSink), then the
+``triples/mentions`` and ``triples/cooccurrence`` graph tables.
+Resumable: re-running with the same --out annotates only the docs not
+yet in the committed ``processed_docs`` (one new snapshot per table per
+run).  Build the zip with ``python tools/package.py``.
 """
 
 from __future__ import annotations
@@ -29,17 +26,11 @@ def main(argv=None):
     p.add_argument("--out", required=True)
     p.add_argument("--partitions", type=int, default=None)
     p.add_argument("--max-docs", type=int, default=None)
-    p.add_argument("--bucketed", type=int, default=None)
     p.add_argument("--dedup", action="store_true",
                    help="fuzzy-dedup the corpus first and annotate only "
                         "cluster keepers (functions/dedup.dedup_clusters)")
     p.add_argument("--dedup-min-jaccard", type=float, default=0.2)
     p.add_argument("--master", default=None)
-    p.add_argument("--sink", choices=("parquet", "iceberg"),
-                   default="parquet",
-                   help="snapshot/triple store: the parquet snapshot "
-                        "protocol (default) or real Iceberg v2 tables "
-                        "(pure-Python writer, sources/iceberg.py)")
     p.add_argument("--meta", action="store_true",
                    help="run the pack's meta_* components (LSTM heads "
                         "from torch-format checkpoints) over the "
@@ -62,9 +53,10 @@ def main(argv=None):
                         "affinity graph) -> out/link_candidates")
     args = p.parse_args(argv)
 
-    from medcat_spark.checkpoint import read_annotations, resumable_annotate
     from medcat_spark.pipeline import broadcast_model
     from medcat_spark.session import get_spark
+    from medcat_spark.sources.iceberg import (IcebergKgSink, overwrite_table,
+                                              resumable_annotate_iceberg)
     from medcat_spark.sources.model_pack import (is_reference_pack,
                                                  load_model_pack)
     from medcat_spark.triples import cooccurrence_triples, mention_triples
@@ -121,50 +113,19 @@ def main(argv=None):
     else:
         dedup_stats = {}
 
-    if args.sink == "iceberg":
-        from medcat_spark.sources.iceberg import (IcebergKgSink,
-                                                  resumable_annotate_iceberg)
-        manifest = resumable_annotate_iceberg(
-            spark, docs, bc, args.out, num_partitions=args.partitions,
-            max_docs=args.max_docs, config=cfg)
-        ann = IcebergKgSink(args.out).read_annotations(spark)
-    else:
-        manifest = resumable_annotate(spark, docs, bc, args.out,
-                                      num_partitions=args.partitions,
-                                      max_docs=args.max_docs, config=cfg)
-        ann = read_annotations(spark, args.out)
-    if args.sink == "iceberg" and ann is not None:
-        # the KG triple tables themselves are Iceberg (REPLACE snapshot
-        # per run: recomputed from all committed annotations)
-        from medcat_spark.sources.iceberg import overwrite_table
+    manifest = resumable_annotate_iceberg(
+        spark, docs, bc, args.out, num_partitions=args.partitions,
+        max_docs=args.max_docs, config=cfg)
+    ann = IcebergKgSink(args.out).read_annotations(spark)
+    if ann is not None:
+        # the triples tables are recomputed from all committed
+        # annotations: one REPLACE snapshot per run.  ann is a scan of
+        # committed data files, so cooccurrence skips its defensive
+        # localCheckpoint
         overwrite_table(f"{args.out}/triples/mentions",
                         mention_triples(ann, distinct=True))
         overwrite_table(f"{args.out}/triples/cooccurrence",
                         cooccurrence_triples(ann, materialize=False))
-    elif ann is not None:
-        if args.bucketed:
-            from medcat_spark.operators.bucketing import (
-                bucketed_cooccurrence, write_annotations_bucketed)
-            write_annotations_bucketed(ann, "annotations_bucketed",
-                                       num_buckets=args.bucketed)
-            banns = spark.table("annotations_bucketed")
-            mention_triples(banns, distinct=True).write.mode("overwrite") \
-                .parquet(f"{args.out}/triples/mentions")
-            cooc = bucketed_cooccurrence(spark, "annotations_bucketed")
-            plan = cooc._jdf.queryExecution().executedPlan().toString()
-            manifest["bucketed"] = args.bucketed
-            manifest["cooc_shuffle_exchanges"] = \
-                plan.count("Exchange hashpartitioning")
-            cooc.write.mode("overwrite") \
-                .parquet(f"{args.out}/triples/cooccurrence")
-        else:
-            mention_triples(ann, distinct=True).write.mode("overwrite") \
-                .parquet(f"{args.out}/triples/mentions")
-            # ann is a parquet scan of the committed snapshots: no
-            # recompute risk, skip the defensive localCheckpoint
-            cooccurrence_triples(ann, materialize=False) \
-                .write.mode("overwrite") \
-                .parquet(f"{args.out}/triples/cooccurrence")
     meta_stats = {}
 
     def _docs_with_text():

@@ -266,7 +266,9 @@ class SpellChecker:
         call — the kernel's hottest path without the cache)."""
         if word in self._fix_cache:
             return self._fix_cache[word]
-        fix = max(self.candidates(word), key=self.P)
+        # ties on P go to the smallest string, not to set order (which
+        # follows PYTHONHASHSEED)
+        fix = min(self.candidates(word), key=lambda w: (-self.P(w), w))
         out = fix if fix != word else None
         if len(self._fix_cache) < 500_000:
             self._fix_cache[word] = out

@@ -1,10 +1,11 @@
 """Independent golden oracle for the ``kg_relations_bert`` query.
 
-The engine side (``relations_bert`` + ``_score_pairs_bert``,
-bert_np.py) runs the numpy RelCAT-BERT pair classifier distributed via
-``mapInPandas``.  A transformer forward is not SQL-expressible, so this
-module recomputes the expected ``(relation, n_pairs, avg_conf)`` rows
-with a fully INDEPENDENT pipeline and emits them as literal ``VALUES``
+The engine side (``relations_bert``, bert_np.py) runs the numpy
+RelCAT-BERT pair classifier distributed through the one scorer
+operator's ``mapInArrow`` kernel (functions/scorer.py).  A transformer
+forward is not SQL-expressible, so this module recomputes the expected
+``(relation, n_pairs, avg_conf)`` rows with a fully INDEPENDENT
+pipeline and emits them as literal ``VALUES``
 dispatched on a fingerprint of the ``documents`` table — the same SQL
 string is then correct at every known scale factor (the driver checks
 sf0.01, ``tools/check_oracles.py`` checks sf0.001).

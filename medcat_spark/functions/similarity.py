@@ -214,8 +214,7 @@ def write_ivf_partitioned(df: DataFrame, centroids, path: str,
     (the parquet analogue of an Iceberg identity-partition on the
     cluster column).  Probes against this layout are partition-pruned
     directory scans of n_probe/n_centroids of the data — the 100 TB
-    posture cosine_topk_ivf's docstring promises, made real (mirrors
-    operators/bucketing.write_annotations_bucketed for the join key)."""
+    posture cosine_topk_ivf's docstring promises, made real."""
     (df.withColumn(cluster_col,
                    ivf_assign(F.col(vec_col).cast("array<double>"),
                               centroids))

@@ -3,9 +3,8 @@
 The north rule requires "materializing (doc-entity, relation,
 entity-entity co-occurrence) triples into Iceberg graph tables" and
 "resumable from Iceberg snapshot checkpoints".  The Iceberg runtime
-jars are absent from this sandbox, so rather than stopping at the
-parquet-protocol analogue (checkpoint.py), this module implements the
-actual on-disk format from the public spec
+jars are not a dependency, so this module implements the actual
+on-disk format from the public spec
 (https://iceberg.apache.org/spec/, format-version 2):
 
   * table metadata JSON (``metadata/vN.metadata.json``) with schemas,
@@ -1063,6 +1062,15 @@ class IcebergTable:
         snap_id = int(uuid.uuid4().int % (1 << 62))
         data_dir = self._write_data_files(df, snap_id)
         pend = self._build_data_manifest(data_dir, snap_id, muuid=None)
+        return self._commit_data_manifest(pend, snap_id, summary_extra,
+                                          overwrite, branch)
+
+    def _commit_data_manifest(self, pend: Dict[str, Any], snap_id: int,
+                              summary_extra: Optional[Dict[str, str]] = None,
+                              overwrite: bool = False,
+                              branch: str = "main") -> int:
+        """Commit data files already written and manifested for
+        ``snap_id`` (metadata only, no Spark job)."""
         return self._commit_snapshot(
             pending=[pend], snap_id=snap_id, muuid=pend.pop("_muuid"),
             operation="overwrite" if overwrite else "append",
@@ -1600,16 +1608,21 @@ class IcebergTable:
         self._commit_metadata(version + 1)
         return new_id
 
-    def rollback(self, snapshot_id: int) -> None:
+    def rollback(self, snapshot_id: Optional[int]) -> None:
         """Point current back at an earlier snapshot (new metadata
-        version; nothing is deleted — Iceberg rollback semantics)."""
+        version; nothing is deleted — Iceberg rollback semantics).
+        ``None`` points it at no snapshot: the table reads empty."""
         def mutate(md):
+            refs = md.setdefault("refs", {})
+            if snapshot_id is None:
+                md["current-snapshot-id"] = -1
+                refs.pop("main", None)
+                return
             if not any(s["snapshot-id"] == snapshot_id
                        for s in md["snapshots"]):
                 raise ValueError(f"unknown snapshot: {snapshot_id}")
             md["current-snapshot-id"] = snapshot_id
-            md.setdefault("refs", {})["main"] = {
-                "snapshot-id": snapshot_id, "type": "branch"}
+            refs["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
 
         self._commit_metadata_op(mutate)
 
@@ -2881,16 +2894,28 @@ def _parse_partition_value(v: str, iceberg_type: str) -> Any:
 
 
 # ---------------------------------------------------------------------------
-# Resumable KG sink over Iceberg snapshots (checkpoint.py parity)
+# Resumable KG sink over Iceberg snapshots
 # ---------------------------------------------------------------------------
 
+KG_COMMIT_ID = "kg-commit-id"
+
+
 class IcebergKgSink:
-    """The checkpoint.py protocol expressed over real Iceberg tables:
-    ``annotations``, ``lineage`` and ``processed_docs`` under one root,
-    one Iceberg snapshot per commit, resume = anti-join against the
-    committed ``processed_docs`` snapshot (the reference's
-    annotated_ids skip-set, cat.py:1439-1448, as metadata-planned scan
-    + distributed join)."""
+    """The engine's commit/resume protocol: ``annotations``, ``lineage``
+    and ``processed_docs`` tables under one root, one snapshot per table
+    per commit, resume = anti-join against the committed
+    ``processed_docs`` (the reference's annotated_ids skip-set,
+    cat.py:1439-1448, as a metadata-planned scan + distributed join).
+
+    Exactly-once under a crash: all snapshots of one commit carry one
+    ``kg-commit-id`` summary stamp (as streaming/iceberg_sink.py stamps
+    epochs) and ``processed_docs`` is committed last, so a commit is
+    durable iff its id is in ``processed_docs``.  Readers time-travel
+    ``annotations``/``lineage`` to their newest durable snapshot and the
+    writer rolls them back to it before appending (metadata only).
+
+    Single writer per root: concurrent resumers would choose
+    overlapping doc sets and roll back each other's appends."""
 
     def __init__(self, root: str):
         self.root = root
@@ -2899,42 +2924,74 @@ class IcebergKgSink:
         loc = os.path.join(self.root, name)
         return IcebergTable.load(loc) if IcebergTable.exists(loc) else None
 
+    def committed_snapshot(self, name: str) -> Optional[int]:
+        """Newest snapshot of table ``name`` whose commit id is committed
+        in ``processed_docs`` (None: no commit of it is durable)."""
+        t, done = self._table(name), self._table("processed_docs")
+        if t is None or done is None:
+            return None
+        ids = {s["summary"].get(KG_COMMIT_ID) for s in done.snapshots()}
+        return next((s["snapshot-id"] for s in reversed(t.snapshots())
+                     if s["summary"].get(KG_COMMIT_ID) in ids), None)
+
     def committed_doc_ids(self, spark):
         t = self._table("processed_docs")
-        if t is None:
+        if t is None or t.current_snapshot_id() is None:
             return None
-        return t.to_df(spark).select("doc_id").distinct()
+        return t.to_df(spark).select("doc_id")
+
+    def _read(self, spark, name: str, snapshot_id: Optional[int] = None):
+        sid = self.committed_snapshot(name) if snapshot_id is None \
+            else snapshot_id
+        return None if sid is None else self._table(name).to_df(spark, sid)
 
     def read_annotations(self, spark, snapshot_id: Optional[int] = None):
-        t = self._table("annotations")
-        return None if t is None else t.to_df(spark, snapshot_id)
+        return self._read(spark, "annotations", snapshot_id)
 
     def read_lineage(self, spark):
-        t = self._table("lineage")
-        return None if t is None else t.to_df(spark)
+        return self._read(spark, "lineage")
 
     def table(self, name: str) -> Optional[IcebergTable]:
         return self._table(name)
 
-    def commit(self, spark, annotations, lineage, processed_docs,
-               summary: Optional[Dict[str, str]] = None) -> Dict[str, int]:
-        """Append all three tables; the ``processed_docs`` append is
-        LAST — a crash before it leaves extra annotation data files
-        whose doc_ids are uncommitted, so resume re-annotates them and
-        readers that anti-join on processed_docs stay exactly-once
-        (same ordering argument as checkpoint.py's manifest-last)."""
+    def stage(self, doc_ids) -> Dict[str, Any]:
+        """Write ``doc_ids`` as the ``processed_docs`` data files of the
+        next commit, unread until ``publish`` commits them."""
+        t = self._table("processed_docs") or IcebergTable.create(
+            os.path.join(self.root, "processed_docs"), doc_ids.schema)
+        snap_id = int(uuid.uuid4().int % (1 << 62))
+        data_dir = t._write_data_files(doc_ids, snap_id)
+        pend = t._build_data_manifest(data_dir, snap_id)
+        return {"table": t, "snap_id": snap_id, "manifest": pend,
+                "data_dir": data_dir}
+
+    def publish(self, staged: Dict[str, Any], annotations, lineage,
+                summary: Optional[Dict[str, str]] = None) -> Dict[str, int]:
+        """Append ``annotations`` and ``lineage`` (either may be None),
+        then commit the staged ``processed_docs`` files as a
+        metadata-only snapshot — the commit point."""
+        stamp = {**(summary or {}), KG_COMMIT_ID: uuid.uuid4().hex}
         ids = {}
         for name, df in (("annotations", annotations),
-                         ("lineage", lineage),
-                         ("processed_docs", processed_docs)):
+                         ("lineage", lineage)):
             if df is None:
                 continue
-            loc = os.path.join(self.root, name)
-            t = self._table(name)
-            if t is None:
-                t = IcebergTable.create(loc, df.schema)
-            ids[name] = t.append_dataframe(df, summary_extra=summary)
+            t = self._table(name) or IcebergTable.create(
+                os.path.join(self.root, name), df.schema)
+            keep = self.committed_snapshot(name)
+            if t.current_snapshot_id() != keep:
+                # a crashed commit appended here: build on durable state
+                t.rollback(keep)
+            ids[name] = t.append_dataframe(df, summary_extra=stamp)
+        ids["processed_docs"] = staged["table"]._commit_data_manifest(
+            staged["manifest"], staged["snap_id"], stamp)
         return ids
+
+    def commit(self, spark, annotations, lineage, processed_docs,
+               summary: Optional[Dict[str, str]] = None) -> Dict[str, int]:
+        """``stage`` the ``processed_docs`` frame, then ``publish``."""
+        return self.publish(self.stage(processed_docs), annotations,
+                            lineage, summary)
 
 
 def overwrite_table(location: str, df, partition_by: Sequence[str] = ()
@@ -2952,16 +3009,16 @@ def resumable_annotate_iceberg(spark, docs, bc, out_path: str,
                                num_partitions: Optional[int] = None,
                                max_docs: Optional[int] = None,
                                config=None) -> Dict[str, Any]:
-    """checkpoint.resumable_annotate with the snapshot store being real
-    Iceberg tables (the north rule's 'resumable from Iceberg snapshot
-    checkpoints').  Same guarantees, same ordering argument:
+    """Annotate the docs not yet committed under ``out_path`` as one
+    IcebergKgSink commit (the north rule's 'resumable from Iceberg
+    snapshot checkpoints').  The chosen doc_ids are staged first and
+    read back as the set to annotate, so recomputation cannot commit
+    unannotated ids.  ``max_docs`` bounds one commit's work, lowest
+    doc_ids first (reference: checkpoint every `steps` docs,
+    utils/checkpoint.py:94-110).  Returns the manifest dict (n_docs ==
+    0: nothing left to do)."""
+    import shutil
 
-      * the chosen doc_id set is materialized and read back BEFORE
-        annotation, so recomputation cannot commit unannotated ids;
-      * the ``processed_docs`` append is the last commit — a crash
-        earlier leaves orphan data files that resume re-annotates and
-        exactly-once readers never see.
-    """
     from medcat_spark.config import EngineConfig
     from medcat_spark.pipeline import annotate, lineage_metrics
 
@@ -2972,38 +3029,37 @@ def resumable_annotate_iceberg(spark, docs, bc, out_path: str,
     todo = docs if committed is None \
         else docs.join(committed, "doc_id", "left_anti")
     if max_docs is not None:
+        # orderBy before limit (TakeOrderedAndProject, no full sort
+        # shuffle): recomputation cannot pick a different set
         todo = todo.orderBy("doc_id").limit(max_docs)
-
-    # materialize the chosen set first (uncommitted scratch parquet,
-    # same role as checkpoint.py's tmp-dir processed_docs write)
-    scratch = os.path.join(out_path, "_scratch",
-                           uuid.uuid4().hex[:12], "chosen")
-    todo.select("doc_id").write.parquet(scratch)
-    chosen = spark.read.parquet(scratch)
-    n_todo = chosen.count()
+    staged = sink.stage(todo.select("doc_id"))
+    n_todo = staged["manifest"]["added_rows"]   # from parquet footers
 
     manifest: Dict[str, Any] = {
-        "n_docs": int(n_todo),
+        "n_docs": n_todo,
         "cdb_hash": cdb.content_hash(),
         "config_hash": cfg.content_hash(),
         "created_unix_ms": int(time.time() * 1000)}
     if n_todo == 0:
+        shutil.rmtree(staged["data_dir"])
+        os.remove(staged["manifest"]["manifest_path"])
         manifest["n_annotations"] = 0
         return manifest
 
     t0 = time.monotonic()
+    chosen = spark.read.parquet(staged["data_dir"])
     subset = docs.join(chosen, "doc_id", "left_semi")
     ann = annotate(subset, bc, num_partitions=num_partitions,
                    keep_lineage_cols=True).cache()
-    ids = sink.commit(
-        spark,
-        ann.drop("part_id", "batch_us"),
-        lineage_metrics(ann),
-        chosen.select("doc_id"),
-        summary={"cdb-hash": cdb.content_hash(),
-                 "config-hash": cfg.content_hash()})
-    manifest["n_annotations"] = int(ann.count())
+    try:
+        ids = sink.publish(
+            staged, ann.drop("part_id", "batch_us"), lineage_metrics(ann),
+            summary={"cdb-hash": cdb.content_hash(),
+                     "config-hash": cfg.content_hash()})
+    finally:
+        ann.unpersist()
+    added = sink.table("annotations")._snapshot(ids["annotations"])
+    manifest["n_annotations"] = int(added["summary"]["added-records"])
     manifest["wall_sec"] = time.monotonic() - t0
     manifest["snapshot_ids"] = ids
-    ann.unpersist()
     return manifest

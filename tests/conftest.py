@@ -4,6 +4,9 @@ import sys
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")  # small for test latency
+# the fixtures are small; under the engine's 48g default heap the
+# session JVM grows past the RAM of a 16 GB host and is OOM-killed
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 

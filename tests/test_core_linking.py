@@ -124,6 +124,28 @@ def test_spell_check_fix(models):
     assert any(e.cui == "C0006" for e in main), main
 
 
+def test_spell_check_tie_break_ignores_hash_seed():
+    # every vocab word is one edit from each query and all counts are
+    # equal, so every candidate ties on P: the fix must be the smallest
+    # string, not whatever set order PYTHONHASHSEED gives
+    import os
+    import subprocess
+    import sys
+    script = (
+        "from medcat_spark.config import EngineConfig\n"
+        "from medcat_spark.core.normalizer import SpellChecker\n"
+        "sc = SpellChecker({c + 'ot': 3 for c in 'bcdghjlmnprtw'},\n"
+        "                  EngineConfig())\n"
+        "print(' '.join(sc.fix(q) for q in ('aot', 'fot', 'kot', 'zot')))\n")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    outs = [subprocess.run(
+        [sys.executable, "-c", script], cwd=root, check=True,
+        capture_output=True, text=True,
+        env={**os.environ, "PYTHONPATH": root, "PYTHONHASHSEED": seed}
+    ).stdout.split() for seed in ("1", "2")]
+    assert outs[0] == outs[1] == ["bot"] * 4
+
+
 def test_threshold_filters_unlinked(models):
     cdb, vocab = models
     cfg = EngineConfig(similarity_threshold=2.0)  # impossible threshold

@@ -441,8 +441,7 @@ def test_nested_schema_roundtrip(spark, docs_df, tmp_path):
 def test_resumable_annotate_iceberg_parity(spark, docs_df, fixture_models,
                                            tmp_path):
     """The Iceberg-backed resumable annotate commits each doc exactly
-    once across resumed runs and matches single-shot annotate — the
-    checkpoint.py guarantees over real Iceberg snapshots."""
+    once across resumed runs and matches single-shot annotate."""
     from medcat_spark.config import EngineConfig
     from medcat_spark.pipeline import annotate, broadcast_model
     from medcat_spark.sources.iceberg import resumable_annotate_iceberg
@@ -476,7 +475,8 @@ def test_resumable_annotate_iceberg_parity(spark, docs_df, fixture_models,
     assert sum(r["n_annotations"] for r in lin) == resumed.count()
     # snapshot summaries carry the model/config hashes
     ann_t = IcebergTable.load(os.path.join(out, "annotations"))
-    assert all("cdb-hash" in s["summary"] for s in ann_t.snapshots())
+    assert all(s["summary"]["cdb-hash"] == cdb.content_hash()
+               for s in ann_t.snapshots())
 
 
 def test_expire_snapshots_gc(spark, triples_df, tmp_path):

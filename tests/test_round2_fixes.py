@@ -11,10 +11,11 @@ import json
 from pyspark.sql import functions as F
 
 from medcat_spark.cdb_build import build_cdb_tables
-from medcat_spark.checkpoint import committed_doc_ids, resumable_annotate
 from medcat_spark.config import EngineConfig
 from medcat_spark.core.model import CdbModel, prepare_name
 from medcat_spark.pipeline import broadcast_model
+from medcat_spark.sources.iceberg import (IcebergKgSink,
+                                          resumable_annotate_iceberg)
 from medcat_spark.sources.mct_export import gold_annotations, read_mct_export
 
 
@@ -83,9 +84,10 @@ def test_checkpoint_subset_is_deterministic_first_n(spark, docs_df,
     cdb, vocab = fixture_models
     bc = broadcast_model(spark, cdb, vocab, EngineConfig())
     out = str(tmp_path / "kg")
-    m = resumable_annotate(spark, docs_df, bc, out, max_docs=7)
+    m = resumable_annotate_iceberg(spark, docs_df, bc, out, max_docs=7)
     assert m["n_docs"] == 7
-    done = sorted(r["doc_id"] for r in committed_doc_ids(spark, out).collect())
+    done = sorted(r["doc_id"] for r in
+                  IcebergKgSink(out).committed_doc_ids(spark).collect())
     expected = sorted(
         r["doc_id"] for r in docs_df.select("doc_id").collect())[:7]
     assert done == expected
