@@ -36,6 +36,7 @@ reference implements with ``annotated_ids`` pickles
 from __future__ import annotations
 
 import io
+import itertools
 import json
 import os
 import struct
@@ -817,10 +818,10 @@ MANIFEST_LIST_SCHEMA = {"type": "record", "name": "manifest_file", "fields": [
 # Parquet footer stats (via pyarrow — no data read)
 # ---------------------------------------------------------------------------
 
-def _parquet_file_info(path: str, bound_types: Dict[str, str]
+def _parquet_file_info(path: str, columns: Dict[str, Any]
                        ) -> Dict[str, Any]:
-    """record_count + per-top-level-column min/max/null counts from the
-    parquet footer. ``bound_types``: column name → iceberg primitive."""
+    """record_count + min/max/null counts from the parquet footer for
+    the top-level columns named in ``columns``."""
     import pyarrow.parquet as pq
     md = pq.ParquetFile(path).metadata
     mins: Dict[str, Any] = {}
@@ -832,7 +833,7 @@ def _parquet_file_info(path: str, bound_types: Dict[str, str]
         for ci in range(g.num_columns):
             col = g.column(ci)
             name = col.path_in_schema
-            if name not in bound_types:
+            if name not in columns:
                 continue
             counts[name] = counts.get(name, 0) + col.num_values
             st = col.statistics
@@ -848,6 +849,30 @@ def _parquet_file_info(path: str, bound_types: Dict[str, str]
     return {"record_count": md.num_rows,
             "file_size_in_bytes": os.path.getsize(path),
             "mins": mins, "maxs": maxs, "nulls": nulls, "counts": counts}
+
+
+def _partition_summaries(pf: Sequence[Dict[str, Any]],
+                         entries: Sequence[Dict[str, Any]]
+                         ) -> List[Dict[str, Any]]:
+    """Manifest-list partition summaries of ``entries`` per partition
+    field.  Bounds are taken over VALUES and serialized last:
+    little-endian int/long encodings do not sort bytewise, so byte-level
+    min/max would corrupt numeric summaries."""
+    out = []
+    for p in pf:
+        vals = [e["data_file"]["partition"].get(p["name"]) for e in entries]
+        present = [v for v in vals if v is not None]
+        out.append({
+            "contains_null": len(present) < len(vals), "contains_nan": None,
+            "lower_bound": serialize_bound(p["result_type"], min(present))
+            if present else None,
+            "upper_bound": serialize_bound(p["result_type"], max(present))
+            if present else None})
+    return out
+
+
+def _new_snapshot_id() -> int:
+    return int(uuid.uuid4().int % (1 << 62))
 
 
 # ---------------------------------------------------------------------------
@@ -869,8 +894,9 @@ class IcebergTable:
         self.location = location
         self.metadata = metadata
         # the metadata version this object's state is based on; commits
-        # target base+1 so a stale writer FAILS (FileExistsError) instead
-        # of silently jumping past the winner with a stale snapshot list
+        # target base+1 so a stale writer's write FAILS (FileExistsError)
+        # and _commit_metadata_op re-applies its change to the winner's
+        # metadata instead of silently jumping past it
         self._base_version = base_version
 
     # -- creation / loading -------------------------------------------------
@@ -956,12 +982,14 @@ class IcebergTable:
         os.rename(tmp, hint)
 
     def _commit_metadata_op(self, mutate) -> Any:
-        """Optimistic-concurrency wrapper for METADATA-ONLY commits
-        (refs, rollback): ``mutate(metadata) -> result`` edits
-        self.metadata in place (re-validating against the fresh state),
-        then the version bump is attempted; on a lost race the winner's
-        metadata is reloaded and the mutation re-applied — the same
-        retry discipline _commit_snapshot uses for data commits."""
+        """The table's one commit loop (optimistic concurrency), for
+        snapshot and metadata-only commits alike: ``mutate(metadata) ->
+        result`` edits self.metadata in place, computing everything it
+        derives (ids, parents, expiry sets) from that state; then the
+        version bump is attempted, with a metadata-log entry for the
+        version it replaces.  On a lost race the winner's metadata is
+        reloaded and the mutation re-applied to it."""
+        mdir = self._metadata_dir(self.location)
         for attempt in range(10):
             if attempt:
                 fresh = IcebergTable.load(self.location)
@@ -976,8 +1004,13 @@ class IcebergTable:
                 if self._current_version() > self._base_version:
                     continue
                 raise
-            self.metadata["last-updated-ms"] = int(time.time() * 1000)
             version = self._base_version
+            now = int(time.time() * 1000)
+            self.metadata["last-updated-ms"] = now
+            self.metadata["metadata-log"].append(
+                {"metadata-file": os.path.join(
+                    mdir, f"v{version}.metadata.json"),
+                 "timestamp-ms": now})
             try:
                 self._commit_metadata(version + 1)
                 return result
@@ -1059,25 +1092,25 @@ class IcebergTable:
         REPLACE semantics — old snapshots stay time-travelable).
         ``branch`` commits onto a named branch (create_branch first)
         without moving main — the staging side of write-audit-publish."""
-        snap_id = int(uuid.uuid4().int % (1 << 62))
+        snap_id = _new_snapshot_id()
         data_dir = self._write_data_files(df, snap_id)
-        pend = self._build_data_manifest(data_dir, snap_id, muuid=None)
-        return self._commit_data_manifest(pend, snap_id, summary_extra,
+        manifest = self._build_data_manifest(data_dir, snap_id)
+        return self._commit_data_manifest(manifest, snap_id, summary_extra,
                                           overwrite, branch)
 
-    def _commit_data_manifest(self, pend: Dict[str, Any], snap_id: int,
+    def _commit_data_manifest(self, manifest: Dict[str, Any], snap_id: int,
                               summary_extra: Optional[Dict[str, str]] = None,
                               overwrite: bool = False,
                               branch: str = "main") -> int:
         """Commit data files already written and manifested for
         ``snap_id`` (metadata only, no Spark job)."""
         return self._commit_snapshot(
-            pending=[pend], snap_id=snap_id, muuid=pend.pop("_muuid"),
+            manifests=[manifest], snap_id=snap_id,
             operation="overwrite" if overwrite else "append",
-            summary={"added-data-files": str(pend["added_files"]),
-                     "added-records": str(pend["added_rows"]),
+            summary={"added-data-files": str(manifest["added_files_count"]),
+                     "added-records": str(manifest["added_rows_count"]),
                      **(summary_extra or {})},
-            drop_previous=overwrite, branch=branch)
+            carry=lambda m: not overwrite, branch=branch)
 
     def _write_data_files(self, df, snap_id: int) -> str:
         """One Spark write job into a snapshot-id-addressed dir.
@@ -1135,117 +1168,86 @@ class IcebergTable:
         WHEN MATCHED THEN UPDATE / WHEN NOT MATCHED THEN INSERT
         semantics, atomically (readers see either the old table or the
         fully-merged one)."""
-        by_name = {f["name"]: f for f in self.schema()["fields"]}
-        for c in key_cols:
-            if c not in by_name:
-                raise ValueError(f"key column not in schema: {c}")
-            if not isinstance(by_name[c]["type"], str):
-                raise ValueError(f"upsert key on nested type: {c}")
-        eq_ids = [by_name[c]["id"] for c in key_cols]
-
-        snap_id = int(uuid.uuid4().int % (1 << 62))
-        muuid = uuid.uuid4()
+        eq_ids = self._equality_ids(key_cols)
+        snap_id = _new_snapshot_id()
         data_dir = self._write_data_files(df, snap_id)
-        data_pend = self._build_data_manifest(data_dir, snap_id,
-                                              muuid=muuid)
-        data_pend.pop("_muuid")
-        keys = df.select(*key_cols).distinct()
-        del_pend = self._write_delete_manifest(keys, eq_ids, snap_id,
-                                               muuid, suffix="m1")
-        pending = [data_pend] + ([del_pend] if del_pend else [])
-        summary = {"added-data-files": str(data_pend["added_files"]),
-                   "added-records": str(data_pend["added_rows"]),
+        data_m = self._build_data_manifest(data_dir, snap_id)
+        del_m = self._write_deletes(df.select(*key_cols).distinct(),
+                                    snap_id, eq_ids)
+        summary = {"added-data-files": str(data_m["added_files_count"]),
+                   "added-records": str(data_m["added_rows_count"]),
                    **(summary_extra or {})}
-        if del_pend:
-            summary["added-delete-files"] = str(del_pend["added_files"])
-            summary["added-equality-deletes"] = str(del_pend["added_rows"])
+        if del_m:
+            summary["added-delete-files"] = str(del_m["added_files_count"])
+            summary["added-equality-deletes"] = str(
+                del_m["added_rows_count"])
         return self._commit_snapshot(
-            pending=pending, snap_id=snap_id, muuid=muuid,
-            operation="overwrite", summary=summary, branch=branch)
+            manifests=[data_m] + ([del_m] if del_m else []),
+            snap_id=snap_id, operation="overwrite", summary=summary,
+            branch=branch)
 
-    def _build_data_manifest(self, data_dir: str, snap_id: int,
-                             muuid=None) -> Dict[str, Any]:
-        """Walk a written parquet dir, build per-file stats entries and
-        the content=0 manifest; returns a pending-manifest descriptor
-        for _commit_snapshot."""
-        pf = self._partition_fields()
-        identity_srcs = [p["source_name"] for p in pf
-                         if p["transform"] == "identity"]
-        bound_types = {f["name"]: f["type"]
-                       for f in self.schema()["fields"]
-                       if isinstance(f["type"], str)
-                       and f["name"] not in identity_srcs}
-        field_ids = {f["name"]: f["id"] for f in self.schema()["fields"]}
-
+    def _manifest_entries(self, data_dir: str, snap_id: int, content: int,
+                          columns: Dict[str, Tuple[int, str]],
+                          equality_ids: Optional[List[int]] = None
+                          ) -> List[Dict[str, Any]]:
+        """ADDED manifest entries (data_file ``content``: 0 data, 1
+        position deletes, 2 equality deletes) for the parquet files
+        Spark wrote under ``data_dir``: partition values parsed from the
+        ``k=v`` directories, footer bounds for ``columns`` (name →
+        (field id, iceberg type)) and, for data files, value and null
+        counts.  Empty part files are deleted: Spark emits one per task
+        even for empty partitions, and committing them bloats manifests
+        and defeats bounds-based skipping (the reference Iceberg Spark
+        writer commits only non-empty files)."""
+        ptypes = {p["name"]: p["result_type"]
+                  for p in self._partition_fields()}
         entries = []
-        # summary bounds are tracked on VALUES and serialized at the end:
-        # little-endian int/long encodings do not sort bytewise, so
-        # byte-level min/max would corrupt numeric summaries
-        part_values: List[List[Any]] = [[] for _ in pf]
-        part_summaries = [{"contains_null": False, "contains_nan": None,
-                           "lower_bound": None, "upper_bound": None}
-                          for _ in pf]
-        total_rows = 0
         for root, _dirs, files in os.walk(data_dir):
             for fn in sorted(files):
                 if not fn.endswith(".parquet"):
                     continue
                 path = os.path.join(root, fn)
-                rel = os.path.relpath(path, data_dir)
+                info = _parquet_file_info(path, columns)
+                if info["record_count"] == 0:
+                    os.remove(path)
+                    continue
                 partition: Dict[str, Any] = {}
-                for seg in rel.split(os.sep)[:-1]:
+                for seg in os.path.relpath(root, data_dir).split(os.sep):
                     if "=" in seg:
                         k, _, v = seg.partition("=")
                         partition[k] = _parse_partition_value(
-                            v, dict((p["name"], p["result_type"])
-                                    for p in pf).get(k, "string"))
-                info = _parquet_file_info(path, bound_types)
-                if info["record_count"] == 0:
-                    # Spark emits a part file per task even for empty
-                    # partitions; committing them bloats manifests and
-                    # defeats bounds-based skipping (no stats to prune
-                    # by).  The reference Iceberg Spark writer commits
-                    # only non-empty files.
-                    os.remove(path)
-                    continue
-                total_rows += info["record_count"]
+                            v, ptypes.get(k, "string"))
                 lower, upper, vcounts, ncounts = [], [], [], []
-                for name, t in bound_types.items():
-                    fid = field_ids[name]
-                    if name in info["counts"]:
+                for name, (fid, t) in columns.items():
+                    if content == 0 and name in info["counts"]:
                         vcounts.append({"key": fid,
                                         "value": info["counts"][name]})
-                    if name in info["nulls"]:
+                    if content == 0 and name in info["nulls"]:
                         ncounts.append({"key": fid,
                                         "value": info["nulls"][name]})
                     mn, mx = info["mins"].get(name), info["maxs"].get(name)
-                    if t == "string" and isinstance(mn, bytes):
-                        mn = mn.decode("utf-8", "replace")
-                    if t == "string" and isinstance(mx, bytes):
-                        mx = mx.decode("utf-8", "replace")
-                    if t == "string" and mn is not None:
-                        mn = _truncate_lower(mn)
-                    if t == "string" and mx is not None:
-                        mx = _truncate_upper(mx)
+                    if t == "string":
+                        if isinstance(mn, bytes):
+                            mn = mn.decode("utf-8", "replace")
+                        if isinstance(mx, bytes):
+                            mx = mx.decode("utf-8", "replace")
+                        if mn is not None:
+                            mn = _truncate_lower(mn)
+                        if mx is not None:
+                            mx = _truncate_upper(mx)
                     lb = serialize_bound(t, mn)
                     ub = serialize_bound(t, mx)
                     if lb is not None:
                         lower.append({"key": fid, "value": lb})
                     if ub is not None:
                         upper.append({"key": fid, "value": ub})
-                for i, p in enumerate(pf):
-                    v = partition.get(p["name"])
-                    if v is None:
-                        part_summaries[i]["contains_null"] = True
-                    else:
-                        part_values[i].append(v)
                 entries.append({
                     "status": 1,  # ADDED
                     "snapshot_id": snap_id,
                     "sequence_number": None,  # inherited from the snapshot
                     "file_sequence_number": None,
                     "data_file": {
-                        "content": 0,  # DATA
+                        "content": content,
                         "file_path": path,
                         "file_format": "PARQUET",
                         "partition": partition,
@@ -1255,63 +1257,97 @@ class IcebergTable:
                         "null_value_counts": ncounts or None,
                         "lower_bounds": lower or None,
                         "upper_bounds": upper or None,
+                        "equality_ids": equality_ids,
                     }})
+        return entries
 
-        for i, p in enumerate(pf):
-            if part_values[i]:
-                part_summaries[i]["lower_bound"] = serialize_bound(
-                    p["result_type"], min(part_values[i]))
-                part_summaries[i]["upper_bound"] = serialize_bound(
-                    p["result_type"], max(part_values[i]))
-
-        mdir = self._metadata_dir(self.location)
-        if muuid is None:
-            muuid = uuid.uuid4()
-        manifest_path = os.path.join(mdir, f"{muuid}-m0.avro")
-        mlen = avro_write_container(
-            manifest_path, manifest_entry_schema(pf), entries,
-            meta={"schema": json.dumps(self.schema()),
-                  "schema-id": str(self.metadata["current-schema-id"]),
+    def _write_manifest(self, entries: List[Dict[str, Any]], content: int,
+                        spec_id: int, schema_id: int,
+                        partitions: Optional[List[Dict[str, Any]]] = None
+                        ) -> Dict[str, Any]:
+        """Write ``entries`` as one manifest (``content`` 0 data, 1
+        deletes) under partition spec ``spec_id`` and write schema
+        ``schema_id``; returns its manifest-list record, whose sequence
+        numbers and adding snapshot _commit_snapshot fills in (a
+        ``min_sequence_number`` is kept when the entries carry their
+        own sequence numbers)."""
+        path = os.path.join(self._metadata_dir(self.location),
+                            f"{uuid.uuid4()}-m0.avro")
+        length = avro_write_container(
+            path, manifest_entry_schema(self._partition_fields(spec_id)),
+            entries,
+            meta={"schema": json.dumps(self._schema_by_id(schema_id)),
+                  "schema-id": str(schema_id),
                   "partition-spec": json.dumps(
-                      self.partition_spec()["fields"]),
-                  "partition-spec-id": str(
-                      self.partition_spec()["spec-id"]),
+                      self.partition_spec(spec_id)["fields"]),
+                  "partition-spec-id": str(spec_id),
                   "format-version": "2",
-                  "content": "data"})
-        return {"manifest_path": manifest_path, "mlen": mlen,
-                "content": 0, "added_files": len(entries),
-                "added_rows": total_rows,
-                "part_summaries": part_summaries if pf else None,
-                "_muuid": muuid}
+                  "content": "deletes" if content else "data"})
+        added = [e["data_file"]["record_count"] for e in entries
+                 if e["status"] == 1]
+        existing = [e["data_file"]["record_count"] for e in entries
+                    if e["status"] == 0]
+        return {"manifest_path": path, "manifest_length": length,
+                "partition_spec_id": spec_id, "content": content,
+                "sequence_number": None,
+                "min_sequence_number": min(
+                    (e["sequence_number"] for e in entries
+                     if e["sequence_number"] is not None), default=None),
+                "added_snapshot_id": None,
+                "added_files_count": len(added),
+                "existing_files_count": len(existing),
+                "deleted_files_count": 0,
+                "added_rows_count": sum(added),
+                "existing_rows_count": sum(existing),
+                "deleted_rows_count": 0,
+                "partitions": partitions}
 
-    def _commit_snapshot(self, *, pending: List[Dict[str, Any]],
-                         snap_id: int, muuid, operation: str,
-                         summary: Dict[str, str],
-                         drop_previous: bool = False,
-                         branch: str = "main") -> int:
-        """Optimistic-concurrency commit shared by append_dataframe,
-        delete_where and upsert_dataframe: the data files and the
-        manifests are snapshot-id-addressed (never contended); only the
-        metadata pointer races.  ``pending`` is one manifest descriptor
-        per new manifest (a MERGE commits a data manifest AND a delete
-        manifest in the SAME snapshot — both get the same sequence
-        number, so the delete applies only to PRIOR data).  On a lost
-        race (_commit_metadata refuses to overwrite vN+1) reload the
-        winner's metadata, re-resolve the parent snapshot (keeping the
-        winner's files), rewrite the tiny manifest list with a fresh
-        sequence number, and retry — real Iceberg's serializable-append
-        semantics."""
+    def _build_data_manifest(self, data_dir: str, snap_id: int
+                             ) -> Dict[str, Any]:
+        """Manifest the data files written under ``data_dir`` for
+        ``snap_id``; returns the manifest-list record."""
+        pf = self._partition_fields()
+        identity_srcs = {p["source_name"] for p in pf
+                         if p["transform"] == "identity"}
+        columns = {f["name"]: (f["id"], f["type"])
+                   for f in self.schema()["fields"]
+                   if isinstance(f["type"], str)
+                   and f["name"] not in identity_srcs}
+        entries = self._manifest_entries(data_dir, snap_id, 0, columns)
+        return self._write_manifest(
+            entries, 0, self.partition_spec()["spec-id"],
+            self.metadata["current-schema-id"],
+            partitions=_partition_summaries(pf, entries) if pf else None)
+
+    def _commit_snapshot(self, *, manifests: List[Dict[str, Any]],
+                         snap_id: int, operation: str,
+                         summary: Dict[str, str], branch: str = "main",
+                         carry=lambda m: True,
+                         required_parent: Optional[int] = None) -> int:
+        """Commit snapshot ``snap_id`` on ``branch``: the new
+        ``manifests`` (manifest-list records from _write_manifest) plus
+        the parent's manifests that ``carry(record)`` keeps — all for an
+        append, none for a REPLACE, delete manifests only for manifest
+        compaction.  Data files and manifests are never contended; only
+        the metadata pointer races, so the commit runs as a mutation of
+        _commit_metadata_op: a retry re-resolves the parent from the
+        winner's metadata (keeping the winner's files) and rewrites the
+        tiny manifest list with a fresh sequence number — real
+        Iceberg's serializable-append semantics.  All new manifests
+        share the snapshot's sequence number (a MERGE's delete applies
+        only to PRIOR data).  ``required_parent`` makes a moved branch
+        head an error instead (the new manifests were derived from
+        it)."""
         mdir = self._metadata_dir(self.location)
-        for attempt in range(10):
-            if attempt:
-                fresh = IcebergTable.load(self.location)
-                self.metadata = fresh.metadata
-                self._base_version = fresh._base_version
-            seq = self.metadata["last-sequence-number"] + 1
+        commit_uuid = uuid.uuid4()
+        attempts = itertools.count(1)
+
+        def mutate(md):
+            seq = md["last-sequence-number"] + 1
             if branch == "main":
                 parent = self.current_snapshot_id()
             else:
-                ref = self.metadata.get("refs", {}).get(branch)
+                ref = md.get("refs", {}).get(branch)
                 if ref is None:
                     raise ValueError(
                         f"no such branch: {branch!r} (create_branch "
@@ -1320,73 +1356,47 @@ class IcebergTable:
                     raise ValueError(
                         f"ref {branch!r} is a tag — tags are immutable")
                 parent = ref["snapshot-id"]
-            prev_manifests = []
-            if parent is not None and not drop_previous:
-                prev_manifests = self._manifest_files(parent)
-            new_manifests = [{
-                "manifest_path": p["manifest_path"],
-                "manifest_length": p["mlen"],
-                "partition_spec_id": self.partition_spec()["spec-id"],
-                "content": p["content"],
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snap_id,
-                "added_files_count": p["added_files"],
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": p["added_rows"],
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": p.get("part_summaries"),
-            } for p in pending]
+            if required_parent is not None and parent != required_parent:
+                raise RuntimeError(
+                    f"{branch!r} moved past snapshot {required_parent} "
+                    f"during the {operation} — rerun it on the new head")
+            kept = [] if parent is None else \
+                [m for m in self._manifest_files(parent) if carry(m)]
+            new = [dict(m, sequence_number=seq, added_snapshot_id=snap_id,
+                        min_sequence_number=seq
+                        if m["min_sequence_number"] is None
+                        else m["min_sequence_number"]) for m in manifests]
             mlist_path = os.path.join(
-                mdir, f"snap-{snap_id}-{attempt + 1}-{muuid}.avro")
+                mdir, f"snap-{snap_id}-{next(attempts)}-{commit_uuid}.avro")
             mlist_meta = {"format-version": "2",
                           "snapshot-id": str(snap_id),
                           "sequence-number": str(seq)}
             if parent is not None:
                 mlist_meta["parent-snapshot-id"] = str(parent)
-            avro_write_container(
-                mlist_path, MANIFEST_LIST_SCHEMA,
-                new_manifests + prev_manifests, meta=mlist_meta)
-
-            full_summary = {"operation": operation, **summary}
+            avro_write_container(mlist_path, MANIFEST_LIST_SCHEMA,
+                                 new + kept, meta=mlist_meta)
             snapshot = {"snapshot-id": snap_id,
                         "sequence-number": seq,
                         "timestamp-ms": int(time.time() * 1000),
                         "manifest-list": mlist_path,
-                        "summary": full_summary,
-                        "schema-id": self.metadata["current-schema-id"]}
+                        "summary": {"operation": operation, **summary},
+                        "schema-id": md["current-schema-id"]}
             if parent is not None:
                 snapshot["parent-snapshot-id"] = parent
-            version = self._base_version
-            self.metadata["snapshots"].append(snapshot)
-            refs = self.metadata.setdefault("refs", {})
+            md["snapshots"].append(snapshot)
+            md.setdefault("refs", {})[branch] = {"snapshot-id": snap_id,
+                                                 "type": "branch"}
             if branch == "main":
                 # main IS the table's current pointer; the snapshot-log
                 # (timestamp time-travel history) tracks main only
-                self.metadata["current-snapshot-id"] = snap_id
-                refs["main"] = {"snapshot-id": snap_id,
-                                "type": "branch"}
-                self.metadata["snapshot-log"].append(
+                md["current-snapshot-id"] = snap_id
+                md["snapshot-log"].append(
                     {"snapshot-id": snap_id,
                      "timestamp-ms": snapshot["timestamp-ms"]})
-            else:
-                refs[branch] = {"snapshot-id": snap_id,
-                                "type": "branch"}
-            self.metadata["last-sequence-number"] = seq
-            self.metadata["last-updated-ms"] = snapshot["timestamp-ms"]
-            self.metadata["metadata-log"].append(
-                {"metadata-file": os.path.join(
-                    mdir, f"v{version}.metadata.json"),
-                 "timestamp-ms": snapshot["timestamp-ms"]})
-            try:
-                self._commit_metadata(version + 1)
-                return snap_id
-            except FileExistsError:
-                continue
-        raise RuntimeError(
-            f"commit lost {attempt + 1} races at {self.location}")
+            md["last-sequence-number"] = seq
+            return snap_id
+
+        return self._commit_metadata_op(mutate)
 
     def add_column(self, name: str, spark_type) -> None:
         """Schema evolution: append an optional column (new schema-id,
@@ -1403,53 +1413,52 @@ class IcebergTable:
         from pyspark.sql import types as T
         tmp = spark_schema_to_iceberg(
             T.StructType([T.StructField(leaf, spark_type, True)]))
-        n_new = tmp["last-column-id"]
-        base = self.metadata["last-column-id"]
 
-        def shift(t: Any) -> Any:
+        def shift(t: Any, base: int) -> Any:
             if isinstance(t, str):
                 return t
             t = dict(t)
             if t["type"] == "struct":
                 t["fields"] = [dict(f, id=f["id"] + base,
-                                    type=shift(f["type"]))
+                                    type=shift(f["type"], base))
                                for f in t["fields"]]
             elif t["type"] == "list":
                 t["element-id"] += base
-                t["element"] = shift(t["element"])
+                t["element"] = shift(t["element"], base)
             elif t["type"] == "map":
                 t["key-id"] += base
                 t["value-id"] += base
-                t["key"] = shift(t["key"])
-                t["value"] = shift(t["value"])
+                t["key"] = shift(t["key"], base)
+                t["value"] = shift(t["value"], base)
             return t
-
-        new_field = dict(tmp["fields"][0], id=base + 1,
-                         type=shift(tmp["fields"][0]["type"]))
 
         def edit(fields: List[Dict[str, Any]]) -> List[Dict[str, Any]]:
             if any(f["name"] == leaf for f in fields):
                 raise ValueError(f"column exists: {name}")
-            return fields + [new_field]
+            # fresh ids past the CURRENT last-column-id (re-read on a
+            # retry); _commit_schema raises last-column-id past them
+            base = self.metadata["last-column-id"]
+            return fields + shift(tmp, base)["fields"]
 
-        top = _edit_struct_fields(
-            {"type": "struct", "fields": self.schema()["fields"]},
-            parts, edit)
-        self._commit_schema(top["fields"], last_column_id=base + n_new)
+        self._commit_schema(parts, edit)
 
-    def _commit_schema(self, new_fields: List[Dict[str, Any]],
-                       last_column_id: Optional[int] = None) -> None:
-        old = self.schema()
-        new_schema = {"type": "struct",
-                      "schema-id": old["schema-id"] + 1,
-                      "fields": new_fields}
-        version = self._base_version
-        self.metadata["schemas"].append(new_schema)
-        self.metadata["current-schema-id"] = new_schema["schema-id"]
-        if last_column_id is not None:
-            self.metadata["last-column-id"] = last_column_id
-        self.metadata["last-updated-ms"] = int(time.time() * 1000)
-        self._commit_metadata(version + 1)
+    def _commit_schema(self, parts: Sequence[str], edit) -> None:
+        """Commit a new current schema whose struct at path ``parts``
+        has the field list ``edit(fields)``.  Runs as a mutation, so a
+        commit that lost a race re-applies ``edit`` to the winner's
+        schema."""
+        def mutate(md):
+            old = self.schema()
+            top = _edit_struct_fields(
+                {"type": "struct", "fields": old["fields"]}, parts, edit)
+            sid = old["schema-id"] + 1
+            md["schemas"].append({"type": "struct", "schema-id": sid,
+                                  "fields": top["fields"]})
+            md["current-schema-id"] = sid
+            md["last-column-id"] = max([md["last-column-id"],
+                                        *_collect_field_ids(top)])
+
+        self._commit_metadata_op(mutate)
 
     def _schema_by_id(self, sid: int) -> Dict[str, Any]:
         return next(s for s in self.metadata["schemas"]
@@ -1476,10 +1485,7 @@ class IcebergTable:
             return [dict(f, name=new_name) if f["name"] == leaf else f
                     for f in fields]
 
-        top = _edit_struct_fields(
-            {"type": "struct", "fields": self.schema()["fields"]},
-            parts, edit)
-        self._commit_schema(top["fields"])
+        self._commit_schema(parts, edit)
 
     def drop_column(self, name: str) -> None:
         """Schema evolution: drop a column.  Data files keep the bytes
@@ -1490,9 +1496,6 @@ class IcebergTable:
         safety).  Refuses to drop a partition source column.  ``name``
         may be a dotted path into nested structs."""
         *parts, leaf = name.split(".")
-        src_ids = {pf["source-id"]
-                   for spec in self.metadata["partition-specs"]
-                   for pf in spec["fields"]}
 
         def edit(fields: List[Dict[str, Any]]) -> List[Dict[str, Any]]:
             target = next((f for f in fields if f["name"] == leaf), None)
@@ -1503,17 +1506,16 @@ class IcebergTable:
                     "cannot drop the only field of a struct")
             dropped = {target["id"],
                        *_collect_field_ids(target["type"])}
-            if dropped & src_ids:
+            if dropped & {pf["source-id"]
+                          for spec in self.metadata["partition-specs"]
+                          for pf in spec["fields"]}:
                 raise ValueError(
                     f"column {name} is a partition source (in the "
                     "current or a historical spec); cannot drop it "
                     "while manifests may reference it")
             return [f for f in fields if f["name"] != leaf]
 
-        top = _edit_struct_fields(
-            {"type": "struct", "fields": self.schema()["fields"]},
-            parts, edit)
-        self._commit_schema(top["fields"])
+        self._commit_schema(parts, edit)
 
     _PROMOTIONS = {"int": "long", "float": "double"}
 
@@ -1538,10 +1540,7 @@ class IcebergTable:
             return [dict(f, type=self._PROMOTIONS[t])
                     if f["name"] == leaf else f for f in fields]
 
-        top = _edit_struct_fields(
-            {"type": "struct", "fields": self.schema()["fields"]},
-            parts, edit)
-        self._commit_schema(top["fields"])
+        self._commit_schema(parts, edit)
 
     def set_sort_order(self, cols: Sequence[str]) -> int:
         """Declare a table sort order (spec `sort-orders`): appended as
@@ -1593,20 +1592,20 @@ class IcebergTable:
         manifest with the spec it was written under.  Identical
         (source-id, transform) fields reuse their partition field id
         across specs (v2 rule).  Returns the new spec-id."""
-        specs = self.metadata["partition-specs"]
-        spec_fields, last_pid = _build_spec_fields(
-            self.schema()["fields"], partition_by,
-            next_field_id=1000, prev_specs=specs)
-        new_id = max(s["spec-id"] for s in specs) + 1
-        version = self._base_version
-        self.metadata["partition-specs"] = specs + [
-            {"spec-id": new_id, "fields": spec_fields}]
-        self.metadata["default-spec-id"] = new_id
-        self.metadata["last-partition-id"] = max(
-            self.metadata["last-partition-id"], last_pid)
-        self.metadata["last-updated-ms"] = int(time.time() * 1000)
-        self._commit_metadata(version + 1)
-        return new_id
+        def mutate(md):
+            specs = md["partition-specs"]
+            spec_fields, last_pid = _build_spec_fields(
+                self.schema()["fields"], partition_by,
+                next_field_id=1000, prev_specs=specs)
+            new_id = max(s["spec-id"] for s in specs) + 1
+            md["partition-specs"] = specs + [
+                {"spec-id": new_id, "fields": spec_fields}]
+            md["default-spec-id"] = new_id
+            md["last-partition-id"] = max(md["last-partition-id"],
+                                          last_pid)
+            return new_id
+
+        return self._commit_metadata_op(mutate)
 
     def rollback(self, snapshot_id: Optional[int]) -> None:
         """Point current back at an earlier snapshot (new metadata
@@ -1731,8 +1730,7 @@ class IcebergTable:
         # manifest — they carry through unchanged so sequence-number
         # applicability is preserved
         manifests = [m for m in all_manifests if m.get("content", 0) == 0]
-        delete_manifests = [m for m in all_manifests
-                            if m.get("content", 0) != 0]
+        n_delete_manifests = len(all_manifests) - len(manifests)
         if len(manifests) <= 1:
             return {"manifests_before": len(all_manifests),
                     "manifests_after": len(all_manifests)}
@@ -1744,7 +1742,6 @@ class IcebergTable:
         cur_sid = self.metadata["current-schema-id"]
         default_spec = self.metadata["default-spec-id"]
         by_key: Dict[Tuple[int, int], List[Dict[str, Any]]] = {}
-        rows_by_key: Dict[Tuple[int, int], int] = {}
         for mf in manifests:
             _s, entries, _m = avro_read_container(mf["manifest_path"])
             sid = int(_m.get("schema-id", cur_sid))
@@ -1759,94 +1756,22 @@ class IcebergTable:
                     dict(e, status=0,  # EXISTING
                          sequence_number=seq,
                          file_sequence_number=seq))
-                rows_by_key[(sid, spec)] = rows_by_key.get((sid, spec), 0) \
-                    + e["data_file"]["record_count"]
         if len(manifests) <= len(by_key):
             return {"manifests_before": len(all_manifests),
                     "manifests_after": len(all_manifests)}
 
-        snap_id = int(uuid.uuid4().int % (1 << 62))
-        mdir = self._metadata_dir(self.location)
-        muuid = uuid.uuid4()
-        folded = []  # (path, mlen, n_entries, rows, min_seq, spec)
-        for i, ((sid, spec), key_entries) in enumerate(
-                sorted(by_key.items())):
-            pf_k = self._partition_fields(spec)
-            manifest_path = os.path.join(mdir, f"{muuid}-m{i}.avro")
-            mlen = avro_write_container(
-                manifest_path, manifest_entry_schema(pf_k), key_entries,
-                meta={"schema": json.dumps(self._schema_by_id(sid)),
-                      "schema-id": str(sid),
-                      "partition-spec": json.dumps(
-                          self.partition_spec(spec)["fields"]),
-                      "partition-spec-id": str(spec),
-                      "format-version": "2", "content": "data"})
-            folded.append((manifest_path, mlen, len(key_entries),
-                           rows_by_key[(sid, spec)],
-                           min(e["sequence_number"]
-                               for e in key_entries), spec))
-
-        for attempt in range(10):
-            if attempt:
-                fresh = IcebergTable.load(self.location)
-                if fresh.current_snapshot_id() != cur["snapshot-id"]:
-                    raise RuntimeError(
-                        "concurrent append during rewrite_manifests — "
-                        "rerun compaction on the new snapshot")
-                self.metadata = fresh.metadata
-                self._base_version = fresh._base_version
-            seq = self.metadata["last-sequence-number"] + 1
-            new_manifests = [{
-                "manifest_path": mpath,
-                "manifest_length": ml,
-                "partition_spec_id": spec,
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": mseq,
-                "added_snapshot_id": snap_id,
-                "added_files_count": 0,
-                "existing_files_count": n_entries,
-                "deleted_files_count": 0,
-                "added_rows_count": 0,
-                "existing_rows_count": rows,
-                "deleted_rows_count": 0,
-                "partitions": None,
-            } for (mpath, ml, n_entries, rows, mseq, spec) in folded]
-            mlist_path = os.path.join(
-                mdir, f"snap-{snap_id}-{attempt + 1}-{muuid}.avro")
-            avro_write_container(
-                mlist_path, MANIFEST_LIST_SCHEMA,
-                new_manifests + delete_manifests,
-                meta={"format-version": "2", "snapshot-id": str(snap_id),
-                      "sequence-number": str(seq),
-                      "parent-snapshot-id": str(cur["snapshot-id"])})
-            snapshot = {"snapshot-id": snap_id,
-                        "parent-snapshot-id": cur["snapshot-id"],
-                        "sequence-number": seq,
-                        "timestamp-ms": int(time.time() * 1000),
-                        "manifest-list": mlist_path,
-                        "summary": {
-                            "operation": "replace",
-                            "manifests-replaced": str(len(manifests)),
-                            "manifests-created": str(len(folded))},
-                        "schema-id": self.metadata["current-schema-id"]}
-            version = self._base_version
-            self.metadata["snapshots"].append(snapshot)
-            self.metadata["current-snapshot-id"] = snap_id
-            self.metadata["last-sequence-number"] = seq
-            self.metadata["last-updated-ms"] = snapshot["timestamp-ms"]
-            self.metadata["snapshot-log"].append(
-                {"snapshot-id": snap_id,
-                 "timestamp-ms": snapshot["timestamp-ms"]})
-            try:
-                self._commit_metadata(version + 1)
-                return {"manifests_before": len(all_manifests),
-                        "manifests_after":
-                            len(folded) + len(delete_manifests),
-                        "snapshot_id": snap_id}
-            except FileExistsError:
-                continue
-        raise RuntimeError("rewrite_manifests lost every commit race")
+        folded = [self._write_manifest(key_entries, 0, spec, sid)
+                  for (sid, spec), key_entries in sorted(by_key.items())]
+        snap_id = self._commit_snapshot(
+            manifests=folded, snap_id=_new_snapshot_id(),
+            operation="replace",
+            summary={"manifests-replaced": str(len(manifests)),
+                     "manifests-created": str(len(folded))},
+            carry=lambda m: m.get("content", 0) != 0,
+            required_parent=cur["snapshot-id"])
+        return {"manifests_before": len(all_manifests),
+                "manifests_after": len(folded) + n_delete_manifests,
+                "snapshot_id": snap_id}
 
     def rewrite_data_files(self, spark) -> Dict[str, int]:
         """Data compaction (the rewrite_data_files maintenance action):
@@ -1856,21 +1781,21 @@ class IcebergTable:
         when the delete-file count makes merge-on-read anti-joins
         expensive; prior snapshots remain time-travelable until
         expire_snapshots reclaims them."""
+        parent = self.current_snapshot_id()
         n_dels = len(self.scan_delete_files())
         merged = self.to_df(spark)
-        snap_id = int(uuid.uuid4().int % (1 << 62))
+        snap_id = _new_snapshot_id()
         data_dir = self._write_data_files(merged, snap_id)
-        pend = self._build_data_manifest(data_dir, snap_id, muuid=None)
+        manifest = self._build_data_manifest(data_dir, snap_id)
         self._commit_snapshot(
-            pending=[pend], snap_id=snap_id, muuid=pend.pop("_muuid"),
-            operation="replace",
-            summary={"added-data-files": str(pend["added_files"]),
-                     "added-records": str(pend["added_rows"]),
+            manifests=[manifest], snap_id=snap_id, operation="replace",
+            summary={"added-data-files": str(manifest["added_files_count"]),
+                     "added-records": str(manifest["added_rows_count"]),
                      "delete-files-removed": str(n_dels)},
-            drop_previous=True)
+            carry=lambda m: False, required_parent=parent)
         return {"snapshot_id": snap_id,
                 "delete_files_removed": n_dels,
-                "rows": pend["added_rows"]}
+                "rows": manifest["added_rows_count"]}
 
     def expire_snapshots(self, keep_last: int = 1) -> Dict[str, int]:
         """Snapshot GC: drop all but the newest ``keep_last`` snapshots
@@ -1880,19 +1805,17 @@ class IcebergTable:
         cleanup leaves unreferenced files, never a broken table)."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        snaps = self.metadata["snapshots"]
-        # every named ref head (branch or tag) is always retained —
-        # expiring under a ref would break reads at it
-        ref_heads = {r["snapshot-id"] for r in self.refs().values()}
-        keep_ids = {s["snapshot-id"] for s in snaps[-keep_last:]} \
-            | ref_heads
-        keep = [s for s in snaps if s["snapshot-id"] in keep_ids]
-        expire = [s for s in snaps if s["snapshot-id"] not in keep_ids]
-        if not expire:
-            return {"expired": 0, "data_files_deleted": 0,
-                    "manifests_deleted": 0}
-        if self.current_snapshot_id() not in keep_ids:
-            raise ValueError("cannot expire the current snapshot")
+
+        def plan():
+            snaps = self.metadata["snapshots"]
+            # every named ref head (branch or tag) is always retained —
+            # expiring under a ref would break reads at it
+            keep_ids = {s["snapshot-id"] for s in snaps[-keep_last:]} \
+                | {r["snapshot-id"] for r in self.refs().values()}
+            if self.current_snapshot_id() not in keep_ids | {None}:
+                raise ValueError("cannot expire the current snapshot")
+            return keep_ids, [s for s in snaps
+                              if s["snapshot-id"] not in keep_ids]
 
         def files_of(snapshot_ids):
             mpaths, dpaths = set(), set()
@@ -1905,16 +1828,22 @@ class IcebergTable:
                                   for e in entries)
             return mpaths, dpaths
 
-        keep_m, keep_d = files_of(keep_ids)
-        exp_m, exp_d = files_of(s["snapshot-id"] for s in expire)
-        version = self._base_version
-        self.metadata["snapshots"] = keep
-        self.metadata["snapshot-log"] = [
-            e for e in self.metadata["snapshot-log"]
-            if e["snapshot-id"] in keep_ids]
-        self.metadata["last-updated-ms"] = int(time.time() * 1000)
-        self._commit_metadata(version + 1)
+        def mutate(md):
+            # the expiry sets come from the state being committed on,
+            # so a retry recomputes them from the winner's snapshots
+            keep_ids, expire = plan()
+            keep_m, keep_d = files_of(keep_ids)
+            exp_m, exp_d = files_of(s["snapshot-id"] for s in expire)
+            md["snapshots"] = [s for s in md["snapshots"]
+                               if s["snapshot-id"] in keep_ids]
+            md["snapshot-log"] = [e for e in md["snapshot-log"]
+                                  if e["snapshot-id"] in keep_ids]
+            return expire, exp_m - keep_m, exp_d - keep_d
 
+        if not plan()[1]:
+            return {"expired": 0, "data_files_deleted": 0,
+                    "manifests_deleted": 0}
+        expire, dead_m, dead_d = self._commit_metadata_op(mutate)
         deleted = {"expired": len(expire), "data_files_deleted": 0,
                    "manifests_deleted": 0}
         for s in expire:
@@ -1922,13 +1851,13 @@ class IcebergTable:
                 os.unlink(s["manifest-list"])
             except OSError:
                 pass
-        for p in exp_m - keep_m:
+        for p in dead_m:
             try:
                 os.unlink(p)
                 deleted["manifests_deleted"] += 1
             except OSError:
                 pass
-        for p in exp_d - keep_d:
+        for p in dead_d:
             try:
                 os.unlink(p)
                 deleted["data_files_deleted"] += 1
@@ -2385,6 +2314,17 @@ class IcebergTable:
                 .select(*sel).distinct())
         return vals, [cur_by_id[i]["name"] for i in ids]
 
+    def _equality_ids(self, cols: Sequence[str]) -> List[int]:
+        """Field ids of top-level primitive ``cols`` (equality-delete
+        and upsert key columns)."""
+        by_name = {f["name"]: f for f in self.schema()["fields"]}
+        for c in cols:
+            if c not in by_name:
+                raise ValueError(f"equality column not in schema: {c}")
+            if not isinstance(by_name[c]["type"], str):
+                raise ValueError(f"equality column on nested type: {c}")
+        return [by_name[c]["id"] for c in cols]
+
     def delete_where(self, spark, condition,
                      equality_cols: Sequence[str],
                      summary_extra: Optional[Dict[str, str]] = None,
@@ -2402,32 +2342,12 @@ class IcebergTable:
         tuple) — the spec's GLOBAL equality-delete form, applying to
         every partition.  Returns the snapshot id, or None when nothing
         matched (no empty snapshots)."""
-        by_name = {f["name"]: f for f in self.schema()["fields"]}
-        for c in equality_cols:
-            if c not in by_name:
-                raise ValueError(f"equality column not in schema: {c}")
-            if not isinstance(by_name[c]["type"], str):
-                raise ValueError(f"equality delete on nested type: {c}")
-        eq_ids = [by_name[c]["id"] for c in equality_cols]
-
         # predicate evaluated against the TARGET branch's state, so a
         # WAP audit branch can stage deletes without touching main
-        matches = (self.to_df(spark,
-                              ref=None if branch == "main" else branch)
-                   .where(condition)
-                   .select(*equality_cols).distinct())
-        snap_id = int(uuid.uuid4().int % (1 << 62))
-        muuid = uuid.uuid4()
-        pend = self._write_delete_manifest(matches, eq_ids, snap_id,
-                                           muuid, suffix="m0")
-        if pend is None:
-            return None
-        return self._commit_snapshot(
-            pending=[pend], snap_id=snap_id, muuid=muuid,
-            operation="delete", branch=branch,
-            summary={"added-delete-files": str(pend["added_files"]),
-                     "added-equality-deletes": str(pend["added_rows"]),
-                     **(summary_extra or {})})
+        matches = self.to_df(spark, ref=None if branch == "main"
+                             else branch).where(condition)
+        return self._delete_keys(matches, equality_cols, summary_extra,
+                                 branch)
 
     def delete_keys(self, spark, keys_df, equality_cols: Sequence[str],
                     summary_extra: Optional[Dict[str, str]] = None
@@ -2438,87 +2358,55 @@ class IcebergTable:
         scan, the keys flow straight into equality-delete files.  This
         is how a 100 TB dedup applies its keeper decision: compute
         clusters once, commit one delete snapshot."""
-        by_name = {f["name"]: f for f in self.schema()["fields"]}
-        for c in equality_cols:
-            if c not in by_name:
-                raise ValueError(f"equality column not in schema: {c}")
-            if not isinstance(by_name[c]["type"], str):
-                raise ValueError(f"equality delete on nested type: {c}")
-        eq_ids = [by_name[c]["id"] for c in equality_cols]
-        snap_id = int(uuid.uuid4().int % (1 << 62))
-        muuid = uuid.uuid4()
-        pend = self._write_delete_manifest(
-            keys_df.select(*equality_cols).distinct(), eq_ids, snap_id,
-            muuid, suffix="m0")
-        if pend is None:
+        return self._delete_keys(keys_df, equality_cols, summary_extra,
+                                 "main")
+
+    def _delete_keys(self, keys_df, equality_cols: Sequence[str],
+                     summary_extra: Optional[Dict[str, str]],
+                     branch: str) -> Optional[int]:
+        eq_ids = self._equality_ids(equality_cols)
+        snap_id = _new_snapshot_id()
+        manifest = self._write_deletes(
+            keys_df.select(*equality_cols).distinct(), snap_id, eq_ids)
+        if manifest is None:
             return None
         return self._commit_snapshot(
-            pending=[pend], snap_id=snap_id, muuid=muuid,
-            operation="delete",
-            summary={"added-delete-files": str(pend["added_files"]),
-                     "added-equality-deletes": str(pend["added_rows"]),
+            manifests=[manifest], snap_id=snap_id, operation="delete",
+            branch=branch,
+            summary={"added-delete-files":
+                     str(manifest["added_files_count"]),
+                     "added-equality-deletes":
+                     str(manifest["added_rows_count"]),
                      **(summary_extra or {})})
 
-    def _write_delete_manifest(self, matches, eq_ids: List[int],
-                               snap_id: int, muuid, suffix: str
-                               ) -> Optional[Dict[str, Any]]:
-        """Write equality-delete parquet files + their content=1
-        manifest; returns a pending-manifest descriptor for
-        _commit_snapshot (None when the delete set is empty)."""
+    def _write_deletes(self, rows, snap_id: int,
+                       equality_ids: Optional[List[int]] = None
+                       ) -> Optional[Dict[str, Any]]:
+        """Write delete files for ``snap_id`` and their content=1
+        manifest; returns its manifest-list record, or None when
+        ``rows`` is empty.  Equality deletes (``equality_ids`` given)
+        carry the key columns; position deletes carry (file_path, pos)
+        under the spec's reserved ids, sorted within each file as the
+        spec requires, with file_path bounds so scans can skip delete
+        files whose path range cannot touch a data-file group."""
+        if equality_ids is None:
+            kind, content = "posdeletes", 1
+            columns = {"file_path": (POS_DELETE_PATH_ID, "string")}
+            rows = rows.sortWithinPartitions("file_path", "pos")
+        else:
+            kind, content, columns = "deletes", 2, {}
         ddir = os.path.join(self.location, "data",
-                            f"snap-{snap_id:x}-deletes-{suffix}")
-        matches.write.mode("error").parquet(ddir)
-
-        entries = []
-        total_rows = 0
-        for root, _dirs, fns in os.walk(ddir):
-            for fn in sorted(fns):
-                if not fn.endswith(".parquet"):
-                    continue
-                path = os.path.join(root, fn)
-                info = _parquet_file_info(path, {})
-                if info["record_count"] == 0:
-                    continue
-                total_rows += info["record_count"]
-                entries.append({
-                    "status": 1,  # ADDED
-                    "snapshot_id": snap_id,
-                    "sequence_number": None,  # inherited
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": 2,  # EQUALITY_DELETES
-                        "file_path": path,
-                        "file_format": "PARQUET",
-                        "partition": {},
-                        "record_count": info["record_count"],
-                        "file_size_in_bytes": info["file_size_in_bytes"],
-                        "value_counts": None,
-                        "null_value_counts": None,
-                        "lower_bounds": None,
-                        "upper_bounds": None,
-                        "equality_ids": eq_ids,
-                    }})
-        if total_rows == 0:
+                            f"snap-{snap_id:x}-{kind}")
+        rows.write.mode("error").parquet(ddir)
+        entries = self._manifest_entries(ddir, snap_id, content, columns,
+                                         equality_ids)
+        if not entries:
             import shutil
             shutil.rmtree(ddir, ignore_errors=True)
             return None
-
-        pf = self._partition_fields()
-        mdir = self._metadata_dir(self.location)
-        manifest_path = os.path.join(mdir, f"{muuid}-{suffix}.avro")
-        mlen = avro_write_container(
-            manifest_path, manifest_entry_schema(pf), entries,
-            meta={"schema": json.dumps(self.schema()),
-                  "schema-id": str(self.metadata["current-schema-id"]),
-                  "partition-spec": json.dumps(
-                      self.partition_spec()["fields"]),
-                  "partition-spec-id": str(
-                      self.partition_spec()["spec-id"]),
-                  "format-version": "2",
-                  "content": "deletes"})
-        return {"manifest_path": manifest_path, "mlen": mlen,
-                "content": 1, "added_files": len(entries),
-                "added_rows": total_rows, "part_summaries": None}
+        return self._write_manifest(entries, 1,
+                                    self.partition_spec()["spec-id"],
+                                    self.metadata["current-schema-id"])
 
     def delete_where_positions(self, spark, condition,
                                summary_extra: Optional[Dict[str, str]]
@@ -2547,110 +2435,24 @@ class IcebergTable:
         """Commit a position-delete snapshot from an explicit
         (file_path string, pos long) DataFrame — the scale path when
         the caller already knows the ordinals (e.g. from a
-        ``to_df(with_pos=True)`` scan it ran anyway).  Delete files are
-        written sorted by (file_path, pos) as the spec requires, with
-        file_path lower/upper bounds so scans can skip delete files
-        whose path range cannot touch a data-file group."""
+        ``to_df(with_pos=True)`` scan it ran anyway)."""
         from pyspark.sql import functions as F
-        snap_id = int(uuid.uuid4().int % (1 << 62))
-        muuid = uuid.uuid4()
+        snap_id = _new_snapshot_id()
         matches = (pos_df
                    .select(F.col("file_path").cast("string"),
                            F.col("pos").cast("long"))
                    .distinct()
                    .sort("file_path", "pos"))
-        pend = self._write_pos_delete_manifest(matches, snap_id, muuid,
-                                               suffix="m0")
-        if pend is None:
+        manifest = self._write_deletes(matches, snap_id)
+        if manifest is None:
             return None
         return self._commit_snapshot(
-            pending=[pend], snap_id=snap_id, muuid=muuid,
-            operation="delete",
-            summary={"added-delete-files": str(pend["added_files"]),
-                     "added-position-deletes": str(pend["added_rows"]),
+            manifests=[manifest], snap_id=snap_id, operation="delete",
+            summary={"added-delete-files":
+                     str(manifest["added_files_count"]),
+                     "added-position-deletes":
+                     str(manifest["added_rows_count"]),
                      **(summary_extra or {})})
-
-    def _write_pos_delete_manifest(self, matches, snap_id: int, muuid,
-                                   suffix: str
-                                   ) -> Optional[Dict[str, Any]]:
-        """Write position-delete parquet files (columns file_path/pos,
-        spec reserved ids 2147483546/2147483545) + their content=1
-        manifest; returns a pending-manifest descriptor for
-        _commit_snapshot (None when the delete set is empty)."""
-        ddir = os.path.join(self.location, "data",
-                            f"snap-{snap_id:x}-posdeletes-{suffix}")
-        # sortWithinPartitions survives the write (the spec requires
-        # delete rows sorted by file_path then pos)
-        matches.sortWithinPartitions("file_path", "pos") \
-            .write.mode("error").parquet(ddir)
-
-        entries = []
-        total_rows = 0
-        for root, _dirs, fns in os.walk(ddir):
-            for fn in sorted(fns):
-                if not fn.endswith(".parquet"):
-                    continue
-                path = os.path.join(root, fn)
-                info = _parquet_file_info(path, {"file_path": "string"})
-                if info["record_count"] == 0:
-                    continue
-                total_rows += info["record_count"]
-                mn = info["mins"].get("file_path")
-                mx = info["maxs"].get("file_path")
-                if isinstance(mn, bytes):
-                    mn = mn.decode("utf-8", "replace")
-                if isinstance(mx, bytes):
-                    mx = mx.decode("utf-8", "replace")
-                lower = upper = None
-                if mn is not None:
-                    lower = [{"key": POS_DELETE_PATH_ID,
-                              "value": serialize_bound(
-                                  "string", _truncate_lower(mn))}]
-                if mx is not None:
-                    ub = _truncate_upper(mx)
-                    if ub is not None:
-                        upper = [{"key": POS_DELETE_PATH_ID,
-                                  "value": serialize_bound("string", ub)}]
-                entries.append({
-                    "status": 1,  # ADDED
-                    "snapshot_id": snap_id,
-                    "sequence_number": None,  # inherited
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": 1,  # POSITION_DELETES
-                        "file_path": path,
-                        "file_format": "PARQUET",
-                        "partition": {},
-                        "record_count": info["record_count"],
-                        "file_size_in_bytes": info["file_size_in_bytes"],
-                        "value_counts": None,
-                        "null_value_counts": None,
-                        "lower_bounds": lower,
-                        "upper_bounds": upper,
-                        "equality_ids": None,
-                    }})
-        if total_rows == 0:
-            import shutil
-            shutil.rmtree(ddir, ignore_errors=True)
-            return None
-
-        pf = self._partition_fields()
-        mdir = self._metadata_dir(self.location)
-        manifest_path = os.path.join(mdir, f"{muuid}-{suffix}.avro")
-        mlen = avro_write_container(
-            manifest_path, manifest_entry_schema(pf), entries,
-            meta={"schema": json.dumps(self.schema()),
-                  "schema-id": str(self.metadata["current-schema-id"]),
-                  "partition-spec": json.dumps(
-                      self.partition_spec()["fields"]),
-                  "partition-spec-id": str(
-                      self.partition_spec()["spec-id"]),
-                  "format-version": "2",
-                  "content": "deletes"})
-        return {"manifest_path": manifest_path, "mlen": mlen,
-                "content": 1, "added_files": len(entries),
-                "added_rows": total_rows, "part_summaries": None}
-
 
     # -- metadata tables (the $files / $snapshots / $manifests / $history
     #    analogues: Iceberg metadata exposed as queryable DataFrames) ----
@@ -2959,7 +2761,7 @@ class IcebergKgSink:
         next commit, unread until ``publish`` commits them."""
         t = self._table("processed_docs") or IcebergTable.create(
             os.path.join(self.root, "processed_docs"), doc_ids.schema)
-        snap_id = int(uuid.uuid4().int % (1 << 62))
+        snap_id = _new_snapshot_id()
         data_dir = t._write_data_files(doc_ids, snap_id)
         pend = t._build_data_manifest(data_dir, snap_id)
         return {"table": t, "snap_id": snap_id, "manifest": pend,
@@ -3033,7 +2835,7 @@ def resumable_annotate_iceberg(spark, docs, bc, out_path: str,
         # shuffle): recomputation cannot pick a different set
         todo = todo.orderBy("doc_id").limit(max_docs)
     staged = sink.stage(todo.select("doc_id"))
-    n_todo = staged["manifest"]["added_rows"]   # from parquet footers
+    n_todo = staged["manifest"]["added_rows_count"]   # from parquet footers
 
     manifest: Dict[str, Any] = {
         "n_docs": n_todo,

@@ -525,12 +525,25 @@ def test_rewrite_manifests_compaction(spark, triples_df, tmp_path):
         t.append_dataframe(triples_df.filter(
             f"bucket = '{i}'").coalesce(1))
     before = sorted(t.to_df(spark).collect())
-    assert len(t._manifest_files(None)) == 4
+    old_manifests = [m["manifest_path"] for m in t._manifest_files(None)]
+    assert len(old_manifests) == 4
+    n_log = len(t.metadata["metadata-log"])
     stats = t.rewrite_manifests()
     assert stats == {"manifests_before": 4, "manifests_after": 1,
                      "snapshot_id": stats["snapshot_id"]}
     t = IcebergTable.load(loc)
     assert len(t._manifest_files(None)) == 1
+    # compaction moves main like any snapshot commit and logs the
+    # metadata version it replaced
+    assert t.refs()["main"]["snapshot-id"] == t.current_snapshot_id() \
+        == stats["snapshot_id"]
+    assert len(t.metadata["metadata-log"]) == n_log + 1
+    # the folded manifest: every data file EXISTING, none ADDED, and
+    # the oldest carried sequence number is the first append's
+    (folded,) = t.metadata_df(spark, "manifests").collect()
+    assert folded["added_files_count"] == 0
+    assert folded["existing_files_count"] == len(t.scan_files())
+    assert folded["min_sequence_number"] == 1
     assert sorted(t.to_df(spark).collect()) == before
     assert t.snapshots()[-1]["summary"]["operation"] == "replace"
     # scan planning still works off the compacted manifest
@@ -540,8 +553,11 @@ def test_rewrite_manifests_compaction(spark, triples_df, tmp_path):
     assert t.rewrite_manifests()["manifests_after"] == 1
     # expire old snapshots: old manifests deleted, data files survive
     data_files = {d["file_path"] for d in t.scan_files()}
-    t.expire_snapshots(keep_last=1)
+    res = t.expire_snapshots(keep_last=1)
     t = IcebergTable.load(loc)
+    assert len(t.snapshots()) == 1
+    assert res["manifests_deleted"] == 4
+    assert not any(os.path.exists(p) for p in old_manifests)
     assert sorted(t.to_df(spark).collect()) == before
     assert all(os.path.isfile(p) for p in data_files)
 
@@ -706,8 +722,14 @@ def test_rewrite_manifests_preserves_delete_manifests(spark, triples_df,
     t.delete_where(spark, F.col("obj") == "cui:C2",
                    equality_cols=["subj"])
     t = IcebergTable.load(loc)
+    del_seq = [m["sequence_number"] for m in t._manifest_files(None)
+               if m["content"] == 1]
+    assert del_seq == [3]
     res = t.rewrite_manifests()
     assert res["manifests_after"] == 2  # 1 folded data + 1 delete
+    carried = IcebergTable.load(loc).metadata_df(spark, "manifests") \
+        .where("content = 1").collect()
+    assert [m["sequence_number"] for m in carried] == del_seq
     back = IcebergTable.load(loc).to_df(spark)
     assert back.where(F.col("obj") == "cui:C2").count() == 0
     assert back.count() == 32
@@ -1712,6 +1734,55 @@ def test_ref_ops_survive_commit_races(spark, triples_df, tmp_path):
     t1.drop_ref("v1")
     with pytest.raises(ValueError, match="no such ref"):
         t3.drop_ref("v1")           # already gone in the fresh state
+
+
+def test_schema_spec_and_expire_commits_survive_races(spark, triples_df,
+                                                      tmp_path):
+    """Handles loaded before another writer's commit retry schema,
+    partition-spec and expiry commits against the winner's metadata:
+    every change lands, and field ids minted by racing add_columns
+    stay distinct."""
+    from pyspark.sql import types as T
+    loc = str(tmp_path / "meta_race")
+    t1 = IcebergTable.create(loc, triples_df.schema)
+    t1.append_dataframe(triples_df)
+    t1.append_dataframe(triples_df)
+    last_id = t1.metadata["last-column-id"]
+    stale = [IcebergTable.load(loc) for _ in range(4)]
+    t1.create_tag("t0")             # every handle above is now stale
+    stale[0].add_column("a", T.LongType())
+    stale[1].add_column("b", T.StringType())
+    stale[2].evolve_partition_spec(["bucket"])
+    assert stale[3].expire_snapshots(keep_last=1)["expired"] == 1
+    final = IcebergTable.load(loc)
+    ids = {f["name"]: f["id"] for f in final.schema()["fields"]}
+    assert sorted([ids["a"], ids["b"]]) == [last_id + 1, last_id + 2]
+    assert final.metadata["last-column-id"] == last_id + 2
+    assert [f["name"] for f in final.partition_spec()["fields"]] == \
+        ["bucket"]
+    assert len(final.snapshots()) == 1 and "t0" in final.refs()
+    # every commit after v1 logged the metadata version it replaced
+    assert len(final.metadata["metadata-log"]) == final._base_version - 1
+    assert final.to_df(spark).count() == 2 * triples_df.count()
+
+
+def test_replace_commits_refuse_a_moved_head(spark, triples_df, tmp_path):
+    """Compaction commits files derived from one snapshot: when another
+    append lands first, it raises instead of replacing the newer head
+    (rewrite_data_files would otherwise drop the winner's rows)."""
+    loc = str(tmp_path / "replace_race")
+    t1 = IcebergTable.create(loc, triples_df.schema)
+    t1.append_dataframe(triples_df)
+    t1.append_dataframe(triples_df)
+    stale = [IcebergTable.load(loc) for _ in range(2)]
+    head = t1.append_dataframe(triples_df)
+    with pytest.raises(RuntimeError, match="moved past"):
+        stale[0].rewrite_manifests()
+    with pytest.raises(RuntimeError, match="moved past"):
+        stale[1].rewrite_data_files(spark)
+    final = IcebergTable.load(loc)
+    assert final.current_snapshot_id() == head
+    assert final.to_df(spark).count() == 3 * triples_df.count()
 
 
 def test_sort_order_clusters_for_data_skipping(spark, tmp_path):
