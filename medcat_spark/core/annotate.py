@@ -28,21 +28,16 @@ def preprocess(text: str, cdb: CdbModel, config: EngineConfig,
 
     Every per-token attribute (case flags, skip/punct tags, lemma and
     spell-checked norm) is a pure function of the token TEXT given a
-    fixed config+vocab, so the pipeline memoizes the full attribute
-    bundle per distinct token string — across documents, batches and
-    tasks of the same broadcast model.  Positions (start/end/i) stay
-    per-instance.  Semantics are bit-identical to running P2/P3/P4
-    token-by-token (the uncached path below IS that code)."""
+    fixed config+vocab, so the spell checker (one per broadcast model in
+    the executor model cache) memoizes the full attribute bundle per
+    distinct token string — across documents, batches and tasks of that
+    model.  Positions (start/end/i) stay per-instance.  Semantics are
+    bit-identical to running P2/P3/P4 token-by-token (the uncached path
+    below IS that code)."""
     text = text[:config.max_document_length]
-    if spell_checker is None and config.spell_check:
+    if spell_checker is None:
         spell_checker = SpellChecker(cdb.vocab, config)
-    cache = getattr(config, "_tok_attr_cache", None)
-    if cache is None:
-        cache = {}
-        try:
-            config._tok_attr_cache = cache
-        except Exception:       # frozen config: fall back to per-call
-            pass
+    cache = spell_checker.token_memo
     from medcat_spark.core.tokenizer import _SCAN_RE, _SCAN_RE_DIA
     scan = _SCAN_RE_DIA if config.diacritics else _SCAN_RE
     toks: List[Tok] = []
@@ -111,39 +106,44 @@ def train_unsupervised(texts, cdb: CdbModel, vocab: VocabModel,
     """
     rng = random.Random(seed)
     cm = ContextModel(cdb, vocab, config)
-    sc = SpellChecker(cdb.vocab, config) if config.spell_check else None
+    sc = SpellChecker(cdb.vocab, config)
     words = sorted(w for w in vocab.word2cnt if vocab.vec(w) is not None)
     for text in texts:
         toks = preprocess(text, cdb, config, sc)
-        cands = detect_entities(toks, text, cdb, config)
-        for entity in cands:
-            if entity.detected_name is None:
-                continue
-            name = entity.detected_name
-            cuis = entity.link_candidates
-            if len(name) < config.disamb_length_limit:
-                continue
-            if len(cuis) == 1:
-                if cdb.name2cuis2status.get(name, {}).get(cuis[0]) != "N":
-                    cm.train(cuis[0], entity, toks, rng=rng)
-                    _maybe_negative(cm, cuis[0], words, rng, config, vocab)
-            else:
-                for cui in cuis:
-                    if cdb.name2cuis2status.get(name, {}).get(cui) in {"P", "PD"}:
-                        cm.train(cui, entity, toks, rng=rng)
-                        _maybe_negative(cm, cui, words, rng, config, vocab)
+        for entity in detect_entities(toks, text, cdb, config):
+            for cui in train_cuis(entity, cdb, config):
+                cm.train(cui, entity, toks, rng=rng)
+                # L8: with negative_probability, ONE negative update
+                if words and config.negative_probability >= rng.random():
+                    neg = negative_vectors(vocab, config, rng)
+                    if neg:
+                        cdb.update_context_vector(cui, neg, negative=True,
+                                                  config=config)
 
 
-def _maybe_negative(cm: ContextModel, cui: str, words, rng: random.Random,
-                    config: EngineConfig, vocab: VocabModel) -> None:
-    """L8 negative sampling (context_based_linker.py:52-54,
-    vector_context_model.py:243-258 train_using_negative_sampling):
-    per context type, sample that type's window size from the
-    unigram^(3/4) cumulative distribution (vocab.py:179-242), average
-    the word vectors, apply ONE negative update.  Seeded RNG for
-    determinism."""
-    if not words or config.negative_probability < rng.random():
-        return
+def train_cuis(entity: Entity, cdb: CdbModel,
+               config: EngineConfig) -> List[str]:
+    """L6 train eligibility (context_based_linker.py:63-88): the detected
+    name is at least disamb_length_limit long; a single candidate trains
+    unless its status is 'N', several train only those with status P or
+    PD."""
+    name = entity.detected_name
+    if name is None or len(name) < config.disamb_length_limit:
+        return []
+    cuis = entity.link_candidates
+    statuses = cdb.name2cuis2status.get(name, {})
+    if len(cuis) == 1:
+        return [] if statuses.get(cuis[0]) == "N" else list(cuis)
+    return [c for c in cuis if statuses.get(c) in {"P", "PD"}]
+
+
+def negative_vectors(vocab: VocabModel, config: EngineConfig,
+                     rng: random.Random) -> dict:
+    """One L8 negative sample (context_based_linker.py:52-54,
+    vector_context_model.py:243-258 train_using_negative_sampling): per
+    context type, sample that type's window size from the unigram^(3/4)
+    cumulative distribution (vocab.py:179-242) and average the word
+    vectors."""
     import numpy as np
     vectors = {}
     for ct, size in config.context_vector_sizes.items():
@@ -153,6 +153,5 @@ def _maybe_negative(cm: ContextModel, cui: str, words, rng: random.Random,
         vals = [vocab.vec(w) for w in sampled if vocab.vec(w) is not None]
         if vals:
             vectors[ct] = np.average(vals, axis=0)
-    if vectors:
-        cm.cdb.update_context_vector(cui, vectors, negative=True,
-                                     config=config)
+    return vectors
+

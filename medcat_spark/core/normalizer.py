@@ -246,12 +246,18 @@ class SpellChecker:
     ``P(word) = -1/count`` (inverse-rank proxy, normalizers.py:17-32);
     candidate sets tried in order known([word]) → known(edits1) →
     [word] (→ edits2 when deep).
+
+    The checker is the per-(vocab, config) object, so it also owns
+    ``token_memo``: the per-token-text attribute bundles that
+    ``core.annotate.preprocess`` memoizes (fixes only when
+    ``config.spell_check``).
     """
 
     def __init__(self, vocab: Dict[str, int], config: EngineConfig) -> None:
         self.vocab = vocab
         self.config = config
         self._fix_cache: Dict[str, Optional[str]] = {}
+        self.token_memo: Dict[str, tuple] = {}
 
     def __contains__(self, word: str) -> bool:
         return word in self.vocab

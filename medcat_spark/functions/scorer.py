@@ -391,7 +391,7 @@ def kernel(bc, head: str, meta_name: Optional[str] = None):
     (REL_SCHEMA); batches with nothing to score yield nothing."""
     def fn(batches):
         import pyarrow as pa
-        from medcat_spark.pipeline import to_arrow_schema
+        from pyspark.sql.pandas.types import to_arrow_schema
         h = HEADS[head](bc.value)
         schema = to_arrow_schema(REL_SCHEMA if h.pairs else META_SCHEMA)
         for rb in batches:

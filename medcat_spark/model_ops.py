@@ -13,7 +13,6 @@ from __future__ import annotations
 from typing import Iterator, List, Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
@@ -184,111 +183,157 @@ def combine_avg_confidence(cdb: CdbModel, rows) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Distributed (approximate) supervised trainer — SURVEY §7 Stage 4b
+# Distributed (approximate) trainers — SURVEY §7 Stage 4b
 # ---------------------------------------------------------------------------
 
-_CTX_SCHEMA = StructType([
+_SUMS_SCHEMA = StructType([
     StructField("cui", StringType()),
     StructField("ctx_type", StringType()),
-    StructField("vec_sum", ArrayType(DoubleType())),
-    StructField("n", LongType()),
+    StructField("vec_sum", ArrayType(DoubleType())),   # Σ(+pos) − Σ(neg)
+    StructField("n", LongType()),                      # positive examples
+    StructField("n_neg", LongType()),                  # negative examples
 ])
 
 
-def _context_sums(bc):
-    """mapInPandas fn: per (doc batch), compute the L2 context vectors at
-    each gold annotation and emit per-(cui, ctx_type) partial sums."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _context_sums(bc, examples):
+    """The one trainer kernel (mapInArrow): per Arrow batch, run
+    ``examples(row, cm, sc)`` over every decoded row and emit the
+    per-(cui, ctx_type) partial sums of the example context vectors —
+    positives added, negatives subtracted, in the order the examples
+    come (a CUI's positives, then its L8 negatives).  ``examples``
+    yields ``(cui, {ctx_type: vec}, positive)``; the model, the
+    ContextModel and the spell checker (which owns the token memo) come
+    from the executor model cache shared with annotate."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(_SUMS_SCHEMA)
+
+    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         from medcat_spark.core.linker import ContextModel
-        from medcat_spark.core.ner import Entity
         from medcat_spark.pipeline import _get_model
         cdb, vocab, config, sc = _get_model(bc)
         cm = ContextModel(cdb, vocab, config)
-        from medcat_spark.core.annotate import preprocess
-        for pdf in batches:
+        for rb in batches:
             acc: dict = {}
-            for row in pdf.itertuples(index=False):
-                toks = preprocess(row.text or "", cdb, config, sc)
-                # entity span = tokens covering [start, end)
-                span = [t for t in toks
-                        if t.start >= row.start and t.end <= row.end]
-                if not span:
-                    continue
-                ent = Entity(tok_start=span[0].i, tok_end=span[-1].i,
-                             start=row.start, end=row.end,
-                             source_value="", detected_name="",
-                             link_candidates=[], ent_id=0)
-                vecs = cm.get_context_vectors(ent, toks)
-                for ct, v in vecs.items():
-                    key = (row.cui, ct)
-                    if key in acc:
-                        acc[key][0] += v
-                        acc[key][1] += 1
-                    else:
-                        acc[key] = [v.copy(), 1]
-            if not acc:
-                # yielding an EMPTY frame would give vec_sum a numeric
-                # dtype that Arrow cannot convert to list<double>
-                continue
-            yield pd.DataFrame({
-                "cui": [k[0] for k in acc],
-                "ctx_type": [k[1] for k in acc],
-                "vec_sum": [list(map(float, v[0])) for v in acc.values()],
-                "n": [v[1] for v in acc.values()],
-            })
-    return fn
-
-
-def _devalue_sums(bc):
-    """mapInPandas fn for the devalue_others branch (reference
-    cat.py:790-800): for each gold example, every OTHER CUI sharing the
-    gold name's dictionary entry receives the example's context vector
-    as a NEGATIVE — emitted as negated partial sums."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from medcat_spark.core.annotate import preprocess
-        from medcat_spark.core.linker import ContextModel
-        from medcat_spark.core.model import prepare_name
-        from medcat_spark.core.ner import Entity
-        from medcat_spark.pipeline import _get_model
-        cdb, vocab, config, sc = _get_model(bc)
-        cm = ContextModel(cdb, vocab, config)
-        for pdf in batches:
-            acc: dict = {}
-            for row in pdf.itertuples(index=False):
-                others: set = set()
-                for n in prepare_name(row.value or "", config):
-                    others.update(cdb.name2cuis.get(n, []))
-                others.discard(row.cui)
-                if not others:
-                    continue
-                toks = preprocess(row.text or "", cdb, config, sc)
-                span = [t for t in toks
-                        if t.start >= row.start and t.end <= row.end]
-                if not span:
-                    continue
-                ent = Entity(tok_start=span[0].i, tok_end=span[-1].i,
-                             start=row.start, end=row.end,
-                             source_value="", detected_name="",
-                             link_candidates=[], ent_id=0)
-                vecs = cm.get_context_vectors(ent, toks)
-                for other in sorted(others):
+            for row in rb.to_pylist():
+                for cui, vecs, positive in examples(row, cm, sc):
                     for ct, v in vecs.items():
-                        key = (other, ct)
-                        if key in acc:
-                            acc[key][0] -= v
-                            acc[key][1] += 1
-                        else:
-                            acc[key] = [-v.copy(), 1]
-            if not acc:
-                continue
-            yield pd.DataFrame({
+                        a = acc.get((cui, ct))
+                        if a is None:
+                            a = acc[(cui, ct)] = [np.zeros_like(v), 0, 0]
+                        a[0] += v if positive else -v
+                        a[1 if positive else 2] += 1
+            yield pa.RecordBatch.from_pydict({
                 "cui": [k[0] for k in acc],
                 "ctx_type": [k[1] for k in acc],
-                "vec_sum": [list(map(float, v[0])) for v in acc.values()],
-                "n": [0] * len(acc),
-                "n_neg": [v[1] for v in acc.values()],
-            })
+                "vec_sum": [a[0].tolist() for a in acc.values()],
+                "n": [a[1] for a in acc.values()],
+                "n_neg": [a[2] for a in acc.values()],
+            }, schema=arrow_schema)
     return fn
+
+
+def _span_vectors(row, cm, sc) -> dict:
+    """Context vectors at a gold span: the tokens covering
+    [start, end); none when the span covers no token."""
+    from medcat_spark.core.annotate import preprocess
+    from medcat_spark.core.ner import Entity
+    if row["start"] is None or row["end"] is None:
+        return {}
+    toks = preprocess(row["text"] or "", cm.cdb, cm.config, sc)
+    span = [t for t in toks
+            if t.start >= row["start"] and t.end <= row["end"]]
+    if not span:
+        return {}
+    ent = Entity(tok_start=span[0].i, tok_end=span[-1].i,
+                 start=row["start"], end=row["end"], source_value="",
+                 detected_name="", link_candidates=[], ent_id=0)
+    return cm.get_context_vectors(ent, toks)
+
+
+def _gold_examples(positive: bool):
+    """A gold (or, negated, a deleted / false-positive) annotation trains
+    its own CUI on the span's context."""
+    def examples(row, cm, sc):
+        vecs = _span_vectors(row, cm, sc)
+        if vecs:
+            yield row["cui"], vecs, positive
+    return examples
+
+
+def _devalue_examples(row, cm, sc):
+    """devalue_others (reference cat.py:790-800): every OTHER CUI sharing
+    the gold name's dictionary entry receives the example's context
+    vector as a NEGATIVE."""
+    from medcat_spark.core.model import prepare_name
+    others: set = set()
+    for n in prepare_name(row["value"] or "", cm.config):
+        others.update(cm.cdb.name2cuis.get(n, []))
+    others.discard(row["cui"])
+    vecs = _span_vectors(row, cm, sc) if others else {}
+    if vecs:
+        for other in sorted(others):
+            yield other, vecs, False
+
+
+def _unsupervised_examples(negative_sampling: bool):
+    """Unsupervised training examples of one doc: every entity's
+    L6-eligible CUIs (core.annotate.train_cuis) are positive examples.
+
+    L8 negative sampling (context_based_linker.py:39-54): after each
+    positive example, with negative_probability a sampled context
+    (core.annotate.negative_vectors) is a negative example — the L7
+    sign rule (cdb.py:406-471: negative updates subtract the example)
+    expressed in the count-weighted-mean combine.  The RNG is seeded
+    per doc_id, so the draw stream is deterministic and independent of
+    partitioning."""
+    def examples(row, cm, sc):
+        import hashlib
+        import random
+
+        from medcat_spark.core.annotate import (negative_vectors,
+                                                preprocess, train_cuis)
+        from medcat_spark.core.ner import detect_entities
+        cdb, vocab, config = cm.cdb, cm.vocab, cm.config
+        text = (row["text"] or "")[:config.max_document_length]
+        rng = random.Random(int.from_bytes(hashlib.sha256(
+            ("neg:%s" % row["doc_id"]).encode()).digest()[:8], "big")) \
+            if negative_sampling and vocab.word2vec else None
+        toks = preprocess(text, cdb, config, sc)
+        for ent in detect_entities(toks, text, cdb, config):
+            cuis = train_cuis(ent, cdb, config)
+            vecs = cm.get_context_vectors(ent, toks) if cuis else {}
+            for cui in cuis:
+                yield cui, vecs, True
+                if rng is not None and \
+                        config.negative_probability >= rng.random():
+                    yield cui, negative_vectors(vocab, config, rng), False
+    return examples
+
+
+def _mean_vectors(sums: DataFrame) -> DataFrame:
+    """Combine partial sums into per-(cui, ctx_type) means: explode to
+    (cui, ctx_type, dim) cells so the elementwise sum is a plain shuffle
+    agg (map-side combinable), then reassemble the mean vector in dim
+    order.  Negatives enter with the L7 sign rule: the mean is
+    (Σ positives − Σ negatives) / (n + n_neg); ``n`` counts positives
+    only (it feeds count_train, which the reference increments only on
+    positives)."""
+    cells = sums.select("cui", "ctx_type", "n", "n_neg",
+                        F.posexplode("vec_sum").alias("pos", "val"))
+    per_dim = (cells.groupBy("cui", "ctx_type", "pos")
+               .agg(F.sum("val").alias("s"), F.sum("n").alias("n_tot"),
+                    F.sum("n_neg").alias("n_neg_tot")))
+    return (per_dim.groupBy("cui", "ctx_type")
+            .agg(F.collect_list(F.struct("pos", "s")).alias("cells"),
+                 F.first("n_tot").alias("n"),
+                 F.first("n_neg_tot").alias("n_neg"))
+            .select("cui", "ctx_type",
+                    F.transform(F.array_sort("cells"),
+                                lambda e: e["s"]
+                                / (F.col("n") + F.col("n_neg")))
+                    .alias("mean_vec"), "n"))
 
 
 def add_gold_concepts(cdb, mct: DataFrame,
@@ -361,145 +406,27 @@ def train_supervised_spark(spark: SparkSession, gold: DataFrame,
             F.col("end").cast("int").alias("end"), "cui"]
     ex = gold.join(docs, "doc_id").select(
         *cols, *([F.col("value")] if devalue_others else []))
-    sums = ex.mapInPandas(_context_sums(bc), schema=_CTX_SCHEMA) \
-        .select("cui", "ctx_type", "vec_sum", "n",
-                F.lit(0).cast("long").alias("n_neg"))
 
-    def _negated(examples: DataFrame) -> DataFrame:
-        return (examples.join(docs, "doc_id").select(*cols)
-                .mapInPandas(_context_sums(bc), schema=_CTX_SCHEMA)
-                .select("cui", "ctx_type",
-                        F.transform("vec_sum", lambda x: -x).alias("vec_sum"),
-                        F.lit(0).cast("long").alias("n"),
-                        F.col("n").alias("n_neg")))
+    def sums_of(rows: DataFrame, examples) -> DataFrame:
+        return rows.mapInArrow(_context_sums(bc, examples),
+                               schema=_SUMS_SCHEMA)
 
+    def negated(anns: DataFrame) -> DataFrame:
+        return sums_of(anns.join(docs, "doc_id").select(*cols),
+                       _gold_examples(positive=False))
+
+    sums = sums_of(ex, _gold_examples(positive=True))
     if negative_gold is not None:
-        sums = sums.unionByName(_negated(negative_gold))
+        sums = sums.unionByName(negated(negative_gold))
     if train_from_fp:
         from medcat_spark.pipeline import annotate
         pred = annotate(docs, bc).select("doc_id", "start", "end", "cui")
         fps = pred.join(gold.select("doc_id", "start", "cui"),
                         ["doc_id", "start", "cui"], "left_anti")
-        sums = sums.unionByName(_negated(fps))
+        sums = sums.unionByName(negated(fps))
     if devalue_others:
-        sums = sums.unionByName(
-            ex.mapInPandas(_devalue_sums(bc), schema=_UNSUP_SCHEMA))
-    # combine partial sums: explode to (cui, ctx_type, dim) cells so the
-    # elementwise sum is a plain shuffle agg (map-side combinable), then
-    # reassemble the mean vector in dim order
-    cells = sums.select("cui", "ctx_type", "n", "n_neg",
-                        F.posexplode("vec_sum").alias("pos", "val"))
-    per_dim = (cells.groupBy("cui", "ctx_type", "pos")
-               .agg(F.sum("val").alias("s"), F.sum("n").alias("n_tot"),
-                    F.sum("n_neg").alias("n_neg_tot")))
-    return (per_dim.groupBy("cui", "ctx_type")
-            .agg(F.collect_list(F.struct("pos", "s")).alias("cells"),
-                 F.first("n_tot").alias("n"),
-                 F.first("n_neg_tot").alias("n_neg"))
-            .where(F.col("n") + F.col("n_neg") > 0)
-            .select("cui", "ctx_type",
-                    F.transform(F.array_sort("cells"),
-                                lambda e: e["s"]
-                                / (F.col("n") + F.col("n_neg")))
-                    .alias("mean_vec"), "n"))
-
-
-_UNSUP_SCHEMA = StructType([
-    StructField("cui", StringType()),
-    StructField("ctx_type", StringType()),
-    StructField("vec_sum", ArrayType(DoubleType())),   # Σ(+pos) − Σ(neg)
-    StructField("n", LongType()),                      # positive examples
-    StructField("n_neg", LongType()),                  # negative examples
-])
-
-
-def _unsup_context_sums(bc, negative_sampling: bool = True):
-    """mapInPandas fn for unsupervised training: run NER per doc, apply
-    the L6 train-eligibility rule (context_based_linker.py:63-88 —
-    name length >= disamb_length_limit; single candidate with status !=
-    'N', or multi-candidate only for status in {P, PD}), emit per-(cui,
-    ctx_type) partial context-vector sums.
-
-    L8 negative sampling (context_based_linker.py:39-54 + vocab.py:
-    179-242): after each positive example, with negative_probability a
-    per-ctx-type window of words is drawn from the broadcast vocab's
-    unigram^(3/4) cumulative distribution and its mean vector enters the
-    sum NEGATED — the L7 sign rule (cdb.py:406-471: negative updates
-    subtract the example) expressed in the count-weighted-mean combine.
-    The RNG is seeded per doc_id, so the draw stream is deterministic
-    and independent of partitioning."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import random
-
-        from medcat_spark.core.annotate import preprocess
-        from medcat_spark.core.linker import ContextModel
-        from medcat_spark.core.ner import detect_entities
-        from medcat_spark.pipeline import _get_model
-        cdb, vocab, config, sc = _get_model(bc)
-        cm = ContextModel(cdb, vocab, config)
-        do_neg = negative_sampling and vocab.word2vec
-        for pdf in batches:
-            acc: dict = {}
-
-            def add(cui, ct, v, pos):
-                key = (cui, ct)
-                if key not in acc:
-                    acc[key] = [np.zeros_like(v), 0, 0]
-                if pos:
-                    acc[key][0] += v
-                    acc[key][1] += 1
-                else:
-                    acc[key][0] -= v
-                    acc[key][2] += 1
-
-            for row in pdf.itertuples(index=False):
-                text = (row.text or "")[:config.max_document_length]
-                rng = random.Random(int.from_bytes(hashlib.sha256(
-                    ("neg:%s" % row.doc_id).encode()).digest()[:8], "big")) \
-                    if do_neg else None
-                toks = preprocess(text, cdb, config, sc)
-                for ent in detect_entities(toks, text, cdb, config):
-                    name = ent.detected_name
-                    cuis = ent.link_candidates
-                    if name is None or len(name) < config.disamb_length_limit:
-                        continue
-                    statuses = cdb.name2cuis2status.get(name, {})
-                    if len(cuis) == 1:
-                        train_cuis = [] if statuses.get(cuis[0]) == "N" else [cuis[0]]
-                    else:
-                        train_cuis = [c for c in cuis
-                                      if statuses.get(c) in {"P", "PD"}]
-                    if not train_cuis:
-                        continue
-                    vecs = cm.get_context_vectors(ent, toks)
-                    for cui in train_cuis:
-                        for ct, v in vecs.items():
-                            add(cui, ct, v, pos=True)
-                        if rng is not None and \
-                                config.negative_probability >= rng.random():
-                            for ct, size in config.context_vector_sizes.items():
-                                sampled = vocab.get_negative_samples(
-                                    size, rng,
-                                    ignore_punct_and_num=config
-                                    .negative_ignore_punct_and_num)
-                                vals = [vocab.vec(w) for w in sampled
-                                        if vocab.vec(w) is not None]
-                                if vals:
-                                    add(cui, ct, np.average(vals, axis=0),
-                                        pos=False)
-            if not acc:
-                # yielding an EMPTY frame would give vec_sum a numeric
-                # dtype that Arrow cannot convert to list<double>
-                continue
-            yield pd.DataFrame({
-                "cui": [k[0] for k in acc],
-                "ctx_type": [k[1] for k in acc],
-                "vec_sum": [list(map(float, v[0])) for v in acc.values()],
-                "n": [v[1] for v in acc.values()],
-                "n_neg": [v[2] for v in acc.values()],
-            })
-    return fn
+        sums = sums.unionByName(sums_of(ex, _devalue_examples))
+    return _mean_vectors(sums)
 
 
 def train_unsupervised_spark(spark: SparkSession, docs: DataFrame, bc,
@@ -513,23 +440,38 @@ def train_unsupervised_spark(spark: SparkSession, docs: DataFrame, bc,
     (sign rule of cdb.py:406-471), divided by the total example count;
     the returned ``n`` counts positives only (it feeds count_train,
     which the reference increments only on positives)."""
-    sums = docs.select("doc_id", "text").mapInPandas(
-        _unsup_context_sums(bc, negative_sampling=negative_sampling),
-        schema=_UNSUP_SCHEMA)
-    cells = sums.select("cui", "ctx_type", "n", "n_neg",
-                        F.posexplode("vec_sum").alias("pos", "val"))
-    per_dim = (cells.groupBy("cui", "ctx_type", "pos")
-               .agg(F.sum("val").alias("s"), F.sum("n").alias("n_tot"),
-                    F.sum("n_neg").alias("n_neg_tot")))
-    return (per_dim.groupBy("cui", "ctx_type")
-            .agg(F.collect_list(F.struct("pos", "s")).alias("cells"),
-                 F.first("n_tot").alias("n"),
-                 F.first("n_neg_tot").alias("n_neg"))
-            .select("cui", "ctx_type",
-                    F.transform(F.array_sort("cells"),
-                                lambda e: e["s"]
-                                / (F.col("n") + F.col("n_neg")))
-                    .alias("mean_vec"), "n"))
+    return _mean_vectors(docs.select("doc_id", "text").mapInArrow(
+        _context_sums(bc, _unsupervised_examples(negative_sampling)),
+        schema=_SUMS_SCHEMA))
+
+
+def _replace_table(df: DataFrame, dst: str) -> None:
+    """Write ``df`` as the parquet table ``dst``: into a sibling tmp
+    dir first, then swapped in by rename (the source of ``df`` may be
+    ``dst`` itself)."""
+    import os
+    import shutil
+    tmp = os.path.join(os.path.dirname(dst), "_tmp_" + os.path.basename(dst))
+    df.write.mode("overwrite").parquet(tmp)
+    if os.path.isdir(dst):
+        shutil.rmtree(dst)
+    elif os.path.exists(dst):
+        os.remove(dst)
+    os.rename(tmp, dst)
+
+
+def _vectors_stamp(spark: SparkSession, pack: str) -> str:
+    """Distributed, order-independent content stamp over a pack's
+    context vectors: the sum of per-row xxhash64 (a commutative
+    combine; the exact driver-side content_hash would require
+    collecting the vectors)."""
+    import os
+    row_hash = F.xxhash64("cui", "ctx_type",
+                          F.concat_ws(",", F.transform(
+                              "vec", lambda x: F.format_number(x, 12))))
+    return str(spark.read.parquet(os.path.join(pack,
+                                               "context_vectors.parquet"))
+               .agg(F.sum(row_hash.cast("decimal(38,0)"))).first()[0])
 
 
 def save_trained_pack(spark: SparkSession, path: str, cdb: CdbModel,
@@ -550,9 +492,8 @@ def save_trained_pack(spark: SparkSession, path: str, cdb: CdbModel,
     reference's per-context_type loop; count_train += max over ctx
     types of the example count.
     """
-    import glob
+    import json
     import os
-    import shutil
 
     from medcat_spark.sources.model_pack import save_model_pack
 
@@ -567,47 +508,24 @@ def save_trained_pack(spark: SparkSession, path: str, cdb: CdbModel,
     # else — including other ctx types of a trained CUI — carried over
     cv_path = os.path.join(path, "context_vectors.parquet")
     existing = spark.read.parquet(cv_path)
-    merged = existing.join(t.select("cui", "ctx_type").distinct(),
-                           ["cui", "ctx_type"], "left_anti") \
-        .unionByName(t.select("cui", "ctx_type", "vec"))
-    tmp_cv = os.path.join(path, "_cv_tmp")
-    merged.write.mode("overwrite").parquet(tmp_cv)
-    if os.path.isdir(cv_path):
-        shutil.rmtree(cv_path)
-    else:
-        os.remove(cv_path)
-    os.rename(tmp_cv, cv_path)
+    _replace_table(existing.join(t.select("cui", "ctx_type").distinct(),
+                                 ["cui", "ctx_type"], "left_anti")
+                   .unionByName(t.select("cui", "ctx_type", "vec")), cv_path)
 
     # count_train delta into concepts.parquet (per-cui table join)
     deltas = t.groupBy("cui").agg(F.max("n").alias("add_n"))
     con_path = os.path.join(path, "concepts.parquet")
     concepts = spark.read.parquet(con_path)
-    updated = (concepts.join(F.broadcast(deltas), "cui", "left")
-               .withColumn("count_train",
-                           F.col("count_train")
-                           + F.coalesce(F.col("add_n"), F.lit(0)))
-               .drop("add_n"))
-    tmp_con = os.path.join(path, "_con_tmp")
-    updated.write.mode("overwrite").parquet(tmp_con)
-    if os.path.isdir(con_path):
-        shutil.rmtree(con_path)
-    else:
-        os.remove(con_path)
-    os.rename(tmp_con, con_path)
+    _replace_table(concepts.join(F.broadcast(deltas), "cui", "left")
+                   .withColumn("count_train",
+                               F.col("count_train")
+                               + F.coalesce(F.col("add_n"), F.lit(0)))
+                   .drop("add_n"), con_path)
 
-    # distributed, order-independent content stamp over the merged
-    # vectors (sum of per-row xxhash64 — commutative combine; the exact
-    # driver-side content_hash would require collecting the vectors)
-    row_hash = F.xxhash64("cui", "ctx_type",
-                          F.concat_ws(",", F.transform(
-                              "vec", lambda x: F.format_number(x, 12))))
-    vec_stamp = (spark.read.parquet(cv_path)
-                 .agg(F.sum(row_hash.cast("decimal(38,0)"))).first()[0])
-    manifest["context_vectors_stamp"] = str(vec_stamp)
+    manifest["context_vectors_stamp"] = _vectors_stamp(spark, path)
     manifest["trained_cuis"] = int(t.select("cui").distinct().count())
     t.unpersist()
 
-    import json
     with open(os.path.join(path, "manifest.json"), "w") as f:
         json.dump(manifest, f, indent=1)
     return manifest
@@ -668,14 +586,7 @@ def merge_packs(spark: SparkSession, path1: str, path2: str, out: str,
     empty_s = F.array().cast("array<string>")
 
     def write(df: DataFrame, name: str) -> None:
-        tmp = os.path.join(out, "_tmp_" + name)
-        df.write.mode("overwrite").parquet(tmp)
-        dst = os.path.join(out, name)
-        if os.path.isdir(dst):
-            shutil.rmtree(dst)
-        elif os.path.exists(dst):
-            os.remove(dst)
-        os.rename(tmp, dst)
+        _replace_table(df, os.path.join(out, name))
 
     # --- names ------------------------------------------------------
     n1 = rd(path1, "names.parquet")
@@ -800,17 +711,13 @@ def merge_packs(spark: SparkSession, path1: str, path2: str, out: str,
                     os.path.join(out, "config.json"))
     with open(os.path.join(path1, "manifest.json")) as f:
         manifest = json.load(f)
-    row_hash = F.xxhash64("cui", "ctx_type",
-                          F.concat_ws(",", F.transform(
-                              "vec", lambda x: F.format_number(x, 12))))
-    stamp = (spark.read.parquet(os.path.join(out, "context_vectors.parquet"))
-             .agg(F.sum(row_hash.cast("decimal(38,0)"))).first()[0])
+    stamp = _vectors_stamp(spark, out)
     manifest.update({
         "merged_from": [path1, path2],
         "overwrite_training": overwrite_training,
         "full_build": full_build,
-        "context_vectors_stamp": str(stamp),
-        "cdb_hash": "merged:" + str(stamp)})
+        "context_vectors_stamp": stamp,
+        "cdb_hash": "merged:" + stamp})
     with open(os.path.join(out, "manifest.json"), "w") as f:
         json.dump(manifest, f, indent=1)
     return manifest
@@ -891,20 +798,12 @@ def convert_vocab_vector_size(spark: SparkSession, pack_path: str,
 
         return col_df.mapInPandas(fn, schema=out_schema)
 
-    def write(df: DataFrame, name: str) -> None:
-        tmp = os.path.join(out_path, "_tmp_" + name)
-        df.write.mode("overwrite").parquet(tmp)
-        dst = os.path.join(out_path, name)
-        if os.path.isdir(dst):
-            shutil.rmtree(dst)
-        elif os.path.exists(dst):
-            os.remove(dst)
-        os.rename(tmp, dst)
-
-    write(project(vocab, "vec"), "vocab.parquet")
+    _replace_table(project(vocab, "vec"),
+                   os.path.join(out_path, "vocab.parquet"))
     cv = spark.read.parquet(os.path.join(pack_path,
                                          "context_vectors.parquet"))
-    write(project(cv, "vec"), "context_vectors.parquet")
+    _replace_table(project(cv, "vec"),
+                   os.path.join(out_path, "context_vectors.parquet"))
     for name in ("names.parquet", "snames.parquet", "concepts.parquet",
                  "token_counts.parquet"):
         src = os.path.join(pack_path, name)
@@ -919,17 +818,11 @@ def convert_vocab_vector_size(spark: SparkSession, pack_path: str,
                     os.path.join(out_path, "config.json"))
     with open(os.path.join(pack_path, "manifest.json")) as f:
         manifest = json.load(f)
-    # re-stamp: the projected vectors are new content (same distributed
-    # order-independent stamp rule as save_trained_pack / merge_packs)
-    row_hash = F.xxhash64("cui", "ctx_type",
-                          F.concat_ws(",", F.transform(
-                              "vec", lambda x: F.format_number(x, 12))))
-    stamp = (spark.read.parquet(os.path.join(out_path,
-                                             "context_vectors.parquet"))
-             .agg(F.sum(row_hash.cast("decimal(38,0)"))).first()[0])
+    # re-stamp: the projected vectors are new content
     manifest.update({"vec_size": vec_size,
                      "converted_from": pack_path,
-                     "context_vectors_stamp": str(stamp)})
+                     "context_vectors_stamp": _vectors_stamp(spark,
+                                                             out_path)})
     with open(os.path.join(out_path, "manifest.json"), "w") as f:
         json.dump(manifest, f, indent=1)
     return manifest

@@ -20,6 +20,7 @@ from typing import Iterator, Optional, Tuple
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
@@ -72,7 +73,7 @@ def _get_model(bc) -> Tuple[CdbModel, VocabModel, EngineConfig, SpellChecker]:
     hit = _MODEL_CACHE.get(key)
     if hit is None:
         cdb, vocab, config = bc.value
-        sc = SpellChecker(cdb.vocab, config) if config.spell_check else None
+        sc = SpellChecker(cdb.vocab, config)   # owns the token memo
         hit = (cdb, vocab, config, sc)
         _MODEL_CACHE.clear()   # one model resident at a time
         _MODEL_CACHE[key] = hit
@@ -136,15 +137,6 @@ def _annotate_batches(bc, has_spans: bool, keep_overlaps: bool = False):
             out["batch_us"] = [batch_us] * n
             yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
     return fn
-
-
-def to_arrow_schema(schema: StructType):
-    """Spark StructType → pyarrow schema (the subset this engine emits)."""
-    import pyarrow as pa
-    m = {"string": pa.string(), "integer": pa.int32(), "long": pa.int64(),
-         "double": pa.float64()}
-    return pa.schema([(f.name, m[f.dataType.typeName()])
-                      for f in schema.fields])
 
 
 def salted_repartition(docs: DataFrame, num_partitions: int,

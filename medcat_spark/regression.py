@@ -23,6 +23,7 @@ from typing import Dict, List, Tuple
 from medcat_spark.config import EngineConfig
 from medcat_spark.core.annotate import annotate_document
 from medcat_spark.core.model import CdbModel, VocabModel
+from medcat_spark.core.normalizer import SpellChecker
 
 PLACEHOLDER = "[CONCEPT]"
 
@@ -51,8 +52,9 @@ def fill_variants(case: RegressionCase, cdb: CdbModel,
 def grade(case: RegressionCase, cdb: CdbModel, vocab: VocabModel,
           config: EngineConfig) -> List[dict]:
     results = []
+    sc = SpellChecker(cdb.vocab, config)
     for text, surface, start, end in fill_variants(case, cdb, config):
-        ents, _ = annotate_document(text, cdb, vocab, config)
+        ents, _ = annotate_document(text, cdb, vocab, config, sc)
         verdict = "FAIL"
         for e in ents:
             if e.start < end and e.end > start:  # overlap
@@ -318,10 +320,11 @@ def run_yaml_suite(path: str, cdb: CdbModel, vocab: VocabModel,
     allowed = STRICTNESS_MATRIX[strictness]
     pt2ch = cdb.addl_info.get("pt2ch", {})
     rows = []
+    sc = SpellChecker(cdb.vocab, config)
     for case in read_regression_yaml(path):
         for (_phrase, ph, cui, name, text, start, end) in \
                 yaml_subcases(case, cdb, config):
-            ents, _ = annotate_document(text, cdb, vocab, config)
+            ents, _ = annotate_document(text, cdb, vocab, config, sc)
             ent_rows = [{"start": e.start, "end": e.end, "cui": e.cui}
                         for e in ents]
             finding, alt = determine_finding(cui, start, end, ent_rows, pt2ch)

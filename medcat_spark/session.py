@@ -73,6 +73,10 @@ def fixed_heap_conf(heap: str) -> dict:
                 f"-Xms{heap} -XX:+AlwaysPreTouch"}
 
 
+_MIN_SHM_FREE = 2 << 30          # bytes free before tmpfs is used
+_MAX_DRIVER_MEMORY = 48 << 30    # the default heap never exceeds 48g
+
+
 def _default_local_dir() -> str:
     """Shuffle/spill scratch dir: prefer memory-backed tmpfs when
     present.  Shuffle blocks here are small and short-lived; on this
@@ -87,8 +91,23 @@ def _default_local_dir() -> str:
         return d
     shm = "/dev/shm"
     if os.path.isdir(shm) and os.access(shm, os.W_OK):
-        return os.path.join(shm, "spark-local")
+        # containers often cap /dev/shm at 64 MB, where the first spill
+        # fails with no space left: tmpfs only with room to spill
+        st = os.statvfs(shm)
+        if st.f_bavail * st.f_frsize >= _MIN_SHM_FREE:
+            return os.path.join(shm, "spark-local")
     return "/tmp"
+
+
+def _default_driver_memory() -> str:
+    """Local mode: the driver JVM is the executor, so size its heap
+    from the host — half of physical memory, capped at 48g — instead of
+    a fixed 48g that outgrows a small host's RAM."""
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (ValueError, OSError):
+        phys = 2 * _MAX_DRIVER_MEMORY
+    return "%dm" % (min(phys // 2, _MAX_DRIVER_MEMORY) >> 20)
 
 
 def get_spark(app_name: str = "medcat-spark", master: str | None = None,
@@ -127,7 +146,8 @@ def get_spark(app_name: str = "medcat-spark", master: str | None = None,
         # local mode: the driver JVM is the executor — size it for the
         # machine (cache + shuffle of wide intermediate joins)
         .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+                os.environ.get("SPARK_DRIVER_MEMORY",
+                               _default_driver_memory()))
         .config("spark.local.dir", _default_local_dir())
         # Always use the sort-based shuffle writer (one spill file per
         # map task).  The bypass-merge writer opens R files + R

@@ -146,6 +146,37 @@ def test_spell_check_tie_break_ignores_hash_seed():
     assert outs[0] == outs[1] == ["bot"] * 4
 
 
+def test_token_memo_belongs_to_the_checker_not_the_config():
+    """The token memo depends on the CDB token vocab and on the config,
+    so it lives on the spell checker: a reused EngineConfig neither
+    carries stale norms to another CDB nor pickles the memo along."""
+    import pickle
+
+    from medcat_spark.core.normalizer import SpellChecker
+    cfg = EngineConfig()
+    vocab = build_fixture_vocab()
+    text = "patient has hypertensian today"
+    only_right = build_fixture_cdb(cfg, rows=[
+        ("C1", "hypertension", "", "A", "T1", "")])
+    both = build_fixture_cdb(cfg, rows=[
+        ("C9", "hypertensian", "", "A", "T1", ""),
+        ("C1", "hypertension", "", "A", "T1", "")])
+    first, _ = annotate_document(text, only_right, vocab, cfg)
+    assert [e.cui for e in first] == ["C1"]          # spell-fixed
+    # same config, other CDB: the misspelling is now a known name
+    again, _ = annotate_document(text, both, vocab, cfg)
+    assert [e.cui for e in again] == ["C9"]
+    assert pickle.dumps(cfg) == pickle.dumps(EngineConfig())
+
+    def norm(c):
+        toks = preprocess(text, only_right, c, SpellChecker(only_right.vocab, c))
+        return [t.norm for t in toks]
+
+    assert "hypertension" in norm(cfg)
+    cfg.spell_check = False
+    assert "hypertensian" in norm(cfg) and "hypertension" not in norm(cfg)
+
+
 def test_threshold_filters_unlinked(models):
     cdb, vocab = models
     cfg = EngineConfig(similarity_threshold=2.0)  # impossible threshold

@@ -206,3 +206,54 @@ def test_train_from_fp_and_deleted_negatives(spark):
     for cui, ct in [k for k in with_neg if k[0] == "P2"]:
         assert np.allclose(with_neg[(cui, ct)], with_fp[(cui, ct)],
                            atol=1e-9)     # same span -> same negated mean
+
+
+def _trainer_model(spark):
+    from medcat_spark.fixtures import build_fixture_cdb, build_fixture_vocab
+    cfg = EngineConfig()
+    rows = [("P1", "plasma", "", "P", "T1", ""),
+            ("P2", "plasma", "", "P", "T1", ""),
+            ("P3", "serum", "", "P", "T1", "")]
+    return cfg, broadcast_model(spark, build_fixture_cdb(cfg, rows=rows),
+                                build_fixture_vocab(), cfg)
+
+
+def test_trainer_plans_run_the_arrow_kernel(spark):
+    """Every trainer stream (positives, negative_gold, train_from_fp,
+    devalue_others, unsupervised) is the one mapInArrow kernel."""
+    from medcat_spark.model_ops import train_unsupervised_spark
+    cfg, bc = _trainer_model(spark)
+    docs = spark.createDataFrame(
+        [("d1", "patient plasma and serum admitted to hospital ward")],
+        "doc_id string, text string")
+    gold = spark.createDataFrame(
+        [("d1", 8, 14, "P1", "plasma")],
+        "doc_id string, start int, end int, cui string, value string")
+    sup = train_supervised_spark(spark, gold, docs, bc, cfg,
+                                 devalue_others=True, train_from_fp=True,
+                                 negative_gold=gold)
+    unsup = train_unsupervised_spark(spark, docs, bc)
+    for df, kernels in ((sup, 5), (unsup, 1)):    # sup: 4 + annotate
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == kernels, plan
+        assert "MapInPandas" not in plan, plan
+    assert {r["cui"] for r in sup.collect()} == {"P1", "P2", "P3"}
+    assert unsup.count() > 0
+
+
+def test_trainers_without_examples_give_no_rows(spark):
+    """A gold span covering no token (or with a NULL start) and a doc
+    with no eligible entity yield no rows and raise nothing."""
+    from medcat_spark.model_ops import train_unsupervised_spark
+    cfg, bc = _trainer_model(spark)
+    docs = spark.createDataFrame(
+        [("d1", "patient plasma admitted"), ("d2", "nothing to see here")],
+        "doc_id string, text string")
+    gold = spark.createDataFrame(
+        [("d1", 2, 5, "P1", "plasma"), ("d1", None, 14, "P1", "plasma")],
+        "doc_id string, start int, end int, cui string, value string")
+    assert train_supervised_spark(spark, gold, docs, bc, cfg,
+                                  devalue_others=True,
+                                  negative_gold=gold).collect() == []
+    assert train_unsupervised_spark(
+        spark, docs.where("doc_id = 'd2'"), bc).collect() == []
