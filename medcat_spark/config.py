@@ -1,10 +1,13 @@
 """Engine configuration.
 
-A frozen-ish dataclass mirroring the semantics-bearing defaults of the
-reference config (/root/reference/medcat/config.py:340-578).  Every field
-below changes outputs, so it is part of the model contract: the config is
-serialized to JSON next to the graph tables and hashed into snapshot
-lineage (reference: medcat/cat.py:151-178, medcat/cdb.py:894-922).
+A plain, mutable dataclass mirroring the semantics-bearing defaults of
+the reference config (/root/reference/medcat/config.py:340-578).  It is
+not frozen: nothing stops a caller from assigning a field.  The contract
+is that a config is not mutated once ``broadcast_model`` has pickled it;
+executors keep the pickled values, so a later change reaches the driver
+only.  Every field below changes outputs, so it is part of the model
+contract: the config is serialized to JSON next to the graph tables and
+hashed into snapshot lineage (reference: medcat/cat.py:151-178, medcat/cdb.py:894-922).
 
 This is NOT a port of the reference's pydantic model tree — only the
 fields that gate annotation semantics are kept, as plain Python values

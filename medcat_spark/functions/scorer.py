@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, IntegerType, StringType,
                                StructField, StructType)
 
+from medcat_spark import worker
+
 META_SCHEMA = StructType([
     StructField("doc_id", StringType()),
     StructField("start", IntegerType()),
@@ -392,6 +394,7 @@ def kernel(bc, head: str, meta_name: Optional[str] = None):
     def fn(batches):
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
+        worker.init()
         h = HEADS[head](bc.value)
         schema = to_arrow_schema(REL_SCHEMA if h.pairs else META_SCHEMA)
         for rb in batches:

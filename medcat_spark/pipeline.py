@@ -24,6 +24,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
+from medcat_spark import worker
 from medcat_spark.config import EngineConfig
 from medcat_spark.core.annotate import annotate_document
 from medcat_spark.core.docs import char_to_span, reconstruct_text, span_index
@@ -52,21 +53,8 @@ ANNOTATION_SCHEMA = StructType([
 _MODEL_CACHE: dict = {}
 
 
-def _pin_arrow_threads() -> None:
-    """Each Python worker defaults to a pyarrow CPU pool sized for the
-    whole machine; with N workers per node that oversubscribes cores
-    N-fold and inverts scaling (measured: >100% CPU per worker, worse
-    wall-clock at 32 cores than 8).  One compute/IO thread per worker."""
-    try:
-        import pyarrow as pa
-        pa.set_cpu_count(1)
-        pa.set_io_thread_count(1)
-    except Exception:
-        pass
-
-
 def _get_model(bc) -> Tuple[CdbModel, VocabModel, EngineConfig, SpellChecker]:
-    _pin_arrow_threads()
+    worker.init()
     # the broadcast spill path is unique per broadcast id and stable on
     # the worker (id(bc) is NOT: CPython reuses ids across GC'd objects)
     key = getattr(bc, "_path", None) or id(bc)
