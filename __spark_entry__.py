@@ -705,7 +705,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # REAL pixel decode (stdlib-zlib PNG codec, media.py): synthesize a
     # deterministic gradient PNG per doc (row filter = doc_id % 5 so all
     # five PNG filters are reconstructed), decode it back in a second
-    # mapInPandas stage over the binary column, emit per-image stats the
+    # mapInArrow stage over the binary column, emit per-image stats the
     # oracle re-derives arithmetically.
     def _media_pixels(s, d):
         from medcat_spark.functions.media import (media_pixel_stats,
@@ -716,7 +716,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # REAL audio decode (stdlib-struct RIFF/WAVE PCM16 codec): per doc a
     # deterministic integer signal encoded to real WAV bytes, decoded
-    # back in a second mapInPandas stage; RMS + zero-crossings re-derived
+    # back in a second mapInArrow stage; RMS + zero-crossings re-derived
     # arithmetically by the oracle.
     def _media_audio(s, d):
         from medcat_spark.functions.media import (media_audio_stats,

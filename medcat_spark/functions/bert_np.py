@@ -235,28 +235,62 @@ def chunked_pair_predict(model, input_ids, e1_e2_start,
     return out
 
 
-class RelCatBertModel:
-    """BertModel_RelationExtraction forward (models.py:84-223): encoder →
-    pooled head → fc1 → fc2 → fc3 logits (dropout is inference no-op).
+class _RelCatHead:
+    """The relation-pair read-out every RelCAT encoder shares
+    (models.py:170-225): ``_encode`` gives the hidden states and a lead
+    vector (pooled CLS, first-token state, ...), then
+    concat(lead, e1, e2) → fc1 → fc2 → fc3 logits (dropout is an
+    inference no-op).
 
-    Pooling follows the reference's two branches (models.py:170-225):
-    when ``annotation_schema_tag_ids`` are configured (the reference
+    With ``annotation_schema_tag_ids`` configured (the reference
     default, and a hard load requirement for imported rel_* components)
-    the entity representations are max-pools over the tokens BETWEEN
-    each [s1]../[e1] and [s2]../[e2] marker pair
-    (``get_annotation_schema_tag``); without tag ids it falls back to
-    the hidden states AT the e1_e2_start marker positions.  Both concat
-    with the pooler CLS output."""
+    e1/e2 are max-pools over the tokens BETWEEN each [s1]../[e1] and
+    [s2]../[e2] marker pair (``get_annotation_schema_tag``), and the lead
+    joins that concat only when ``tag_lead`` is true; without tag ids
+    e1/e2 are the hidden states AT the e1_e2_start marker positions."""
 
     tag_ids: Optional[List[int]] = None
+    tag_lead = True
 
-    def __init__(self, encoder: BertEncoder, fc: Dict[str, np.ndarray],
+    def __init__(self, encoder, fc: Dict[str, np.ndarray],
                  labels: List[str]) -> None:
         self.encoder = encoder
         self.fc1_w, self.fc1_b = fc["fc1.weight"], fc["fc1.bias"]
         self.fc2_w, self.fc2_b = fc["fc2.weight"], fc["fc2.bias"]
         self.fc3_w, self.fc3_b = fc["fc3.weight"], fc["fc3.bias"]
         self.labels = labels
+
+    def _pooled_concat(self, seq: np.ndarray, lead: np.ndarray,
+                       input_ids: np.ndarray,
+                       e1_e2_start: np.ndarray) -> np.ndarray:
+        tags = self.tag_ids
+        if tags and len(tags) >= 4:
+            t1 = annotation_tag_pool(seq, input_ids, tags[0], tags[1])
+            t2 = annotation_tag_pool(seq, input_ids, tags[2], tags[3])
+            parts = [lead, t1, t2] if self.tag_lead else [t1, t2]
+            return np.concatenate(parts, axis=1)
+        B = seq.shape[0]
+        e1 = seq[np.arange(B), np.asarray(e1_e2_start)[:, 0]]
+        e2 = seq[np.arange(B), np.asarray(e1_e2_start)[:, 1]]
+        return np.concatenate([lead, e1, e2], axis=1)
+
+    def logits(self, input_ids: np.ndarray, e1_e2_start: np.ndarray,
+               attention_mask: Optional[np.ndarray] = None) -> np.ndarray:
+        seq, lead = self._encode(input_ids, attention_mask)
+        x = self._pooled_concat(seq, lead, input_ids, e1_e2_start)
+        x = x @ self.fc1_w.T + self.fc1_b
+        x = x @ self.fc2_w.T + self.fc2_b
+        return x @ self.fc3_w.T + self.fc3_b
+
+    def predict(self, input_ids, e1_e2_start, attention_mask=None):
+        return chunked_pair_predict(self, input_ids, e1_e2_start,
+                                    attention_mask)
+
+
+class RelCatBertModel(_RelCatHead):
+    """BertModel_RelationExtraction forward (models.py:84-223): the
+    shared pair head over the BERT encoder, led by the pooler CLS
+    output."""
 
     @classmethod
     def from_state_dict(cls, sd: Dict[str, np.ndarray], labels: List[str],
@@ -269,30 +303,8 @@ class RelCatBertModel:
                         "fc3.weight", "fc3.bias")}
         return cls(enc, fc, labels)
 
-    def _pooled_concat(self, seq: np.ndarray, pooled: np.ndarray,
-                       input_ids: np.ndarray,
-                       e1_e2_start: np.ndarray) -> np.ndarray:
-        tags = getattr(self, "tag_ids", None)
-        if tags and len(tags) >= 4:
-            t1 = annotation_tag_pool(seq, input_ids, tags[0], tags[1])
-            t2 = annotation_tag_pool(seq, input_ids, tags[2], tags[3])
-            return np.concatenate([pooled, t1, t2], axis=1)
-        B = seq.shape[0]
-        e1 = seq[np.arange(B), np.asarray(e1_e2_start)[:, 0]]
-        e2 = seq[np.arange(B), np.asarray(e1_e2_start)[:, 1]]
-        return np.concatenate([pooled, e1, e2], axis=1)
-
-    def logits(self, input_ids: np.ndarray, e1_e2_start: np.ndarray,
-               attention_mask: Optional[np.ndarray] = None) -> np.ndarray:
-        seq, pooled = self.encoder.forward(input_ids, attention_mask)
-        x = self._pooled_concat(seq, pooled, input_ids, e1_e2_start)
-        x = x @ self.fc1_w.T + self.fc1_b
-        x = x @ self.fc2_w.T + self.fc2_b
-        return x @ self.fc3_w.T + self.fc3_b
-
-    def predict(self, input_ids, e1_e2_start, attention_mask=None):
-        return chunked_pair_predict(self, input_ids, e1_e2_start,
-                                    attention_mask)
+    def _encode(self, input_ids, attention_mask):
+        return self.encoder.forward(input_ids, attention_mask)
 
 
 class BertMetaModel:

@@ -27,7 +27,7 @@ spec-legal and transcription-proof; the decoder reads any DHT.
 from __future__ import annotations
 
 import struct
-from typing import Dict, Iterator, List, Sequence, Tuple
+from typing import Dict, List, Sequence, Tuple
 
 import numpy as np
 
@@ -475,63 +475,26 @@ def fixture_blocks(doc_id: int) -> List[np.ndarray]:
 def synth_jpeg_column(docs, id_col: str = "doc_id"):
     """(doc_id string, media_bytes binary): one real baseline-JPEG
     stream per doc from the fixture coefficient contract."""
-    import pandas as pd
-    from pyspark.sql.types import (BinaryType, StringType, StructField,
-                                   StructType)
-
-    out_schema = StructType([
-        StructField("doc_id", StringType()),
-        StructField("media_bytes", BinaryType()),
-    ])
+    from medcat_spark.functions.media import _synth_column
     q = fixture_quant()
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                ids.append(str(did))
-                blobs.append(jpeg_encode_coefficients(
-                    fixture_blocks(did), 16, 16, q))
-            if ids:
-                yield pd.DataFrame({"doc_id": ids, "media_bytes": blobs})
-
-    return docs.select(id_col).mapInPandas(fn, schema=out_schema)
+    return _synth_column(docs, id_col, lambda did: jpeg_encode_coefficients(
+        fixture_blocks(did), 16, 16, q))
 
 
 def media_jpeg_stats(df, bytes_col: str = "media_bytes",
                      id_col: str = "doc_id"):
-    """REAL JPEG pixel decode over a binary column: Arrow-batched
-    mapInPandas → jpeg_decode_pixels → per-image dims/mean/sum."""
-    import pandas as pd
-    from pyspark.sql.types import (DoubleType, IntegerType, LongType,
-                                   StringType, StructField, StructType)
+    """REAL JPEG pixel decode over a binary column: jpeg_decode_pixels
+    → per-image dims/mean/sum (media.PIXEL_STATS_SCHEMA)."""
+    from medcat_spark.functions.media import (PIXEL_STATS_SCHEMA,
+                                              _decode_head)
 
-    schema = StructType([
-        StructField("doc_id", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("mean_px", DoubleType()),
-        StructField("px_sum", LongType()),
-    ])
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for row in pdf.itertuples(index=False):
-                px = jpeg_decode_pixels(getattr(row, bytes_col))
-                s = int(px.astype("int64").sum())
-                out["doc_id"].append(str(getattr(row, id_col)))
-                out["height"].append(int(px.shape[0]))
-                out["width"].append(int(px.shape[1]))
-                # sum/size is exactly representable (dyadic) — no
-                # rounding, so there is no banker's-vs-half-away tie
-                out["mean_px"].append(s / px.size)
-                out["px_sum"].append(s)
-            if out["doc_id"]:
-                yield pd.DataFrame(out)
-
-    return df.mapInPandas(fn, schema=schema)
+    def stats(b):
+        px = jpeg_decode_pixels(b)
+        s = int(px.astype("int64").sum())
+        # sum/size is exactly representable (dyadic) — no rounding, so
+        # there is no banker's-vs-half-away tie
+        return [(int(px.shape[1]), int(px.shape[0]), s / px.size, s)]
+    return _decode_head(df, PIXEL_STATS_SCHEMA, bytes_col, id_col, stats)
 
 
 def fixture_boundary_distance(max_doc_id: int) -> float:

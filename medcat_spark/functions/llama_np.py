@@ -20,7 +20,7 @@ from typing import Dict, List, Optional, Tuple
 
 import numpy as np
 
-from medcat_spark.functions.bert_np import softmax
+from medcat_spark.functions.bert_np import _RelCatHead, softmax
 
 
 def rms_norm(x: np.ndarray, w: np.ndarray, eps: float = 1e-6) -> np.ndarray:
@@ -148,35 +148,30 @@ class LlamaEncoder:
         return rms_norm(x, self.final_norm)
 
 
-class RelCatLlamaModel:
-    """LlamaModel_RelationExtraction forward (llama/model.py:58-115).
+class RelCatLlamaModel(_RelCatHead):
+    """LlamaModel_RelationExtraction forward (llama/model.py:58-115):
+    the shared pair head over the Llama encoder, led by the
+    tanh-pooler output of the first token.
 
-    Pooling follows the reference's branches: with
-    ``annotation_schema_tag_ids`` set (the default, and a hard load
-    requirement for imported rel_* components) the entity
-    representations are max-pools over the tokens BETWEEN each marker
-    pair (``get_annotation_schema_tag``); the concat includes the
-    tanh-pooler output only when ``llama_use_pooled_output`` is True
-    (config_rel_cat.py:125, default False → concat(t1, t2) alone).
-    Without tag ids it falls back to concat(pooled, e1 state, e2 state)
-    at the e1_e2_start marker positions.  ``use_pooled_output`` is
+    With tag ids the concat includes that pooler output only when
+    ``llama_use_pooled_output`` is True (config_rel_cat.py:125, default
+    False → concat(t1, t2) alone); without tag ids it is always
+    concat(pooled, e1 state, e2 state).  ``use_pooled_output`` is
     inferred from fc1's input width when the config doesn't say."""
-
-    tag_ids = None
 
     def __init__(self, encoder: LlamaEncoder, fc: Dict[str, np.ndarray],
                  labels: List[str]) -> None:
-        self.encoder = encoder
+        super().__init__(encoder, fc, labels)
         self.pool_w = fc["llama_pooler.dense.weight"]
         self.pool_b = fc["llama_pooler.dense.bias"]
-        self.fc1_w, self.fc1_b = fc["fc1.weight"], fc["fc1.bias"]
-        self.fc2_w, self.fc2_b = fc["fc2.weight"], fc["fc2.bias"]
-        self.fc3_w, self.fc3_b = fc["fc3.weight"], fc["fc3.bias"]
-        self.labels = labels
         # fc1 input = 3*hidden when the pooler vector joins the concat,
         # 2*hidden when only the two tag pools do (reference default)
         hidden = encoder.embed.shape[1]
         self.use_pooled_output = self.fc1_w.shape[1] >= 3 * hidden
+
+    @property
+    def tag_lead(self) -> bool:
+        return self.use_pooled_output
 
     @classmethod
     def from_state_dict(cls, sd: Dict[str, np.ndarray], labels: List[str],
@@ -190,32 +185,9 @@ class RelCatLlamaModel:
               if k.startswith(("fc1.", "fc2.", "fc3.", "llama_pooler."))}
         return cls(enc, fc, labels)
 
-    def logits(self, input_ids: np.ndarray, e1_e2_start: np.ndarray,
-               attention_mask: Optional[np.ndarray] = None) -> np.ndarray:
-        from medcat_spark.functions.bert_np import annotation_tag_pool
+    def _encode(self, input_ids, attention_mask):
         seq = self.encoder.forward(input_ids, attention_mask)
-        B = seq.shape[0]
-        pooled = np.tanh(seq[:, 0] @ self.pool_w.T + self.pool_b)
-        tags = getattr(self, "tag_ids", None)
-        if tags and len(tags) >= 4:
-            t1 = annotation_tag_pool(seq, input_ids, tags[0], tags[1])
-            t2 = annotation_tag_pool(seq, input_ids, tags[2], tags[3])
-            if self.use_pooled_output:
-                x = np.concatenate([pooled, t1, t2], axis=1)
-            else:
-                x = np.concatenate([t1, t2], axis=1)
-        else:
-            e1 = seq[np.arange(B), np.asarray(e1_e2_start)[:, 0]]
-            e2 = seq[np.arange(B), np.asarray(e1_e2_start)[:, 1]]
-            x = np.concatenate([pooled, e1, e2], axis=1)
-        x = x @ self.fc1_w.T + self.fc1_b
-        x = x @ self.fc2_w.T + self.fc2_b
-        return x @ self.fc3_w.T + self.fc3_b
-
-    def predict(self, input_ids, e1_e2_start, attention_mask=None):
-        from medcat_spark.functions.bert_np import chunked_pair_predict
-        return chunked_pair_predict(self, input_ids, e1_e2_start,
-                                    attention_mask)
+        return seq, np.tanh(seq[:, 0] @ self.pool_w.T + self.pool_b)
 
 
 def llama_fixture_state_dict(vocab_size: int = 64, hidden: int = 8,

@@ -1,5 +1,14 @@
 """Multimodal column plumbing: media spans as opaque references/bytes with
-typed metadata, decoded/feature-extracted via Arrow-batched mapInPandas.
+typed metadata, decoded/feature-extracted by one Arrow-batched operator.
+
+Every public operator here and in functions/jpeg.py is a row function
+run by the one ``mapInArrow`` kernel (`_map_rows`): ``worker.init()`` at
+entry, one ``to_pylist`` per Arrow batch, one ``RecordBatch`` out.  The
+decode heads (`media_pixel_stats`, `media_audio_stats`,
+`media_adpcm_stats`, `media_gif_frames`, `media_jpeg_stats`) share one
+NULL rule: a row whose bytes are NULL yields no output row.
+`media_features_from_bytes` instead keeps it as a ``format='unknown'``
+row, like any other undecodable member.
 
 Real decode paths (no PIL/ffmpeg needed): PNG pixels (all five row
 filters; depths 1/2/4/8/16; gray, gray+alpha, RGB, RGBA, palette),
@@ -11,7 +20,7 @@ recurrence SQL-certified), plus PNG/JPEG/GIF header metadata.  PNG
 coverage is complete for single-image files (all depths/types incl.
 Adam7 interlace); what remains (progressive/12-bit JPEG, other audio
 codecs, real video containers) raises NotImplementedError — wire PIL/ffmpeg
-into the same UDF signatures on a cluster that has them.
+into the same row functions on a cluster that has them.
 `fake_decode` remains for the reference-shaped metadata plumbing
 whose oracles predate the real codecs.
 """
@@ -19,12 +28,68 @@ whose oracles predate the real codecs.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (DoubleType, IntegerType, LongType,
-                               StringType, StructField, StructType)
+from pyspark.sql.types import (BinaryType, DoubleType, IntegerType,
+                               LongType, StringType, StructField,
+                               StructType)
+
+from medcat_spark import worker
+
+
+def _map_rows(df: DataFrame, schema: StructType, rec) -> DataFrame:
+    """The one media operator: ``rec(row dict)`` → iterable of output
+    rows (tuples in ``schema`` order), run as one ``mapInArrow`` that
+    decodes each Arrow batch once and emits one batch per input batch
+    (batches with no output rows yield nothing)."""
+    def fn(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+        worker.init()
+        arrow_schema = to_arrow_schema(schema)
+        for rb in batches:
+            rows = [out for r in rb.to_pylist() for out in rec(r)]
+            if rows:
+                yield pa.RecordBatch.from_pydict(
+                    dict(zip(arrow_schema.names, map(list, zip(*rows)))),
+                    schema=arrow_schema)
+    return df.mapInArrow(fn, schema=schema)
+
+
+# (doc_id, media_bytes): the output of every synth_*_column generator
+_DOC_BYTES_SCHEMA = StructType([
+    StructField("doc_id", StringType()),
+    StructField("media_bytes", BinaryType()),
+])
+
+
+def _synth_column(docs: DataFrame, id_col: str, encode) -> DataFrame:
+    """(doc_id string, media_bytes binary): one ``encode(int(doc_id))``
+    fixture blob per doc."""
+    def rec(r):
+        did = int(r[id_col])
+        return [(str(did), encode(did))]
+    return _map_rows(docs.select(id_col), _DOC_BYTES_SCHEMA, rec)
+
+
+def _decode_head(df: DataFrame, schema: StructType, bytes_col: str,
+                 id_col: str, stats) -> DataFrame:
+    """A decode head: ``stats(bytes)`` → output rows after ``doc_id``.
+    A NULL ``bytes_col`` yields no row (the module's NULL rule)."""
+    def rec(r):
+        b = r[bytes_col]
+        if b is None:
+            return ()
+        did = str(r[id_col])
+        return [(did,) + row for row in stats(b)]
+    return _map_rows(df, schema, rec)
+
+
+def _media_spans(spans):
+    """(span_idx, span) for every non-text span with a media_ref."""
+    return ((i, s) for i, s in enumerate(spans)
+            if s["kind"] != "text" and s.get("media_ref"))
+
 
 MEDIA_FEATURE_SCHEMA = StructType([
     StructField("doc_id", StringType()),
@@ -127,28 +192,16 @@ def media_features_from_bytes(df: DataFrame, bytes_col: str = "media_bytes",
     decode of PNG/JPEG/GIF bytes (real_decode).  Undecodable rows get
     null dims and format 'unknown' instead of failing the batch —
     corpus-scale media tables always contain corrupt members."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in MEDIA_BYTES_SCHEMA.fields}
-            for row in pdf.itertuples(index=False):
-                try:
-                    meta = real_decode(getattr(row, bytes_col))
-                except (NotImplementedError, ValueError):
-                    meta = {"format": "unknown", "width": None,
-                            "height": None,
-                            "phash": hashlib.md5(
-                                getattr(row, bytes_col) or b"")
-                            .hexdigest()[:16]}
-                out["doc_id"].append(str(getattr(row, id_col)))
-                out["media_ref"].append(getattr(row, ref_col))
-                out["format"].append(meta["format"])
-                out["width"].append(meta["width"])
-                out["height"].append(meta["height"])
-                out["phash"].append(meta["phash"])
-            if out["doc_id"]:
-                yield pd.DataFrame(out)
-
-    return df.mapInPandas(fn, schema=MEDIA_BYTES_SCHEMA)
+    def rec(r):
+        b = r[bytes_col]
+        try:
+            meta = real_decode(b)
+        except (NotImplementedError, ValueError):
+            meta = {"format": "unknown", "width": None, "height": None,
+                    "phash": hashlib.md5(b or b"").hexdigest()[:16]}
+        return [(str(r[id_col]), r[ref_col], meta["format"], meta["width"],
+                 meta["height"], meta["phash"])]
+    return _map_rows(df, MEDIA_BYTES_SCHEMA, rec)
 
 
 def media_features(docs_with_spans: DataFrame) -> DataFrame:
@@ -157,24 +210,12 @@ def media_features(docs_with_spans: DataFrame) -> DataFrame:
     Input: (doc_id, spans array<struct<kind,text,media_ref,offset>>).
     One output row per media span; Arrow-batched, model-free.
     """
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in MEDIA_FEATURE_SCHEMA.fields}
-            for row in pdf.itertuples(index=False):
-                for i, s in enumerate(row.spans):
-                    if s["kind"] == "text" or not s.get("media_ref"):
-                        continue
-                    meta = fake_decode(s["media_ref"])
-                    out["doc_id"].append(str(row.doc_id))
-                    out["span_idx"].append(i)
-                    out["kind"].append(s["kind"])
-                    out["media_ref"].append(s["media_ref"])
-                    out["width"].append(meta["width"])
-                    out["height"].append(meta["height"])
-                    out["phash"].append(meta["phash"])
-            yield pd.DataFrame(out)
-
-    return docs_with_spans.mapInPandas(fn, schema=MEDIA_FEATURE_SCHEMA)
+    def rec(r):
+        for i, s in _media_spans(r["spans"]):
+            meta = fake_decode(s["media_ref"])
+            yield (str(r["doc_id"]), i, s["kind"], s["media_ref"],
+                   meta["width"], meta["height"], meta["phash"])
+    return _map_rows(docs_with_spans, MEDIA_FEATURE_SCHEMA, rec)
 
 
 def media_resize(features: DataFrame, target_w: int = 224,
@@ -223,28 +264,14 @@ def frame_sample(docs_with_spans: DataFrame, interval_ms: int = 1000,
     real_decode.  Mirrors ffmpeg -vf fps sampling: frames at
     0, interval, 2*interval, ... capped at max_frames.
     """
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in FRAME_SCHEMA.fields}
-            for row in pdf.itertuples(index=False):
-                for i, s in enumerate(row.spans):
-                    if s["kind"] == "text" or not s.get("media_ref"):
-                        continue
-                    dur = fake_duration_ms(s["media_ref"])
-                    n = min(dur // interval_ms + 1, max_frames)
-                    for f_i in range(n):
-                        out["doc_id"].append(str(row.doc_id))
-                        out["span_idx"].append(i)
-                        out["media_ref"].append(s["media_ref"])
-                        out["duration_ms"].append(dur)
-                        out["frame_idx"].append(f_i)
-                        out["ts_ms"].append(f_i * interval_ms)
-                        out["frame_ref"].append(
-                            f"{s['media_ref']}#f{f_i}")
-            if out["doc_id"]:
-                yield pd.DataFrame(out)
-
-    return docs_with_spans.mapInPandas(fn, schema=FRAME_SCHEMA)
+    def rec(r):
+        for i, s in _media_spans(r["spans"]):
+            ref = s["media_ref"]
+            dur = fake_duration_ms(ref)
+            for f_i in range(min(dur // interval_ms + 1, max_frames)):
+                yield (str(r["doc_id"]), i, ref, dur, f_i,
+                       f_i * interval_ms, f"{ref}#f{f_i}")
+    return _map_rows(docs_with_spans, FRAME_SCHEMA, rec)
 
 
 # ---------------------------------------------------------------------------
@@ -473,51 +500,24 @@ def synth_png_column(docs: DataFrame, id_col: str = "doc_id",
     (i + doc_id) % 256, written with row filter ``doc_id % 5`` so every
     PNG filter type (None/Sub/Up/Average/Paeth) is exercised across the
     corpus.  Output: (doc_id string, media_bytes binary)."""
-    from pyspark.sql.types import BinaryType
-
-    out_schema = StructType([
-        StructField("doc_id", StringType()),
-        StructField("media_bytes", BinaryType()),
-    ])
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        base = np.arange(height * width, dtype=np.int64)
-        for pdf in batches:
-            ids, blobs = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                px = ((base + did) % 256).reshape(height, width)
-                ids.append(str(did))
-                blobs.append(png_encode(px, filter_type=did % 5))
-            if ids:
-                yield pd.DataFrame({"doc_id": ids, "media_bytes": blobs})
-
-    return docs.select(id_col).mapInPandas(fn, schema=out_schema)
+    import numpy as np
+    base = np.arange(height * width, dtype=np.int64)
+    return _synth_column(docs, id_col, lambda did: png_encode(
+        ((base + did) % 256).reshape(height, width), filter_type=did % 5))
 
 
 def media_pixel_stats(df: DataFrame, bytes_col: str = "media_bytes",
                       id_col: str = "doc_id") -> DataFrame:
     """REAL pixel-level feature extraction over a binary PNG column:
-    Arrow-batched mapInPandas → png_decode_pixels → per-image mean
-    (rounded 6 dp, the oracle contract).  The batch shape, schema and
-    partitioning are exactly what a PIL/ffmpeg-backed extractor would
-    use — swapping the decoder is a one-line change on a real
-    cluster."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in PIXEL_STATS_SCHEMA.fields}
-            for row in pdf.itertuples(index=False):
-                px = png_decode_pixels(getattr(row, bytes_col))
-                out["doc_id"].append(str(getattr(row, id_col)))
-                out["height"].append(int(px.shape[0]))
-                out["width"].append(int(px.shape[1]))
-                out["mean_px"].append(round(float(px.mean()), 6))
-                out["px_sum"].append(int(px.astype("int64").sum()))
-            if out["doc_id"]:
-                yield pd.DataFrame(out)
-
-    return df.mapInPandas(fn, schema=PIXEL_STATS_SCHEMA)
+    png_decode_pixels → per-image mean (rounded 6 dp, the oracle
+    contract).  The batch shape, schema and partitioning are exactly
+    what a PIL/ffmpeg-backed extractor would use — swapping the decoder
+    is a one-line change on a real cluster."""
+    def stats(b):
+        px = png_decode_pixels(b)
+        return [(int(px.shape[1]), int(px.shape[0]),
+                 round(float(px.mean()), 6), int(px.astype("int64").sum()))]
+    return _decode_head(df, PIXEL_STATS_SCHEMA, bytes_col, id_col, stats)
 
 
 # ---------------------------------------------------------------------------
@@ -613,59 +613,32 @@ def synth_wav_column(docs: DataFrame, id_col: str = "doc_id",
     sample[i] = ((i * (doc_id % 97 + 3)) % 2001) - 1000 — integer
     arithmetic a SQL oracle can replay exactly.  Output: (doc_id string,
     media_bytes binary)."""
-    from pyspark.sql.types import BinaryType
-
-    out_schema = StructType([
-        StructField("doc_id", StringType()),
-        StructField("media_bytes", BinaryType()),
-    ])
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        idx = np.arange(n_samples, dtype=np.int64)
-        for pdf in batches:
-            ids, blobs = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                smp = ((idx * (did % 97 + 3)) % 2001 - 1000).astype(np.int16)
-                ids.append(str(did))
-                blobs.append(wav_encode(smp, sample_rate=sample_rate))
-            if ids:
-                yield pd.DataFrame({"doc_id": ids, "media_bytes": blobs})
-
-    return docs.select(id_col).mapInPandas(fn, schema=out_schema)
+    import numpy as np
+    idx = np.arange(n_samples, dtype=np.int64)
+    return _synth_column(docs, id_col, lambda did: wav_encode(
+        ((idx * (did % 97 + 3)) % 2001 - 1000).astype(np.int16),
+        sample_rate=sample_rate))
 
 
 def media_audio_stats(df: DataFrame, bytes_col: str = "media_bytes",
                       id_col: str = "doc_id") -> DataFrame:
     """REAL audio feature extraction over a binary WAV column:
-    Arrow-batched mapInPandas → wav_decode → per-clip duration, RMS
-    (6 dp) and zero-crossing count (sign flips between consecutive
-    samples, zeros carrying the previous sign — the SQL-replayable
-    convention)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    wav_decode → per-clip duration, RMS (6 dp) and zero-crossing count
+    (sign flips between consecutive samples, zeros carrying the
+    previous sign — the SQL-replayable convention)."""
+    def stats(b):
         import numpy as np
-        for pdf in batches:
-            out = {f.name: [] for f in AUDIO_STATS_SCHEMA.fields}
-            for row in pdf.itertuples(index=False):
-                smp, rate = wav_decode(getattr(row, bytes_col))
-                mono = smp[:, 0].astype(np.float64)
-                n = mono.shape[0]
-                sgn = np.where(mono > 0, 1, np.where(mono < 0, -1, 0))
-                for k in range(1, len(sgn)):      # zeros inherit prior sign
-                    if sgn[k] == 0:
-                        sgn[k] = sgn[k - 1]
-                zc = int(np.sum(sgn[1:] * sgn[:-1] < 0))
-                out["doc_id"].append(str(getattr(row, id_col)))
-                out["sample_rate"].append(int(rate))
-                out["n_samples"].append(n)
-                out["duration_ms"].append(int(n * 1000 // rate))
-                out["rms"].append(round(float(np.sqrt((mono ** 2).mean())), 6))
-                out["zero_crossings"].append(zc)
-            if out["doc_id"]:
-                yield pd.DataFrame(out)
-
-    return df.mapInPandas(fn, schema=AUDIO_STATS_SCHEMA)
+        smp, rate = wav_decode(b)
+        mono = smp[:, 0].astype(np.float64)
+        n = mono.shape[0]
+        sgn = np.where(mono > 0, 1, np.where(mono < 0, -1, 0))
+        for k in range(1, len(sgn)):      # zeros inherit prior sign
+            if sgn[k] == 0:
+                sgn[k] = sgn[k - 1]
+        zc = int(np.sum(sgn[1:] * sgn[:-1] < 0))
+        return [(int(rate), n, int(n * 1000 // rate),
+                 round(float(np.sqrt((mono ** 2).mean())), 6), zc)]
+    return _decode_head(df, AUDIO_STATS_SCHEMA, bytes_col, id_col, stats)
 
 
 # ---------------------------------------------------------------------------
@@ -933,33 +906,17 @@ def synth_gif_column(docs: DataFrame, id_col: str = "doc_id",
     """Deterministic animated-GIF fixture: doc_id % 3 + 1 frames on a
     4-shade gray palette, pixel index (i + frame + doc_id) % 4, frame f
     delayed (f+1)*100 ms — every value a SQL oracle can replay."""
-    from pyspark.sql.types import BinaryType
-
-    out_schema = StructType([
-        StructField("doc_id", StringType()),
-        StructField("media_bytes", BinaryType()),
-    ])
+    import numpy as np
     pal = [(0, 0, 0), (85, 85, 85), (170, 170, 170), (255, 255, 255)]
+    base = np.arange(height * width, dtype=np.int64)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        base = np.arange(height * width, dtype=np.int64)
-        for pdf in batches:
-            ids, blobs = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                n_frames = did % 3 + 1
-                frames = [((base + f + did) % 4)
-                          .reshape(height, width).astype(np.uint8)
-                          for f in range(n_frames)]
-                ids.append(str(did))
-                blobs.append(gif_encode(
-                    frames, pal,
-                    delays_ms=[(f + 1) * 100 for f in range(n_frames)]))
-            if ids:
-                yield pd.DataFrame({"doc_id": ids, "media_bytes": blobs})
-
-    return docs.select(id_col).mapInPandas(fn, schema=out_schema)
+    def encode(did):
+        n_frames = did % 3 + 1
+        frames = [((base + f + did) % 4).reshape(height, width)
+                  .astype(np.uint8) for f in range(n_frames)]
+        return gif_encode(frames, pal, delays_ms=[(f + 1) * 100
+                                                  for f in range(n_frames)])
+    return _synth_column(docs, id_col, encode)
 
 
 def media_gif_frames(df: DataFrame, bytes_col: str = "media_bytes",
@@ -968,25 +925,14 @@ def media_gif_frames(df: DataFrame, bytes_col: str = "media_bytes",
     output row per decoded frame with its timeline position (cumulative
     prior delays) and mean pixel value — the real-decoder replacement
     for the fake_duration frame_sample plumbing."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in GIF_FRAME_SCHEMA.fields}
-            for row in pdf.itertuples(index=False):
-                ts = 0
-                for fr in gif_decode_frames(getattr(row, bytes_col)):
-                    px = fr["pixels"]
-                    out["doc_id"].append(str(getattr(row, id_col)))
-                    out["frame_idx"].append(fr["frame_idx"])
-                    out["ts_ms"].append(ts)
-                    out["delay_ms"].append(fr["delay_ms"])
-                    out["height"].append(int(px.shape[0]))
-                    out["width"].append(int(px.shape[1]))
-                    out["mean_px"].append(round(float(px.mean()), 6))
-                    ts += fr["delay_ms"]
-            if out["doc_id"]:
-                yield pd.DataFrame(out)
-
-    return df.mapInPandas(fn, schema=GIF_FRAME_SCHEMA)
+    def stats(b):
+        ts = 0
+        for fr in gif_decode_frames(b):
+            px = fr["pixels"]
+            yield (fr["frame_idx"], ts, fr["delay_ms"], int(px.shape[1]),
+                   int(px.shape[0]), round(float(px.mean()), 6))
+            ts += fr["delay_ms"]
+    return _decode_head(df, GIF_FRAME_SCHEMA, bytes_col, id_col, stats)
 
 
 # ---------------------------------------------------------------------------
@@ -1093,25 +1039,8 @@ def synth_adpcm_column(docs: DataFrame, id_col: str = "doc_id",
     compressed WAV whose nibble stream is nibble[i] = (i*7 + doc_id)
     % 16 — the integer contract the SQL oracle replays as a recursive
     CTE."""
-    from pyspark.sql.types import BinaryType
-
-    out_schema = StructType([
-        StructField("doc_id", StringType()),
-        StructField("media_bytes", BinaryType()),
-    ])
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                nibs = [(i * 7 + did) % 16 for i in range(n_nibbles)]
-                ids.append(str(did))
-                blobs.append(adpcm_encode_nibbles(nibs))
-            if ids:
-                yield pd.DataFrame({"doc_id": ids, "media_bytes": blobs})
-
-    return docs.select(id_col).mapInPandas(fn, schema=out_schema)
+    return _synth_column(docs, id_col, lambda did: adpcm_encode_nibbles(
+        [(i * 7 + did) % 16 for i in range(n_nibbles)]))
 
 
 def media_adpcm_stats(df: DataFrame, bytes_col: str = "media_bytes",
@@ -1119,19 +1048,9 @@ def media_adpcm_stats(df: DataFrame, bytes_col: str = "media_bytes",
     """Compressed-audio feature extraction: wav_decode routes format
     0x11 through the IMA recurrence; stats are pure integers so the
     certification is exact (no float rounding contract needed)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in ADPCM_STATS_SCHEMA.fields}
-            for row in pdf.itertuples(index=False):
-                smp, rate = wav_decode(getattr(row, bytes_col))
-                mono = smp[:, 0].astype("int64")
-                out["doc_id"].append(str(getattr(row, id_col)))
-                out["sample_rate"].append(int(rate))
-                out["n_samples"].append(int(mono.shape[0]))
-                out["sum_samples"].append(int(mono.sum()))
-                out["min_sample"].append(int(mono.min()))
-                out["max_sample"].append(int(mono.max()))
-            if out["doc_id"]:
-                yield pd.DataFrame(out)
-
-    return df.mapInPandas(fn, schema=ADPCM_STATS_SCHEMA)
+    def stats(b):
+        smp, rate = wav_decode(b)
+        mono = smp[:, 0].astype("int64")
+        return [(int(rate), int(mono.shape[0]), int(mono.sum()),
+                 int(mono.min()), int(mono.max()))]
+    return _decode_head(df, ADPCM_STATS_SCHEMA, bytes_col, id_col, stats)

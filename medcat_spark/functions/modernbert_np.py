@@ -29,7 +29,7 @@ from typing import Dict, List, Optional
 
 import numpy as np
 
-from medcat_spark.functions.bert_np import gelu, softmax
+from medcat_spark.functions.bert_np import _RelCatHead, gelu, softmax
 from medcat_spark.functions.llama_np import rope_tables, rotate_half
 
 
@@ -142,24 +142,11 @@ class ModernBertEncoder:
         return _ln_nobias(x, self.final_norm)
 
 
-class RelCatModernBertModel:
+class RelCatModernBertModel(_RelCatHead):
     """ModernBertModel_RelationExtraction (inherits the base
-    output2logits, models.py:170-225): encoder → concat(first-token
-    state, t1, t2) → fc1/fc2/fc3, where t1/t2 are max-pools over the
-    tokens between each annotation marker pair when
-    ``annotation_schema_tag_ids`` are set (the reference default) and
-    the e1_e2_start marker read-outs otherwise (see module docstring
-    for the pooled-output note)."""
-
-    tag_ids = None
-
-    def __init__(self, encoder: ModernBertEncoder,
-                 fc: Dict[str, np.ndarray], labels: List[str]) -> None:
-        self.encoder = encoder
-        self.fc1_w, self.fc1_b = fc["fc1.weight"], fc["fc1.bias"]
-        self.fc2_w, self.fc2_b = fc["fc2.weight"], fc["fc2.bias"]
-        self.fc3_w, self.fc3_b = fc["fc3.weight"], fc["fc3.bias"]
-        self.labels = labels
+    output2logits, models.py:170-225): the shared pair head over the
+    ModernBERT encoder, led by the first-token state (see module
+    docstring for the pooled-output note)."""
 
     @classmethod
     def from_state_dict(cls, sd: Dict[str, np.ndarray], labels: List[str],
@@ -172,28 +159,9 @@ class RelCatModernBertModel:
               if k.startswith(("fc1.", "fc2.", "fc3."))}
         return cls(enc, fc, labels)
 
-    def logits(self, input_ids: np.ndarray, e1_e2_start: np.ndarray,
-               attention_mask: Optional[np.ndarray] = None) -> np.ndarray:
-        from medcat_spark.functions.bert_np import annotation_tag_pool
+    def _encode(self, input_ids, attention_mask):
         seq = self.encoder.forward(input_ids, attention_mask)
-        tags = getattr(self, "tag_ids", None)
-        if tags and len(tags) >= 4:
-            t1 = annotation_tag_pool(seq, input_ids, tags[0], tags[1])
-            t2 = annotation_tag_pool(seq, input_ids, tags[2], tags[3])
-            x = np.concatenate([seq[:, 0], t1, t2], axis=1)
-        else:
-            B = seq.shape[0]
-            e1 = seq[np.arange(B), np.asarray(e1_e2_start)[:, 0]]
-            e2 = seq[np.arange(B), np.asarray(e1_e2_start)[:, 1]]
-            x = np.concatenate([seq[:, 0], e1, e2], axis=1)
-        x = x @ self.fc1_w.T + self.fc1_b
-        x = x @ self.fc2_w.T + self.fc2_b
-        return x @ self.fc3_w.T + self.fc3_b
-
-    def predict(self, input_ids, e1_e2_start, attention_mask=None):
-        from medcat_spark.functions.bert_np import chunked_pair_predict
-        return chunked_pair_predict(self, input_ids, e1_e2_start,
-                                    attention_mask)
+        return seq, seq[:, 0]
 
 
 def modernbert_fixture_state_dict(vocab_size: int = 64, hidden: int = 8,

@@ -20,7 +20,8 @@ Arrow), and exactly expressible as the DuckDB oracle.
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Tuple
+from functools import lru_cache
+from typing import Dict, List, Tuple
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -165,13 +166,8 @@ _OTHER = ("the fast key order table part small batch dup group query row "
           "data slow customer line value agg column big a").split()
 NER_LABELS = ["O", "SYS", "OP"]
 
-_FIXTURE_CACHE: Optional[TokenTagModel] = None
-
-
+@lru_cache(maxsize=None)
 def ner_fixture_model() -> TokenTagModel:
-    global _FIXTURE_CACHE
-    if _FIXTURE_CACHE is not None:
-        return _FIXTURE_CACHE
     import random
     rng = random.Random(20260818)
     vocab = sorted(_SYS | _OP | set(_OTHER))
@@ -183,8 +179,7 @@ def ner_fixture_model() -> TokenTagModel:
             toks.append(w)
             labs.append("SYS" if w in _SYS else "OP" if w in _OP else "O")
         sents.append((toks, labs))
-    _FIXTURE_CACHE = train_token_tagger(sents, NER_LABELS)
-    return _FIXTURE_CACHE
+    return train_token_tagger(sents, NER_LABELS)
 
 
 # ---------------------------------------------------------------------------
@@ -354,15 +349,9 @@ def bracket_task_sentences(n: int = 200, length: int = 20, seed: int = 9):
     return out
 
 
-_RNN_TAGGER_CACHE: Optional[RnnTokenTagger] = None
-
-
+@lru_cache(maxsize=None)
 def rnn_tagger_fixture_model() -> RnnTokenTagger:
-    global _RNN_TAGGER_CACHE
-    if _RNN_TAGGER_CACHE is None:
-        _RNN_TAGGER_CACHE = train_rnn_tagger(bracket_task_sentences(),
-                                             ["O", "I"])
-    return _RNN_TAGGER_CACHE
+    return train_rnn_tagger(bracket_task_sentences(), ["O", "I"])
 
 
 def tag_spans_rnn(docs: DataFrame, bc) -> DataFrame:

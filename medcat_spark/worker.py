@@ -18,8 +18,9 @@ every call rather than once per process because a lazy import inside a
 task (a head module loaded from ``medcat_spark.zip``) creates importers
 again.
 
-The hook lives at the kernel entries (``pipeline._get_model`` and
-``scorer.kernel``) rather than in ``spark.python.daemon.module``:
+The hook lives at the three kernel entries (``pipeline._get_model``,
+``scorer.kernel`` and ``media._map_rows``) rather than in
+``spark.python.daemon.module``:
 ``pyspark/daemon.py`` honours only ``pyspark*`` worker modules, and a
 custom daemon module must be importable before any task adds its
 ``--py-files``.

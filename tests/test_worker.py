@@ -13,6 +13,8 @@ import zipfile
 import zipimport
 
 from medcat_spark import worker
+from medcat_spark.functions.media import (media_adpcm_stats,
+                                          synth_adpcm_column)
 
 
 def test_init_drops_zip_importers_and_zip_imports_still_work(tmp_path):
@@ -42,10 +44,13 @@ def test_init_drops_zip_importers_and_zip_imports_still_work(tmp_path):
         sys.modules.pop("floor_probe_mod", None)
 
 
-def test_reused_workers_start_tasks_without_zip_importers(spark):
+def test_reused_workers_start_tasks_without_zip_importers(spark, tmp_path):
     """Two waves of ``4 x cores`` tasks: on every worker process that
     already ran a task, the next task starts with no zip importer, its
-    ``invalidate_caches()`` is fast and pyarrow is pinned."""
+    ``invalidate_caches()`` is fast and pyarrow is pinned.  The media
+    operator is a kernel entry too: after a wave that puts a zip
+    importer back on every worker, a media operator wave leaves each of
+    those workers starting its next task without one."""
     cores = spark.sparkContext.defaultParallelism
     n = 4 * cores
 
@@ -76,3 +81,36 @@ def test_reused_workers_start_tasks_without_zip_importers(spark):
         assert r.zips == 0, r
         assert r.ms < 20, r
         assert (r.cpu, r.io) == (1, 1), r
+
+    zpath = str(tmp_path / "dirty.zip")
+    with zipfile.ZipFile(zpath, "w") as z:
+        z.writestr("dirty_mod.py", "")
+
+    def dirty(batches):
+        import pyarrow as pa
+        sys.path_importer_cache[zpath] = zipimport.zipimporter(zpath)
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"pid": [os.getpid()]})
+
+    def peek(batches):
+        import pyarrow as pa
+        zips = sum(isinstance(f, zipimport.zipimporter)
+                   for f in list(sys.path_importer_cache.values()))
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"pid": [os.getpid()],
+                                          "zips": [zips]})
+
+    dirtied = {r.pid for r in spark.range(n).repartition(n)
+               .mapInArrow(dirty, "pid long").collect()}
+    # Spark hands idle workers out first-in first-out, so 2 x n media
+    # kernel runs (synth + decode per task) reach every dirtied worker
+    ids = spark.range(n).repartition(n).withColumnRenamed("id", "doc_id")
+    assert media_adpcm_stats(synth_adpcm_column(ids)).count() == n
+    third = [r for r in spark.range(n).repartition(n)
+             .mapInArrow(peek, "pid long, zips long").collect()
+             if r.pid in dirtied]
+    assert third, "no dirtied Python worker was reused"
+    for r in third:
+        assert r.zips == 0, r

@@ -181,7 +181,7 @@ def main():
     # noisy-OR belief (single map-side-combinable agg downstream of the
     # disamb kernel), N-Triples serialize (pure codegen projection) and
     # parse-back (regexp over a text scan), media codecs (single
-    # MapInPandas each — synthesize + decode, no extra shuffle)
+    # MapInArrow each — synthesize + decode, no extra shuffle)
     from medcat_spark.functions.graph import (label_propagation,
                                               link_prediction, knn_graph,
                                               triple_belief)
