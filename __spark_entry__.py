@@ -772,8 +772,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["meta_negation"] = _meta
 
     # --- MetaCAT analogue with a TRAINED (fixture-trained, deterministic)
-    #     linear token-window classifier run via mapInPandas with
-    #     per-executor model cache (reference meta_cat.py:447-517,636-651
+    #     linear token-window classifier run via the scorer's mapInArrow
+    #     with the broadcast model (reference meta_cat.py:447-517,636-651
     #     window semantics; torch stack stood in by the numpy linear head —
     #     see medcat_spark/functions/meta_model.py)
     def _meta_model(s, d):

@@ -5,7 +5,7 @@ medcat/cdb.py:249-386 (_add_concept) + medcat/preprocessing/cleaners.py
 (prepare_name).  The reference mutates in-memory dicts row-by-row; here
 the same contents are produced by declarative DataFrame aggregations so
 Catalyst handles the shuffle plan, and only the name-preparation text
-munging runs in an Arrow-batched pandas UDF.
+munging runs in the engine's one Arrow-batched worker kernel.
 
 Order-dependent reference semantics (first-status-wins with P-overwrite,
 candidate-list insertion order, first-P preferred name) are expressed as
@@ -23,15 +23,15 @@ Outputs (the model-pack tables, SURVEY §1.2 Spark mapping):
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, Optional
+from typing import Dict, Optional
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, BooleanType, FloatType, IntegerType,
                                LongType, StringType, StructField, StructType)
 
+from medcat_spark import worker
 from medcat_spark.config import EngineConfig
 from medcat_spark.core.model import CdbModel, VocabModel, prepare_name, strip_parenthesis
 
@@ -52,25 +52,25 @@ _PREPARED_SCHEMA = StructType([
 
 
 def _prepare_rows(cfg: EngineConfig):
-    """Factory for the mapInPandas fn: one input concept row → one output
+    """The ``worker.kernel`` fn: one input concept row → one output
     row per prepared name version (cdb_maker.py:180-195 inner loop)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def body(batches):
+        for rows in batches:
             out = {k.name: [] for k in _PREPARED_SCHEMA.fields}
-            for row in pdf.itertuples(index=False):
-                cui = str(row.cui).strip().upper()
-                status = str(getattr(row, "name_status", "") or "").strip().upper()
+            for row in rows:
+                cui = str(row["cui"]).strip().upper()
+                status = str(row.get("name_status") or "").strip().upper()
                 if status not in {"A", "P", "N"}:
                     status = "A"
                 type_ids = [t.strip() for t in
-                            str(getattr(row, "type_ids", "") or "").upper()
+                            str(row.get("type_ids") or "").upper()
                             .split(cfg.multi_separator) if t.strip()]
                 onts = [o.strip() for o in
-                        str(getattr(row, "ontologies", "") or "").upper()
+                        str(row.get("ontologies") or "").upper()
                         .split(cfg.multi_separator) if o.strip()]
-                desc = str(getattr(row, "description", "") or "").strip()
+                desc = str(row.get("description") or "").strip()
                 names: Dict[str, dict] = {}
-                for raw in str(row.name).split(cfg.multi_separator):
+                for raw in str(row["name"]).split(cfg.multi_separator):
                     raw = raw.strip()
                     if not raw:
                         continue
@@ -83,7 +83,7 @@ def _prepare_rows(cfg: EngineConfig):
                 # LAST name version inserted for this row (dict iteration)
                 pref = list(names.values())[-1]["raw_name"] if names else None
                 for idx, (name, info) in enumerate(names.items()):
-                    out["row_id"].append(int(row.row_id))
+                    out["row_id"].append(int(row["row_id"]))
                     out["cui"].append(cui)
                     out["status"].append(status)
                     out["type_ids"].append(type_ids)
@@ -95,8 +95,8 @@ def _prepare_rows(cfg: EngineConfig):
                     out["snames"].append(sorted(info["snames"]))
                     out["is_upper"].append(info["is_upper"])
                     out["name_idx"].append(idx)
-            yield pd.DataFrame(out)
-    return fn
+            yield out
+    return worker.kernel(_PREPARED_SCHEMA, body)
 
 
 def prepared_names(concepts_raw: DataFrame,
@@ -116,7 +116,7 @@ def prepared_names(concepts_raw: DataFrame,
             df = df.withColumn(c, F.lit(d))
     if "row_id" not in df.columns:
         df = df.withColumn("row_id", F.monotonically_increasing_id())
-    return df.mapInPandas(_prepare_rows(cfg), schema=_PREPARED_SCHEMA)
+    return df.mapInArrow(_prepare_rows(cfg), schema=_PREPARED_SCHEMA)
 
 
 def build_cdb_tables(concepts_raw: DataFrame,

@@ -26,7 +26,7 @@ annotation-tag max-pools, fc1-3 — is certified against numerical
 differentiation in tests/test_bert_train.py.
 
 Scale posture: gold relation annotations are driver-scale (same
-argument as lstm_train); window prep distributes via mapInPandas, the
+argument as lstm_train); window prep distributes via mapInArrow, the
 optimizer loop runs on the driver, and the trained component round-
 trips through write_reference_rel_component into the Spark scoring
 plan.
@@ -34,13 +34,13 @@ plan.
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, List, Optional, Sequence, Tuple
+from typing import Dict, List, Optional, Sequence, Tuple
 
 import math
 
 import numpy as np
-import pandas as pd
 
+from medcat_spark import worker
 from medcat_spark.functions.bert_np import (BertEncoder, BertLayer,
                                             RelCatBertModel, _erf, gelu)
 from medcat_spark.functions.lstm_train import (_clip_total_norm, _f1_report,
@@ -480,19 +480,20 @@ def mct_relation_samples(spark, mct_path: str, model: RelCatBertModel,
          getattr(model, "cntx_left", 15), getattr(model, "cntx_right", 15),
          getattr(model, "max_seq_length", 512)))
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def build(batches):
         import json as _json
         from medcat_spark.functions.scorer import TokenIndex, special_framing
         tok, tag_ids, cntx_l, cntx_r, max_len = bc.value
         cls_id, sep_id = special_framing(tok)
-        for pdf in batches:
+        for rows in batches:
             out = {"doc_id": [], "ids": [], "p1": [], "p2": [],
                    "label": []}
-            for row in pdf.itertuples(index=False):
-                doc = TokenIndex(str(row.text or ""), tok)
+            for row in rows:
+                doc = TokenIndex(str(row["text"] or ""), tok)
                 if not doc.toks:
                     continue
-                rels = _json.loads(row.rels_json) if row.rels_json else []
+                rels = (_json.loads(row["rels_json"]) if row["rels_json"]
+                        else [])
                 pairs = []
                 covered = set()
                 for rel in rels or []:
@@ -504,8 +505,8 @@ def mct_relation_samples(spark, mct_path: str, model: RelCatBertModel,
                         a, b = b, a
                     pairs.append((a, b, str(rel["relation"])))
                     covered.add((a[0], b[0]))
-                if other_sample_per_doc > 0 and row.anns_json:
-                    anns = [x for x in _json.loads(row.anns_json)
+                if other_sample_per_doc > 0 and row["anns_json"]:
+                    anns = [x for x in _json.loads(row["anns_json"])
                             if x.get("validated", True)]
                     anns.sort(key=lambda x: int(x["start"]))
                     n_other = 0
@@ -531,16 +532,15 @@ def mct_relation_samples(spark, mct_path: str, model: RelCatBertModel,
                     if res is None:
                         continue
                     seq, p1, p2 = res
-                    out["doc_id"].append(row.doc_id)
+                    out["doc_id"].append(row["doc_id"])
                     out["ids"].append(seq)
                     out["p1"].append(p1)
                     out["p2"].append(p2)
                     out["label"].append(label)
-            yield pd.DataFrame(out)
+            yield out
 
-    return doc.mapInPandas(
-        build, "doc_id string, ids array<int>, p1 int, p2 int, "
-               "label string")
+    schema = "doc_id string, ids array<int>, p1 int, p2 int, label string"
+    return doc.mapInArrow(worker.kernel(schema, build), schema=schema)
 
 
 def collect_relation_samples(df, labels: Optional[List[str]] = None

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from medcat_spark import worker
 from medcat_spark.core.bbpe import (BbpeTokenizer, _B2U, learn_merges)
 
 # core.bbpe._PRETOK re-spelled for Java's regex engine: (?U) lifts
@@ -70,21 +71,19 @@ def train_bbpe_distributed(docs: DataFrame, vocab_size: int = 500,
 def bpe_token_counts(docs: DataFrame, tokenizer: BbpeTokenizer,
                      text_col: str = "text") -> DataFrame:
     """(doc_id, n_bpe_tokens, ids_sum) — encode with a (typically
-    corpus-trained) tokenizer via ONE Arrow-batched ``mapInPandas``
-    with the tokenizer broadcast; ids_sum makes the row sensitive to
-    the actual token ids, not just their count."""
-    import pandas as pd
-
+    corpus-trained) tokenizer via ONE Arrow-batched ``worker.kernel``
+    mapInArrow with the tokenizer broadcast; ids_sum makes the row
+    sensitive to the actual token ids, not just their count."""
     bc = docs.sparkSession.sparkContext.broadcast(tokenizer)
 
-    def fn(it):
+    def body(batches):
         tok = bc.value
-        for pdf in it:
-            ids = pdf[text_col].map(tok.encode)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_bpe_tokens": ids.map(len),
-                "ids_sum": ids.map(sum)})
+        for rows in batches:
+            ids = [tok.encode(r[text_col]) for r in rows]
+            yield {"doc_id": [r["doc_id"] for r in rows],
+                   "n_bpe_tokens": [len(x) for x in ids],
+                   "ids_sum": [sum(x) for x in ids]}
 
-    return docs.select("doc_id", text_col).mapInPandas(
-        fn, "doc_id long, n_bpe_tokens long, ids_sum long")
+    schema = "doc_id long, n_bpe_tokens long, ids_sum long"
+    return docs.select("doc_id", text_col).mapInArrow(
+        worker.kernel(schema, body), schema=schema)

@@ -23,6 +23,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from medcat_spark import worker
+
 _BIG = 1 << 30  # substring 'rest of string' length
 
 
@@ -76,38 +78,36 @@ def match_rules(docs: DataFrame, rules, name_map: Optional[DataFrame] = None,
     every doc → (doc_id, start, end, cui, source_value, acc=1.0) — the
     same relation the model tagger emits, so the two sources merge.
 
-    Patterns are compiled once per executor and run inside one
-    Arrow-batched ``mapInPandas`` (positions of ALL matches are not
-    expressible with built-in regexp functions); rule lists are
-    PHI-catalog-sized (dozens), so the per-batch loop is rules x docs.
+    Patterns are compiled once per task and run inside one
+    ``worker.kernel`` (positions of ALL matches are not expressible
+    with built-in regexp functions); rule lists are PHI-catalog-sized
+    (dozens), so the per-batch loop is rules x docs.
     """
-    import pandas as pd
-
     rule_list = [(str(p), str(c)) for p, c in rules]
 
-    def fn(batches):
+    def body(batches):
         import re
         compiled = [(re.compile(p, flags=re.M), c) for p, c in rule_list]
-        for pdf in batches:
+        for rows in batches:
             out = {"doc_id": [], "start": [], "end": [], "cui": [],
                    "source_value": [], "acc": []}
-            for row in pdf.itertuples(index=False):
-                text = row.text or ""
+            for row in rows:
+                text = row["text"] or ""
                 for rx, cui in compiled:
                     for m in rx.finditer(text):
-                        out["doc_id"].append(str(row.doc_id))
+                        out["doc_id"].append(str(row["doc_id"]))
                         out["start"].append(m.start())
                         out["end"].append(m.end())
                         out["cui"].append(cui)
                         out["source_value"].append(m.group())
                         out["acc"].append(1.0)
-            yield pd.DataFrame(out)
+            yield out
 
     src = docs.select(F.col("doc_id").cast("string").alias("doc_id"),
                       F.col(text_col).alias("text"))
-    matched = src.mapInPandas(
-        fn, schema="doc_id string, start int, end int, cui string, "
-                   "source_value string, acc double")
+    schema = ("doc_id string, start int, end int, cui string, "
+              "source_value string, acc double")
+    matched = src.mapInArrow(worker.kernel(schema, body), schema=schema)
     if name_map is not None:
         matched = (matched.join(F.broadcast(name_map), "cui", "left")
                    .withColumnRenamed("label", "pretty_name"))

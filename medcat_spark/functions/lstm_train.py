@@ -38,16 +38,16 @@ sample set — the reference's own prep comment (data_utils.py:19-20,
 "would be strange to have more than 1M manually annotated documents")
 bounds gold MCT data to driver scale.  The expensive step, tokenizing
 documents and building windows, IS distributed (`mct_meta_samples`
-runs it as a mapInPandas over the grouped export).
+runs it as one mapInArrow over the grouped export).
 """
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, List, Optional, Sequence, Tuple
+from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
-import pandas as pd
 
+from medcat_spark import worker
 from medcat_spark.functions.lstm_meta import LstmCell, LstmMetaModel
 from medcat_spark.functions.scorer import pad_ids
 
@@ -103,9 +103,9 @@ def mct_meta_samples(spark, mct_path: str, category: str, tokenizer,
 
     The tokenize+window step is the per-document heavy part, so it runs
     distributed: documents grouped with their annotations, tokenizer
-    broadcast once, mapInPandas batches.  meta_anns are read as a
-    map<category, struct> so arbitrary task names work without schema
-    coupling.
+    broadcast once, one ``worker.kernel`` mapInArrow.  meta_anns are
+    read as a map<category, struct> so arbitrary task names work
+    without schema coupling.
     """
     from pyspark.sql import functions as F
 
@@ -150,30 +150,30 @@ def mct_meta_samples(spark, mct_path: str, category: str, tokenizer,
                     .alias("anns")))
     bc_tok = spark.sparkContext.broadcast(tokenizer)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def build(batches):
         tok = bc_tok.value
         rc_ids = tok.encode(replace_center) if replace_center else None
-        for pdf in batches:
+        for rows in batches:
             out = {"doc_id": [], "ids": [], "c_first": [], "c_last": [],
                    "label": []}
-            for row in pdf.itertuples(index=False):
-                ids, offsets = tok.encode_with_offsets(str(row.text))
-                for a in row.anns:
+            for row in rows:
+                ids, offsets = tok.encode_with_offsets(str(row["text"]))
+                for a in row["anns"]:
                     w = prepare_window(ids, offsets, int(a["start"]),
                                        int(a["end"]), cntx_left, cntx_right,
                                        replace_center_ids=rc_ids)
                     if w is None:
                         continue
-                    out["doc_id"].append(row.doc_id)
+                    out["doc_id"].append(row["doc_id"])
                     out["ids"].append(list(w[0]))
                     out["c_first"].append(w[1][0])
                     out["c_last"].append(w[1][1])
                     out["label"].append(a["label"])
-            yield pd.DataFrame(out)
+            yield out
 
-    return grouped.mapInPandas(
-        build, "doc_id string, ids array<int>, c_first int, c_last int, "
-               "label string")
+    schema = ("doc_id string, ids array<int>, c_first int, c_last int, "
+              "label string")
+    return grouped.mapInArrow(worker.kernel(schema, build), schema=schema)
 
 
 def collect_samples(df, label2id: Optional[Dict[str, int]] = None

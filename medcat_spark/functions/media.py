@@ -2,11 +2,12 @@
 typed metadata, decoded/feature-extracted by one Arrow-batched operator.
 
 Every public operator here and in functions/jpeg.py is a row function
-run by the one ``mapInArrow`` kernel (`_map_rows`): ``worker.init()`` at
-entry, one ``to_pylist`` per Arrow batch, one ``RecordBatch`` out.  The
-decode heads (`media_pixel_stats`, `media_audio_stats`,
-`media_adpcm_stats`, `media_gif_frames`, `media_jpeg_stats`) share one
-NULL rule: a row whose bytes are NULL yields no output row.
+run by the one media operator (`_map_rows`, a ``worker.kernel`` body):
+one ``to_pylist`` per Arrow batch, one ``RecordBatch`` out.  The decode
+heads (`media_pixel_stats`, `media_audio_stats`, `media_adpcm_stats`,
+`media_gif_frames`, `media_jpeg_stats`) share one NULL rule: a row
+whose bytes (spans, for `media_features`/`frame_sample`) are NULL
+yields no output row.
 `media_features_from_bytes` instead keeps it as a ``format='unknown'``
 row, like any other undecodable member.
 
@@ -39,21 +40,14 @@ from medcat_spark import worker
 
 def _map_rows(df: DataFrame, schema: StructType, rec) -> DataFrame:
     """The one media operator: ``rec(row dict)`` → iterable of output
-    rows (tuples in ``schema`` order), run as one ``mapInArrow`` that
-    decodes each Arrow batch once and emits one batch per input batch
-    (batches with no output rows yield nothing)."""
-    def fn(batches):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-        worker.init()
-        arrow_schema = to_arrow_schema(schema)
-        for rb in batches:
-            rows = [out for r in rb.to_pylist() for out in rec(r)]
-            if rows:
-                yield pa.RecordBatch.from_pydict(
-                    dict(zip(arrow_schema.names, map(list, zip(*rows)))),
-                    schema=arrow_schema)
-    return df.mapInArrow(fn, schema=schema)
+    rows (tuples in ``schema`` order), transposed to one output batch
+    per input batch and run by ``worker.kernel`` (batches with no
+    output rows yield nothing)."""
+    def body(batches):
+        for rows in batches:
+            out = [o for r in rows for o in rec(r)]
+            yield dict(zip(schema.names, map(list, zip(*out))))
+    return df.mapInArrow(worker.kernel(schema, body), schema=schema)
 
 
 # (doc_id, media_bytes): the output of every synth_*_column generator
@@ -86,8 +80,8 @@ def _decode_head(df: DataFrame, schema: StructType, bytes_col: str,
 
 
 def _media_spans(spans):
-    """(span_idx, span) for every non-text span with a media_ref."""
-    return ((i, s) for i, s in enumerate(spans)
+    """(span_idx, span) per non-text span with a media_ref; NULL: none."""
+    return ((i, s) for i, s in enumerate(spans or ())
             if s["kind"] != "text" and s.get("media_ref"))
 
 
@@ -208,7 +202,8 @@ def media_features(docs_with_spans: DataFrame) -> DataFrame:
     """Extract per-media-span features from interleaved documents.
 
     Input: (doc_id, spans array<struct<kind,text,media_ref,offset>>).
-    One output row per media span; Arrow-batched, model-free.
+    One output row per media span; Arrow-batched, model-free.  A row
+    whose ``spans`` is NULL gives no output rows.
     """
     def rec(r):
         for i, s in _media_spans(r["spans"]):
@@ -262,7 +257,8 @@ def frame_sample(docs_with_spans: DataFrame, interval_ms: int = 1000,
     """Frame-sampling plumbing for video/audio spans: one row per
     sampled timestamp, Arrow-batched; frame decode itself is behind
     real_decode.  Mirrors ffmpeg -vf fps sampling: frames at
-    0, interval, 2*interval, ... capped at max_frames.
+    0, interval, 2*interval, ... capped at max_frames.  A row whose
+    ``spans`` is NULL gives no output rows.
     """
     def rec(r):
         for i, s in _media_spans(r["spans"]):

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from medcat_spark import worker
+
 WINDOW = 3  # context tokens each side
 
 
@@ -356,24 +358,22 @@ def rnn_tagger_fixture_model() -> RnnTokenTagger:
 
 def tag_spans_rnn(docs: DataFrame, bc) -> DataFrame:
     """Spark wrapper: whitespace-tokenize each doc, per-timestep BiRNN
-    labels via one Arrow-batched mapInPandas, spans assembled from
-    consecutive non-'O' tokens — (doc_id, start, end, label), the same
-    relation tag_spans emits."""
-    import pandas as pd
-
-    def fn(batches):
+    labels via one Arrow-batched ``worker.kernel`` mapInArrow, spans
+    assembled from consecutive non-'O' tokens — (doc_id, start, end,
+    label), the same relation tag_spans emits."""
+    def body(batches):
         model: RnnTokenTagger = bc.value
-        for pdf in batches:
+        for rows in batches:
             out = {"doc_id": [], "start": [], "end": [], "label": []}
             seqs, metas = [], []
-            for row in pdf.itertuples(index=False):
-                toks = (row.text or "").split(" ")
+            for row in rows:
+                toks = (row["text"] or "").split(" ")
                 pos, starts = 0, []
                 for t in toks:
                     starts.append(pos)
                     pos += len(t) + 1
                 seqs.append(toks)
-                metas.append((str(row.doc_id), toks, starts))
+                metas.append((str(row["doc_id"]), toks, starts))
             for (doc_id, toks, starts), labels in zip(
                     metas, model.tag_batch(seqs)):
                 i = 0
@@ -389,9 +389,9 @@ def tag_spans_rnn(docs: DataFrame, bc) -> DataFrame:
                     out["end"].append(starts[j] + len(toks[j]))
                     out["label"].append(labels[i])
                     i = j + 1
-            yield pd.DataFrame(out)
+            yield out
 
     src = docs.select(F.col("doc_id").cast("string").alias("doc_id"),
                       "text")
-    return src.mapInPandas(
-        fn, schema="doc_id string, start int, end int, label string")
+    schema = "doc_id string, start int, end int, label string"
+    return src.mapInArrow(worker.kernel(schema, body), schema=schema)

@@ -8,11 +8,11 @@ Only the model differs, so this module owns everything else:
 
 * :func:`docs_with_ents` — one (doc_id, ents, text) row per document,
   partitioned by compute rather than bytes;
-* :func:`kernel` — the one ``mapInArrow`` function: decode each Arrow
-  batch once, index each document's tokens once (a whitespace split, or
-  ``model.tokenizer.encode_with_offsets``), cut windows or pairs, call
-  the head's batched forward once per Arrow batch, and assemble one
-  output batch;
+* :func:`kernel` — the one ``mapInArrow`` function, run by
+  ``worker.kernel``: index each document's tokens once (a whitespace
+  split, or ``model.tokenizer.encode_with_offsets``), cut windows or
+  pairs, call the head's batched forward once per Arrow batch, and
+  yield one output batch;
 * :func:`decide` — argmax label and 4-dp softmax confidence, shared by
   every head's batched predict.
 
@@ -387,24 +387,20 @@ HEADS = {
 
 
 def kernel(bc, head: str, meta_name: Optional[str] = None):
-    """The ``mapInArrow`` function scoring (doc_id, ents, text) batches
-    with the broadcast model through ``HEADS[head]``: one row per
-    scored entity (META_SCHEMA, tagged ``meta_name``) or entity pair
+    """The ``worker.kernel`` function scoring (doc_id, ents, text)
+    batches with the broadcast model through ``HEADS[head]``: one row
+    per scored entity (META_SCHEMA, tagged ``meta_name``) or entity pair
     (REL_SCHEMA); batches with nothing to score yield nothing."""
-    def fn(batches):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-        worker.init()
+    schema = REL_SCHEMA if HEADS[head].pairs else META_SCHEMA
+
+    def body(batches):
         h = HEADS[head](bc.value)
-        schema = to_arrow_schema(REL_SCHEMA if h.pairs else META_SCHEMA)
-        for rb in batches:
+        for rows in batches:
             keys, xs = [], []
-            for doc_id, ents, text in zip(
-                    *(rb.column(c).to_pylist()
-                      for c in ("doc_id", "ents", "text"))):
-                doc = TokenIndex(text or "", h.tokenizer)
-                for key, x in h.cut(doc, ents):
-                    keys.append((str(doc_id),) + key)
+            for r in rows:
+                doc = TokenIndex(r["text"] or "", h.tokenizer)
+                for key, x in h.cut(doc, r["ents"]):
+                    keys.append((str(r["doc_id"]),) + key)
                     xs.append(x)
             if not keys:
                 continue
@@ -413,9 +409,8 @@ def kernel(bc, head: str, meta_name: Optional[str] = None):
                 cols.append([meta_name] * len(keys))
             preds = h.forward(xs)
             cols += [[v for v, _ in preds], [c for _, c in preds]]
-            yield pa.RecordBatch.from_pydict(dict(zip(schema.names, cols)),
-                                             schema=schema)
-    return fn
+            yield dict(zip(schema.names, cols))
+    return worker.kernel(schema, body)
 
 
 def score(ann: DataFrame, docs: DataFrame, bc, head: str,

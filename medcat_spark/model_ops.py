@@ -10,7 +10,7 @@ count-weighted merge — the basis for the distributed combine).
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
                                StructField, StructType)
 
+from medcat_spark import worker
 from medcat_spark.config import EngineConfig
 from medcat_spark.core.model import CdbModel, VocabModel, unitvec
 
@@ -196,7 +197,7 @@ _SUMS_SCHEMA = StructType([
 
 
 def _context_sums(bc, examples):
-    """The one trainer kernel (mapInArrow): per Arrow batch, run
+    """The one trainer kernel (``worker.kernel``): per Arrow batch, run
     ``examples(row, cm, sc)`` over every decoded row and emit the
     per-(cui, ctx_type) partial sums of the example context vectors —
     positives added, negatives subtracted, in the order the examples
@@ -204,19 +205,14 @@ def _context_sums(bc, examples):
     yields ``(cui, {ctx_type: vec}, positive)``; the model, the
     ContextModel and the spell checker (which owns the token memo) come
     from the executor model cache shared with annotate."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(_SUMS_SCHEMA)
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+    def body(batches):
         from medcat_spark.core.linker import ContextModel
         from medcat_spark.pipeline import _get_model
         cdb, vocab, config, sc = _get_model(bc)
         cm = ContextModel(cdb, vocab, config)
-        for rb in batches:
+        for rows in batches:
             acc: dict = {}
-            for row in rb.to_pylist():
+            for row in rows:
                 for cui, vecs, positive in examples(row, cm, sc):
                     for ct, v in vecs.items():
                         a = acc.get((cui, ct))
@@ -224,14 +220,14 @@ def _context_sums(bc, examples):
                             a = acc[(cui, ct)] = [np.zeros_like(v), 0, 0]
                         a[0] += v if positive else -v
                         a[1 if positive else 2] += 1
-            yield pa.RecordBatch.from_pydict({
+            yield {
                 "cui": [k[0] for k in acc],
                 "ctx_type": [k[1] for k in acc],
                 "vec_sum": [a[0].tolist() for a in acc.values()],
                 "n": [a[1] for a in acc.values()],
                 "n_neg": [a[2] for a in acc.values()],
-            }, schema=arrow_schema)
-    return fn
+            }
+    return worker.kernel(_SUMS_SCHEMA, body)
 
 
 def _span_vectors(row, cm, sc) -> dict:
@@ -723,6 +719,20 @@ def merge_packs(spark: SparkSession, path1: str, path2: str, out: str,
     return manifest
 
 
+def _pca_partials(vecs: DataFrame) -> DataFrame:
+    """(n, sum_x, X^T X) of each Arrow batch of non-NULL ``vec`` rows."""
+    def body(batches):
+        for rows in batches:
+            X = np.stack([r["vec"] for r in rows])
+            yield {"n": [len(X)],
+                   "sum_x": [X.sum(axis=0).tolist()],
+                   "xtx": [(X.T @ X).ravel().tolist()]}
+
+    schema = "n long, sum_x array<double>, xtx array<double>"
+    return (vecs.where(F.col("vec").isNotNull()).select("vec")
+            .mapInArrow(worker.kernel(schema, body), schema=schema))
+
+
 def _pca_matrix_distributed(vecs: DataFrame, target_size: int) -> np.ndarray:
     """PCA transformation matrix (target_size, D) from a DataFrame of
     ``vec: array<double>`` rows — reference calc_matrix
@@ -730,21 +740,7 @@ def _pca_matrix_distributed(vecs: DataFrame, target_size: int) -> np.ndarray:
     distributed pass: each Arrow batch emits its partial (n, sum_x,
     X^T X); the driver combines the tiny (D, D) partials and runs eigh.
     Nothing corpus-sized ever reaches the driver."""
-    import pandas as pd
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            X = np.stack(pdf["vec"].to_numpy())
-            yield pd.DataFrame({
-                "n": [len(X)],
-                "sum_x": [X.sum(axis=0).tolist()],
-                "xtx": [(X.T @ X).ravel().tolist()]})
-
-    rows = (vecs.where(F.col("vec").isNotNull())
-            .select("vec")
-            .mapInPandas(partials, schema="n long, sum_x array<double>, "
-                                          "xtx array<double>")
-            .collect())
+    rows = _pca_partials(vecs).collect()
     n = sum(r["n"] for r in rows)
     sum_x = np.sum([r["sum_x"] for r in rows], axis=0)
     d = sum_x.shape[0]
@@ -755,6 +751,25 @@ def _pca_matrix_distributed(vecs: DataFrame, target_size: int) -> np.ndarray:
     eigenvalues, eigenvectors = np.linalg.eigh(cov)
     order = np.argsort(eigenvalues)[::-1]
     return eigenvectors[:, order][:, :target_size].T
+
+
+def _project_vectors(col_df: DataFrame, vec_col: str, bc) -> DataFrame:
+    """``col_df`` with every non-NULL ``vec_col`` vector multiplied by
+    the broadcast (k, D) matrix ``bc`` and rounded through float32 (the
+    reference convert_vec cast); every other column passes through."""
+    schema = col_df.schema
+
+    def body(batches):
+        M = bc.value
+        for rows in batches:
+            live = [r for r in rows if r[vec_col] is not None]
+            if live:
+                P = np.stack([r[vec_col] for r in live]) @ M.T
+                for r, p in zip(live, P.astype(np.float32).tolist()):
+                    r[vec_col] = p
+            yield {f: [r[f] for r in rows] for f in schema.names}
+
+    return col_df.mapInArrow(worker.kernel(schema, body), schema=schema)
 
 
 def convert_vocab_vector_size(spark: SparkSession, pack_path: str,
@@ -775,34 +790,11 @@ def convert_vocab_vector_size(spark: SparkSession, pack_path: str,
     matrix = _pca_matrix_distributed(vocab, vec_size)
     bc = spark.sparkContext.broadcast(matrix)
 
-    def project(col_df: DataFrame, vec_col: str) -> DataFrame:
-        import pandas as pd
-        out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                               for f in col_df.schema.fields)
-
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            M = bc.value
-            for pdf in batches:
-                vs = pdf[vec_col].to_numpy()
-                mask = pd.notna(vs)
-                out = list(vs)
-                if mask.any():
-                    X = np.stack([np.asarray(v) for v in vs[mask]])
-                    P = (X @ M.T).astype(np.float32).astype(np.float64)
-                    proj = iter(P)
-                    out = [next(proj).tolist() if m else None
-                           for m, _ in zip(mask, vs)]
-                pdf = pdf.copy()
-                pdf[vec_col] = out
-                yield pdf
-
-        return col_df.mapInPandas(fn, schema=out_schema)
-
-    _replace_table(project(vocab, "vec"),
+    _replace_table(_project_vectors(vocab, "vec", bc),
                    os.path.join(out_path, "vocab.parquet"))
     cv = spark.read.parquet(os.path.join(pack_path,
                                          "context_vectors.parquet"))
-    _replace_table(project(cv, "vec"),
+    _replace_table(_project_vectors(cv, "vec", bc),
                    os.path.join(out_path, "context_vectors.parquet"))
     for name in ("names.parquet", "snames.parquet", "concepts.parquet",
                  "token_counts.parquet"):

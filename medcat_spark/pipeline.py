@@ -15,12 +15,11 @@ materialized lazily once per Python worker via a module-level cache.
 from __future__ import annotations
 
 import time
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
@@ -54,7 +53,6 @@ _MODEL_CACHE: dict = {}
 
 
 def _get_model(bc) -> Tuple[CdbModel, VocabModel, EngineConfig, SpellChecker]:
-    worker.init()
     # the broadcast spill path is unique per broadcast id and stable on
     # the worker (id(bc) is NOT: CPython reuses ids across GC'd objects)
     key = getattr(bc, "_path", None) or id(bc)
@@ -75,32 +73,26 @@ def broadcast_model(spark: SparkSession, cdb: CdbModel, vocab: VocabModel,
 
 
 def _annotate_batches(bc, has_spans: bool, keep_overlaps: bool = False):
-    """Arrow-native batch kernel (guide §4.2): texts arrive as one
-    ``to_pylist`` per batch and annotation rows leave as
-    ``RecordBatch.from_pydict`` — no pandas DataFrame assembly or
+    """The annotate kernel (``worker.kernel``): texts arrive as one
+    ``to_pylist`` per Arrow batch and annotation rows leave as one Arrow
+    batch built from column lists — no pandas DataFrame assembly or
     row-at-a-time ``itertuples`` on either side of the boundary
     (measured ~2x per-task overhead of the kernel itself)."""
-    import pyarrow as pa
-
-    arrow_schema = to_arrow_schema(ANNOTATION_SCHEMA)
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+    def body(batches):
         cdb, vocab, config, sc = _get_model(bc)
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
-        for rb in batches:
+        for rows in batches:
             t0 = time.monotonic_ns()
             out = {f.name: [] for f in ANNOTATION_SCHEMA.fields}
-            doc_ids = rb.column("doc_id").to_pylist()
-            payload = rb.column("spans" if has_spans else "text").to_pylist()
-            for doc_id, p in zip(doc_ids, payload):
-                doc_id = str(doc_id)
+            for row in rows:
+                doc_id = str(row["doc_id"])
                 if has_spans:
-                    spans = [dict(s) for s in p]
+                    spans = row["spans"] or []
                     text = reconstruct_text(spans)
                     starts, ends, idxs = span_index(spans)
                 else:
-                    text = p or ""
+                    text = row["text"] or ""
                     starts = ends = idxs = None
                 ents, _ = annotate_document(text, cdb, vocab, config, sc,
                                             keep_overlaps=keep_overlaps)
@@ -123,8 +115,8 @@ def _annotate_batches(bc, has_spans: bool, keep_overlaps: bool = False):
             batch_us = (time.monotonic_ns() - t0) // 1000
             out["part_id"] = [pid] * n
             out["batch_us"] = [batch_us] * n
-            yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
-    return fn
+            yield out
+    return worker.kernel(ANNOTATION_SCHEMA, body)
 
 
 def salted_repartition(docs: DataFrame, num_partitions: int,
@@ -150,7 +142,8 @@ def annotate(docs: DataFrame, bc, num_partitions: Optional[int] = None,
 
     Accepts either the interleaved input_hint shape
     ``(doc_id, spans array<struct<kind,text,media_ref,offset>>)`` or a
-    flat ``(doc_id, text)`` table.  Returns ANNOTATION_SCHEMA rows.
+    flat ``(doc_id, text)`` table.  Returns ANNOTATION_SCHEMA rows; a
+    row whose ``text`` or ``spans`` is NULL gives none.
     ``keep_overlaps`` = the reference's show_nested_entities.
     """
     has_spans = "spans" in docs.columns

@@ -11,8 +11,8 @@ for target CUIs; the filled phrase is annotated and graded:
   FOUND_ANY    — some annotation overlaps the span (wrong CUI)
   FAIL         — nothing overlaps
 
-Runs the production kernel per case; distributable via the same
-mapInPandas pattern when suites get large.
+Runs the production kernel per case; distributable through the same
+``worker.kernel`` mapInArrow when suites get large.
 """
 
 from __future__ import annotations

@@ -138,8 +138,8 @@ def get_spark(app_name: str = "medcat-spark", master: str | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
-        # Arrow for pandas UDF / mapInPandas transfer; bigger batches keep
-        # the Python-side annotation kernel amortized
+        # Arrow for createDataFrame/toPandas; the batch size is every
+        # worker.kernel input batch: bigger batches amortize the kernels
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
         .config("spark.sql.files.maxPartitionBytes", "128m")

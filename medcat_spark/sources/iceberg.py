@@ -676,8 +676,10 @@ def _build_spec_fields(schema_fields: Sequence[Dict[str, Any]],
 def _transform_column(df, p: Dict[str, Any]):
     """Spark column computing the partition value for a transform
     field.  truncate stays JVM-side (substring / floor-mod); bucket
-    needs murmur3 → Arrow-batched pandas_udf over bucket_value."""
+    needs murmur3 → an Arrow UDF over whole Arrow arrays."""
     from pyspark.sql import functions as F
+
+    from medcat_spark import worker
     col = df[p["source_name"]]
     transform, stype = p["transform"], p["source_type"]
     if transform.startswith("truncate["):
@@ -689,28 +691,24 @@ def _transform_column(df, p: Dict[str, Any]):
     n = int(transform[7:-1])
 
     if stype in ("int", "long"):
-        def _bucket_longs(vals, is_null):
+        def _bucket_longs(vals):
             # numpy murmur3 over the whole Arrow batch (8-byte LE longs,
-            # spec encoding).  The UDF gets a null-free long plus a null
-            # flag: a nullable integer column arrives as float64, which
-            # rounds values above 2^53 before they are hashed.
+            # spec encoding); Arrow carries int64 exactly, NULLs aside
             import numpy as np
-            import pandas as pd
-            h = murmur3_32_long_np(vals.to_numpy(dtype=np.int64))
+            import pyarrow as pa
+            worker.init()
+            h = murmur3_32_long_np(vals.fill_null(0).to_numpy())
             out = ((h & np.uint32(0x7FFFFFFF)) % np.uint32(n))
-            res = pd.Series(out.astype("int64")).astype("Int32")
-            res[is_null.to_numpy(dtype=bool)] = pd.NA
-            return res
-        return F.pandas_udf(_bucket_longs, "int")(
-            F.coalesce(col.cast("long"), F.lit(0).cast("long")),
-            col.isNull())
+            return pa.array(out.astype(np.int32), mask=vals.is_null()
+                            .to_numpy(zero_copy_only=False))
+        return F.arrow_udf(_bucket_longs, "int")(col.cast("long"))
 
     def _bucket_strings(s):
-        import pandas as pd
-        return pd.Series(
-            [None if v is None else bucket_value(v, n, stype)
-             for v in s], dtype="object")
-    return F.pandas_udf(_bucket_strings, "int")(col)
+        import pyarrow as pa
+        worker.init()
+        return pa.array([None if v is None else bucket_value(v, n, stype)
+                         for v in s.to_pylist()], type=pa.int32())
+    return F.arrow_udf(_bucket_strings, "int")(col)
 
 
 # ---------------------------------------------------------------------------

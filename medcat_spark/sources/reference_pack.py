@@ -472,7 +472,7 @@ def _load_meta_component(sub: str):
         if tokenizer is None:
             # fail at LOAD time (component lands in _skipped) — the
             # BERT meta scorer needs a subword tokenizer and would
-            # otherwise ValueError inside mapInPandas at executor time
+            # otherwise ValueError inside the scorer kernel at executor time
             # (same policy as the rel_* tokenizer/tag-id validation)
             raise ValueError(
                 "BERT meta component has no recoverable tokenizer "
@@ -549,7 +549,7 @@ def _load_rel_component(sub: str):
     m.tag_ids = [int(t) for t in tag_ids if t is not None]
     if len(m.tag_ids) != 4:
         # fail at LOAD time (component lands in _skipped with this
-        # message) instead of a ValueError inside mapInPandas later
+        # message) instead of a ValueError inside the scorer kernel later
         raise ValueError(
             f"annotation schema needs 4 tag ids ([s1]/[e1]/[s2]/[e2]); "
             f"got {m.tag_ids} from config/tokenizer")

@@ -20,8 +20,8 @@ from medcat_spark.pipeline import ANNOTATION_SCHEMA, _annotate_batches
 def annotate_stream(stream_docs: DataFrame, bc) -> DataFrame:
     """docs readStream (doc_id + text|spans) → annotation row stream."""
     has_spans = "spans" in stream_docs.columns
-    ann = stream_docs.mapInArrow(_annotate_batches(bc, has_spans),
-                                 schema=ANNOTATION_SCHEMA)
+    src = stream_docs.select("doc_id", "spans" if has_spans else "text")
+    ann = src.mapInArrow(_annotate_batches(bc, has_spans), ANNOTATION_SCHEMA)
     return ann.drop("part_id", "batch_us")
 
 

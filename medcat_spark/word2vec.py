@@ -17,7 +17,7 @@ way the LSTM/BERT heads were (numpy math, Spark distribution):
   context-vector trainer; with one partition the result equals the
   sequential reference run exactly, golden-tested).
 
-Scale shape: the corpus streams through mapInPandas once per epoch
+Scale shape: the corpus streams through one ``worker.kernel`` per epoch
 call; the only driver-sized object is the vocabulary (gensim holds the
 same in RAM); the combine is one groupBy on the word key.
 """
@@ -29,6 +29,8 @@ from typing import Dict, Optional, Tuple
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from medcat_spark import worker
 
 _SCHEMA = "word string, vec array<double>, n_updates long"
 
@@ -143,18 +145,17 @@ def train_word2vec_sgns(spark: SparkSession, docs: DataFrame,
          seed))
 
     def run(batches):
-        import pandas as pd
         (w2i, W, C, cum_, win, neg, lr_, mlr, ep, sd) = bc.value
         docs_ids = []
         id_min = None
-        for pdf in batches:
-            for t in pdf["text"]:
-                ids = [w2i[w] for w in str(t).lower().split(" ")
+        for rows in batches:
+            for r in rows:
+                ids = [w2i[w] for w in str(r["text"]).lower().split(" ")
                        if w in w2i]
                 if len(ids) > 1:
                     docs_ids.append(ids)
-            if len(pdf):
-                m = pdf["doc_id"].astype(str).min()
+            if rows:
+                m = min(str(r["doc_id"]) for r in rows)
                 id_min = m if id_min is None else min(id_min, m)
         if not docs_ids:
             return
@@ -167,16 +168,15 @@ def train_word2vec_sgns(spark: SparkSession, docs: DataFrame,
             docs_ids, W, C, cum_, win, neg, lr_, mlr, ep, pseed)
         hit = np.nonzero(upd)[0]
         inv = {i: w for w, i in w2i.items()}
-        yield pd.DataFrame({
-            "word": [inv[i] for i in hit],
-            "vec": [Wf[i].tolist() for i in hit],
-            "n_updates": [int(upd[i]) for i in hit]})
+        yield {"word": [inv[i] for i in hit],
+               "vec": [Wf[i].tolist() for i in hit],
+               "n_updates": [int(upd[i]) for i in hit]}
 
     src = docs.select(F.col("doc_id").cast("string").alias("doc_id"),
                       F.col(text_col).alias("text"))
     if num_partitions:
         src = src.repartition(num_partitions, "doc_id")
-    partials = src.mapInPandas(run, schema=_SCHEMA)
+    partials = src.mapInArrow(worker.kernel(_SCHEMA, run), schema=_SCHEMA)
     cells = partials.select(
         "word", "n_updates",
         F.posexplode("vec").alias("pos", "val"))

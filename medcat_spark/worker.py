@@ -1,4 +1,8 @@
-"""Per-process setup for Python workers, run at the shared kernel entries.
+"""The one Python worker kernel every ``mapInArrow`` in the engine runs
+(:func:`kernel`), and the per-task setup it does (:func:`init`).  A map
+site writes only a ``body`` generator: per-task setup before its loop,
+then ``{field: list}`` column dicts out (columns, not row tuples: the
+``zip(*rows)`` transpose costs about half again as much).
 
 Spark reuses a Python worker process across tasks.  Before every task
 PySpark's ``worker_util.setup_spark_files`` calls
@@ -18,12 +22,10 @@ every call rather than once per process because a lazy import inside a
 task (a head module loaded from ``medcat_spark.zip``) creates importers
 again.
 
-The hook lives at the three kernel entries (``pipeline._get_model``,
-``scorer.kernel`` and ``media._map_rows``) rather than in
-``spark.python.daemon.module``:
-``pyspark/daemon.py`` honours only ``pyspark*`` worker modules, and a
-custom daemon module must be importable before any task adds its
-``--py-files``.
+The hook lives in :func:`kernel` and the Iceberg bucket Arrow UDFs, not
+in ``spark.python.daemon.module``: ``pyspark/daemon.py`` honours only
+``pyspark*`` worker modules, and a custom daemon module must be
+importable before any task adds its ``--py-files``.
 """
 
 from __future__ import annotations
@@ -44,7 +46,30 @@ def init() -> None:
         pa.set_cpu_count(1)
     if pa.io_thread_count() != 1:
         pa.set_io_thread_count(1)
+    # a process's first pa.array imports pandas: before the drop, not after
+    pa.array([])
     cache = sys.path_importer_cache
     for path, finder in list(cache.items()):
         if isinstance(finder, zipimport.zipimporter):
             cache.pop(path, None)
+
+
+def kernel(schema, body):
+    """The ``mapInArrow`` function: :func:`init`, then ``body`` over a
+    lazy iterator of per-batch row-dict lists; each column dict it
+    yields with rows becomes one batch of ``schema``, a ``StructType``
+    (no SparkContext needed) or a DDL string resolved on the driver."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+
+    def fn(batches):
+        init()
+        for cols in body(rb.to_pylist() for rb in batches):
+            if cols and len(next(iter(cols.values()))):
+                yield pa.RecordBatch.from_pydict(cols, schema=arrow_schema)
+    return fn

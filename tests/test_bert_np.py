@@ -271,8 +271,8 @@ def test_missing_layers_rejected():
 def test_bert_meta_without_tokenizer_skipped_at_load(tmp_path):
     """A meta_* BERT component whose dir has only bbpe-vocab.json (no
     merges) cannot segment unseen text; it must fail AT LOAD TIME into
-    ``_skipped`` — not ValueError later inside mapInPandas at executor
-    time (same policy as the rel_* tokenizer/tag-id validation)."""
+    ``_skipped`` — not ValueError later inside the scorer kernel at
+    executor time (same policy as the rel_* tokenizer/tag-id validation)."""
     import json
     import os
     from medcat_spark.core.bbpe import train_bbpe

@@ -1,7 +1,7 @@
 """The one media operator (functions/media.py ``_map_rows``): every public
-media operator plans as exactly one MapInArrow and no MapInPandas, and
-every decode head skips a row whose bytes are NULL instead of failing
-the job."""
+media operator plans as exactly one MapInArrow and no MapInPandas, every
+decode head skips a row whose bytes are NULL and every spans operator a
+row whose spans are NULL, instead of failing the job."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -72,6 +72,16 @@ def test_decode_head_skips_null_bytes(spark, name):
                   .collect())
     got = sorted(tuple(r) for r in head(_bytes_table(spark, synth,
                                                      null_row=True))
+                 .collect())
+    assert want and got == want
+
+
+@pytest.mark.parametrize("name", ["frame_sample", "media_features"])
+def test_spans_operator_skips_null_spans(spark, name):
+    op = getattr(media, name)
+    want = sorted(tuple(r) for r in op(_spans(spark)).collect())
+    null_row = spark.createDataFrame([("null-doc", None)], _SPANS)
+    got = sorted(tuple(r) for r in op(_spans(spark).unionByName(null_row))
                  .collect())
     assert want and got == want
 

@@ -237,7 +237,7 @@ def test_rnn_padding_and_chunk_invariance():
 
 
 def test_rnn_through_spark_plumbing(spark):
-    """The stateful scorer rides the identical broadcast + mapInPandas
+    """The stateful scorer rides the identical broadcast + mapInArrow
     plan; order decides the label end to end."""
     from medcat_spark.functions.meta_model import (meta_annotations_rnn,
                                                    negation_rnn_fixture_model)

@@ -56,6 +56,18 @@ def test_pr_gate_095(spark, ann, fixture_models):
     assert stats["fp"] == 0 and stats["fn"] == 0
 
 
+def test_null_spans_row_gives_no_annotations(spark, docs_df, bc, ann):
+    """A NULL ``spans`` row follows the NULL ``text`` rule: it gives no
+    annotation rows, and every other row's annotations are unchanged."""
+    null_row = spark.createDataFrame([("null-doc", None)], docs_df.schema)
+    got = annotate(docs_df.unionByName(null_row), bc, num_partitions=6)
+
+    def keys(df):
+        return sorted((r["doc_id"], r["start"], r["cui"],
+                       r["context_similarity"]) for r in df.collect())
+    assert keys(got) == keys(ann)
+
+
 def test_annotations_nonempty_and_schema(ann):
     assert ann.count() > 50
     names = set(ann.columns)
