@@ -20,6 +20,11 @@ that loop without torch:
   * per-epoch held-out eval, best-F1 state kept (the reference's
     save_state(best) checkpoint protocol).
 
+Every trainer here (RelCAT, the BERT meta head, the token classifier)
+runs the one fine-tuning loop ``lstm_train._fit`` behind the one
+``_split`` prologue; each keeps only its params, optimizer, gradient,
+held-out eval chunking, winner metric and extra report keys.
+
 The analytic gradient for EVERY parameter tensor — embeddings,
 attention q/k/v/output, both LayerNorms, GELU intermediate, pooler,
 annotation-tag max-pools, fc1-3 — is certified against numerical
@@ -43,8 +48,9 @@ import numpy as np
 from medcat_spark import worker
 from medcat_spark.functions.bert_np import (BertEncoder, BertLayer,
                                             RelCatBertModel, _erf, gelu)
-from medcat_spark.functions.lstm_train import (_clip_total_norm, _f1_report,
-                                               class_weights_balanced)
+from medcat_spark.functions.lstm_train import (_Adam, _argmax_predict, _fit,
+                                               _rounded, _split, _weighted_ce,
+                                               spark_batch_grad)
 from medcat_spark.functions.scorer import pad_ids
 
 # sample = (marked token ids, (p1, p2) marker starts, label id)
@@ -260,15 +266,7 @@ def relcat_forward_backward(model: RelCatBertModel, batch: Sequence[Sample],
     h2 = h1 @ model.fc2_w.T + model.fc2_b
     logits = h2 @ model.fc3_w.T + model.fc3_b
 
-    e = np.exp(logits - logits.max(axis=1, keepdims=True))
-    p = e / e.sum(axis=1, keepdims=True)
-    w = class_weights[y] if class_weights is not None else np.ones(B)
-    wsum = w.sum()
-    loss = float(-(w * np.log(np.maximum(p[np.arange(B), y], 1e-12))).sum()
-                 / wsum)
-    dlogits = p * w[:, None]
-    dlogits[np.arange(B), y] -= w
-    dlogits /= wsum
+    loss, dlogits = _weighted_ce(logits, y, class_weights)
 
     grads: Dict[str, np.ndarray] = {}
     dh2, grads["fc3.weight"], grads["fc3.bias"] = _linear_bwd(
@@ -336,33 +334,17 @@ def relcat_params(model: RelCatBertModel) -> Dict[str, np.ndarray]:
     return ps
 
 
-class _AdamW:
+class _AdamW(_Adam):
     """torch.optim.AdamW: decoupled weight decay (p -= lr*wd*p before
-    the moment update), bias-corrected moments."""
+    the moment update) in place of Adam's L2 term in the gradient."""
 
     def __init__(self, params: Dict[str, np.ndarray], lr: float,
-                 weight_decay: float = 0.0,
-                 betas: Tuple[float, float] = (0.9, 0.999),
-                 eps: float = 1e-8) -> None:
-        self.params = params
-        self.lr = lr
-        self.wd = weight_decay
-        self.b1, self.b2 = betas
-        self.eps = eps
-        self.t = 0
-        self.m = {k: np.zeros_like(v) for k, v in params.items()}
-        self.v = {k: np.zeros_like(v) for k, v in params.items()}
+                 weight_decay: float = 0.0, **kw) -> None:
+        super().__init__(params, lr, weight_decay, **kw)
 
-    def step(self, grads: Dict[str, np.ndarray]) -> None:
-        self.t += 1
-        for k, p in self.params.items():
-            g = grads[k]
-            p *= (1.0 - self.lr * self.wd)
-            self.m[k] = self.b1 * self.m[k] + (1 - self.b1) * g
-            self.v[k] = self.b2 * self.v[k] + (1 - self.b2) * g * g
-            mh = self.m[k] / (1 - self.b1 ** self.t)
-            vh = self.v[k] / (1 - self.b2 ** self.t)
-            p -= self.lr * mh / (np.sqrt(vh) + self.eps)
+    def _decay(self, p: np.ndarray, g: np.ndarray) -> np.ndarray:
+        p *= (1.0 - self.lr * self.wd)
+        return g
 
 
 def train_relcat(model: RelCatBertModel, data: Sequence[Sample], *,
@@ -378,72 +360,43 @@ def train_relcat(model: RelCatBertModel, data: Sequence[Sample], *,
                  multistep_lr_gamma: float = 0.8,
                  seed: int = 42, shuffle_data: bool = True,
                  patience: int = 0, grad_fn=None) -> Dict:
-    """Reference RelCAT.train loop (rel_cat.py:174-420) in numpy.
+    """Reference RelCAT.train loop (rel_cat.py:174-420) in numpy:
+    AdamW + MultiStepLR (the ``lr`` report field) through `_fit`.
     Mutates ``model`` to the best-F1 epoch's weights, returns the
     report.  ``grad_fn(model, batch, cw) -> (loss, grads)`` overrides
     the per-macro-batch gradient (the train_relcat_spark hook)."""
     rng = np.random.RandomState(seed)
-    data = list(data)
-    if shuffle_data:
-        rng.shuffle(data)
-    if len(data) < 2:
-        raise ValueError("need at least 2 relation samples")
-    n_test = max(1, int(round(len(data) * test_size)))
-    test, train = data[:n_test], data[n_test:]
     n_classes = len(model.labels)
-    y_train = np.array([y for _, _, y in train])
-    y_test = np.array([y for _, _, y in test])
-    if class_weights is not None:
-        cw = np.asarray(class_weights, dtype=np.float64)
-    elif enable_class_weights:
-        cw = class_weights_balanced(y_train, n_classes)
-    else:
-        cw = None
+    train, test, cw = _split(
+        data, rng, shuffle=shuffle_data, test_size=test_size,
+        what="relation samples", n_classes=n_classes,
+        class_weights=class_weights,
+        compute_class_weights=enable_class_weights)
+
+    def grad(batch):
+        if grad_fn is not None:
+            return grad_fn(model, batch, cw)
+        return relcat_forward_backward(model, batch, cw)[:2]
+
     params = relcat_params(model)
     opt = _AdamW(params, lr=lr, weight_decay=adam_weight_decay,
                  betas=adam_betas, eps=adam_epsilon)
     milestones = set(multistep_milestones
                      or [2, 4, 6, 8, 12, 15, 18, 20, 22, 24, 26, 30])
-    winner: Dict = {}
-    winner_state: Dict[str, np.ndarray] = {}
-    since = 0
-    for epoch in range(nepochs):
-        order = rng.permutation(len(train))
-        losses = []
-        for ofs in range(0, len(train), batch_size):
-            batch = [train[i] for i in order[ofs:ofs + batch_size]]
-            if grad_fn is None:
-                loss, grads, _ = relcat_forward_backward(model, batch, cw)
-            else:
-                loss, grads = grad_fn(model, batch, cw)
-            _clip_total_norm(grads, max_grad_norm)
-            opt.step(grads)
-            losses.append(loss)
-        if (epoch + 1) in milestones:       # MultiStepLR
+
+    def multistep_lr(epoch, rep):
+        if (epoch + 1) in milestones:
             opt.lr *= multistep_lr_gamma
-        preds = []
-        for ofs in range(0, len(test), 256):
-            chunk = test[ofs:ofs + 256]
-            _, _, lg = relcat_forward_backward(model, chunk, None)
-            preds.extend(lg.argmax(axis=1).tolist())
-        rep = _f1_report(y_test, np.array(preds), n_classes)
-        rep["epoch"] = epoch
-        rep["train_loss"] = round(float(np.mean(losses)), 6)
         rep["lr"] = round(opt.lr, 8)
-        if not winner or rep["macro_f1"] > winner["macro_f1"]:
-            winner = rep
-            winner_state = {k: v.copy() for k, v in params.items()}
-            since = 0
-        else:
-            since += 1
-            if patience > 0 and since >= patience:
-                break
-    for k, v in winner_state.items():
-        params[k][...] = v
-    winner["n_train"] = len(train)
-    winner["n_test"] = len(test)
-    winner["class_weights"] = (None if cw is None
-                               else [round(float(x), 4) for x in cw])
+
+    winner = _fit(
+        params, opt, train, test, nepochs=nepochs, batch_size=batch_size,
+        rng=rng, grad=grad, clip_norm=max_grad_norm, n_classes=n_classes,
+        metric="macro_f1", patience=patience, on_epoch=multistep_lr,
+        predict=_argmax_predict(
+            lambda chunk: relcat_forward_backward(model, chunk, None)[2],
+            256))
+    winner["class_weights"] = _rounded(cw)
     return winner
 
 
@@ -596,15 +549,7 @@ def bert_meta_forward_backward(model, batch, class_weights):
         acts.append(h)
     logits = h @ model.fc["fc4.weight"].T + model.fc["fc4.bias"]
 
-    e = np.exp(logits - logits.max(axis=1, keepdims=True))
-    p = e / e.sum(axis=1, keepdims=True)
-    w = class_weights[y] if class_weights is not None else np.ones(B)
-    wsum = w.sum()
-    loss = float(-(w * np.log(np.maximum(p[np.arange(B), y], 1e-12))).sum()
-                 / wsum)
-    dlogits = p * w[:, None]
-    dlogits[np.arange(B), y] -= w
-    dlogits /= wsum
+    loss, dlogits = _weighted_ce(logits, y, class_weights)
 
     grads: Dict[str, np.ndarray] = {}
     dh, grads["fc4.weight"], grads["fc4.bias"] = _linear_bwd(
@@ -642,69 +587,32 @@ def train_bert_meta(model, data, *, nepochs: int = 50, lr: float = 1e-4,
                     metric: str = "weighted_f1", patience: int = 0,
                     seed: int = 42, clip_norm: float = 0.15,
                     shuffle_data: bool = True, grad_fn=None) -> Dict:
-    """ml_utils.train_model loop for the BERT meta head (the reference
-    trains LSTM and BERT heads through the same loop — meta_cat.py:302;
-    Adam, clip 0.15, winner by weighted-avg F1).  ``grad_fn`` as in
+    """ml_utils.train_model for the BERT meta head: the reference
+    trains LSTM and BERT heads through one loop (meta_cat.py:302), and
+    so does this engine (`_fit`; Adam, clip 0.15, winner by
+    weighted-avg F1).  ``grad_fn`` as in
     train_relcat (the train_bert_meta_spark hook)."""
-    from medcat_spark.functions.lstm_train import _Adam
-
     rng = np.random.RandomState(seed)
-    data = list(data)
-    if shuffle_data:
-        rng.shuffle(data)
-    if len(data) < 2:
-        raise ValueError("need at least 2 samples")
-    n_test = max(1, int(round(len(data) * test_size)))
-    test, train = data[:n_test], data[n_test:]
     n_classes = len(model.labels)
-    y_train = np.array([y for _, _, y in train])
-    y_test = np.array([y for _, _, y in test])
-    if class_weights is not None:
-        cw = np.asarray(class_weights, dtype=np.float64)
-    elif compute_class_weights:
-        cw = class_weights_balanced(y_train, n_classes)
-    else:
-        cw = None
+    train, test, cw = _split(
+        data, rng, shuffle=shuffle_data, test_size=test_size,
+        what="samples", n_classes=n_classes, class_weights=class_weights,
+        compute_class_weights=compute_class_weights)
+
+    def grad(batch):
+        if grad_fn is not None:
+            return grad_fn(model, batch, cw)
+        return bert_meta_forward_backward(model, batch, cw)[:2]
+
     params = bert_meta_params(model)
-    opt = _Adam(params, lr=lr, weight_decay=1e-5)
-    winner: Dict = {}
-    winner_state: Dict[str, np.ndarray] = {}
-    since = 0
-    for epoch in range(nepochs):
-        order = rng.permutation(len(train))
-        losses = []
-        for ofs in range(0, len(train), batch_size):
-            batch = [train[i] for i in order[ofs:ofs + batch_size]]
-            if grad_fn is None:
-                loss, grads, _ = bert_meta_forward_backward(model, batch,
-                                                            cw)
-            else:
-                loss, grads = grad_fn(model, batch, cw)
-            _clip_total_norm(grads, clip_norm)
-            opt.step(grads)
-            losses.append(loss)
-        preds = []
-        for ofs in range(0, len(test), 256):
-            chunk = test[ofs:ofs + 256]
-            _, _, lg = bert_meta_forward_backward(model, chunk, None)
-            preds.extend(lg.argmax(axis=1).tolist())
-        rep = _f1_report(y_test, np.array(preds), n_classes)
-        rep["epoch"] = epoch
-        rep["train_loss"] = round(float(np.mean(losses)), 6)
-        if not winner or rep[metric] > winner[metric]:
-            winner = rep
-            winner_state = {k: v.copy() for k, v in params.items()}
-            since = 0
-        else:
-            since += 1
-            if patience > 0 and since >= patience:
-                break
-    for k, v in winner_state.items():
-        params[k][...] = v
-    winner["n_train"] = len(train)
-    winner["n_test"] = len(test)
-    winner["class_weights"] = (None if cw is None
-                               else [round(float(x), 4) for x in cw])
+    winner = _fit(
+        params, _Adam(params, lr=lr, weight_decay=1e-5), train, test,
+        nepochs=nepochs, batch_size=batch_size, rng=rng, grad=grad,
+        clip_norm=clip_norm, n_classes=n_classes, metric=metric,
+        patience=patience, predict=_argmax_predict(
+            lambda chunk: bert_meta_forward_backward(model, chunk, None)[2],
+            256))
+    winner["class_weights"] = _rounded(cw)
     return winner
 
 
@@ -770,35 +678,18 @@ def train_token_classifier(model, data, *, nepochs: int = 10,
                            patience: int = 0) -> Dict:
     """Fine-tune the trf_* token-classification head (DeID/NER).
     ``data`` = [(ids, per-token labels, -100 ignored)].  AdamW at the
-    HF-default 5e-5, winner by token-level macro F1 over non-ignored
-    positions."""
+    HF-default 5e-5 through `_fit` (always shuffled), winner by
+    token-level macro F1 over non-ignored positions."""
     rng = np.random.RandomState(seed)
-    data = list(data)
-    rng.shuffle(data)
-    if len(data) < 2:
-        raise ValueError("need at least 2 sequences")
-    n_test = max(1, int(round(len(data) * test_size)))
-    test, train = data[:n_test], data[n_test:]
     n_classes = len(model.labels)
-    y_train = np.concatenate([[l for l in labels if l != -100]
-                              for _, labels in train]).astype(np.int64)
-    cw = (class_weights_balanced(y_train, n_classes)
-          if compute_class_weights else None)
-    params = token_classifier_params(model)
-    opt = _AdamW(params, lr=lr, weight_decay=0.01)   # HF Trainer default
-    winner: Dict = {}
-    winner_state: Dict[str, np.ndarray] = {}
-    since = 0
-    for epoch in range(nepochs):
-        order = rng.permutation(len(train))
-        losses = []
-        for ofs in range(0, len(train), batch_size):
-            batch = [train[i] for i in order[ofs:ofs + batch_size]]
-            loss, grads, _ = token_classifier_forward_backward(
-                model, batch, cw)
-            _clip_total_norm(grads, max_grad_norm)
-            opt.step(grads)
-            losses.append(loss)
+    train, test, cw = _split(
+        data, rng, shuffle=True, test_size=test_size, what="sequences",
+        n_classes=n_classes, compute_class_weights=compute_class_weights,
+        labels=lambda part: np.concatenate(
+            [[l for l in labels if l != -100] for _, labels in part]
+        ).astype(np.int64))
+
+    def predict(test):
         yt, yp = [], []
         for ofs in range(0, len(test), batch_size):
             chunk = test[ofs:ofs + batch_size]
@@ -808,33 +699,26 @@ def train_token_classifier(model, data, *, nepochs: int = 10,
                     if lbl != -100:
                         yt.append(lbl)
                         yp.append(int(lg[r, c].argmax()))
-        rep = _f1_report(np.array(yt), np.array(yp), n_classes)
-        rep["epoch"] = epoch
-        rep["train_loss"] = round(float(np.mean(losses)), 6)
-        if not winner or rep["macro_f1"] > winner["macro_f1"]:
-            winner = rep
-            winner_state = {k: v.copy() for k, v in params.items()}
-            since = 0
-        else:
-            since += 1
-            if patience > 0 and since >= patience:
-                break
-    for k, v in winner_state.items():
-        params[k][...] = v
-    winner["n_train"] = len(train)
-    winner["n_test"] = len(test)
-    return winner
+        return np.array(yt), np.array(yp)
+
+    params = token_classifier_params(model)
+    return _fit(
+        params, _AdamW(params, lr=lr, weight_decay=0.01),  # HF default
+        train, test, nepochs=nepochs, batch_size=batch_size, rng=rng,
+        grad=lambda batch: token_classifier_forward_backward(
+            model, batch, cw)[:2],
+        clip_norm=max_grad_norm, predict=predict, n_classes=n_classes,
+        metric="macro_f1", patience=patience)
 
 
 def train_relcat_spark(spark, model: RelCatBertModel,
                        data: Sequence[Sample], *,
                        n_shards: int = 8, **kw) -> Dict:
-    """Distributed RelCAT fine-tuning: the exact train_relcat loop
-    (weighted CE, MultiStepLR, AdamW, winner epoch) with each
+    """Distributed RelCAT fine-tuning: train_relcat (weighted CE,
+    MultiStepLR, AdamW, winner epoch through `_fit`) with each
     macro-batch gradient computed data-parallel across executors and
     recombined wsum-weighted — identical to the sequential full-batch
     gradient by linearity (see lstm_train.spark_batch_grad)."""
-    from medcat_spark.functions.lstm_train import spark_batch_grad
     return train_relcat(
         model, data,
         grad_fn=lambda m, batch, cw: spark_batch_grad(
@@ -846,7 +730,6 @@ def train_bert_meta_spark(spark, model, data: Sequence[Sample], *,
                           n_shards: int = 8, **kw) -> Dict:
     """Distributed BERT meta-head fine-tuning (same hook as
     train_relcat_spark over bert_meta_forward_backward)."""
-    from medcat_spark.functions.lstm_train import spark_batch_grad
     return train_bert_meta(
         model, data,
         grad_fn=lambda m, batch, cw: spark_batch_grad(

@@ -15,9 +15,12 @@ without torch:
     caps every class at the minority (or named class) count, in data
     order, for 2-phase learning;
   * the loop mirrors ``utils/meta_cat/ml_utils.py:178-358``
-    (train_model): shuffled train/test split, balanced class weights
-    (sklearn ``compute_class_weight("balanced")`` = n/(k·bincount)),
-    weighted softmax cross-entropy with torch's
+    (train_model), the one loop MedCAT trains both meta heads with, and
+    is the one loop here too: ``_fit`` (behind the ``_split`` prologue)
+    also runs the BERT meta, RelCAT and token-classifier trainers in
+    ``bert_train``.  For this head: shuffled train/test split, balanced
+    class weights (sklearn ``compute_class_weight("balanced")`` =
+    n/(k·bincount)), weighted softmax cross-entropy with torch's
     ``CrossEntropyLoss(weight=w)`` normalization (Σ w[y_b] denominator),
     Adam (weight_decay 1e-5), total-grad-norm clip 0.15, per-epoch
     held-out eval with the winner state kept by weighted-avg F1
@@ -332,6 +335,24 @@ def _pad_batch(model: LstmMetaModel, batch: Sequence[Sample]):
     return ids, mask, centers, y
 
 
+def _weighted_ce(logits: np.ndarray, y: np.ndarray,
+                 class_weights: Optional[np.ndarray]):
+    """Weighted softmax cross-entropy with torch's
+    ``CrossEntropyLoss(weight=w)`` normalization (Σ w[y_b] denominator)
+    → (loss, dloss/dlogits)."""
+    B = len(y)
+    e = np.exp(logits - logits.max(axis=1, keepdims=True))
+    p = e / e.sum(axis=1, keepdims=True)
+    w = class_weights[y] if class_weights is not None else np.ones(B)
+    wsum = w.sum()
+    loss = float(-(w * np.log(np.maximum(p[np.arange(B), y], 1e-12))).sum()
+                 / wsum)
+    dlogits = p * w[:, None]
+    dlogits[np.arange(B), y] -= w
+    dlogits /= wsum
+    return loss, dlogits
+
+
 def _forward_backward(model: LstmMetaModel, batch: Sequence[Sample],
                       class_weights: Optional[np.ndarray],
                       emb_grad: bool):
@@ -357,18 +378,7 @@ def _forward_backward(model: LstmMetaModel, batch: Sequence[Sample],
         pooled[b] = span.max(axis=0)
     logits = pooled @ model.fc_W.T + model.fc_b
 
-    # weighted softmax CE, torch CrossEntropyLoss(weight=w) normalization
-    e = np.exp(logits - logits.max(axis=1, keepdims=True))
-    p = e / e.sum(axis=1, keepdims=True)
-    w = (class_weights[y] if class_weights is not None
-         else np.ones(B))
-    wsum = w.sum()
-    loss = float(-(w * np.log(np.maximum(p[np.arange(B), y], 1e-12))).sum()
-                 / wsum)
-    dlogits = p * w[:, None]
-    dlogits[np.arange(B), y] -= w
-    dlogits /= wsum
-
+    loss, dlogits = _weighted_ce(logits, y, class_weights)
     grads: Dict[str, np.ndarray] = {
         "fc_W": dlogits.T @ pooled, "fc_b": dlogits.sum(axis=0)}
     dpooled = dlogits @ model.fc_W
@@ -431,10 +441,13 @@ class _Adam:
         self.m = {k: np.zeros_like(v) for k, v in params.items()}
         self.v = {k: np.zeros_like(v) for k, v in params.items()}
 
+    def _decay(self, p: np.ndarray, g: np.ndarray) -> np.ndarray:
+        return g + self.wd * p
+
     def step(self, grads: Dict[str, np.ndarray]) -> None:
         self.t += 1
         for k, p in self.params.items():
-            g = grads[k] + self.wd * p
+            g = self._decay(p, grads[k])
             self.m[k] = self.b1 * self.m[k] + (1 - self.b1) * g
             self.v[k] = self.b2 * self.v[k] + (1 - self.b2) * g * g
             mh = self.m[k] / (1 - self.b1 ** self.t)
@@ -474,6 +487,95 @@ def _f1_report(y_true: np.ndarray, y_pred: np.ndarray,
     }
 
 
+def _labels(samples) -> np.ndarray:
+    return np.array([y for _, _, y in samples])
+
+
+def _split(data, rng: np.random.RandomState, *, shuffle: bool,
+           test_size: float, what: str, n_classes: int,
+           class_weights: Optional[Sequence[float]] = None,
+           compute_class_weights: bool = False, labels=_labels):
+    """The trainers' shared prologue: shuffle once (when ``shuffle``),
+    split the head of the data off as the test set, and resolve the
+    class weights — explicit, balanced over the train labels
+    (``labels(train)``), or None.  Returns (train, test, weights)."""
+    data = list(data)
+    if shuffle:
+        rng.shuffle(data)
+    if len(data) < 2:
+        raise ValueError(f"need at least 2 {what}")
+    n_test = max(1, int(round(len(data) * test_size)))
+    test, train = data[:n_test], data[n_test:]
+    y_train = labels(train)
+    if class_weights is not None:
+        cw = np.asarray(class_weights, dtype=np.float64)
+    elif compute_class_weights:
+        cw = class_weights_balanced(y_train, n_classes)
+    else:
+        cw = None
+    return train, test, cw
+
+
+def _rounded(cw: Optional[np.ndarray]) -> Optional[List[float]]:
+    return None if cw is None else [round(float(x), 4) for x in cw]
+
+
+def _argmax_predict(logits, chunk: int):
+    """``predict`` for (x, aux, label) samples: argmax of
+    ``logits(samples)`` over test chunks of ``chunk`` samples."""
+    def predict(test):
+        preds = []
+        for ofs in range(0, len(test), chunk):
+            preds.extend(logits(test[ofs:ofs + chunk]).argmax(axis=1)
+                         .tolist())
+        return _labels(test), np.array(preds)
+    return predict
+
+
+def _fit(params: Dict[str, np.ndarray], opt, train, test, *, nepochs: int,
+         batch_size: int, rng: np.random.RandomState, grad,
+         clip_norm: float, predict, n_classes: int, metric: str,
+         patience: int, on_epoch=None) -> Dict:
+    """The one fine-tuning loop (reference ml_utils.train_model) every
+    trainer runs.  Per epoch: ``grad(batch) -> (loss, grads)`` over one
+    ``rng.permutation`` of ``train`` in mini-batches, each clipped and
+    stepped; then ``_f1_report(*predict(test))`` with the epoch and mean
+    loss, handed to ``on_epoch(epoch, report)``.  The winner is the
+    first epoch with the best ``metric`` (``patience > 0``: stop after
+    that many epochs without one); its weights are loaded back into
+    ``params`` (meta_cat.py:303-310) and its report returned."""
+    winner: Dict = {}
+    winner_state: Dict[str, np.ndarray] = {}
+    since = 0
+    for epoch in range(nepochs):
+        order = rng.permutation(len(train))
+        losses = []
+        for ofs in range(0, len(train), batch_size):
+            batch = [train[i] for i in order[ofs:ofs + batch_size]]
+            loss, grads = grad(batch)
+            _clip_total_norm(grads, clip_norm)
+            opt.step(grads)
+            losses.append(loss)
+        rep = _f1_report(*predict(test), n_classes)
+        rep["epoch"] = epoch
+        rep["train_loss"] = round(float(np.mean(losses)), 6)
+        if on_epoch is not None:
+            on_epoch(epoch, rep)
+        if not winner or rep[metric] > winner[metric]:
+            winner = rep
+            winner_state = {k: v.copy() for k, v in params.items()}
+            since = 0
+        else:
+            since += 1
+            if patience > 0 and since >= patience:
+                break
+    for k, v in winner_state.items():
+        params[k][...] = v
+    winner["n_train"] = len(train)
+    winner["n_test"] = len(test)
+    return winner
+
+
 def train_lstm_meta(model: LstmMetaModel, data: Sequence[Sample], *,
                     nepochs: int = 50, lr: float = 1e-3,
                     batch_size: int = 100, test_size: float = 0.1,
@@ -485,76 +587,38 @@ def train_lstm_meta(model: LstmMetaModel, data: Sequence[Sample], *,
                     weight_decay: float = 1e-5,
                     shuffle_data: bool = True,
                     grad_fn=None) -> Dict:
-    """One training phase (reference ml_utils.train_model).  Mutates
-    ``model`` to the winner-epoch weights and returns the report.
+    """One training phase (reference ml_utils.train_model): Adam over
+    the LSTM head through `_fit`, held-out eval through the scoring
+    forward.  Mutates ``model`` to the winner-epoch weights and returns
+    the report.
 
     ``grad_fn(model, batch, cw, emb_grad) -> (loss, grads)`` overrides
     the gradient computation for one macro-batch — the hook the
-    Spark data-parallel trainer (train_lstm_meta_spark) plugs into;
-    the surrounding loop (shuffling, clip, Adam, winner selection,
-    early stopping) is shared so the two trainers differ ONLY in where
-    the gradient sum is computed."""
+    Spark data-parallel trainer (train_lstm_meta_spark) plugs into, so
+    the two trainers differ ONLY in where the gradient sum is
+    computed."""
     rng = np.random.RandomState(seed)
-    data = list(data)
-    if shuffle_data:
-        rng.shuffle(data)
-    n_test = max(1, int(round(len(data) * test_size)))
-    if len(data) < 2:
-        raise ValueError("need at least 2 samples to split train/test")
-    test, train = data[:n_test], data[n_test:]
     n_classes = len(model.labels)
-    y_train = np.array([y for _, _, y in train])
-    y_test = np.array([y for _, _, y in test])
-    if class_weights is not None:
-        cw = np.asarray(class_weights, dtype=np.float64)
-    elif compute_class_weights:
-        cw = class_weights_balanced(y_train, n_classes)
-    else:
-        cw = None
+    train, test, cw = _split(
+        data, rng, shuffle=shuffle_data, test_size=test_size,
+        what="samples to split train/test", n_classes=n_classes,
+        class_weights=class_weights,
+        compute_class_weights=compute_class_weights)
+
+    def grad(batch):
+        if grad_fn is not None:
+            return grad_fn(model, batch, cw, emb_grad)
+        return _forward_backward(model, batch, cw, emb_grad)[:2]
 
     params = _params(model, emb_grad)
-    opt = _Adam(params, lr=lr, weight_decay=weight_decay)
-    winner: Dict = {}
-    winner_state: Dict[str, np.ndarray] = {}
-    since_winner = 0
-    for epoch in range(nepochs):
-        order = rng.permutation(len(train))
-        losses = []
-        for ofs in range(0, len(train), batch_size):
-            batch = [train[i] for i in order[ofs:ofs + batch_size]]
-            if grad_fn is None:
-                loss, grads, _ = _forward_backward(model, batch, cw,
-                                                   emb_grad)
-            else:
-                loss, grads = grad_fn(model, batch, cw, emb_grad)
-            _clip_total_norm(grads, clip_norm)
-            opt.step(grads)
-            losses.append(loss)
-        # held-out eval (loss-free forward through the scoring path)
-        preds = []
-        for ofs in range(0, len(test), 5000):
-            chunk = test[ofs:ofs + 5000]
-            lg = model.forward_id_windows([s[0] for s in chunk],
-                                          [s[1] for s in chunk])
-            preds.extend(lg.argmax(axis=1).tolist())
-        rep = _f1_report(y_test, np.array(preds), n_classes)
-        rep["epoch"] = epoch
-        rep["train_loss"] = round(float(np.mean(losses)), 6)
-        if not winner or rep[metric] > winner[metric]:
-            winner = rep
-            winner_state = {k: v.copy() for k, v in params.items()}
-            since_winner = 0
-        else:
-            since_winner += 1
-            if patience > 0 and since_winner >= patience:
-                break
-    # load the winner ("auto_save_model" reload, meta_cat.py:303-310)
-    for k, v in winner_state.items():
-        params[k][...] = v
-    winner["n_train"] = len(train)
-    winner["n_test"] = len(test)
-    winner["class_weights"] = (None if cw is None
-                               else [round(float(x), 4) for x in cw])
+    winner = _fit(
+        params, _Adam(params, lr=lr, weight_decay=weight_decay), train,
+        test, nepochs=nepochs, batch_size=batch_size, rng=rng, grad=grad,
+        clip_norm=clip_norm, n_classes=n_classes, metric=metric,
+        patience=patience, predict=_argmax_predict(
+            lambda chunk: model.forward_id_windows(
+                [s[0] for s in chunk], [s[1] for s in chunk]), 5000))
+    winner["class_weights"] = _rounded(cw)
     return winner
 
 
@@ -613,8 +677,8 @@ def spark_batch_grad(spark, model, batch: Sequence[Sample],
 def train_lstm_meta_spark(spark, model: LstmMetaModel,
                           data: Sequence[Sample], *,
                           n_shards: int = 8, **kw) -> Dict:
-    """Distributed fine-tuning of the LSTM meta head: the exact
-    train_lstm_meta loop (shuffle, weighted CE, clip, Adam, winner
+    """Distributed fine-tuning of the LSTM meta head: train_lstm_meta
+    (the one `_fit` loop: shuffle, weighted CE, clip, Adam, winner
     epoch, early stopping — reference ml_utils.train_model semantics)
     with each macro-batch's gradient computed data-parallel across the
     cluster (spark_batch_grad).  Unlike the parameter-averaging path

@@ -66,14 +66,22 @@ def fixed_heap_conf(heap: str) -> dict:
     regions) — exactly how production executors run (fixed
     spark.executor.memory); the mimalloc Arrow pool retains freed
     segments across Python-worker batches.  Not a benchmark trick: the
-    same conf ships for any 32-thread deployment of this engine."""
+    same conf ships for any 32-thread deployment of this engine.
+
+    The heap is capped at the host-derived default driver heap (half of
+    physical memory, at most 48g): a pre-touched heap larger than the
+    host's RAM kills the JVM at start."""
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "mimalloc")
+    cap = _default_driver_memory()
+    if _size_bytes(heap) > _size_bytes(cap):
+        heap = cap
     return {"spark.driver.memory": heap,
             "spark.driver.extraJavaOptions":
                 f"-Xms{heap} -XX:+AlwaysPreTouch"}
 
 
 _MIN_SHM_FREE = 2 << 30          # bytes free before tmpfs is used
+_SIZE_SHIFT = {"k": 10, "m": 20, "g": 30, "t": 40}
 _MAX_DRIVER_MEMORY = 48 << 30    # the default heap never exceeds 48g
 
 
@@ -108,6 +116,15 @@ def _default_driver_memory() -> str:
     except (ValueError, OSError):
         phys = 2 * _MAX_DRIVER_MEMORY
     return "%dm" % (min(phys // 2, _MAX_DRIVER_MEMORY) >> 20)
+
+
+def _size_bytes(size: str) -> int:
+    """A JVM memory size ("32g", "8192m", "512k", plain bytes) in
+    bytes."""
+    s = size.strip().lower()
+    if s[-1:] in _SIZE_SHIFT:
+        return int(s[:-1]) << _SIZE_SHIFT[s[-1]]
+    return int(s)
 
 
 def get_spark(app_name: str = "medcat-spark", master: str | None = None,

@@ -2816,14 +2816,24 @@ def resumable_annotate_iceberg(spark, docs, bc, out_path: str,
     unannotated ids.  ``max_docs`` bounds one commit's work, lowest
     doc_ids first (reference: checkpoint every `steps` docs,
     utils/checkpoint.py:94-110).  Returns the manifest dict (n_docs ==
-    0: nothing left to do)."""
+    0: nothing left to do).
+
+    The manifest and every snapshot are stamped with the hashes of the
+    broadcast's CDB and config, the ones that annotate.  ``config``,
+    when given, must hash like the broadcast's config (ValueError
+    before anything is written)."""
     import shutil
 
-    from medcat_spark.config import EngineConfig
     from medcat_spark.pipeline import annotate, lineage_metrics
 
-    cfg = config or EngineConfig()
-    cdb, _vocab, _cfg = bc.value
+    cdb, _vocab, cfg = bc.value
+    hashes = {"cdb-hash": cdb.content_hash(),
+              "config-hash": cfg.content_hash()}
+    if config is not None and config.content_hash() != hashes["config-hash"]:
+        raise ValueError(
+            f"config hash {config.content_hash()} is not the broadcast "
+            f"config's {hashes['config-hash']}: the KG commit would be "
+            "stamped with a config that did not annotate it")
     sink = IcebergKgSink(out_path)
     committed = sink.committed_doc_ids(spark)
     todo = docs if committed is None \
@@ -2837,8 +2847,8 @@ def resumable_annotate_iceberg(spark, docs, bc, out_path: str,
 
     manifest: Dict[str, Any] = {
         "n_docs": n_todo,
-        "cdb_hash": cdb.content_hash(),
-        "config_hash": cfg.content_hash(),
+        "cdb_hash": hashes["cdb-hash"],
+        "config_hash": hashes["config-hash"],
         "created_unix_ms": int(time.time() * 1000)}
     if n_todo == 0:
         shutil.rmtree(staged["data_dir"])
@@ -2854,8 +2864,7 @@ def resumable_annotate_iceberg(spark, docs, bc, out_path: str,
     try:
         ids = sink.publish(
             staged, ann.drop("part_id", "batch_us"), lineage_metrics(ann),
-            summary={"cdb-hash": cdb.content_hash(),
-                     "config-hash": cfg.content_hash()})
+            summary=hashes)
     finally:
         ann.unpersist()
     added = sink.table("annotations")._snapshot(ids["annotations"])

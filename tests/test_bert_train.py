@@ -533,3 +533,83 @@ def test_spark_bert_meta_trainer_matches_sequential(spark):
     for k in p_seq:
         np.testing.assert_allclose(p_dist[k], p_seq[k], atol=1e-8,
                                    err_msg=k)
+
+
+# ---------------------------------------------------------------------------
+# loop options shared by the trainers
+# ---------------------------------------------------------------------------
+
+def _meta_samples(n=24):
+    rng = np.random.RandomState(12)
+    data = []
+    for i in range(n):
+        ids = rng.randint(7, 30, size=9).tolist()
+        c = rng.randint(1, 8)
+        ids[c] = 3 if i % 3 else 4
+        data.append((ids, (c, c), int(i % 3 == 0)))
+    return data
+
+
+@pytest.mark.parametrize("kw, want", [
+    (dict(compute_class_weights=False), None),
+    (dict(class_weights=[0.5, 3.0]), [0.5, 3.0]),
+])
+def test_bert_meta_class_weight_options(kw, want):
+    from medcat_spark.functions.bert_train import train_bert_meta
+    rep = train_bert_meta(tiny_meta_model(), _meta_samples(), nepochs=2,
+                          batch_size=8, **kw)
+    assert rep["class_weights"] == want
+
+
+def test_relcat_class_weights_off_and_unshuffled():
+    """``enable_class_weights=False`` reports no weights;
+    ``shuffle_data=False`` makes the data head the test set."""
+    data = marker_task_samples(n=30)
+    rep = train_relcat(tiny_rel_model(seed=5, hidden=8, layers=1, inter=16),
+                       data, nepochs=2, batch_size=10,
+                       enable_class_weights=False, shuffle_data=False)
+    assert rep["class_weights"] is None
+    assert (rep["n_test"], rep["n_train"]) == (6, 24)
+    rep = train_relcat(tiny_rel_model(seed=5, hidden=8, layers=1, inter=16),
+                       data[1:], nepochs=1, shuffle_data=False)
+    # the test head data[1:7] holds labels 1, 2, 0, 1, 2, 0: the train
+    # rest, 23 samples, is 7 of label 0 and 8 each of labels 1 and 2
+    assert rep["class_weights"] == [round(23 / (3 * c), 4) for c in (7, 8, 8)]
+
+
+def test_token_classifier_computed_class_weights(monkeypatch):
+    """``compute_class_weights=True`` trains with the balanced weights
+    of the train split's non-ignored labels (one shuffle, test set
+    first) and evaluates unweighted."""
+    from medcat_spark.functions import bert_train
+    from medcat_spark.functions.lstm_train import class_weights_balanced
+    seen = []
+    fb = bert_train.token_classifier_forward_backward
+
+    def spy(model, batch, class_weights=None):
+        seen.append(class_weights)
+        return fb(model, batch, class_weights)
+
+    monkeypatch.setattr(bert_train, "token_classifier_forward_backward",
+                        spy)
+    rng = np.random.RandomState(6)
+    data = []
+    for _ in range(20):
+        ids = rng.randint(2, 30, size=6).tolist()
+        labels = [int(t % 5 == 0) for t in ids]
+        labels[-1] = -100
+        data.append((ids, labels))
+    rep = bert_train.train_token_classifier(
+        tiny_token_classifier(nclasses=2), data, nepochs=2, batch_size=8,
+        seed=3, compute_class_weights=True)
+    order = list(data)
+    np.random.RandomState(3).shuffle(order)
+    y = [lbl for _, labels in order[4:] for lbl in labels if lbl != -100]
+    want = class_weights_balanced(y, 2)
+    assert (rep["n_test"], rep["n_train"]) == (4, 16)
+    train_cw = [cw for cw in seen if cw is not None]
+    assert len(train_cw) == 2 * 2          # 2 batches x 2 epochs
+    for cw in train_cw:
+        np.testing.assert_array_equal(cw, want)
+    assert want[0] < 1 < want[1]           # label 1 is the rare class
+    assert len(seen) - len(train_cw) == 2  # one eval chunk per epoch

@@ -2,6 +2,7 @@
 and the model-pack round-trip (S4/S5/S6)."""
 
 import numpy as np
+import pytest
 
 from medcat_spark.config import EngineConfig
 from medcat_spark.pipeline import annotate, broadcast_model
@@ -69,6 +70,37 @@ def test_resume_processes_each_doc_once(spark, docs_df, fixture_models,
     for m in (m1, m2, m3):
         assert m["cdb_hash"] == cdb.content_hash()
         assert m["config_hash"] == EngineConfig().content_hash()
+
+
+def test_commit_stamps_the_broadcast_config(spark, docs_df, fixture_models,
+                                            tmp_path):
+    """With no ``config=``, the manifest and every snapshot carry the
+    hash of the config the broadcast annotated with, not the default
+    config's."""
+    cdb, vocab = fixture_models
+    cfg = EngineConfig(spell_check=False)
+    assert cfg.content_hash() != EngineConfig().content_hash()
+    bc = broadcast_model(spark, cdb, vocab, cfg)
+    out = str(tmp_path / "kg")
+    m = resumable_annotate_iceberg(spark, docs_df, bc, out, max_docs=5)
+    assert m["n_docs"] == 5
+    assert m["config_hash"] == cfg.content_hash()
+    for name in ("annotations", "lineage", "processed_docs"):
+        summaries = [s["summary"] for s in
+                     IcebergTable.load(f"{out}/{name}").snapshots()]
+        assert [s["config-hash"] for s in summaries] == [cfg.content_hash()]
+        assert [s["cdb-hash"] for s in summaries] == [cdb.content_hash()]
+
+
+def test_mismatched_config_raises_before_any_write(spark, docs_df,
+                                                   fixture_models, tmp_path):
+    cdb, vocab = fixture_models
+    bc = broadcast_model(spark, cdb, vocab, EngineConfig(spell_check=False))
+    out = tmp_path / "kg"
+    with pytest.raises(ValueError, match="config hash"):
+        resumable_annotate_iceberg(spark, docs_df, bc, str(out),
+                                   config=EngineConfig())
+    assert not out.exists() or not any(out.iterdir())
 
 
 def test_crash_after_any_write_or_append_resumes_exactly_once(

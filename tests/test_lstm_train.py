@@ -160,6 +160,70 @@ def test_two_phase_training_report():
     assert rep["phase2"]["weighted_f1"] >= rep["phase1"]["weighted_f1"] - 0.3
 
 
+def test_unshuffled_split_takes_the_head_as_test_set():
+    """``shuffle_data=False``: the first ``n_test`` samples are the test
+    set, so the balanced class weights are those of the rest, in data
+    order."""
+    data, tok2id, labels = order_task_id_samples(n_pairs=20)
+    data = sorted(data, key=lambda s: s[2])[4:]      # 16 of 0, 20 of 1
+    model = init_lstm_meta(labels, tok2id, input_size=6, hidden_size=8,
+                           seed=2)
+    rep = train_lstm_meta(model, data, nepochs=2, batch_size=16,
+                          test_size=0.25, shuffle_data=False)
+    assert (rep["n_test"], rep["n_train"]) == (9, 27)
+    want = class_weights_balanced([s[2] for s in data[9:]], 2)
+    assert rep["class_weights"] == [round(float(x), 4) for x in want]
+    assert want[0] != want[1]          # a shuffled split would differ
+
+
+@pytest.mark.parametrize("kw, want", [
+    (dict(compute_class_weights=False), None),
+    (dict(class_weights=[0.25, 4.0]), [0.25, 4.0]),
+])
+def test_class_weight_options_reach_the_report(kw, want):
+    data, tok2id, labels = order_task_id_samples(n_pairs=20)
+    model = init_lstm_meta(labels, tok2id, input_size=6, hidden_size=8,
+                           seed=2)
+    rep = train_lstm_meta(model, data, nepochs=2, batch_size=16, **kw)
+    assert rep["class_weights"] == want
+
+
+def test_macro_f1_metric_picks_the_macro_f1_maximum(monkeypatch):
+    """``metric="macro_f1"``: the winner is the first epoch with the
+    highest held-out macro F1 among every epoch's report."""
+    from medcat_spark.functions import lstm_train
+    reports = []
+
+    def record(*a):
+        reports.append(f1_report(*a))
+        return reports[-1]
+
+    f1_report = lstm_train._f1_report
+    monkeypatch.setattr(lstm_train, "_f1_report", record)
+    data, tok2id, labels = order_task_id_samples(n_pairs=40)
+    model = init_lstm_meta(labels, tok2id, input_size=8, hidden_size=12,
+                           seed=1)
+    rep = train_lstm_meta(model, data, nepochs=12, lr=0.01, batch_size=16,
+                          test_size=0.3, metric="macro_f1", seed=4)
+    macro = [r["macro_f1"] for r in reports]
+    assert len(macro) == 12 and len(set(macro)) > 1
+    assert rep["epoch"] == macro.index(max(macro))
+    assert rep["macro_f1"] == max(macro)
+
+
+def test_engine_sources_have_one_training_loop():
+    """Every trainer (LSTM and BERT meta heads, RelCAT, the token
+    classifier) runs the one epoch loop, ``lstm_train._fit``."""
+    import pathlib
+
+    import medcat_spark
+    pkg = pathlib.Path(medcat_spark.__file__).parent
+    hits = sorted((p.relative_to(pkg).as_posix(), n)
+                  for p in pkg.rglob("*.py")
+                  for n in [p.read_text().count("for epoch in range")] if n)
+    assert hits == [("functions/lstm_train.py", 1)]
+
+
 def test_window_prep_reference_semantics():
     # offsets: "no heart attack seen" tokenized as 4 words
     offsets = [(0, 2), (3, 8), (9, 15), (16, 20)]

@@ -39,3 +39,17 @@ def test_driver_memory_is_half_of_host_capped(monkeypatch, phys, heap):
     assert session.get_spark("conf")["spark.driver.memory"] == heap
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
     assert session.get_spark("conf")["spark.driver.memory"] == "3g"
+
+
+@pytest.mark.parametrize("heap, want", [
+    ("32g", "8192m"),                            # capped at half the host
+    ("2g", "2g"),                                # under the cap: as asked
+])
+def test_fixed_heap_is_capped_at_the_host_default(monkeypatch, heap, want):
+    sysconf = {"SC_PHYS_PAGES": (16 << 30) // 4096, "SC_PAGE_SIZE": 4096}
+    monkeypatch.setattr(session.os, "sysconf", sysconf.__getitem__)
+    monkeypatch.setenv("ARROW_DEFAULT_MEMORY_POOL", session.os.environ.get(
+        "ARROW_DEFAULT_MEMORY_POOL", "mimalloc"))
+    assert session.fixed_heap_conf(heap) == {
+        "spark.driver.memory": want,
+        "spark.driver.extraJavaOptions": f"-Xms{want} -XX:+AlwaysPreTouch"}
