@@ -30,8 +30,8 @@ from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 
-from medcat_spark.functions.scorer import (decide, pad_ids, predict_chunked,
-                                           score)
+from medcat_spark.functions.scorer import (center_spans, decide, max_pool,
+                                           pad_ids, predict_chunked, score)
 
 _erf = np.frompyfunc(math.erf, 1, 1)
 
@@ -42,10 +42,16 @@ def gelu(x: np.ndarray) -> np.ndarray:
 
 
 def layer_norm(x: np.ndarray, w: np.ndarray, b: np.ndarray,
-               eps: float = 1e-12) -> np.ndarray:
+               eps: float = 1e-12, tape: Optional[list] = None
+               ) -> np.ndarray:
+    """LayerNorm over the last axis; with a ``tape`` list, appends the
+    ``(xhat, 1/std)`` pair its backward reads."""
     mu = x.mean(axis=-1, keepdims=True)
-    var = x.var(axis=-1, keepdims=True)
-    return (x - mu) / np.sqrt(var + eps) * w + b
+    std = np.sqrt(x.var(axis=-1, keepdims=True) + eps)
+    xhat = (x - mu) / std
+    if tape is not None:
+        tape.append((xhat, 1.0 / std))
+    return xhat * w + b
 
 
 def softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
@@ -72,7 +78,10 @@ class BertLayer:
             p["output.LayerNorm.bias"]
         self.n_heads = n_heads
 
-    def forward(self, x: np.ndarray, ext_mask: np.ndarray) -> np.ndarray:
+    def forward(self, x: np.ndarray, ext_mask: np.ndarray,
+                tape: Optional[dict] = None) -> np.ndarray:
+        """One encoder layer; a ``tape`` dict receives every
+        intermediate ``bert_train.encoder_backward`` reads."""
         B, L, H = x.shape
         nh = self.n_heads
         dh = H // nh
@@ -83,15 +92,22 @@ class BertLayer:
         q = split(x @ self.q_w.T + self.q_b)
         k = split(x @ self.k_w.T + self.k_b)
         v = split(x @ self.v_w.T + self.v_b)
-        scores = q @ k.transpose(0, 1, 3, 2) / math.sqrt(dh)
-        scores = scores + ext_mask          # (B, 1, 1, L) additive
-        ctx = softmax(scores) @ v           # (B, nh, L, dh)
-        ctx = ctx.transpose(0, 2, 1, 3).reshape(B, L, H)
+        # (B, 1, 1, L) additive mask
+        probs = softmax(q @ k.transpose(0, 1, 3, 2) / math.sqrt(dh)
+                        + ext_mask)
+        ctx = (probs @ v).transpose(0, 2, 1, 3).reshape(B, L, H)
+        lns = None if tape is None else []
         attn_out = layer_norm(ctx @ self.ao_w.T + self.ao_b + x,
-                              self.aln_w, self.aln_b)
-        inter = gelu(attn_out @ self.i_w.T + self.i_b)
-        return layer_norm(inter @ self.o_w.T + self.o_b + attn_out,
-                          self.oln_w, self.oln_b)
+                              self.aln_w, self.aln_b, tape=lns)
+        inter_pre = attn_out @ self.i_w.T + self.i_b
+        ig = gelu(inter_pre)
+        y = layer_norm(ig @ self.o_w.T + self.o_b + attn_out,
+                       self.oln_w, self.oln_b, tape=lns)
+        if tape is not None:
+            tape.update(x=x, q=q, k=k, v=v, probs=probs, ctx=ctx,
+                        ln1=lns[0], attn_out=attn_out, inter_pre=inter_pre,
+                        ig=ig, ln2=lns[1])
+        return y
 
 
 class BertEncoder:
@@ -143,26 +159,35 @@ class BertEncoder:
 
     def forward(self, input_ids: np.ndarray,
                 attention_mask: Optional[np.ndarray] = None,
-                token_type_ids: Optional[np.ndarray] = None
+                token_type_ids: Optional[np.ndarray] = None,
+                tape: Optional[dict] = None
                 ) -> Tuple[np.ndarray, Optional[np.ndarray]]:
-        """→ (sequence_output (B, L, H), pooled_output (B, H) or None)."""
+        """→ (sequence_output (B, L, H), pooled_output (B, H) or None).
+        A ``tape`` dict receives the inputs, every layer's tape and both
+        outputs: what ``bert_train.encoder_backward`` reads."""
         ids = np.asarray(input_ids, dtype=np.int64)
         B, L = ids.shape
         if attention_mask is None:
             attention_mask = np.ones((B, L))
         if token_type_ids is None:
             token_type_ids = np.zeros((B, L), dtype=np.int64)
+        ttype = np.asarray(token_type_ids, dtype=np.int64)
         x = (self.word[ids] + self.pos[np.arange(L)][None, :, :]
-             + self.ttype[np.asarray(token_type_ids, dtype=np.int64)])
-        x = layer_norm(x, self.eln_w, self.eln_b)
+             + self.ttype[ttype])
+        eln = None if tape is None else []
+        x = layer_norm(x, self.eln_w, self.eln_b, tape=eln)
         # HF extended mask: (1 - m) * -1e4 (not -inf), broadcast over heads
         ext = (1.0 - np.asarray(attention_mask, dtype=np.float64)
                )[:, None, None, :] * -10000.0
-        for layer in self.layers:
-            x = layer.forward(x, ext)
+        layer_tapes = [None if tape is None else {} for _ in self.layers]
+        for layer, lt in zip(self.layers, layer_tapes):
+            x = layer.forward(x, ext, lt)
         pooled = None
         if self.pooler_w is not None:
             pooled = np.tanh(x[:, 0] @ self.pooler_w.T + self.pooler_b)
+        if tape is not None:
+            tape.update(ids=ids, ttype=ttype, eln=eln[0],
+                        layers=layer_tapes, seq=x, pooled=pooled)
         return x, pooled
 
 
@@ -178,12 +203,18 @@ def annotation_tag_pool(seq: np.ndarray, input_ids: np.ndarray,
     ValueError so a malformed batch fails loudly instead of silently
     diverging.
     """
-    ids = np.asarray(input_ids)
-    B = seq.shape[0]
-    out = np.empty((B, seq.shape[2]), dtype=seq.dtype)
-    for b in range(B):
-        s_pos = np.flatnonzero(ids[b] == start_tag)
-        e_pos = np.flatnonzero(ids[b] == end_tag)
+    return max_pool(seq, tag_spans(input_ids, start_tag, end_tag))
+
+
+def tag_spans(input_ids: np.ndarray, start_tag: int,
+              end_tag: int) -> List[Tuple[int, int]]:
+    """Per row, the ``(lo, hi)`` slice strictly between the FIRST
+    start and end markers: what :func:`annotation_tag_pool` pools and
+    its backward scatters into."""
+    spans = []
+    for b, row in enumerate(np.asarray(input_ids)):
+        s_pos = np.flatnonzero(row == start_tag)
+        e_pos = np.flatnonzero(row == end_tag)
         if s_pos.size == 0 or e_pos.size == 0:
             raise ValueError(
                 f"annotation schema tags {start_tag}/{end_tag} missing "
@@ -193,8 +224,8 @@ def annotation_tag_pool(seq: np.ndarray, input_ids: np.ndarray,
             raise ValueError(
                 f"no entity tokens between markers {start_tag}..{end_tag} "
                 f"in row {b} (positions {s}..{e})")
-        out[b] = seq[b, s + 1:e].max(axis=0)
-    return out
+        spans.append((s + 1, e))
+    return spans
 
 
 # Per-chunk byte budget for the (rows, heads, L, L) attention temporary.
@@ -275,12 +306,17 @@ class _RelCatHead:
         return np.concatenate([lead, e1, e2], axis=1)
 
     def logits(self, input_ids: np.ndarray, e1_e2_start: np.ndarray,
-               attention_mask: Optional[np.ndarray] = None) -> np.ndarray:
-        seq, lead = self._encode(input_ids, attention_mask)
+               attention_mask: Optional[np.ndarray] = None,
+               tape: Optional[dict] = None) -> np.ndarray:
+        """Pair logits; a ``tape`` dict receives the encoder's tape (only
+        the BERT backbone records one) and the fc inputs."""
+        seq, lead = self._encode(input_ids, attention_mask, tape)
         x = self._pooled_concat(seq, lead, input_ids, e1_e2_start)
-        x = x @ self.fc1_w.T + self.fc1_b
-        x = x @ self.fc2_w.T + self.fc2_b
-        return x @ self.fc3_w.T + self.fc3_b
+        h1 = x @ self.fc1_w.T + self.fc1_b
+        h2 = h1 @ self.fc2_w.T + self.fc2_b
+        if tape is not None:
+            tape.update(x=x, h1=h1, h2=h2)
+        return h2 @ self.fc3_w.T + self.fc3_b
 
     def predict(self, input_ids, e1_e2_start, attention_mask=None):
         return chunked_pair_predict(self, input_ids, e1_e2_start,
@@ -303,8 +339,8 @@ class RelCatBertModel(_RelCatHead):
                         "fc3.weight", "fc3.bias")}
         return cls(enc, fc, labels)
 
-    def _encode(self, input_ids, attention_mask):
-        return self.encoder.forward(input_ids, attention_mask)
+    def _encode(self, input_ids, attention_mask, tape=None):
+        return self.encoder.forward(input_ids, attention_mask, tape=tape)
 
 
 class BertMetaModel:
@@ -343,22 +379,32 @@ class BertMetaModel:
               if k.startswith(("fc1.", "fc2.", "fc3.", "fc4."))}
         return cls(enc, fc, labels, use_fc2=use_fc2, use_fc3=use_fc3, **kw)
 
-    def forward_id_windows(self, id_windows, centers) -> np.ndarray:
+    @property
+    def relu_layers(self) -> List[str]:
+        """The fc(+relu) layers ahead of fc4, in order."""
+        names = ["fc1"]
+        if self.use_fc2:
+            names.append("fc2")
+            if self.use_fc3:
+                names.append("fc3")
+        return names
+
+    def forward_id_windows(self, id_windows, centers,
+                           tape: Optional[dict] = None) -> np.ndarray:
+        """Logits (B, C); a ``tape`` dict receives the encoder's tape,
+        the center ``spans`` and the fc inputs ``acts``."""
         ids, mask = pad_ids(id_windows, self.pad_id, self.pad_id,
                             self.encoder.word.shape[0])
-        seq, pooled = self.encoder.forward(ids, mask)
-        x = np.empty((len(id_windows), seq.shape[2]))
-        for b, (cf, cl) in enumerate(centers):
-            x[b] = seq[b, cf:cl + 1].max(axis=0)
-        x = np.concatenate([x, pooled], axis=1)
-        x = np.maximum(0.0, x @ self.fc["fc1.weight"].T
-                       + self.fc["fc1.bias"])
-        if self.use_fc2:
-            x = np.maximum(0.0, x @ self.fc["fc2.weight"].T
-                           + self.fc["fc2.bias"])
-            if self.use_fc3:
-                x = np.maximum(0.0, x @ self.fc["fc3.weight"].T
-                               + self.fc["fc3.bias"])
+        seq, pooled = self.encoder.forward(ids, mask, tape=tape)
+        spans = center_spans(id_windows, centers)
+        x = np.concatenate([max_pool(seq, spans), pooled], axis=1)
+        acts = [x]
+        for name in self.relu_layers:
+            x = np.maximum(0.0, x @ self.fc[f"{name}.weight"].T
+                           + self.fc[f"{name}.bias"])
+            acts.append(x)
+        if tape is not None:
+            tape.update(spans=spans, acts=acts)
         return x @ self.fc["fc4.weight"].T + self.fc["fc4.bias"]
 
     def predict_batch_ids(self, id_windows, centers):
@@ -384,10 +430,17 @@ class BertTokenClassifier:
         return cls(enc, np.asarray(sd["classifier.weight"], np.float64),
                    np.asarray(sd["classifier.bias"], np.float64), labels)
 
+    def logits(self, input_ids: np.ndarray,
+               attention_mask: Optional[np.ndarray] = None,
+               tape: Optional[dict] = None) -> np.ndarray:
+        """Per-token logits (B, L, C); a ``tape`` dict receives the
+        encoder's tape."""
+        seq, _ = self.encoder.forward(input_ids, attention_mask, tape=tape)
+        return seq @ self.cls_w.T + self.cls_b
+
     def predict_tokens(self, input_ids: np.ndarray,
                        attention_mask: Optional[np.ndarray] = None):
-        seq, _ = self.encoder.forward(input_ids, attention_mask)
-        lg = seq @ self.cls_w.T + self.cls_b
+        lg = self.logits(input_ids, attention_mask)
         best = lg.argmax(axis=2)
         e = np.exp(lg - lg.max(axis=2, keepdims=True))
         conf = np.take_along_axis(

@@ -25,10 +25,14 @@ runs the one fine-tuning loop ``lstm_train._fit`` behind the one
 ``_split`` prologue; each keeps only its params, optimizer, gradient,
 held-out eval chunking, winner metric and extra report keys.
 
-The analytic gradient for EVERY parameter tensor — embeddings,
-attention q/k/v/output, both LayerNorms, GELU intermediate, pooler,
-annotation-tag max-pools, fc1-3 — is certified against numerical
-differentiation in tests/test_bert_train.py.
+Each head has one forward, the scorer's (:mod:`bert_np`): a trainer
+runs it with a ``tape`` dict, takes the weighted CE, and backprops over
+the model's taped forward (``encoder_backward`` plus the head's fc and
+pool backward), so the loss and the held-out eval score exactly the
+function the scorer deploys.  The analytic gradient for EVERY parameter
+tensor — embeddings, attention q/k/v/output, both LayerNorms, GELU
+intermediate, pooler, annotation-tag max-pools, fc1-3 — is certified
+against numerical differentiation in tests/test_bert_train.py.
 
 Scale posture: gold relation annotations are driver-scale (same
 argument as lstm_train); window prep distributes via mapInArrow, the
@@ -46,11 +50,12 @@ import math
 import numpy as np
 
 from medcat_spark import worker
-from medcat_spark.functions.bert_np import (BertEncoder, BertLayer,
-                                            RelCatBertModel, _erf, gelu)
+from medcat_spark.functions.bert_np import (BertEncoder, RelCatBertModel,
+                                            _erf, tag_spans)
 from medcat_spark.functions.lstm_train import (_Adam, _argmax_predict, _fit,
-                                               _rounded, _split, _weighted_ce,
-                                               spark_batch_grad)
+                                               _labels, _rounded, _split,
+                                               _max_pool_bwd, _weighted_ce,
+                                               _window_logits, spark_batch_grad)
 from medcat_spark.functions.scorer import pad_ids
 
 # sample = (marked token ids, (p1, p2) marker starts, label id)
@@ -71,15 +76,6 @@ def _linear_bwd(dy: np.ndarray, x: np.ndarray, W: np.ndarray):
     return dy @ W, dy2.T @ x2, dy2.sum(axis=0)
 
 
-def _layer_norm_fwd(x: np.ndarray, w: np.ndarray, b: np.ndarray,
-                    eps: float = 1e-12):
-    mu = x.mean(axis=-1, keepdims=True)
-    var = x.var(axis=-1, keepdims=True)
-    inv = 1.0 / np.sqrt(var + eps)
-    xhat = (x - mu) * inv
-    return xhat * w + b, (xhat, inv)
-
-
 def _layer_norm_bwd(dy: np.ndarray, cache, w: np.ndarray):
     xhat, inv = cache
     axes = tuple(range(dy.ndim - 1))
@@ -98,57 +94,14 @@ def _gelu_bwd(dy: np.ndarray, x: np.ndarray) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# encoder forward with cache + backward
-
-
-def encoder_forward_cache(enc: BertEncoder, ids: np.ndarray,
-                          mask: np.ndarray):
-    """BertEncoder.forward with every intermediate the backward needs."""
-    B, L = ids.shape
-    ttype = np.zeros((B, L), dtype=np.int64)
-    x_emb = (enc.word[ids] + enc.pos[np.arange(L)][None, :, :]
-             + enc.ttype[ttype])
-    x, eln_cache = _layer_norm_fwd(x_emb, enc.eln_w, enc.eln_b)
-    ext = (1.0 - mask)[:, None, None, :] * -10000.0
-    layer_caches = []
-    for layer in enc.layers:
-        nh = layer.n_heads
-        H = x.shape[2]
-        dh = H // nh
-
-        def split(t):
-            return t.reshape(B, L, nh, dh).transpose(0, 2, 1, 3)
-
-        q = split(x @ layer.q_w.T + layer.q_b)
-        k = split(x @ layer.k_w.T + layer.k_b)
-        v = split(x @ layer.v_w.T + layer.v_b)
-        scores = q @ k.transpose(0, 1, 3, 2) / math.sqrt(dh) + ext
-        e = np.exp(scores - scores.max(axis=-1, keepdims=True))
-        probs = e / e.sum(axis=-1, keepdims=True)
-        ctx = (probs @ v).transpose(0, 2, 1, 3).reshape(B, L, H)
-        a_lin = ctx @ layer.ao_w.T + layer.ao_b
-        attn_out, ln1 = _layer_norm_fwd(a_lin + x, layer.aln_w, layer.aln_b)
-        inter_pre = attn_out @ layer.i_w.T + layer.i_b
-        ig = gelu(inter_pre)
-        o_lin = ig @ layer.o_w.T + layer.o_b
-        y, ln2 = _layer_norm_fwd(o_lin + attn_out, layer.oln_w, layer.oln_b)
-        layer_caches.append(
-            dict(x=x, q=q, k=k, v=v, probs=probs, ctx=ctx, ln1=ln1,
-                 attn_out=attn_out, inter_pre=inter_pre, ig=ig, ln2=ln2))
-        x = y
-    pooled = pooled_pre = None
-    if enc.pooler_w is not None:
-        pooled_pre = x[:, 0] @ enc.pooler_w.T + enc.pooler_b
-        pooled = np.tanh(pooled_pre)
-    cache = dict(ids=ids, ttype=ttype, eln=eln_cache, layers=layer_caches,
-                 seq=x, pooled=pooled)
-    return x, pooled, cache
+# encoder backward over BertEncoder.forward's tape
 
 
 def encoder_backward(enc: BertEncoder, cache, dseq: np.ndarray,
                      dpooled: Optional[np.ndarray]
                      ) -> Dict[str, np.ndarray]:
-    """Gradients for every encoder parameter, HF state-dict key names."""
+    """Gradients for every encoder parameter, HF state-dict key names,
+    from the ``cache`` a taped ``BertEncoder.forward`` filled."""
     grads: Dict[str, np.ndarray] = {}
     dx = np.array(dseq, copy=True)
     if dpooled is not None and enc.pooler_w is not None:
@@ -229,65 +182,44 @@ def encoder_backward(enc: BertEncoder, cache, dseq: np.ndarray,
 
 
 # ---------------------------------------------------------------------------
-# RelCat head: forward cache + backward
+# RelCat head: backward over the taped forward
+
+
+def _pair_inputs(batch: Sequence[Sample]):
+    """(ids, e1_e2_start, mask) of a relation minibatch, right-padded."""
+    ids, mask = pad_ids([w for w, _, _ in batch])
+    return ids, np.array([p for _, p, _ in batch], dtype=np.int64), mask
 
 
 def relcat_forward_backward(model: RelCatBertModel, batch: Sequence[Sample],
                             class_weights: Optional[np.ndarray]):
     """Weighted-CE loss + gradients for the full RelCAT model over one
     minibatch of marked sequences.  Returns (loss, grads, logits)."""
-    B = len(batch)
-    ids, mask = pad_ids([w for w, _, _ in batch])
-    starts = np.array([p for _, p, _ in batch], dtype=np.int64)
-    y = np.array([lbl for _, _, lbl in batch], dtype=np.int64)
-    seq, pooled, cache = encoder_forward_cache(model.encoder, ids, mask)
-    H = seq.shape[2]
-    tags = getattr(model, "tag_ids", None)
-    pool_idx = []            # per entity: (rows, argmax positions)
-    if tags and len(tags) >= 4:
-        feats = [pooled]
-        for st, en in ((tags[0], tags[1]), (tags[2], tags[3])):
-            t = np.empty((B, H))
-            am = np.empty((B, H), dtype=np.int64)
-            for b in range(B):
-                s = int(np.flatnonzero(ids[b] == st)[0])
-                e = int(np.flatnonzero(ids[b] == en)[0])
-                span = seq[b, s + 1:e]
-                am[b] = span.argmax(axis=0) + s + 1
-                t[b] = span.max(axis=0)
-            feats.append(t)
-            pool_idx.append(am)
-        x = np.concatenate(feats, axis=1)
-    else:
-        e1 = seq[np.arange(B), starts[:, 0]]
-        e2 = seq[np.arange(B), starts[:, 1]]
-        x = np.concatenate([pooled, e1, e2], axis=1)
-    h1 = x @ model.fc1_w.T + model.fc1_b
-    h2 = h1 @ model.fc2_w.T + model.fc2_b
-    logits = h2 @ model.fc3_w.T + model.fc3_b
-
-    loss, dlogits = _weighted_ce(logits, y, class_weights)
+    ids, starts, mask = _pair_inputs(batch)
+    tape: Dict = {}
+    logits = model.logits(ids, starts, mask, tape)
+    loss, dlogits = _weighted_ce(logits, _labels(batch), class_weights)
 
     grads: Dict[str, np.ndarray] = {}
     dh2, grads["fc3.weight"], grads["fc3.bias"] = _linear_bwd(
-        dlogits, h2, model.fc3_w)
+        dlogits, tape["h2"], model.fc3_w)
     dh1, grads["fc2.weight"], grads["fc2.bias"] = _linear_bwd(
-        dh2, h1, model.fc2_w)
+        dh2, tape["h1"], model.fc2_w)
     dxcat, grads["fc1.weight"], grads["fc1.bias"] = _linear_bwd(
-        dh1, x, model.fc1_w)
-    dpooled = dxcat[:, :H]
+        dh1, tape["x"], model.fc1_w)
+    seq = tape["seq"]
+    B, _, H = seq.shape
     dseq = np.zeros_like(seq)
-    if pool_idx:
-        rows = np.repeat(np.arange(B), H)
-        cols = np.tile(np.arange(H), B)
-        for ei, am in enumerate(pool_idx):
-            dpart = dxcat[:, H * (ei + 1):H * (ei + 2)]
-            np.add.at(dseq, (rows, am.ravel(), cols), dpart.ravel())
+    tags = model.tag_ids
+    if tags and len(tags) >= 4:
+        for ei, (st, en) in enumerate(((tags[0], tags[1]),
+                                       (tags[2], tags[3])), start=1):
+            _max_pool_bwd(dseq, seq, tag_spans(ids, st, en),
+                          dxcat[:, H * ei:H * (ei + 1)])
     else:
         np.add.at(dseq, (np.arange(B), starts[:, 0]), dxcat[:, H:2 * H])
         np.add.at(dseq, (np.arange(B), starts[:, 1]), dxcat[:, 2 * H:3 * H])
-    enc_grads = encoder_backward(model.encoder, cache, dseq, dpooled)
-    grads.update(enc_grads)
+    grads.update(encoder_backward(model.encoder, tape, dseq, dxcat[:, :H]))
     return loss, grads, logits
 
 
@@ -394,8 +326,7 @@ def train_relcat(model: RelCatBertModel, data: Sequence[Sample], *,
         rng=rng, grad=grad, clip_norm=max_grad_norm, n_classes=n_classes,
         metric="macro_f1", patience=patience, on_epoch=multistep_lr,
         predict=_argmax_predict(
-            lambda chunk: relcat_forward_backward(model, chunk, None)[2],
-            256))
+            lambda chunk: model.logits(*_pair_inputs(chunk)), 256))
     winner["class_weights"] = _rounded(cw)
     return winner
 
@@ -521,61 +452,30 @@ def bert_meta_forward_backward(model, batch, class_weights):
     """Loss + gradients for the full BertMetaModel: encoder → center
     max-pool ⊕ pooled CLS → fc1(+relu)[→fc2(+relu)[→fc3(+relu)]] → fc4.
     Returns (loss, grads, logits); grad keys = bert_meta_params keys."""
-    B = len(batch)
-    ids, mask = pad_ids([w for w, _, _ in batch], model.pad_id, model.pad_id,
-                        model.encoder.word.shape[0])
-    centers = [(cf, min(cl, len(w) - 1)) for w, (cf, cl), _ in batch]
-    y = np.array([lbl for _, _, lbl in batch], dtype=np.int64)
-    seq, pooled, cache = encoder_forward_cache(model.encoder, ids, mask)
-    H = seq.shape[2]
-    pool = np.empty((B, H))
-    argmx = np.empty((B, H), dtype=np.int64)
-    for b, (cf, cl) in enumerate(centers):
-        span = seq[b, cf:cl + 1]
-        argmx[b] = span.argmax(axis=0) + cf
-        pool[b] = span.max(axis=0)
-    x = np.concatenate([pool, pooled], axis=1)
-    # fc chain with relu caches
-    acts = [x]
-    chain = ["fc1"]
-    if model.use_fc2:
-        chain.append("fc2")
-        if model.use_fc3:
-            chain.append("fc3")
-    h = x
-    for name in chain:
-        h = np.maximum(0.0, h @ model.fc[f"{name}.weight"].T
-                       + model.fc[f"{name}.bias"])
-        acts.append(h)
-    logits = h @ model.fc["fc4.weight"].T + model.fc["fc4.bias"]
+    tape: Dict = {}
+    logits = _window_logits(model, batch, tape)
+    loss, dlogits = _weighted_ce(logits, _labels(batch), class_weights)
 
-    loss, dlogits = _weighted_ce(logits, y, class_weights)
-
+    acts = tape["acts"]
     grads: Dict[str, np.ndarray] = {}
     dh, grads["fc4.weight"], grads["fc4.bias"] = _linear_bwd(
         dlogits, acts[-1], model.fc["fc4.weight"])
-    for i in range(len(chain) - 1, -1, -1):
-        name = chain[i]
+    for i in range(len(acts) - 2, -1, -1):
+        name = model.relu_layers[i]
         dh = dh * (acts[i + 1] > 0)            # relu
         dh, grads[f"{name}.weight"], grads[f"{name}.bias"] = _linear_bwd(
             dh, acts[i], model.fc[f"{name}.weight"])
-    dpool, dpooled = dh[:, :H], dh[:, H:]
+    seq = tape["seq"]
+    H = seq.shape[2]
     dseq = np.zeros_like(seq)
-    rows = np.repeat(np.arange(B), H)
-    cols = np.tile(np.arange(H), B)
-    np.add.at(dseq, (rows, argmx.ravel(), cols), dpool.ravel())
-    grads.update(encoder_backward(model.encoder, cache, dseq, dpooled))
+    _max_pool_bwd(dseq, seq, tape["spans"], dh[:, :H])
+    grads.update(encoder_backward(model.encoder, tape, dseq, dh[:, H:]))
     return loss, grads, logits
 
 
 def bert_meta_params(model) -> Dict[str, np.ndarray]:
     ps = encoder_params(model.encoder)
-    names = ["fc1", "fc4"]
-    if model.use_fc2:
-        names.append("fc2")
-        if model.use_fc3:
-            names.append("fc3")
-    for n in names:
+    for n in model.relu_layers + ["fc4"]:
         ps[f"{n}.weight"] = model.fc[f"{n}.weight"]
         ps[f"{n}.bias"] = model.fc[f"{n}.bias"]
     return ps
@@ -610,8 +510,7 @@ def train_bert_meta(model, data, *, nepochs: int = 50, lr: float = 1e-4,
         nepochs=nepochs, batch_size=batch_size, rng=rng, grad=grad,
         clip_norm=clip_norm, n_classes=n_classes, metric=metric,
         patience=patience, predict=_argmax_predict(
-            lambda chunk: bert_meta_forward_backward(model, chunk, None)[2],
-            256))
+            lambda chunk: _window_logits(model, chunk), 256))
     winner["class_weights"] = _rounded(cw)
     return winner
 
@@ -630,8 +529,8 @@ def token_classifier_forward_backward(model, batch, class_weights=None):
     y = np.full(ids.shape, -100, dtype=np.int64)
     for r, (_w, labels) in enumerate(batch):
         y[r, :len(labels)] = labels
-    seq, _pooled, cache = encoder_forward_cache(model.encoder, ids, mask)
-    logits = seq @ model.cls_w.T + model.cls_b          # (B, L, C)
+    tape: Dict = {}
+    logits = model.logits(ids, mask, tape)              # (B, L, C)
     C = logits.shape[2]
     flat_lg = logits.reshape(-1, C)
     flat_y = y.reshape(-1)
@@ -654,8 +553,8 @@ def token_classifier_forward_backward(model, batch, class_weights=None):
     dlogits = dflat.reshape(logits.shape)
     grads: Dict[str, np.ndarray] = {}
     dseq, grads["classifier.weight"], grads["classifier.bias"] = \
-        _linear_bwd(dlogits, seq, model.cls_w)
-    grads.update(encoder_backward(model.encoder, cache, dseq, None))
+        _linear_bwd(dlogits, tape["seq"], model.cls_w)
+    grads.update(encoder_backward(model.encoder, tape, dseq, None))
     return loss, grads, logits
 
 
@@ -693,7 +592,7 @@ def train_token_classifier(model, data, *, nepochs: int = 10,
         yt, yp = [], []
         for ofs in range(0, len(test), batch_size):
             chunk = test[ofs:ofs + batch_size]
-            _, _, lg = token_classifier_forward_backward(model, chunk)
+            lg = model.logits(*pad_ids([w for w, _ in chunk]))
             for r, (w, labels) in enumerate(chunk):
                 for c, lbl in enumerate(labels):
                     if lbl != -100:

@@ -185,7 +185,9 @@ class RelCatLlamaModel(_RelCatHead):
               if k.startswith(("fc1.", "fc2.", "fc3.", "llama_pooler."))}
         return cls(enc, fc, labels)
 
-    def _encode(self, input_ids, attention_mask):
+    def _encode(self, input_ids, attention_mask, tape=None):
+        if tape is not None:
+            raise NotImplementedError("the Llama RelCAT head has no trainer")
         seq = self.encoder.forward(input_ids, attention_mask)
         return seq, np.tanh(seq[:, 0] @ self.pool_w.T + self.pool_b)
 

@@ -32,7 +32,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from medcat_spark.functions.meta_model import sql_decide, sql_mentions
-from medcat_spark.functions.scorer import pad_ids, predict_chunked, score
+from medcat_spark.functions.scorer import (center_spans, max_pool, pad_ids,
+                                           predict_chunked, score)
 
 CNTX_LEFT = 2
 CNTX_RIGHT = 2
@@ -52,8 +53,10 @@ class LstmCell:
         self.b = (b_ih + b_hh).astype(np.float64)    # (4H,)
         self.H = W_hh.shape[1]
 
-    def step(self, x_t: np.ndarray, h: np.ndarray, c: np.ndarray):
-        """One timestep over a batch: gates in torch order i, f, g, o."""
+    def step(self, x_t: np.ndarray, h: np.ndarray, c: np.ndarray,
+             tape: Optional[list] = None):
+        """One timestep over a batch: gates in torch order i, f, g, o.
+        A ``tape`` list is extended by the step's inputs and gates."""
         pre = x_t @ self.W_ih.T + h @ self.W_hh.T + self.b   # (B, 4H)
         H = self.H
         i = _sigmoid(pre[:, 0 * H:1 * H])
@@ -61,14 +64,18 @@ class LstmCell:
         g = np.tanh(pre[:, 2 * H:3 * H])
         o = _sigmoid(pre[:, 3 * H:4 * H])
         c_new = f * c + i * g
-        h_new = o * np.tanh(c_new)
-        return h_new, c_new
+        tc = np.tanh(c_new)
+        if tape is not None:
+            tape += (h, c, i, f, g, o, c_new, tc)
+        return o * tc, c_new
 
 
 def _run_direction(X: np.ndarray, mask: np.ndarray, cell: LstmCell,
-                   reverse: bool) -> np.ndarray:
+                   reverse: bool, tape: Optional[list] = None) -> np.ndarray:
     """Full output sequence (B, L, H) with packed-sequence semantics
-    (suffix padding; see module docstring)."""
+    (suffix padding; see module docstring).  A ``tape`` list gets one
+    ``[t, mask_t, *step tape]`` record per step, in run order: what
+    ``lstm_train._backward_dir`` reads."""
     B, L, _ = X.shape
     H = cell.H
     h = np.zeros((B, H))
@@ -77,7 +84,10 @@ def _run_direction(X: np.ndarray, mask: np.ndarray, cell: LstmCell,
     steps = range(L - 1, -1, -1) if reverse else range(L)
     for t in steps:
         m = mask[:, t:t + 1]
-        h_new, c_new = cell.step(X[:, t], h, c)
+        rec = None if tape is None else [t, m]
+        h_new, c_new = cell.step(X[:, t], h, c, rec)
+        if tape is not None:
+            tape.append(rec)
         h = m * h_new + (1.0 - m) * h
         c = m * c_new + (1.0 - m) * c
         out[:, t] = h * m        # padded positions read as 0 (pad_packed)
@@ -186,18 +196,29 @@ class LstmMetaModel:
 
     # -- token-id path (BBPE token space, reference semantics) ----------
     def forward_id_windows(self, id_windows: Sequence[Sequence[int]],
-                           centers: Sequence[Tuple[int, int]]) -> np.ndarray:
+                           centers: Sequence[Tuple[int, int]],
+                           tape: Optional[dict] = None) -> np.ndarray:
+        """Logits (B, C); a ``tape`` dict receives the padded ``ids``,
+        per layer ``(input, (forward, backward) direction tapes)``, the
+        last layer's output ``seq``, the center ``spans`` and the
+        ``pooled`` vector."""
         ids, mask = pad_ids(id_windows, self.pad_id, self.unk_id,
                             self.E.shape[0])
         X = self.E[ids]
+        layer_tapes = []
         for fwd, bwd in self.layers:
-            outs = [_run_direction(X, mask, fwd, reverse=False)]
+            recs = (None, None) if tape is None else ([], [])
+            outs = [_run_direction(X, mask, fwd, False, recs[0])]
             if bwd is not None:
-                outs.append(_run_direction(X, mask, bwd, reverse=True))
+                outs.append(_run_direction(X, mask, bwd, True, recs[1]))
+            if tape is not None:
+                layer_tapes.append((X, recs))
             X = np.concatenate(outs, axis=2) if len(outs) > 1 else outs[0]
-        pooled = np.empty((len(id_windows), X.shape[2]))
-        for b, (cf, cl) in enumerate(centers):
-            pooled[b] = X[b, cf:cl + 1].max(axis=0)
+        spans = center_spans(id_windows, centers)
+        pooled = max_pool(X, spans)
+        if tape is not None:
+            tape.update(ids=ids, layers=layer_tapes, seq=X, spans=spans,
+                        pooled=pooled)
         return pooled @ self.fc_W.T + self.fc_b
 
     def predict_batch_ids(self, id_windows: Sequence[Sequence[int]],

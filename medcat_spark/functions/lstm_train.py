@@ -31,7 +31,10 @@ without torch:
     ``patience>0`` stops after that many epochs without a new winner
     (``patience=0`` reproduces the reference exactly).
 
-The BPTT gradient is verified against numerical differentiation in
+BPTT runs backward over the model's taped forward: the loss is taken
+on ``LstmMetaModel.forward_id_windows`` itself, called with a ``tape``
+dict that records each step's gates, so training and scoring share one
+forward.  The gradient is verified against numerical differentiation in
 ``tests/test_lstm_train.py``; the trained head round-trips through
 ``write_reference_meta_component`` (torch-zip ``model.dat``) back into
 the existing ``meta_lstm_torch`` Spark scoring plan.
@@ -52,7 +55,6 @@ import numpy as np
 
 from medcat_spark import worker
 from medcat_spark.functions.lstm_meta import LstmCell, LstmMetaModel
-from medcat_spark.functions.scorer import pad_ids
 
 # sample = (window token ids, (center_first, center_last), label id)
 Sample = Tuple[List[int], Tuple[int, int], int]
@@ -258,38 +260,7 @@ def init_lstm_meta(labels: Sequence[str], token2id: Dict[str, int],
 
 
 # ---------------------------------------------------------------------------
-# forward with cache + BPTT
-
-
-def _sigmoid(x: np.ndarray) -> np.ndarray:
-    return 1.0 / (1.0 + np.exp(-x))
-
-
-def _forward_dir_cache(X: np.ndarray, mask: np.ndarray, cell: LstmCell,
-                       reverse: bool):
-    """_run_direction with everything the backward pass needs retained."""
-    B, L, _ = X.shape
-    H = cell.H
-    h = np.zeros((B, H))
-    c = np.zeros((B, H))
-    out = np.zeros((B, L, H))
-    steps = range(L - 1, -1, -1) if reverse else range(L)
-    cache = []
-    for t in steps:
-        m = mask[:, t:t + 1]
-        pre = X[:, t] @ cell.W_ih.T + h @ cell.W_hh.T + cell.b
-        i = _sigmoid(pre[:, 0 * H:1 * H])
-        f = _sigmoid(pre[:, 1 * H:2 * H])
-        g = np.tanh(pre[:, 2 * H:3 * H])
-        o = _sigmoid(pre[:, 3 * H:4 * H])
-        c_new = f * c + i * g
-        tc = np.tanh(c_new)
-        h_new = o * tc
-        cache.append((t, m, h, c, i, f, g, o, c_new, tc))
-        h = m * h_new + (1.0 - m) * h
-        c = m * c_new + (1.0 - m) * c
-        out[:, t] = h * m
-    return out, cache
+# BPTT over the model's taped forward
 
 
 def _backward_dir(dOut: np.ndarray, X: np.ndarray, cache, cell: LstmCell):
@@ -327,12 +298,22 @@ def _backward_dir(dOut: np.ndarray, X: np.ndarray, cache, cell: LstmCell):
     return dX, dW_ih, dW_hh, db
 
 
-def _pad_batch(model: LstmMetaModel, batch: Sequence[Sample]):
-    ids, mask = pad_ids([w for w, _, _ in batch], model.pad_id, model.unk_id,
-                        model.E.shape[0])
-    centers = [(cf, min(cl, len(w) - 1)) for w, (cf, cl), _ in batch]
-    y = np.array([lbl for _, _, lbl in batch], dtype=np.int64)
-    return ids, mask, centers, y
+def _max_pool_bwd(dseq: np.ndarray, seq: np.ndarray, spans,
+                 dpool: np.ndarray) -> None:
+    """Adds the gradient ``dpool`` (B, H) of the per-row max-pools
+    ``seq[b, lo:hi].max(axis=0)`` into ``dseq``, each on its span's
+    first argmax."""
+    B, H = dpool.shape
+    am = np.stack([seq[b, lo:hi].argmax(axis=0) + lo
+                   for b, (lo, hi) in enumerate(spans)])
+    np.add.at(dseq, (np.repeat(np.arange(B), H), am.ravel(),
+                     np.tile(np.arange(H), B)), dpool.ravel())
+
+
+def _window_logits(model, samples, tape: Optional[dict] = None):
+    """The head's own forward over (window, centers, label) samples."""
+    return model.forward_id_windows([w for w, _, _ in samples],
+                                    [c for _, c, _ in samples], tape)
 
 
 def _weighted_ce(logits: np.ndarray, y: np.ndarray,
@@ -358,53 +339,33 @@ def _forward_backward(model: LstmMetaModel, batch: Sequence[Sample],
                       emb_grad: bool):
     """Loss + gradients for one minibatch.  Returns (loss, grads, logits)
     where grads maps the same keys `_params` yields."""
-    ids, mask, centers, y = _pad_batch(model, batch)
-    X = model.E[ids]
-    acts = []          # per layer: (X_in, [(out, cache) per direction])
-    for fwd, bwd in model.layers:
-        outs = [_forward_dir_cache(X, mask, fwd, reverse=False)]
-        if bwd is not None:
-            outs.append(_forward_dir_cache(X, mask, bwd, reverse=True))
-        acts.append((X, outs))
-        X = (np.concatenate([o for o, _ in outs], axis=2)
-             if len(outs) > 1 else outs[0][0])
-    B = len(batch)
-    Hout = X.shape[2]
-    pooled = np.empty((B, Hout))
-    argmx = np.empty((B, Hout), dtype=np.int64)
-    for b, (cf, cl) in enumerate(centers):
-        span = X[b, cf:cl + 1]
-        argmx[b] = span.argmax(axis=0) + cf
-        pooled[b] = span.max(axis=0)
-    logits = pooled @ model.fc_W.T + model.fc_b
-
-    loss, dlogits = _weighted_ce(logits, y, class_weights)
+    tape: Dict = {}
+    logits = _window_logits(model, batch, tape)
+    loss, dlogits = _weighted_ce(logits, _labels(batch), class_weights)
+    pooled = tape["pooled"]
     grads: Dict[str, np.ndarray] = {
         "fc_W": dlogits.T @ pooled, "fc_b": dlogits.sum(axis=0)}
-    dpooled = dlogits @ model.fc_W
-    dX = np.zeros_like(X)
-    rows = np.repeat(np.arange(B), Hout)
-    cols = np.tile(np.arange(Hout), B)
-    np.add.at(dX, (rows, argmx.ravel(), cols), dpooled.ravel())
+    dX = np.zeros_like(tape["seq"])
+    _max_pool_bwd(dX, tape["seq"], tape["spans"], dlogits @ model.fc_W)
     for k in range(len(model.layers) - 1, -1, -1):
-        X_in, outs = acts[k]
+        X_in, recs = tape["layers"][k]
         fwd, bwd = model.layers[k]
         H = fwd.H
         dXf, gWihf, gWhhf, gbf = _backward_dir(
-            dX[:, :, :H], X_in, outs[0][1], fwd)
+            dX[:, :, :H], X_in, recs[0], fwd)
         grads[f"l{k}f.W_ih"], grads[f"l{k}f.W_hh"] = gWihf, gWhhf
         grads[f"l{k}f.b"] = gbf
         dX_in = dXf
         if bwd is not None:
             dXb, gWihb, gWhhb, gbb = _backward_dir(
-                dX[:, :, H:], X_in, outs[1][1], bwd)
+                dX[:, :, H:], X_in, recs[1], bwd)
             grads[f"l{k}b.W_ih"], grads[f"l{k}b.W_hh"] = gWihb, gWhhb
             grads[f"l{k}b.b"] = gbb
             dX_in = dX_in + dXb
         dX = dX_in
     if emb_grad:
         dE = np.zeros_like(model.E)
-        np.add.at(dE, ids, dX)
+        np.add.at(dE, tape["ids"], dX)
         dE[model.pad_id] = 0.0     # torch Embedding padding_idx
         grads["E"] = dE
     return loss, grads, logits
@@ -503,9 +464,13 @@ def _split(data, rng: np.random.RandomState, *, shuffle: bool,
     if shuffle:
         rng.shuffle(data)
     if len(data) < 2:
-        raise ValueError(f"need at least 2 {what}")
+        raise ValueError(f"need at least 2 {what} to split train/test")
     n_test = max(1, int(round(len(data) * test_size)))
     test, train = data[:n_test], data[n_test:]
+    if not train:
+        raise ValueError(
+            f"test_size={test_size} leaves no training {what}: all "
+            f"{len(data)} went to the test set")
     y_train = labels(train)
     if class_weights is not None:
         cw = np.asarray(class_weights, dtype=np.float64)
@@ -601,7 +566,7 @@ def train_lstm_meta(model: LstmMetaModel, data: Sequence[Sample], *,
     n_classes = len(model.labels)
     train, test, cw = _split(
         data, rng, shuffle=shuffle_data, test_size=test_size,
-        what="samples to split train/test", n_classes=n_classes,
+        what="samples", n_classes=n_classes,
         class_weights=class_weights,
         compute_class_weights=compute_class_weights)
 
@@ -616,8 +581,7 @@ def train_lstm_meta(model: LstmMetaModel, data: Sequence[Sample], *,
         test, nepochs=nepochs, batch_size=batch_size, rng=rng, grad=grad,
         clip_norm=clip_norm, n_classes=n_classes, metric=metric,
         patience=patience, predict=_argmax_predict(
-            lambda chunk: model.forward_id_windows(
-                [s[0] for s in chunk], [s[1] for s in chunk]), 5000))
+            lambda chunk: _window_logits(model, chunk), 5000))
     winner["class_weights"] = _rounded(cw)
     return winner
 

@@ -159,7 +159,9 @@ class RelCatModernBertModel(_RelCatHead):
               if k.startswith(("fc1.", "fc2.", "fc3."))}
         return cls(enc, fc, labels)
 
-    def _encode(self, input_ids, attention_mask):
+    def _encode(self, input_ids, attention_mask, tape=None):
+        if tape is not None:
+            raise NotImplementedError("the ModernBERT RelCAT head has no trainer")
         seq = self.encoder.forward(input_ids, attention_mask)
         return seq, seq[:, 0]
 

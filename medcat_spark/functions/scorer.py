@@ -96,6 +96,21 @@ def pad_ids(windows, pad_id: int = 0, unk_id: int = 0,
     return ids, mask
 
 
+def center_spans(windows, centers):
+    """Per window, the ``(lo, hi)`` row slice of its entity center
+    ``(first, last)``, the last index clamped into the window."""
+    return [(cf, min(cl, len(w) - 1) + 1)
+            for w, (cf, cl) in zip(windows, centers)]
+
+
+def max_pool(seq: np.ndarray, spans) -> np.ndarray:
+    """(B, H) per-row max of ``seq[b, lo:hi]`` over each ``spans[b]``."""
+    out = np.empty((seq.shape[0], seq.shape[2]), dtype=seq.dtype)
+    for b, (lo, hi) in enumerate(spans):
+        out[b] = seq[b, lo:hi].max(axis=0)
+    return out
+
+
 def docs_with_ents(ann, docs, text_col: str = "text",
                    num_partitions: Optional[int] = None):
     """(doc_id, ents, text) scoring input shared by every neural scorer

@@ -612,4 +612,69 @@ def test_token_classifier_computed_class_weights(monkeypatch):
     for cw in train_cw:
         np.testing.assert_array_equal(cw, want)
     assert want[0] < 1 < want[1]           # label 1 is the rare class
-    assert len(seen) - len(train_cw) == 2  # one eval chunk per epoch
+    # the held-out eval runs the inference forward, not the CE function,
+    # so it is unweighted by construction
+    assert len(seen) == len(train_cw)
+
+
+@pytest.mark.parametrize("ids, msg", [
+    ([9, TAGS[0], 10, 11, 12, TAGS[2], 13, TAGS[3], 14], "missing"),
+    ([9, TAGS[0], TAGS[1], 11, 12, TAGS[2], 13, TAGS[3], 14],
+     "no entity tokens between markers"),
+])
+def test_relcat_training_applies_the_scorer_marker_rule(ids, msg):
+    """A training sample with a missing [e1] or an empty [s1][e1] span
+    raises ``annotation_tag_pool``'s ValueError, as scoring does."""
+    from medcat_spark.functions.bert_np import annotation_tag_pool
+    model = tiny_rel_model()
+    good = rand_rel_batch(np.random.RandomState(0), n=1)[0]
+    with pytest.raises(ValueError, match=msg):
+        annotation_tag_pool(np.zeros((1, len(ids), 8)), np.array([ids]),
+                            TAGS[0], TAGS[1])
+    with pytest.raises(ValueError, match=msg):
+        relcat_forward_backward(model, [good, (ids, (1, 5), 0)], None)
+
+
+def _mixed_windows(rng, n=6, vocab=30):
+    batch = []
+    for _ in range(n):
+        L = rng.randint(3, 12)
+        cf = rng.randint(0, L)
+        batch.append((rng.randint(2, vocab, size=L).tolist(),
+                      (cf, rng.randint(cf, L)), int(rng.randint(0, 2))))
+    return batch
+
+
+@pytest.mark.parametrize("head", ["relcat_tags", "relcat_starts",
+                                  "meta_fc1", "meta_fc2", "meta_fc3",
+                                  "token_classifier"])
+def test_training_logits_are_the_scoring_forward(head):
+    """Each trainer takes its loss on the head's inference forward: on a
+    padded mixed-length batch the logits ``*_forward_backward`` returns
+    equal the scorer's bit for bit, so the held-out F1 that picks the
+    winner epoch scores the deployed function."""
+    from medcat_spark.functions.bert_train import (
+        bert_meta_forward_backward, token_classifier_forward_backward)
+    from medcat_spark.functions.scorer import pad_ids
+    rng = np.random.RandomState(11)
+    if head.startswith("relcat"):
+        model = tiny_rel_model(with_tags=head == "relcat_tags")
+        batch = rand_rel_batch(rng, n=5, lmin=9, lmax=16)
+        _, _, got = relcat_forward_backward(model, batch, None)
+        ids, mask = pad_ids([w for w, _, _ in batch])
+        want = model.logits(ids, np.array([p for _, p, _ in batch]), mask)
+    elif head.startswith("meta"):
+        n_fc = int(head[-1])
+        model = tiny_meta_model(use_fc2=n_fc >= 2, use_fc3=n_fc == 3)
+        batch = _mixed_windows(rng)
+        _, _, got = bert_meta_forward_backward(model, batch, None)
+        want = model.forward_id_windows([w for w, _, _ in batch],
+                                        [c for _, c, _ in batch])
+    else:
+        model = tiny_token_classifier()
+        batch = [(w, [0] * len(w)) for w, _, _ in _mixed_windows(rng)]
+        _, _, got = token_classifier_forward_backward(model, batch)
+        want = model.logits(*pad_ids([w for w, _ in batch]))
+        best, _ = model.predict_tokens(*pad_ids([w for w, _ in batch]))
+        assert np.array_equal(best, want.argmax(axis=2))
+    assert np.array_equal(got, want)

@@ -431,3 +431,59 @@ def test_spark_trainer_minibatch_converges(spark):
                                    nepochs=25, lr=0.01, batch_size=32,
                                    test_size=0.2, patience=10, seed=42)
     assert report["weighted_f1"] >= 0.9, report
+
+
+@pytest.mark.parametrize("layers,bidi", [(1, True), (2, True), (1, False),
+                                         (2, False)])
+def test_training_logits_are_the_scoring_forward(layers, bidi):
+    """The loss is taken on the scorer's own forward: on a padded
+    mixed-length batch the trainer's logits equal ``forward_id_windows``
+    bit for bit."""
+    model = tiny_model(n_layers=layers, bidirectional=bidi)
+    batch = rand_batch(model, np.random.RandomState(2), n=7, lmin=1, lmax=9)
+    _, _, logits = _forward_backward(model, batch, None, emb_grad=True)
+    want = model.forward_id_windows([w for w, _, _ in batch],
+                                    [c for _, c, _ in batch])
+    assert np.array_equal(logits, want)
+
+
+def _lstm_trainer(data, **kw):
+    train_lstm_meta(tiny_model(), data, nepochs=1, **kw)
+
+
+def _bert_meta_trainer(data, **kw):
+    from medcat_spark.functions.bert_train import train_bert_meta
+    from tests.test_bert_train import tiny_meta_model
+    train_bert_meta(tiny_meta_model(), data, nepochs=1, **kw)
+
+
+def _relcat_trainer(data, **kw):
+    from medcat_spark.functions.bert_train import train_relcat
+    from tests.test_bert_train import tiny_rel_model
+    train_relcat(tiny_rel_model(), data, nepochs=1, **kw)
+
+
+def _token_trainer(data, **kw):
+    from medcat_spark.functions.bert_train import train_token_classifier
+    from tests.test_bert_train import tiny_token_classifier
+    train_token_classifier(tiny_token_classifier(),
+                           [(w, [lbl] * len(w)) for w, _, lbl in data], **kw)
+
+
+@pytest.mark.parametrize("trainer, kw, what", [
+    (_lstm_trainer, {}, "samples"),
+    (_lstm_trainer, dict(compute_class_weights=False), "samples"),
+    (_bert_meta_trainer, {}, "samples"),
+    (_relcat_trainer, {}, "relation samples"),
+    (_token_trainer, {}, "sequences"),
+])
+def test_split_leaving_no_training_samples_is_loud(trainer, kw, what):
+    """A ``test_size`` that sends every sample to the test set raises a
+    ValueError naming it, the sample count and the sample kind, instead
+    of failing inside the class weights or training on nothing."""
+    from tests.test_bert_train import rand_rel_batch
+    data = rand_rel_batch(np.random.RandomState(1), n=4)
+    data = [(w, p, lbl % 2) for w, p, lbl in data]
+    with pytest.raises(ValueError, match=rf"test_size=0\.9 leaves no "
+                       rf"training {what}: all 4 went to the test set"):
+        trainer(data, test_size=0.9, **kw)
