@@ -16,7 +16,7 @@ from __future__ import annotations
 import hashlib
 import pickle
 import re
-from typing import Dict, List, Optional, Set
+from typing import Dict, Iterable, List, Optional, Set, Tuple
 
 import numpy as np
 
@@ -34,6 +34,34 @@ def unitvec(arr: np.ndarray) -> np.ndarray:
     a = np.asarray(arr, dtype=np.float64)
     n = np.linalg.norm(a)
     return a / n if n > 0 else a
+
+
+def _stack_rows(arrays: Iterable[np.ndarray]
+                ) -> Tuple[np.ndarray, List[np.ndarray]]:
+    """Pack vectors for pickling as one stacked matrix per (dtype,
+    shape) plus the matrix each vector went to, in order: a model's
+    tens of thousands of small vectors then pickle and unpickle as a
+    few buffers instead of one array object each."""
+    groups: Dict[tuple, Tuple[int, list]] = {}
+    which = []
+    for a in arrays:
+        a = np.asarray(a)
+        g = groups.get((a.dtype, a.shape))
+        if g is None:
+            g = groups[(a.dtype, a.shape)] = (len(groups), [])
+        which.append(g[0])
+        g[1].append(a)
+    return (np.array(which, dtype=np.int32),
+            [np.stack(rows) for _, rows in groups.values()])
+
+
+def _unstack_rows(packed: Tuple[np.ndarray, List[np.ndarray]]
+                  ) -> List[np.ndarray]:
+    """The vectors ``_stack_rows`` packed, in order, as row views of
+    its matrices (same dtype, shape and bits)."""
+    which, mats = packed
+    rows = [iter(m) for m in mats]
+    return [next(rows[g]) for g in which.tolist()]
 
 
 def prepare_name(raw_name: str, config: EngineConfig,
@@ -101,6 +129,21 @@ class CdbModel:
                                            "cui2ontologies": {}, "cui2description": {},
                                            "cui2original_names": {}}
         self.weighted_average_factor: float = 0.0004
+
+    def __getstate__(self) -> dict:
+        state = self.__dict__.copy()
+        cvs = self.cui2context_vectors
+        state["cui2context_vectors"] = (
+            list(cvs), [list(v) for v in cvs.values()],
+            _stack_rows(x for v in cvs.values() for x in v.values()))
+        return state
+
+    def __setstate__(self, state: dict) -> None:
+        cuis, types, packed = state["cui2context_vectors"]
+        rows = iter(_unstack_rows(packed))
+        state["cui2context_vectors"] = {
+            c: {t: next(rows) for t in ts} for c, ts in zip(cuis, types)}
+        self.__dict__.update(state)
 
     # -- model building (driver-side exact path; the Spark job in
     #    cdb_build.py produces identical contents via DataFrame aggs) --
@@ -253,6 +296,17 @@ class VocabModel:
         self.word2cnt: Dict[str, int] = {}
         self._cum_probs: Optional[np.ndarray] = None
         self._vec_words: Optional[list] = None
+
+    def __getstate__(self) -> dict:
+        state = self.__dict__.copy()
+        state["word2vec"] = (list(self.word2vec),
+                             _stack_rows(self.word2vec.values()))
+        return state
+
+    def __setstate__(self, state: dict) -> None:
+        words, packed = state["word2vec"]
+        state["word2vec"] = dict(zip(words, _unstack_rows(packed)))
+        self.__dict__.update(state)
 
     def add(self, word: str, cnt: int, vec: Optional[np.ndarray]) -> None:
         self.word2cnt[word] = cnt

@@ -15,9 +15,10 @@ materialized lazily once per Python worker via a module-level cache.
 from __future__ import annotations
 
 import time
-from typing import Optional, Tuple
+from typing import Callable, Dict, Optional, Tuple
 
 from pyspark import TaskContext
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
@@ -45,10 +46,23 @@ ANNOTATION_SCHEMA = StructType([
     StructField("batch_us", LongType()),         # lineage: per-batch cost
 ])
 
+# The rows lineage_metrics gives, and the lineage table's schema.
+LINEAGE_SCHEMA = StructType([
+    StructField("part_id", IntegerType()),
+    StructField("doc_id_min", StringType()),
+    StructField("doc_id_max", StringType()),
+    StructField("n_docs", LongType(), nullable=False),
+    StructField("n_annotations", LongType(), nullable=False),
+    StructField("avg_row_cost_us", DoubleType()),
+])
+
 # Executor-side lazy model cache: one deserialize per Python worker
-# process per model version (keyed by content hash), regardless of how
-# many tasks/batches it runs.  This is the broadcast-lifecycle device the
-# reference approximates with per-process model loads (cat.py:1508-1543).
+# process per broadcast, regardless of how many tasks/batches it runs.
+# This is the broadcast-lifecycle device the reference approximates with
+# per-process model loads (cat.py:1508-1543).  It is keyed by the
+# broadcast (its spill path), not by model content: the entry also holds
+# the spell checker's token memo, and a new broadcast of the same model
+# must start from a cold memo, as it does in every new job's workers.
 _MODEL_CACHE: dict = {}
 
 
@@ -66,26 +80,58 @@ def _get_model(bc) -> Tuple[CdbModel, VocabModel, EngineConfig, SpellChecker]:
     return hit
 
 
+def model_hashes(cdb: CdbModel, config: EngineConfig) -> Dict[str, str]:
+    """The snapshot stamps of a model: CDB and config content hashes."""
+    return {"cdb-hash": cdb.content_hash(),
+            "config-hash": config.content_hash()}
+
+
 def broadcast_model(spark: SparkSession, cdb: CdbModel, vocab: VocabModel,
                     config: Optional[EngineConfig] = None):
+    """Broadcast ``(cdb, vocab, config)``.  The handle carries
+    ``model_hashes``, the hashes of the model as it was pickled, so a
+    KG commit stamps its snapshots without unpickling the broadcast on
+    the driver."""
     cfg = config or EngineConfig()
-    return spark.sparkContext.broadcast((cdb, vocab, cfg))
+    bc = spark.sparkContext.broadcast((cdb, vocab, cfg))
+    bc.model_hashes = model_hashes(cdb, cfg)
+    return bc
 
 
-def _annotate_batches(bc, has_spans: bool, keep_overlaps: bool = False):
+class _LineageRows(AccumulatorParam):
+    """Lineage rows keyed by ``part_id``.  Merging replaces: a task that
+    runs again reports the same row under the same key, so each
+    partition counts once however often it is computed."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, rows, more):
+        rows.update(more)
+        return rows
+
+
+def _annotate_batches(bc, has_spans: bool, keep_overlaps: bool = False,
+                      lineage=None):
     """The annotate kernel (``worker.kernel``): texts arrive as one
     ``to_pylist`` per Arrow batch and annotation rows leave as one Arrow
     batch built from column lists — no pandas DataFrame assembly or
     row-at-a-time ``itertuples`` on either side of the boundary
-    (measured ~2x per-task overhead of the kernel itself)."""
+    (measured ~2x per-task overhead of the kernel itself).  Given a
+    ``_LineageRows`` accumulator ``lineage``, a partition that gave
+    annotations adds its ``lineage_metrics`` row to it after its last
+    batch."""
     def body(batches):
         cdb, vocab, config, sc = _get_model(bc)
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
+        ids, n_rows, cost_us = set(), 0, 0
         for rows in batches:
             t0 = time.monotonic_ns()
             out = {f.name: [] for f in ANNOTATION_SCHEMA.fields}
             for row in rows:
+                if row["doc_id"] is None:
+                    continue   # the NULL-text rule: no rows
                 doc_id = str(row["doc_id"])
                 if has_spans:
                     spans = row["spans"] or []
@@ -115,7 +161,16 @@ def _annotate_batches(bc, has_spans: bool, keep_overlaps: bool = False):
             batch_us = (time.monotonic_ns() - t0) // 1000
             out["part_id"] = [pid] * n
             out["batch_us"] = [batch_us] * n
+            if lineage is not None:
+                ids.update(out["doc_id"])
+                n_rows += n
+                cost_us += batch_us * n
             yield out
+        if lineage is not None and n_rows:
+            lineage.add({pid: {"part_id": pid, "doc_id_min": min(ids),
+                               "doc_id_max": max(ids), "n_docs": len(ids),
+                               "n_annotations": n_rows,
+                               "avg_row_cost_us": cost_us / n_rows}})
     return worker.kernel(ANNOTATION_SCHEMA, body)
 
 
@@ -137,7 +192,7 @@ def salted_repartition(docs: DataFrame, num_partitions: int,
 
 def annotate(docs: DataFrame, bc, num_partitions: Optional[int] = None,
              keep_lineage_cols: bool = False,
-             keep_overlaps: bool = False) -> DataFrame:
+             keep_overlaps: bool = False, lineage=None) -> DataFrame:
     """Annotate a documents DataFrame.
 
     Accepts either the interleaved input_hint shape
@@ -145,6 +200,8 @@ def annotate(docs: DataFrame, bc, num_partitions: Optional[int] = None,
     flat ``(doc_id, text)`` table.  Returns ANNOTATION_SCHEMA rows; a
     row whose ``text`` or ``spans`` is NULL gives none.
     ``keep_overlaps`` = the reference's show_nested_entities.
+    ``lineage``: a ``_LineageRows`` accumulator that gets each
+    partition's lineage row (see ``annotate_with_lineage``).
     """
     has_spans = "spans" in docs.columns
     cols = ["doc_id", "spans"] if has_spans else ["doc_id", "text"]
@@ -152,8 +209,9 @@ def annotate(docs: DataFrame, bc, num_partitions: Optional[int] = None,
                         for c in cols])
     if num_partitions:
         src = salted_repartition(src, num_partitions)
-    ann = src.mapInArrow(_annotate_batches(bc, has_spans, keep_overlaps),
-                         schema=ANNOTATION_SCHEMA)
+    ann = src.mapInArrow(
+        _annotate_batches(bc, has_spans, keep_overlaps, lineage),
+        schema=ANNOTATION_SCHEMA)
     if not keep_lineage_cols:
         ann = ann.drop("part_id", "batch_us")
     return ann
@@ -208,10 +266,38 @@ def project_output(ann: DataFrame, concepts: DataFrame,
 def lineage_metrics(ann_with_lineage: DataFrame) -> DataFrame:
     """Per-partition lineage rows (north_rule: resumable with
     per-partition lineage + metrics; reference analogue: the
-    part_N.pickle manifest, cat.py:1403-1421)."""
+    part_N.pickle manifest, cat.py:1403-1421).  ``n_docs`` is the size
+    of the partition's doc_id set: ``countDistinct`` would plan a second
+    aggregation shuffle for the same value."""
     return (ann_with_lineage.groupBy("part_id")
             .agg(F.min("doc_id").alias("doc_id_min"),
                  F.max("doc_id").alias("doc_id_max"),
-                 F.countDistinct("doc_id").alias("n_docs"),
+                 F.size(F.collect_set("doc_id")).cast("bigint")
+                 .alias("n_docs"),
                  F.count("*").alias("n_annotations"),
                  (F.sum("batch_us") / F.count("*")).alias("avg_row_cost_us")))
+
+
+def annotate_with_lineage(docs: DataFrame, bc,
+                          num_partitions: Optional[int] = None
+                          ) -> Tuple[DataFrame, Callable[[], DataFrame]]:
+    """``annotate`` whose kernel also gathers the ``lineage_metrics``
+    rows as it runs, so lineage costs no second pass over (or cache of)
+    the annotations.  Returns the annotations and a function that gives
+    the lineage rows (LINEAGE_SCHEMA) of what has been computed: call it
+    after the action that runs the annotations."""
+    spark = docs.sparkSession
+    rows = spark.sparkContext.accumulator({}, _LineageRows())
+    ann = annotate(docs, bc, num_partitions=num_partitions, lineage=rows)
+
+    def lineage() -> DataFrame:
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+        # from Arrow, not a row list: writing a frame made from a row
+        # list starts Python workers to unpickle it (measured ~0.4 s
+        # more per commit on a 4-core host)
+        table = pa.Table.from_pylist(
+            [rows.value[k] for k in sorted(rows.value)],
+            schema=to_arrow_schema(LINEAGE_SCHEMA))
+        return spark.createDataFrame(table).coalesce(1)
+    return ann, lineage

@@ -2769,11 +2769,15 @@ class IcebergKgSink:
                 summary: Optional[Dict[str, str]] = None) -> Dict[str, int]:
         """Append ``annotations`` and ``lineage`` (either may be None),
         then commit the staged ``processed_docs`` files as a
-        metadata-only snapshot — the commit point."""
+        metadata-only snapshot — the commit point.  ``lineage`` may be a
+        function giving the frame, called once ``annotations`` is
+        appended."""
         stamp = {**(summary or {}), KG_COMMIT_ID: uuid.uuid4().hex}
         ids = {}
         for name, df in (("annotations", annotations),
                          ("lineage", lineage)):
+            if callable(df):
+                df = df()
             if df is None:
                 continue
             t = self._table(name) or IcebergTable.create(
@@ -2824,14 +2828,15 @@ def resumable_annotate_iceberg(spark, docs, bc, out_path: str,
     before anything is written)."""
     import shutil
 
-    from medcat_spark.pipeline import annotate, lineage_metrics
+    from medcat_spark.pipeline import annotate_with_lineage, model_hashes
 
-    cdb, _vocab, cfg = bc.value
-    hashes = {"cdb-hash": cdb.content_hash(),
-              "config-hash": cfg.content_hash()}
-    if config is not None and config.content_hash() != hashes["config-hash"]:
+    hashes = getattr(bc, "model_hashes", None)
+    if hashes is None:   # a handle not made by broadcast_model
+        hashes = model_hashes(bc.value[0], bc.value[2])
+    given = config.content_hash() if config is not None else None
+    if given is not None and given != hashes["config-hash"]:
         raise ValueError(
-            f"config hash {config.content_hash()} is not the broadcast "
+            f"config hash {given} is not the broadcast "
             f"config's {hashes['config-hash']}: the KG commit would be "
             "stamped with a config that did not annotate it")
     sink = IcebergKgSink(out_path)
@@ -2842,7 +2847,8 @@ def resumable_annotate_iceberg(spark, docs, bc, out_path: str,
         # orderBy before limit (TakeOrderedAndProject, no full sort
         # shuffle): recomputation cannot pick a different set
         todo = todo.orderBy("doc_id").limit(max_docs)
-    staged = sink.stage(todo.select("doc_id"))
+    todo_ids = todo.select("doc_id")
+    staged = sink.stage(todo_ids)
     n_todo = staged["manifest"]["added_rows_count"]   # from parquet footers
 
     manifest: Dict[str, Any] = {
@@ -2857,16 +2863,11 @@ def resumable_annotate_iceberg(spark, docs, bc, out_path: str,
         return manifest
 
     t0 = time.monotonic()
-    chosen = spark.read.parquet(staged["data_dir"])
+    # the known schema: inferring it from the files costs a Spark job
+    chosen = spark.read.schema(todo_ids.schema).parquet(staged["data_dir"])
     subset = docs.join(chosen, "doc_id", "left_semi")
-    ann = annotate(subset, bc, num_partitions=num_partitions,
-                   keep_lineage_cols=True).cache()
-    try:
-        ids = sink.publish(
-            staged, ann.drop("part_id", "batch_us"), lineage_metrics(ann),
-            summary=hashes)
-    finally:
-        ann.unpersist()
+    ann, lineage = annotate_with_lineage(subset, bc, num_partitions)
+    ids = sink.publish(staged, ann, lineage, summary=hashes)
     added = sink.table("annotations")._snapshot(ids["annotations"])
     manifest["n_annotations"] = int(added["summary"]["added-records"])
     manifest["wall_sec"] = time.monotonic() - t0

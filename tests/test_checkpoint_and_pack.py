@@ -103,6 +103,41 @@ def test_mismatched_config_raises_before_any_write(spark, docs_df,
     assert not out.exists() or not any(out.iterdir())
 
 
+COMMIT_JOBS = 5
+
+
+def test_commit_never_unpickles_the_broadcast_on_the_driver(
+        spark, docs_df, fixture_models, tmp_path, monkeypatch):
+    """A commit stamps the hashes its handle carries, so it succeeds
+    with the driver's ``Broadcast.value`` raising, and runs at most
+    COMMIT_JOBS Spark jobs: 1 to stage the ids, 3 for the annotations
+    (semi-join broadcast, salted shuffle, write) and 1 for the lineage
+    rows, with no schema-inference, cache or distinct-shuffle job."""
+    from pyspark.broadcast import Broadcast
+    cdb, vocab = fixture_models
+    cfg = EngineConfig()
+    bc = broadcast_model(spark, cdb, vocab, cfg)
+
+    def no_value(self):
+        raise AssertionError("the driver unpickled the broadcast")
+    monkeypatch.setattr(Broadcast, "value", property(no_value))
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    out = str(tmp_path / "kg")
+    jobs0 = dag.nextJobId()
+    m = resumable_annotate_iceberg(spark, docs_df, bc, out,
+                                   num_partitions=4, max_docs=20,
+                                   config=cfg)
+    jobs = dag.nextJobId() - jobs0
+    assert m["n_docs"] == 20 and m["n_annotations"] > 0
+    assert jobs <= COMMIT_JOBS, jobs
+    want = {"cdb-hash": cdb.content_hash(),
+            "config-hash": cfg.content_hash()}
+    assert (m["cdb_hash"], m["config_hash"]) == tuple(want.values())
+    for name in ("annotations", "lineage", "processed_docs"):
+        for s in IcebergTable.load(f"{out}/{name}").snapshots():
+            assert {k: s["summary"][k] for k in want} == want
+
+
 def test_crash_after_any_write_or_append_resumes_exactly_once(
         spark, docs_df, fixture_models, tmp_path, monkeypatch):
     """Two commits of 30 docs each, then an empty one, make 13 sink

@@ -3,13 +3,17 @@ checked against the driver-side exact kernel run per document (the
 'reference semantics' oracle), plus the P/R gate and the span-sequence
 invariant (BASELINE.json input_hint)."""
 
+import math
+
 import pytest
+from pyspark.sql import functions as F
 
 from medcat_spark.config import EngineConfig
 from medcat_spark.core.annotate import annotate_document
 from medcat_spark.core.docs import reconstruct_text, spans_signature
 from medcat_spark.fixtures import fixture_documents
-from medcat_spark.pipeline import annotate, broadcast_model, lineage_metrics
+from medcat_spark.pipeline import (annotate, annotate_with_lineage,
+                                   broadcast_model, lineage_metrics)
 from medcat_spark.stats import overall_stats
 from medcat_spark.triples import cooccurrence_triples, mention_triples
 
@@ -66,6 +70,16 @@ def test_null_spans_row_gives_no_annotations(spark, docs_df, bc, ann):
         return sorted((r["doc_id"], r["start"], r["cui"],
                        r["context_similarity"]) for r in df.collect())
     assert keys(got) == keys(ann)
+
+
+def test_null_doc_id_row_gives_no_annotations(spark, bc):
+    """A NULL ``doc_id`` row follows the NULL ``text`` rule: it gives no
+    annotation rows (not rows under the string 'None')."""
+    text = reconstruct_text(fixture_documents(1)[0]["spans"])
+    docs = spark.createDataFrame([(None, text), ("d1", text)],
+                                 "doc_id string, text string")
+    got = annotate(docs, bc).groupBy("doc_id").count().collect()
+    assert [r["doc_id"] for r in got] == ["d1"] and got[0]["count"] > 0
 
 
 def test_annotations_nonempty_and_schema(ann):
@@ -125,6 +139,43 @@ def test_lineage_metrics(spark, docs_df, bc):
     lm = lineage_metrics(ann_l).collect()
     assert sum(r["n_docs"] for r in lm) == 60 - _docs_without_entities(spark, docs_df, bc)
     assert all(r["n_annotations"] > 0 for r in lm)
+
+
+def _distinct_lineage(ann_with_lineage):
+    """The lineage definition with ``countDistinct``: the schema that
+    roots already written hold, and the rows lineage must equal."""
+    return (ann_with_lineage.groupBy("part_id")
+            .agg(F.min("doc_id").alias("doc_id_min"),
+                 F.max("doc_id").alias("doc_id_max"),
+                 F.countDistinct("doc_id").alias("n_docs"),
+                 F.count("*").alias("n_annotations"),
+                 (F.sum("batch_us") / F.count("*")).alias("avg_row_cost_us")))
+
+
+def test_lineage_parity_with_distinct_count(spark, docs_df, bc):
+    """Per ``part_id``, ``lineage_metrics`` and the rows the annotate
+    kernel gathers (``annotate_with_lineage``) equal the countDistinct
+    definition except for the timing column, with its schema and
+    nullability, over 6 partitions and a duplicated doc_id."""
+    dup = docs_df.orderBy("doc_id").limit(1)
+    docs = docs_df.unionByName(dup)
+    ann_l = annotate(docs, bc, num_partitions=6, keep_lineage_cols=True)
+    want_df = _distinct_lineage(ann_l)
+    want = {r["part_id"]: r for r in want_df.collect()}
+    assert len(want) > 1
+    assert ann_l.where(F.col("doc_id") == dup.first()["doc_id"]).count() > 0
+
+    ann, lineage = annotate_with_lineage(docs, bc, num_partitions=6)
+    n_ann = ann.count()
+    for got_df in (lineage_metrics(ann_l), lineage()):
+        assert got_df.schema == want_df.schema
+        got = {r["part_id"]: r for r in got_df.collect()}
+        assert got.keys() == want.keys()
+        for pid, r in got.items():
+            keys = ("doc_id_min", "doc_id_max", "n_docs", "n_annotations")
+            assert [r[k] for k in keys] == [want[pid][k] for k in keys]
+            assert 0 < r["avg_row_cost_us"] < math.inf
+    assert sum(r["n_annotations"] for r in want.values()) == n_ann
 
 
 def _docs_without_entities(spark, docs_df, bc) -> int:
