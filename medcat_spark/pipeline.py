@@ -46,7 +46,9 @@ ANNOTATION_SCHEMA = StructType([
     StructField("batch_us", LongType()),         # lineage: per-batch cost
 ])
 
-# The rows lineage_metrics gives, and the lineage table's schema.
+# The lineage table's rows, one per partition that gave annotations
+# (north_rule: resumable with per-partition lineage + metrics; reference
+# analogue: the part_N.pickle manifest, cat.py:1403-1421).
 LINEAGE_SCHEMA = StructType([
     StructField("part_id", IntegerType()),
     StructField("doc_id_min", StringType()),
@@ -119,8 +121,9 @@ def _annotate_batches(bc, has_spans: bool, keep_overlaps: bool = False,
     row-at-a-time ``itertuples`` on either side of the boundary
     (measured ~2x per-task overhead of the kernel itself).  Given a
     ``_LineageRows`` accumulator ``lineage``, a partition that gave
-    annotations adds its ``lineage_metrics`` row to it after its last
-    batch."""
+    annotations adds its LINEAGE_SCHEMA row to it after its last batch:
+    the min, max and count of its distinct doc_ids, its row count and
+    its mean ``batch_us`` per row."""
     def body(batches):
         cdb, vocab, config, sc = _get_model(bc)
         ctx = TaskContext.get()
@@ -263,25 +266,10 @@ def project_output(ann: DataFrame, concepts: DataFrame,
     return out
 
 
-def lineage_metrics(ann_with_lineage: DataFrame) -> DataFrame:
-    """Per-partition lineage rows (north_rule: resumable with
-    per-partition lineage + metrics; reference analogue: the
-    part_N.pickle manifest, cat.py:1403-1421).  ``n_docs`` is the size
-    of the partition's doc_id set: ``countDistinct`` would plan a second
-    aggregation shuffle for the same value."""
-    return (ann_with_lineage.groupBy("part_id")
-            .agg(F.min("doc_id").alias("doc_id_min"),
-                 F.max("doc_id").alias("doc_id_max"),
-                 F.size(F.collect_set("doc_id")).cast("bigint")
-                 .alias("n_docs"),
-                 F.count("*").alias("n_annotations"),
-                 (F.sum("batch_us") / F.count("*")).alias("avg_row_cost_us")))
-
-
 def annotate_with_lineage(docs: DataFrame, bc,
                           num_partitions: Optional[int] = None
                           ) -> Tuple[DataFrame, Callable[[], DataFrame]]:
-    """``annotate`` whose kernel also gathers the ``lineage_metrics``
+    """``annotate`` whose kernel also gathers the per-partition lineage
     rows as it runs, so lineage costs no second pass over (or cache of)
     the annotations.  Returns the annotations and a function that gives
     the lineage rows (LINEAGE_SCHEMA) of what has been computed: call it

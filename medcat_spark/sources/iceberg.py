@@ -42,7 +42,8 @@ import os
 import struct
 import time
 import uuid
-from typing import Any, Dict, Iterable, List, Optional, Sequence, Tuple
+from typing import (Any, Callable, Dict, Iterable, List, Optional, Sequence,
+                    Tuple)
 
 # ---------------------------------------------------------------------------
 # Avro binary encoding (subset sufficient for Iceberg manifests)
@@ -2765,19 +2766,19 @@ class IcebergKgSink:
         return {"table": t, "snap_id": snap_id, "manifest": pend,
                 "data_dir": data_dir}
 
-    def publish(self, staged: Dict[str, Any], annotations, lineage,
+    def publish(self, staged: Dict[str, Any], annotations,
+                lineage: Callable[[], Any],
                 summary: Optional[Dict[str, str]] = None) -> Dict[str, int]:
-        """Append ``annotations`` and ``lineage`` (either may be None),
-        then commit the staged ``processed_docs`` files as a
-        metadata-only snapshot — the commit point.  ``lineage`` may be a
-        function giving the frame, called once ``annotations`` is
-        appended."""
+        """Append ``annotations``, then the frame ``lineage()`` gives
+        (either may be None), then commit the staged ``processed_docs``
+        files as a metadata-only snapshot — the commit point.
+        ``lineage`` is called after ``annotations`` is appended, so it
+        may give rows gathered while the annotations were computed."""
         stamp = {**(summary or {}), KG_COMMIT_ID: uuid.uuid4().hex}
         ids = {}
-        for name, df in (("annotations", annotations),
+        for name, df in (("annotations", lambda: annotations),
                          ("lineage", lineage)):
-            if callable(df):
-                df = df()
+            df = df()
             if df is None:
                 continue
             t = self._table(name) or IcebergTable.create(
@@ -2795,7 +2796,7 @@ class IcebergKgSink:
                summary: Optional[Dict[str, str]] = None) -> Dict[str, int]:
         """``stage`` the ``processed_docs`` frame, then ``publish``."""
         return self.publish(self.stage(processed_docs), annotations,
-                            lineage, summary)
+                            lambda: lineage, summary)
 
 
 def overwrite_table(location: str, df, partition_by: Sequence[str] = ()
@@ -2822,17 +2823,16 @@ def resumable_annotate_iceberg(spark, docs, bc, out_path: str,
     utils/checkpoint.py:94-110).  Returns the manifest dict (n_docs ==
     0: nothing left to do).
 
-    The manifest and every snapshot are stamped with the hashes of the
-    broadcast's CDB and config, the ones that annotate.  ``config``,
+    ``bc`` is a ``pipeline.broadcast_model`` handle.  The manifest and
+    every snapshot are stamped with the hashes of the broadcast's CDB
+    and config (its ``model_hashes``), the ones that annotate.  ``config``,
     when given, must hash like the broadcast's config (ValueError
     before anything is written)."""
     import shutil
 
-    from medcat_spark.pipeline import annotate_with_lineage, model_hashes
+    from medcat_spark.pipeline import annotate_with_lineage
 
-    hashes = getattr(bc, "model_hashes", None)
-    if hashes is None:   # a handle not made by broadcast_model
-        hashes = model_hashes(bc.value[0], bc.value[2])
+    hashes = bc.model_hashes
     given = config.content_hash() if config is not None else None
     if given is not None and given != hashes["config-hash"]:
         raise ValueError(

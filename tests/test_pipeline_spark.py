@@ -13,7 +13,7 @@ from medcat_spark.core.annotate import annotate_document
 from medcat_spark.core.docs import reconstruct_text, spans_signature
 from medcat_spark.fixtures import fixture_documents
 from medcat_spark.pipeline import (annotate, annotate_with_lineage,
-                                   broadcast_model, lineage_metrics)
+                                   broadcast_model)
 from medcat_spark.stats import overall_stats
 from medcat_spark.triples import cooccurrence_triples, mention_triples
 
@@ -135,8 +135,9 @@ def test_cooccurrence_triples(ann):
 
 
 def test_lineage_metrics(spark, docs_df, bc):
-    ann_l = annotate(docs_df, bc, num_partitions=6, keep_lineage_cols=True)
-    lm = lineage_metrics(ann_l).collect()
+    ann, lineage = annotate_with_lineage(docs_df, bc, num_partitions=6)
+    ann.count()
+    lm = lineage().collect()
     assert sum(r["n_docs"] for r in lm) == 60 - _docs_without_entities(spark, docs_df, bc)
     assert all(r["n_annotations"] > 0 for r in lm)
 
@@ -153,10 +154,10 @@ def _distinct_lineage(ann_with_lineage):
 
 
 def test_lineage_parity_with_distinct_count(spark, docs_df, bc):
-    """Per ``part_id``, ``lineage_metrics`` and the rows the annotate
-    kernel gathers (``annotate_with_lineage``) equal the countDistinct
-    definition except for the timing column, with its schema and
-    nullability, over 6 partitions and a duplicated doc_id."""
+    """Per ``part_id``, the lineage rows the annotate kernel gathers
+    (``annotate_with_lineage``) equal the countDistinct definition
+    except for the timing column, with its schema and nullability, over
+    6 partitions and a duplicated doc_id."""
     dup = docs_df.orderBy("doc_id").limit(1)
     docs = docs_df.unionByName(dup)
     ann_l = annotate(docs, bc, num_partitions=6, keep_lineage_cols=True)
@@ -167,14 +168,14 @@ def test_lineage_parity_with_distinct_count(spark, docs_df, bc):
 
     ann, lineage = annotate_with_lineage(docs, bc, num_partitions=6)
     n_ann = ann.count()
-    for got_df in (lineage_metrics(ann_l), lineage()):
-        assert got_df.schema == want_df.schema
-        got = {r["part_id"]: r for r in got_df.collect()}
-        assert got.keys() == want.keys()
-        for pid, r in got.items():
-            keys = ("doc_id_min", "doc_id_max", "n_docs", "n_annotations")
-            assert [r[k] for k in keys] == [want[pid][k] for k in keys]
-            assert 0 < r["avg_row_cost_us"] < math.inf
+    got_df = lineage()
+    assert got_df.schema == want_df.schema
+    got = {r["part_id"]: r for r in got_df.collect()}
+    assert got.keys() == want.keys()
+    for pid, r in got.items():
+        keys = ("doc_id_min", "doc_id_max", "n_docs", "n_annotations")
+        assert [r[k] for k in keys] == [want[pid][k] for k in keys]
+        assert 0 < r["avg_row_cost_us"] < math.inf
     assert sum(r["n_annotations"] for r in want.values()) == n_ann
 
 
