@@ -92,10 +92,12 @@ def match_rules(docs: DataFrame, rules, name_map: Optional[DataFrame] = None,
             out = {"doc_id": [], "start": [], "end": [], "cui": [],
                    "source_value": [], "acc": []}
             for row in rows:
+                if row["doc_id"] is None:
+                    continue   # a NULL doc_id gives no rows
                 text = row["text"] or ""
                 for rx, cui in compiled:
                     for m in rx.finditer(text):
-                        out["doc_id"].append(str(row["doc_id"]))
+                        out["doc_id"].append(row["doc_id"])
                         out["start"].append(m.start())
                         out["end"].append(m.end())
                         out["cui"].append(cui)

@@ -9,7 +9,8 @@ heads (`media_pixel_stats`, `media_audio_stats`, `media_adpcm_stats`,
 whose bytes (spans, for `media_features`/`frame_sample`) are NULL
 yields no output row.
 `media_features_from_bytes` instead keeps it as a ``format='unknown'``
-row, like any other undecodable member.
+row, like any other undecodable member.  In every operator a row whose
+doc_id is NULL yields no output row.
 
 Real decode paths (no PIL/ffmpeg needed): PNG pixels (all five row
 filters; depths 1/2/4/8/16; gray, gray+alpha, RGB, RGBA, palette),
@@ -59,8 +60,10 @@ _DOC_BYTES_SCHEMA = StructType([
 
 def _synth_column(docs: DataFrame, id_col: str, encode) -> DataFrame:
     """(doc_id string, media_bytes binary): one ``encode(int(doc_id))``
-    fixture blob per doc."""
+    fixture blob per doc with a doc_id."""
     def rec(r):
+        if r[id_col] is None:
+            return ()
         did = int(r[id_col])
         return [(str(did), encode(did))]
     return _map_rows(docs.select(id_col), _DOC_BYTES_SCHEMA, rec)
@@ -69,10 +72,11 @@ def _synth_column(docs: DataFrame, id_col: str, encode) -> DataFrame:
 def _decode_head(df: DataFrame, schema: StructType, bytes_col: str,
                  id_col: str, stats) -> DataFrame:
     """A decode head: ``stats(bytes)`` → output rows after ``doc_id``.
-    A NULL ``bytes_col`` yields no row (the module's NULL rule)."""
+    A NULL ``bytes_col`` or ``id_col`` yields no row (the module's NULL
+    rule)."""
     def rec(r):
         b = r[bytes_col]
-        if b is None:
+        if b is None or r[id_col] is None:
             return ()
         did = str(r[id_col])
         return [(did,) + row for row in stats(b)]
@@ -187,6 +191,8 @@ def media_features_from_bytes(df: DataFrame, bytes_col: str = "media_bytes",
     null dims and format 'unknown' instead of failing the batch —
     corpus-scale media tables always contain corrupt members."""
     def rec(r):
+        if r[id_col] is None:
+            return ()
         b = r[bytes_col]
         try:
             meta = real_decode(b)
@@ -206,6 +212,8 @@ def media_features(docs_with_spans: DataFrame) -> DataFrame:
     whose ``spans`` is NULL gives no output rows.
     """
     def rec(r):
+        if r["doc_id"] is None:
+            return
         for i, s in _media_spans(r["spans"]):
             meta = fake_decode(s["media_ref"])
             yield (str(r["doc_id"]), i, s["kind"], s["media_ref"],
@@ -261,6 +269,8 @@ def frame_sample(docs_with_spans: DataFrame, interval_ms: int = 1000,
     ``spans`` is NULL gives no output rows.
     """
     def rec(r):
+        if r["doc_id"] is None:
+            return
         for i, s in _media_spans(r["spans"]):
             ref = s["media_ref"]
             dur = fake_duration_ms(ref)

@@ -102,48 +102,56 @@ def prefix_scores(token_scores: Dict[str, np.ndarray], toks: Sequence[str],
     return P
 
 
+def _ce_grad(logits: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """Gradient of the mean softmax cross-entropy over the last axis of
+    ``logits`` for the class ids ``y`` (shaped ``logits.shape[:-1]``):
+    the one loss step of every fixture trainer."""
+    e = np.exp(logits - logits.max(axis=-1, keepdims=True))
+    p = e / e.sum(axis=-1, keepdims=True)
+    return (p - np.eye(p.shape[-1])[y]) / y.size
+
+
+def _bag_features(bags: Sequence[Sequence[str]], dim: int):
+    """The bag trainers' featurizer: the bags' sorted vocabulary, its
+    fixed deterministic ``det_vec`` embeddings E (the reference trains
+    or loads its own; determinism matters more here) and each bag's
+    mean embedding (B, dim), zero for an empty bag."""
+    from medcat_spark.fixtures import det_vec
+
+    vocab = sorted({t for bag in bags for t in bag})
+    E = np.stack([det_vec(t, dim) for t in vocab]) if vocab else \
+        np.zeros((0, dim))
+    tok2i = {t: i for i, t in enumerate(vocab)}
+    X = np.zeros((len(bags), dim))
+    for r, bag in enumerate(bags):
+        if bag:
+            X[r] = np.sum([E[tok2i[t]] for t in bag], axis=0) / len(bag)
+    return vocab, E, X
+
+
 def train_meta_model(windows: List[Tuple[List[str], str]], labels: List[str],
                      dim: int = 8, epochs: int = 300, lr: float = 0.5,
                      seed: int = 13, cntx_left: int = CNTX_LEFT,
                      cntx_right: int = CNTX_RIGHT) -> MetaCatModel:
     """Train embedding+linear classifier with deterministic numpy SGD.
 
-    ``windows`` = [(window tokens, label)].  Embeddings are fixed
-    deterministic per-token vectors (the reference trains/loads its own
-    embeddings; determinism matters more here), the linear head is
-    trained by full-batch gradient descent on softmax cross-entropy.
+    ``windows`` = [(window tokens, label)], featurized by
+    :func:`_bag_features`; the linear head is trained by full-batch
+    gradient descent on softmax cross-entropy.
     """
-    from medcat_spark.fixtures import det_vec
-
-    vocab = sorted({t for w, _ in windows for t in w})
-    E = np.stack([det_vec(t, dim) for t in vocab])
-    tok2i = {t: i for i, t in enumerate(vocab)}
-    lab2i = {l: i for i, l in enumerate(labels)}
-
-    X = np.zeros((len(windows), dim))
-    y = np.zeros(len(windows), dtype=int)
-    for r, (w, lab) in enumerate(windows):
-        vecs = [E[tok2i[t]] for t in w if t in tok2i]
-        if vecs:
-            X[r] = np.sum(vecs, axis=0) / len(w)
-        y[r] = lab2i[lab]
-
+    vocab, E, X = _bag_features([w for w, _ in windows], dim)
+    y = np.array([labels.index(lab) for _, lab in windows])
     rng = np.random.RandomState(seed)
     W = rng.normal(0, 0.01, (len(labels), dim))
     b = np.zeros(len(labels))
-    onehot = np.eye(len(labels))[y]
     for _ in range(epochs):
-        lg = X @ W.T + b
-        lg -= lg.max(axis=1, keepdims=True)
-        p = np.exp(lg)
-        p /= p.sum(axis=1, keepdims=True)
-        g = (p - onehot) / len(windows)
+        g = _ce_grad(X @ W.T + b, y)
         W -= lr * (g.T @ X)
         b -= lr * g.sum(axis=0)
 
     S = np.round(E @ W.T, 4)   # (V, C) per-token class contributions
-    return MetaCatModel(labels, {t: S[i] for t, i in tok2i.items()},
-                        np.round(b, 4), cntx_left, cntx_right)
+    return MetaCatModel(labels, dict(zip(vocab, S)), np.round(b, 4),
+                        cntx_left, cntx_right)
 
 
 # vocabulary of the driver testdata documents (TESTDATA.md) — the corpus
@@ -253,9 +261,13 @@ class MlpMetaModel:
         self.cntx_left = cntx_left
         self.cntx_right = cntx_right
 
-    def forward(self, X: np.ndarray) -> np.ndarray:
-        """(B, D) mean-pooled inputs → (B, C) logits."""
+    def forward(self, X: np.ndarray,
+                tape: Optional[dict] = None) -> np.ndarray:
+        """(B, D) mean-pooled inputs → (B, C) logits; a ``tape`` dict
+        receives the hidden activations."""
         H = np.maximum(0.0, X @ self.W1.T + self.b1)
+        if tape is not None:
+            tape["H"] = H
         return H @ self.W2.T + self.b2
 
     def pool(self, windows: Sequence[Sequence[str]]) -> np.ndarray:
@@ -298,48 +310,29 @@ def train_mlp_meta_model(windows: List[Tuple[List[str], str]],
                          epochs: int = 2000, lr: float = 1.0,
                          seed: int = 17, cntx_left: int = CNTX_LEFT,
                          cntx_right: int = CNTX_RIGHT) -> MlpMetaModel:
-    """Full-batch numpy SGD on softmax cross-entropy through the ReLU
-    hidden layer.  Weights are rounded to 4 decimals at export so the
-    Spark scorer and the SQL oracle share bit-identical constants."""
-    from medcat_spark.fixtures import det_vec
-
-    vocab = sorted({t for w, _ in windows for t in w})
-    E = np.stack([det_vec(t, dim) for t in vocab])
-    tok2i = {t: i for i, t in enumerate(vocab)}
-    lab2i = {l: i for i, l in enumerate(labels)}
-
-    X = np.zeros((len(windows), dim))
-    y = np.zeros(len(windows), dtype=int)
-    for r, (w, lab) in enumerate(windows):
-        vecs = [E[tok2i[t]] for t in w if t in tok2i]
-        if vecs:
-            X[r] = np.sum(vecs, axis=0) / len(w)
-        y[r] = lab2i[lab]
-
+    """Full-batch numpy SGD on softmax cross-entropy, backprop through
+    :meth:`MlpMetaModel.forward` run with a tape.  Weights are rounded
+    to 4 decimals at export so the Spark scorer and the SQL oracle share
+    bit-identical constants."""
+    vocab, E, X = _bag_features([w for w, _ in windows], dim)
+    y = np.array([labels.index(lab) for _, lab in windows])
     rng = np.random.RandomState(seed)
-    W1 = rng.normal(0, 0.5, (hidden, dim))
-    b1 = np.zeros(hidden)
-    W2 = rng.normal(0, 0.5, (len(labels), hidden))
-    b2 = np.zeros(len(labels))
-    onehot = np.eye(len(labels))[y]
+    m = MlpMetaModel(labels, vocab, E, rng.normal(0, 0.5, (hidden, dim)),
+                     np.zeros(hidden),
+                     rng.normal(0, 0.5, (len(labels), hidden)),
+                     np.zeros(len(labels)), cntx_left, cntx_right)
     for _ in range(epochs):
-        Z = X @ W1.T + b1
-        H = np.maximum(0.0, Z)
-        lg = H @ W2.T + b2
-        lg -= lg.max(axis=1, keepdims=True)
-        p = np.exp(lg)
-        p /= p.sum(axis=1, keepdims=True)
-        g = (p - onehot) / len(windows)            # (B, C)
-        gH = g @ W2                                 # (B, H)
-        gZ = gH * (Z > 0)
-        W2 -= lr * (g.T @ H)
-        b2 -= lr * g.sum(axis=0)
-        W1 -= lr * (gZ.T @ X)
-        b1 -= lr * gZ.sum(axis=0)
+        tape: dict = {}
+        g = _ce_grad(m.forward(X, tape), y)         # (B, C)
+        H = tape["H"]
+        gZ = (g @ m.W2) * (H > 0)                   # (B, H)
+        m.W2 -= lr * (g.T @ H)
+        m.b2 -= lr * g.sum(axis=0)
+        m.W1 -= lr * (gZ.T @ X)
+        m.b1 -= lr * gZ.sum(axis=0)
 
-    return MlpMetaModel(labels, vocab, np.round(E, 4), np.round(W1, 4),
-                        np.round(b1, 4), np.round(W2, 4), np.round(b2, 4),
-                        cntx_left, cntx_right)
+    return MlpMetaModel(labels, vocab, *(np.round(a, 4) for a in (
+        m.E, m.W1, m.b1, m.W2, m.b2)), cntx_left, cntx_right)
 
 
 @lru_cache(maxsize=None)
@@ -543,8 +536,110 @@ FROM lg
 # ---------------------------------------------------------------------------
 
 
-class RnnMetaModel:
-    """Broadcastable stateful model: embeddings + 2 RNN cells + head."""
+class _BiRnn:
+    """The weights both stateful heads (RnnMetaModel,
+    ner_model.RnnTokenTagger) broadcast: embeddings, a forward and a
+    backward tanh cell, and a linear head over their states."""
+
+    def __init__(self, labels: List[str], vocab: List[str], E: np.ndarray,
+                 fwd: Sequence[np.ndarray], bwd: Sequence[np.ndarray],
+                 Wo: np.ndarray, bo: np.ndarray) -> None:
+        self.labels = labels
+        self.vocab = vocab
+        self.tok2i = {t: i for i, t in enumerate(vocab)}
+        self.E = E                      # (V, D); row 0 reserved (pad/OOV)
+        self.fwd = fwd                  # (Wx (H,D), Wh (H,H), bh (H,))
+        self.bwd = bwd
+        self.Wo = Wo                    # (C, 2H)
+        self.bo = bo                    # (C,)
+
+    def embed(self, seqs: Sequence[Sequence[str]]):
+        # every in-sequence position is masked in (OOV -> E[0])
+        idx, mask = pad_ids([[self.tok2i.get(t, 0) for t in s]
+                             for s in seqs])
+        return self.E[idx], mask        # (B, L, D), (B, L)
+
+    def states(self, X: np.ndarray, mask: np.ndarray,
+               tape: Optional[dict] = None):
+        """The masked bidirectional tanh recurrence: (B, L, D) inputs →
+        the per-step states (B, L, H) of the forward and of the backward
+        cell.  A padded step carries the state through (the
+        packed-sequence semantics a torch BiLSTM uses), so ragged batches
+        score like per-sequence calls.  A ``tape`` dict receives both."""
+        B, L, _ = X.shape
+        out = []
+        for (Wx, Wh, bh), steps in ((self.fwd, range(L)),
+                                    (self.bwd, range(L - 1, -1, -1))):
+            h = np.zeros((B, Wh.shape[0]))
+            S = np.empty((B, L, Wh.shape[0]))
+            for t in steps:
+                m = mask[:, t:t + 1]
+                h = m * np.tanh(X[:, t] @ Wx.T + h @ Wh.T + bh) + (1.0 - m) * h
+                S[:, t] = h
+            out.append(S)
+        if tape is not None:
+            tape.update(fwd=out[0], bwd=out[1])
+        return out
+
+
+def _bptt(cell, X: np.ndarray, S: np.ndarray, dS: np.ndarray,
+          reverse: bool):
+    """Backprop through one direction of :meth:`_BiRnn.states` with
+    every step unmasked: the cell's (dWx, dWh, dbh) from its per-step
+    states ``S`` and the loss gradient ``dS`` on them."""
+    Wx, Wh, bh = cell
+    L = X.shape[1]
+    steps = range(L - 1, -1, -1) if reverse else range(L)
+    dWx, dWh, dbh = np.zeros_like(Wx), np.zeros_like(Wh), np.zeros_like(bh)
+    carry = h0 = np.zeros_like(S[:, 0])
+    for i in range(L - 1, -1, -1):
+        t = steps[i]
+        da = (dS[:, t] + carry) * (1.0 - S[:, t] ** 2)
+        dWx += da.T @ X[:, t]
+        dWh += da.T @ (S[:, steps[i - 1]] if i else h0)
+        dbh += da.sum(axis=0)
+        carry = da @ Wh
+    return dWx, dWh, dbh
+
+
+def _fit_birnn(cls, seqs: Sequence[Sequence[str]], y: np.ndarray,
+               labels: List[str], dim: int, hidden: int, epochs: int,
+               lr: float, seed: int, *args):
+    """Train a stateful head ``cls`` on fixed-length ``seqs`` with class
+    ids ``y`` by full-batch BPTT: per epoch the head's forward run with
+    a tape, softmax CE, the head's backward onto the per-step states,
+    one BPTT per direction and a clipped SGD step.  The embeddings stay
+    a fixed random codebook — the recurrence does the work.  Weights are
+    rounded to 4 decimals at export like the other fixture models."""
+    rng = np.random.RandomState(seed)
+    vocab = ["<pad>"] + sorted({t for s in seqs for t in s})
+    E = rng.randn(len(vocab), dim) * 0.5
+    E[0] = 0.0
+    fwd, bwd = ([rng.randn(hidden, dim) * 0.3,
+                 np.eye(hidden) * 0.5 + rng.randn(hidden, hidden) * 0.1,
+                 np.zeros(hidden)] for _ in range(2))
+    m = cls(labels, vocab, E, fwd, bwd,
+            rng.randn(len(labels), 2 * hidden) * 0.3,
+            np.zeros(len(labels)), *args)
+    X, mask = m.embed(seqs)
+    assert mask.all(), "training seqs fixed-length"
+    for _ in range(epochs):
+        tape: dict = {}
+        dWo, dbo, dF, dB = m.backward(_ce_grad(m.forward(X, mask, tape), y),
+                                      tape)
+        grads = (_bptt(m.fwd, X, tape["fwd"], dF, False)
+                 + _bptt(m.bwd, X, tape["bwd"], dB, True) + (dWo, dbo))
+        for w, g in zip((*m.fwd, *m.bwd, m.Wo, m.bo), grads):
+            w -= lr * np.clip(g, -5.0, 5.0)
+
+    r4 = lambda a: np.round(a, 4)
+    return cls(labels, vocab, r4(E), tuple(map(r4, m.fwd)),
+               tuple(map(r4, m.bwd)), r4(m.Wo), r4(m.bo), *args)
+
+
+class RnnMetaModel(_BiRnn):
+    """Broadcastable stateful classifier: the forward cell's last state
+    and the backward cell's first, concatenated, feed the head."""
 
     MAX_FORWARD_BATCH = 8192
 
@@ -554,40 +649,31 @@ class RnnMetaModel:
                  Wo: np.ndarray, bo: np.ndarray,
                  cntx_left: int = CNTX_LEFT,
                  cntx_right: int = CNTX_RIGHT) -> None:
-        self.labels = labels
-        self.vocab = vocab
-        self.tok2i = {t: i for i, t in enumerate(vocab)}
-        self.E = E                      # (V, D); row 0 reserved (pad/OOV)
-        self.fwd = fwd                  # (Wx (H,D), Wh (H,H), bh (H,))
-        self.bwd = bwd
-        self.Wo = Wo                    # (C, 2H)
-        self.bo = bo                    # (C,)
+        super().__init__(labels, vocab, E, fwd, bwd, Wo, bo)
         self.cntx_left = cntx_left
         self.cntx_right = cntx_right
 
-    def embed(self, windows: Sequence[Sequence[str]]):
-        # every in-window position is masked in (OOV -> E[0])
-        idx, mask = pad_ids([[self.tok2i.get(t, 0) for t in w]
-                             for w in windows])
-        return self.E[idx], mask        # (B, L, D), (B, L)
+    def forward(self, X: np.ndarray, mask: np.ndarray,
+                tape: Optional[dict] = None) -> np.ndarray:
+        """(B, L, D) embedded windows → (B, C) logits; a ``tape`` dict
+        receives the states and the head input ``h``."""
+        fwd, bwd = self.states(X, mask, tape)
+        h = np.concatenate([fwd[:, -1], bwd[:, 0]], axis=1)
+        if tape is not None:
+            tape["h"] = h
+        return h @ self.Wo.T + self.bo
 
-    @staticmethod
-    def _run_cell(cell, X, mask, reverse: bool):
-        Wx, Wh, bh = cell
-        B, L, _ = X.shape
-        h = np.zeros((B, Wh.shape[0]))
-        steps = range(L - 1, -1, -1) if reverse else range(L)
-        for t in steps:
-            m = mask[:, t:t + 1]
-            h_new = np.tanh(X[:, t] @ Wx.T + h @ Wh.T + bh)
-            h = m * h_new + (1.0 - m) * h   # pad carries state through
-        return h                            # (B, H) final state
+    def backward(self, dlogits: np.ndarray, tape: dict):
+        """(dWo, dbo) and the loss gradient on each direction's per-step
+        states: only each direction's last step feeds the head."""
+        n = self.Wo.shape[1] // 2
+        dF, dB = np.zeros_like(tape["fwd"]), np.zeros_like(tape["bwd"])
+        dF[:, -1] = dlogits @ self.Wo[:, :n]
+        dB[:, 0] = dlogits @ self.Wo[:, n:]
+        return dlogits.T @ tape["h"], dlogits.sum(axis=0), dF, dB
 
     def forward_windows(self, windows: Sequence[Sequence[str]]):
-        X, mask = self.embed(windows)
-        hf = self._run_cell(self.fwd, X, mask, reverse=False)
-        hb = self._run_cell(self.bwd, X, mask, reverse=True)
-        return np.concatenate([hf, hb], axis=1) @ self.Wo.T + self.bo
+        return self.forward(*self.embed(windows))
 
     def predict_batch(self, windows: Sequence[Sequence[str]]):
         return predict_chunked(self.labels, self.forward_windows,
@@ -602,85 +688,12 @@ def train_rnn_meta_model(seqs: List[Tuple[List[str], str]],
                          epochs: int = 400, lr: float = 0.5,
                          seed: int = 23, cntx_left: int = CNTX_LEFT,
                          cntx_right: int = CNTX_RIGHT) -> RnnMetaModel:
-    """Full-batch BPTT (fixed-length training sequences, softmax CE,
-    gradient clip) through both directions; embeddings stay a fixed
-    random codebook — the recurrence does the work.  Weights rounded to
-    4 decimals at export like the other fixture models."""
-    rng = np.random.RandomState(seed)
-    vocab = ["<pad>"] + sorted({t for s, _ in seqs for t in s})
-    tok2i = {t: i for i, t in enumerate(vocab)}
-    V, C = len(vocab), len(labels)
-    L = len(seqs[0][0])
-    assert all(len(s) == L for s, _ in seqs), "training seqs fixed-length"
-    E = rng.randn(V, dim) * 0.5
-    E[0] = 0.0
-    idx = np.array([[tok2i[t] for t in s] for s, _ in seqs])
-    y = np.array([labels.index(lbl) for _, lbl in seqs])
-    X = E[idx]                                           # (B, L, D)
-    B = len(seqs)
-
-    def init_cell():
-        return [rng.randn(hidden, dim) * 0.3,
-                np.eye(hidden) * 0.5 + rng.randn(hidden, hidden) * 0.1,
-                np.zeros(hidden)]
-
-    fwd, bwd = init_cell(), init_cell()
-    Wo = rng.randn(C, 2 * hidden) * 0.3
-    bo = np.zeros(C)
-
-    def run(cell, reverse):
-        Wx, Wh, bh = cell
-        hs = [np.zeros((B, hidden))]
-        steps = range(L - 1, -1, -1) if reverse else range(L)
-        for t in steps:
-            hs.append(np.tanh(X[:, t] @ Wx.T + hs[-1] @ Wh.T + bh))
-        return hs, list(steps)
-
-    for _ in range(epochs):
-        hs_f, order_f = run(fwd, False)
-        hs_b, order_b = run(bwd, True)
-        hcat = np.concatenate([hs_f[-1], hs_b[-1]], axis=1)
-        logits = hcat @ Wo.T + bo
-        e = np.exp(logits - logits.max(axis=1, keepdims=True))
-        p = e / e.sum(axis=1, keepdims=True)
-        dlogits = p.copy()
-        dlogits[np.arange(B), y] -= 1.0
-        dlogits /= B
-        dWo = dlogits.T @ hcat
-        dbo = dlogits.sum(axis=0)
-        dh_f = dlogits @ Wo[:, :hidden]
-        dh_b = dlogits @ Wo[:, hidden:]
-
-        def bptt(cell, hs, order, dh_last):
-            Wx, Wh, bh = cell
-            dWx = np.zeros_like(Wx)
-            dWh = np.zeros_like(Wh)
-            dbh = np.zeros_like(bh)
-            dh = dh_last
-            for i in range(len(order) - 1, -1, -1):
-                t = order[i]
-                h_t, h_prev = hs[i + 1], hs[i]
-                da = dh * (1.0 - h_t ** 2)
-                dWx += da.T @ X[:, t]
-                dWh += da.T @ h_prev
-                dbh += da.sum(axis=0)
-                dh = da @ Wh
-            return dWx, dWh, dbh
-
-        grads_f = bptt(fwd, hs_f, order_f, dh_f)
-        grads_b = bptt(bwd, hs_b, order_b, dh_b)
-        for cell, grads in ((fwd, grads_f), (bwd, grads_b)):
-            for j in range(3):
-                g = np.clip(grads[j], -5.0, 5.0)
-                cell[j] = cell[j] - lr * g
-        Wo -= lr * np.clip(dWo, -5.0, 5.0)
-        bo -= lr * np.clip(dbo, -5.0, 5.0)
-
-    r4 = lambda a: np.round(a, 4)
-    return RnnMetaModel(labels, vocab, r4(E),
-                        tuple(r4(w) for w in fwd),
-                        tuple(r4(w) for w in bwd), r4(Wo), r4(bo),
-                        cntx_left, cntx_right)
+    """Full-batch BPTT (:func:`_fit_birnn`) through both directions on
+    fixed-length training sequences."""
+    return _fit_birnn(RnnMetaModel, [s for s, _ in seqs],
+                      np.array([labels.index(lab) for _, lab in seqs]),
+                      labels, dim, hidden, epochs, lr, seed,
+                      cntx_left, cntx_right)
 
 
 def order_task_sequences(n_pairs: int = 120, length: int = 8,

@@ -21,7 +21,7 @@ Arrow), and exactly expressible as the DuckDB oracle.
 from __future__ import annotations
 
 from functools import lru_cache
-from typing import Dict, List, Tuple
+from typing import Dict, List, Optional, Tuple
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from medcat_spark import worker
+from medcat_spark.functions.meta_model import _BiRnn, _ce_grad, _fit_birnn
+from medcat_spark.functions.scorer import TokenIndex
 
 WINDOW = 3  # context tokens each side
 
@@ -76,13 +78,8 @@ def train_token_tagger(sentences: List[Tuple[List[str], List[str]]],
     rng = np.random.RandomState(seed)
     W = rng.normal(0, 0.01, (len(labels), 2 * dim))
     b = np.zeros(len(labels))
-    onehot = np.eye(len(labels))[y]
     for _ in range(epochs):
-        lg = X @ W.T + b
-        lg -= lg.max(axis=1, keepdims=True)
-        p = np.exp(lg)
-        p /= p.sum(axis=1, keepdims=True)
-        g = (p - onehot) / len(y)
+        g = _ce_grad(X @ W.T + b, y)
         W -= lr * (g.T @ X)
         b -= lr * g.sum(axis=0)
 
@@ -196,55 +193,36 @@ def ner_fixture_model() -> TokenTagModel:
 # ---------------------------------------------------------------------------
 
 
-class RnnTokenTagger:
+class RnnTokenTagger(_BiRnn):
     """Broadcastable stateful tagger: per-step bidirectional states ->
     per-token labels; span assembly from consecutive non-'O' tokens."""
 
     MAX_FORWARD_BATCH = 4096
 
-    def __init__(self, labels: List[str], vocab: List[str], E: np.ndarray,
-                 fwd, bwd, Wo: np.ndarray, bo: np.ndarray) -> None:
-        self.labels = labels
-        self.vocab = vocab
-        self.tok2i = {t: i for i, t in enumerate(vocab)}
-        self.E = E
-        self.fwd = fwd      # (Wx, Wh, bh)
-        self.bwd = bwd
-        self.Wo = Wo        # (C, 2H)
-        self.bo = bo
+    def forward(self, X: np.ndarray, mask: np.ndarray,
+                tape: Optional[dict] = None) -> np.ndarray:
+        """(B, L, D) embedded sequences → (B, L, C) per-step logits; a
+        ``tape`` dict receives the states and the head input ``h``."""
+        h = np.concatenate(self.states(X, mask, tape), axis=2)  # (B, L, 2H)
+        if tape is not None:
+            tape["h"] = h
+        return h @ self.Wo.T + self.bo
 
-    def _states(self, cell, X, mask, reverse: bool):
-        Wx, Wh, bh = cell
-        B, L, _ = X.shape
-        h = np.zeros((B, Wh.shape[0]))
-        out = np.zeros((B, L, Wh.shape[0]))
-        steps = range(L - 1, -1, -1) if reverse else range(L)
-        for t in steps:
-            m = mask[:, t:t + 1]
-            h = m * np.tanh(X[:, t] @ Wx.T + h @ Wh.T + bh) + (1.0 - m) * h
-            out[:, t] = h
-        return out
+    def backward(self, dlogits: np.ndarray, tape: dict):
+        """(dWo, dbo) and the loss gradient on each direction's per-step
+        states: every step feeds the head."""
+        n = self.Wo.shape[1] // 2
+        dh = dlogits @ self.Wo                             # (B, L, 2H)
+        return (np.einsum("blc,blh->ch", dlogits, tape["h"]),
+                dlogits.sum(axis=(0, 1)), dh[:, :, :n], dh[:, :, n:])
 
     def tag_batch(self, seqs: List[List[str]]) -> List[List[str]]:
         out: List[List[str]] = []
         for ofs in range(0, len(seqs), self.MAX_FORWARD_BATCH):
             chunk = seqs[ofs:ofs + self.MAX_FORWARD_BATCH]
-            B = len(chunk)
-            L = max((len(s) for s in chunk), default=1) or 1
-            idx = np.zeros((B, L), dtype=np.int64)
-            mask = np.zeros((B, L))
-            for r, s in enumerate(chunk):
-                for c, t in enumerate(s):
-                    idx[r, c] = self.tok2i.get(t, 0)
-                    mask[r, c] = 1.0
-            X = self.E[idx]
-            H = np.concatenate([self._states(self.fwd, X, mask, False),
-                                self._states(self.bwd, X, mask, True)],
-                               axis=2)                     # (B, L, 2H)
-            lg = H @ self.Wo.T + self.bo                   # (B, L, C)
-            best = lg.argmax(axis=2)
-            out.extend([ [self.labels[best[r, c]] for c in range(len(s))]
-                         for r, s in enumerate(chunk) ])
+            best = self.forward(*self.embed(chunk)).argmax(axis=2)
+            out.extend([self.labels[c] for c in row[:len(s)]]
+                       for row, s in zip(best, chunk))
         return out
 
 
@@ -253,83 +231,11 @@ def train_rnn_tagger(sentences: List[Tuple[List[str], List[str]]],
                      epochs: int = 300, lr: float = 0.5,
                      seed: int = 31) -> RnnTokenTagger:
     """Per-step softmax CE through both directions (full-batch BPTT,
-    fixed-length training sentences, gradient clip)."""
-    rng = np.random.RandomState(seed)
-    vocab = ["<pad>"] + sorted({t for s, _ in sentences for t in s})
-    tok2i = {t: i for i, t in enumerate(vocab)}
-    C = len(labels)
-    L = len(sentences[0][0])
-    assert all(len(s) == L for s, _ in sentences)
-    E = rng.randn(len(vocab), dim) * 0.5
-    E[0] = 0.0
-    idx = np.array([[tok2i[t] for t in s] for s, _ in sentences])
-    y = np.array([[labels.index(l) for l in ls] for _, ls in sentences])
-    X = E[idx]
-    B = len(sentences)
-
-    def init_cell():
-        return [rng.randn(hidden, dim) * 0.3,
-                np.eye(hidden) * 0.5 + rng.randn(hidden, hidden) * 0.1,
-                np.zeros(hidden)]
-
-    fwd, bwd = init_cell(), init_cell()
-    Wo = rng.randn(C, 2 * hidden) * 0.3
-    bo = np.zeros(C)
-
-    def run(cell, reverse):
-        Wx, Wh, bh = cell
-        hs = np.zeros((B, L + 1, hidden))   # hs[:, i] = state BEFORE step i
-        order = list(range(L - 1, -1, -1) if reverse else range(L))
-        h = np.zeros((B, hidden))
-        states = np.zeros((B, L, hidden))
-        for i, t in enumerate(order):
-            hs[:, i] = h
-            h = np.tanh(X[:, t] @ Wx.T + h @ Wh.T + bh)
-            states[:, t] = h
-        return states, hs, order
-
-    for _ in range(epochs):
-        st_f, hsf, of = run(fwd, False)
-        st_b, hsb, ob = run(bwd, True)
-        Hc = np.concatenate([st_f, st_b], axis=2)          # (B, L, 2H)
-        lg = Hc @ Wo.T + bo
-        e = np.exp(lg - lg.max(axis=2, keepdims=True))
-        p = e / e.sum(axis=2, keepdims=True)
-        dlg = p.copy()
-        dlg[np.arange(B)[:, None], np.arange(L)[None, :], y] -= 1.0
-        dlg /= (B * L)
-        dWo = np.einsum("blc,blh->ch", dlg, Hc)
-        dbo = dlg.sum(axis=(0, 1))
-        dH = dlg @ Wo                                      # (B, L, 2H)
-
-        def bptt(cell, states, hs, order, dstates):
-            Wx, Wh, bh = cell
-            dWx = np.zeros_like(Wx)
-            dWh = np.zeros_like(Wh)
-            dbh = np.zeros_like(bh)
-            carry = np.zeros((B, hidden))
-            for i in range(len(order) - 1, -1, -1):
-                t = order[i]
-                dh = dstates[:, t] + carry
-                da = dh * (1.0 - states[:, t] ** 2)
-                dWx += da.T @ X[:, t]
-                dWh += da.T @ hs[:, i]
-                dbh += da.sum(axis=0)
-                carry = da @ Wh
-            return dWx, dWh, dbh
-
-        gf = bptt(fwd, st_f, hsf, of, dH[:, :, :hidden])
-        gb = bptt(bwd, st_b, hsb, ob, dH[:, :, hidden:])
-        for cell, grads in ((fwd, gf), (bwd, gb)):
-            for j in range(3):
-                cell[j] = cell[j] - lr * np.clip(grads[j], -5.0, 5.0)
-        Wo -= lr * np.clip(dWo, -5.0, 5.0)
-        bo -= lr * np.clip(dbo, -5.0, 5.0)
-
-    r4 = lambda a: np.round(a, 4)
-    return RnnTokenTagger(labels, vocab, r4(E),
-                          tuple(r4(w) for w in fwd),
-                          tuple(r4(w) for w in bwd), r4(Wo), r4(bo))
+    :func:`meta_model._fit_birnn`, on fixed-length sentences)."""
+    return _fit_birnn(RnnTokenTagger, [s for s, _ in sentences],
+                      np.array([[labels.index(lab) for lab in labs]
+                                for _, labs in sentences]),
+                      labels, dim, hidden, epochs, lr, seed)
 
 
 def bracket_task_sentences(n: int = 200, length: int = 20, seed: int = 9):
@@ -365,28 +271,21 @@ def tag_spans_rnn(docs: DataFrame, bc) -> DataFrame:
         model: RnnTokenTagger = bc.value
         for rows in batches:
             out = {"doc_id": [], "start": [], "end": [], "label": []}
-            seqs, metas = [], []
-            for row in rows:
-                toks = (row["text"] or "").split(" ")
-                pos, starts = 0, []
-                for t in toks:
-                    starts.append(pos)
-                    pos += len(t) + 1
-                seqs.append(toks)
-                metas.append((str(row["doc_id"]), toks, starts))
-            for (doc_id, toks, starts), labels in zip(
-                    metas, model.tag_batch(seqs)):
+            docs = [(row["doc_id"], TokenIndex(row["text"] or ""))
+                    for row in rows if row["doc_id"] is not None]
+            for (doc_id, doc), labels in zip(
+                    docs, model.tag_batch([d.toks for _, d in docs])):
                 i = 0
-                while i < len(toks):
+                while i < len(labels):
                     if labels[i] == "O":
                         i += 1
                         continue
                     j = i
-                    while j + 1 < len(toks) and labels[j + 1] == labels[i]:
+                    while j + 1 < len(labels) and labels[j + 1] == labels[i]:
                         j += 1
                     out["doc_id"].append(doc_id)
-                    out["start"].append(starts[i])
-                    out["end"].append(starts[j] + len(toks[j]))
+                    out["start"].append(doc.starts[i])
+                    out["end"].append(doc.starts[j] + len(doc.toks[j]))
                     out["label"].append(labels[i])
                     i = j + 1
             yield out

@@ -29,7 +29,8 @@ from typing import Dict, List, Sequence, Tuple
 import numpy as np
 from pyspark.sql import DataFrame
 
-from medcat_spark.functions.meta_model import (_TESTDATA_WORDS, prefix_scores,
+from medcat_spark.functions.meta_model import (_TESTDATA_WORDS, _bag_features,
+                                               _ce_grad, prefix_scores,
                                                sql_decide)
 from medcat_spark.functions.scorer import score
 
@@ -84,42 +85,22 @@ def train_rel_model(samples: List[Tuple[List[str], int, str]],
     """samples = [(between tokens, distance, label)]; deterministic SGD
     (same recipe as meta_model.train_meta_model, plus the scalar
     distance feature)."""
-    from medcat_spark.fixtures import det_vec
-
-    vocab = sorted({t for tk, _, _ in samples for t in tk})
-    E = np.stack([det_vec(t, dim) for t in vocab]) if vocab else \
-        np.zeros((0, dim))
-    tok2i = {t: i for i, t in enumerate(vocab)}
-    lab2i = {l: i for i, l in enumerate(labels)}
-
-    X = np.zeros((len(samples), dim))
-    D = np.zeros(len(samples))
-    y = np.zeros(len(samples), dtype=int)
-    for r, (tk, dist, lab) in enumerate(samples):
-        vecs = [E[tok2i[t]] for t in tk if t in tok2i]
-        if vecs:
-            X[r] = np.sum(vecs, axis=0) / max(len(tk), 1)
-        D[r] = dist / max_distance
-        y[r] = lab2i[lab]
-
+    vocab, E, X = _bag_features([tk for tk, _, _ in samples], dim)
+    D = np.array([dist / max_distance for _, dist, _ in samples])
+    y = np.array([labels.index(lab) for _, _, lab in samples])
     rng = np.random.RandomState(seed)
     W = rng.normal(0, 0.01, (len(labels), dim))
     wd = np.zeros(len(labels))
     b = np.zeros(len(labels))
-    onehot = np.eye(len(labels))[y]
     for _ in range(epochs):
-        lg = X @ W.T + np.outer(D, wd) + b
-        lg -= lg.max(axis=1, keepdims=True)
-        p = np.exp(lg)
-        p /= p.sum(axis=1, keepdims=True)
-        g = (p - onehot) / len(samples)
+        g = _ce_grad(X @ W.T + np.outer(D, wd) + b, y)
         W -= lr * (g.T @ X)
         wd -= lr * (g * D[:, None]).sum(axis=0)
         b -= lr * g.sum(axis=0)
 
     S = np.round(E @ W.T, 4)
-    return RelCatModel(labels, {t: S[i] for t, i in tok2i.items()},
-                       np.round(wd, 4), np.round(b, 4), max_distance)
+    return RelCatModel(labels, dict(zip(vocab, S)), np.round(wd, 4),
+                       np.round(b, 4), max_distance)
 
 
 # deterministic fixture model over the testdata vocabulary: a connector

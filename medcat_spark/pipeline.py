@@ -42,8 +42,6 @@ ANNOTATION_SCHEMA = StructType([
     StructField("context_similarity", DoubleType()),
     StructField("span_idx", IntegerType()),      # interleaved-doc coords
     StructField("span_offset", IntegerType()),
-    StructField("part_id", IntegerType()),       # lineage: task partition
-    StructField("batch_us", LongType()),         # lineage: per-batch cost
 ])
 
 # The lineage table's rows, one per partition that gave annotations
@@ -162,8 +160,6 @@ def _annotate_batches(bc, has_spans: bool, keep_overlaps: bool = False,
                     out["span_offset"].append(so if so is not None else -1)
             n = len(out["doc_id"])
             batch_us = (time.monotonic_ns() - t0) // 1000
-            out["part_id"] = [pid] * n
-            out["batch_us"] = [batch_us] * n
             if lineage is not None:
                 ids.update(out["doc_id"])
                 n_rows += n
@@ -194,7 +190,6 @@ def salted_repartition(docs: DataFrame, num_partitions: int,
 
 
 def annotate(docs: DataFrame, bc, num_partitions: Optional[int] = None,
-             keep_lineage_cols: bool = False,
              keep_overlaps: bool = False, lineage=None) -> DataFrame:
     """Annotate a documents DataFrame.
 
@@ -212,12 +207,9 @@ def annotate(docs: DataFrame, bc, num_partitions: Optional[int] = None,
                         for c in cols])
     if num_partitions:
         src = salted_repartition(src, num_partitions)
-    ann = src.mapInArrow(
+    return src.mapInArrow(
         _annotate_batches(bc, has_spans, keep_overlaps, lineage),
         schema=ANNOTATION_SCHEMA)
-    if not keep_lineage_cols:
-        ann = ann.drop("part_id", "batch_us")
-    return ann
 
 
 def project_output(ann: DataFrame, concepts: DataFrame,

@@ -21,8 +21,7 @@ def annotate_stream(stream_docs: DataFrame, bc) -> DataFrame:
     """docs readStream (doc_id + text|spans) → annotation row stream."""
     has_spans = "spans" in stream_docs.columns
     src = stream_docs.select("doc_id", "spans" if has_spans else "text")
-    ann = src.mapInArrow(_annotate_batches(bc, has_spans), ANNOTATION_SCHEMA)
-    return ann.drop("part_id", "batch_us")
+    return src.mapInArrow(_annotate_batches(bc, has_spans), ANNOTATION_SCHEMA)
 
 
 def run_stream_to_parquet(spark: SparkSession, source_dir: str,

@@ -12,8 +12,8 @@ from medcat_spark.config import EngineConfig
 from medcat_spark.core.annotate import annotate_document
 from medcat_spark.core.docs import reconstruct_text, spans_signature
 from medcat_spark.fixtures import fixture_documents
-from medcat_spark.pipeline import (annotate, annotate_with_lineage,
-                                   broadcast_model)
+from medcat_spark.pipeline import (LINEAGE_SCHEMA, annotate,
+                                   annotate_with_lineage, broadcast_model)
 from medcat_spark.stats import overall_stats
 from medcat_spark.triples import cooccurrence_triples, mention_triples
 
@@ -142,34 +142,36 @@ def test_lineage_metrics(spark, docs_df, bc):
     assert all(r["n_annotations"] > 0 for r in lm)
 
 
-def _distinct_lineage(ann_with_lineage):
-    """The lineage definition with ``countDistinct``: the schema that
-    roots already written hold, and the rows lineage must equal."""
-    return (ann_with_lineage.groupBy("part_id")
+def _distinct_lineage(ann):
+    """The lineage definition with ``countDistinct`` over the annotations
+    tagged with their task partition (``spark_partition_id`` runs in the
+    annotate kernel's stage): the rows lineage must equal, but for the
+    timing column."""
+    return (ann.withColumn("part_id", F.spark_partition_id())
+            .groupBy("part_id")
             .agg(F.min("doc_id").alias("doc_id_min"),
                  F.max("doc_id").alias("doc_id_max"),
                  F.countDistinct("doc_id").alias("n_docs"),
-                 F.count("*").alias("n_annotations"),
-                 (F.sum("batch_us") / F.count("*")).alias("avg_row_cost_us")))
+                 F.count("*").alias("n_annotations")))
 
 
 def test_lineage_parity_with_distinct_count(spark, docs_df, bc):
     """Per ``part_id``, the lineage rows the annotate kernel gathers
     (``annotate_with_lineage``) equal the countDistinct definition
-    except for the timing column, with its schema and nullability, over
-    6 partitions and a duplicated doc_id."""
+    except for the timing column, over 6 partitions and a duplicated
+    doc_id, and have the LINEAGE_SCHEMA that roots already written
+    hold."""
     dup = docs_df.orderBy("doc_id").limit(1)
     docs = docs_df.unionByName(dup)
-    ann_l = annotate(docs, bc, num_partitions=6, keep_lineage_cols=True)
-    want_df = _distinct_lineage(ann_l)
-    want = {r["part_id"]: r for r in want_df.collect()}
+    ann_p = annotate(docs, bc, num_partitions=6)
+    want = {r["part_id"]: r for r in _distinct_lineage(ann_p).collect()}
     assert len(want) > 1
-    assert ann_l.where(F.col("doc_id") == dup.first()["doc_id"]).count() > 0
+    assert ann_p.where(F.col("doc_id") == dup.first()["doc_id"]).count() > 0
 
     ann, lineage = annotate_with_lineage(docs, bc, num_partitions=6)
     n_ann = ann.count()
     got_df = lineage()
-    assert got_df.schema == want_df.schema
+    assert got_df.schema == LINEAGE_SCHEMA
     got = {r["part_id"]: r for r in got_df.collect()}
     assert got.keys() == want.keys()
     for pid, r in got.items():

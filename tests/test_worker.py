@@ -175,6 +175,87 @@ def test_converted_operator_plans_as_one_map_in_arrow(spark, tmp_path, name):
     assert plan.count("MapInPandas") == 0, plan
 
 
+def _with_null_id(spark, payload, ddl):
+    """Two rows with the same payload: doc_id '7' and doc_id NULL."""
+    return spark.createDataFrame([("7", payload), (None, payload)],
+                                 f"doc_id string, {ddl}")
+
+
+def _null_id_bytes(spark):
+    import numpy as np
+
+    from medcat_spark.functions.media import png_encode
+    return _with_null_id(spark, png_encode(np.full((2, 3), 9, np.uint8)),
+                         "media_bytes binary")
+
+
+def _null_id_spans(spark):
+    from medcat_spark.fixtures import fixture_documents
+    spans = fixture_documents(1)[0]["spans"]
+    return _with_null_id(spark, spans, "spans array<struct<kind:string,"
+                         "text:string,media_ref:string,offset:int>>")
+
+
+def _null_id_tag_spans_rnn(spark):
+    from medcat_spark.functions.ner_model import (bracket_task_sentences,
+                                                  rnn_tagger_fixture_model,
+                                                  tag_spans_rnn)
+    text = " ".join(bracket_task_sentences()[0][0])
+    return tag_spans_rnn(_with_null_id(spark, text, "text string"),
+                         spark.sparkContext.broadcast(
+                             rnn_tagger_fixture_model()))
+
+
+def _null_id_match_rules(spark):
+    return match_rules(_with_null_id(spark, "call 555-1234", "text string"),
+                       [(r"\d{3}-\d{4}", "PHONE")])
+
+
+def _null_id_synth_column(spark):
+    from medcat_spark.functions.media import synth_png_column
+    return synth_png_column(spark.createDataFrame([(7,), (None,)],
+                                                  "doc_id long"))
+
+
+def _null_id_decode_head(spark):
+    from medcat_spark.functions.media import media_pixel_stats
+    return media_pixel_stats(_null_id_bytes(spark))
+
+
+def _null_id_media_features_from_bytes(spark):
+    from pyspark.sql import functions as F
+
+    from medcat_spark.functions.media import media_features_from_bytes
+    return media_features_from_bytes(
+        _null_id_bytes(spark).withColumn("media_ref", F.lit("img://x")))
+
+
+def _null_id_media_features(spark):
+    from medcat_spark.functions.media import media_features
+    return media_features(_null_id_spans(spark))
+
+
+def _null_id_frame_sample(spark):
+    from medcat_spark.functions.media import frame_sample
+    return frame_sample(_null_id_spans(spark))
+
+
+# every Python kernel that emits rows keyed by its input's doc_id
+_NULL_ID = {f.__name__[9:]: f for f in (
+    _null_id_tag_spans_rnn, _null_id_match_rules, _null_id_synth_column,
+    _null_id_decode_head, _null_id_media_features_from_bytes,
+    _null_id_media_features, _null_id_frame_sample)}
+
+
+@pytest.mark.parametrize("name", sorted(_NULL_ID))
+def test_null_doc_id_gives_no_rows(spark, name):
+    """The annotate kernel's rule in every kernel: a row whose doc_id is
+    NULL gives no rows — no rows under the string 'None', and no failed
+    job — while the same payload under a doc_id does."""
+    rows = _NULL_ID[name](spark).collect()
+    assert rows and {r["doc_id"] for r in rows} == {"7"}
+
+
 def test_init_drops_zip_importers_and_zip_imports_still_work(tmp_path):
     zpath = str(tmp_path / "floor_probe.zip")
     with zipfile.ZipFile(zpath, "w") as z:

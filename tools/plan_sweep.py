@@ -24,7 +24,7 @@ def main(json_out=None):
     from medcat_spark.session import get_spark
     import __spark_entry__ as entry
 
-    spark = get_spark("plan-sweep", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("plan-sweep", shuffle_partitions=8)
     report = {}
     for name, fn in entry.queries().items():
         try:
