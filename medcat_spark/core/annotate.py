@@ -70,7 +70,8 @@ def _token_attrs(t: str, config: EngineConfig,
 def annotate_document(text: str, cdb: CdbModel, vocab: VocabModel,
                       config: EngineConfig,
                       spell_checker: Optional[SpellChecker] = None,
-                      keep_overlaps: bool = False
+                      keep_overlaps: bool = False,
+                      context_model: Optional[ContextModel] = None
                       ) -> Tuple[List[Entity], List[Tok]]:
     """Inference for one document → final non-overlapping entities.
 
@@ -78,12 +79,14 @@ def annotate_document(text: str, cdb: CdbModel, vocab: VocabModel,
     carries cui, detected_name, source_value, start/end, similarity.
     ``keep_overlaps`` returns all linked candidates without O1 — the
     reference's ``general.show_nested_entities`` (config.py:379-380,
-    output at cat.py:1741-1744).
+    output at cat.py:1741-1744).  ``spell_checker`` and
+    ``context_model`` are the model's long-lived ones (the executor model
+    cache's), whose memos carry over between documents.
     """
     text = text[:config.max_document_length]
     toks = preprocess(text, cdb, config, spell_checker)
     cands = detect_entities(toks, text, cdb, config)
-    linked = link_entities(cands, toks, cdb, vocab, config)
+    linked = link_entities(cands, toks, cdb, vocab, config, context_model)
     main = linked if keep_overlaps else create_main_ann(linked)
     if config.map_cui_to_group and cdb.addl_info.get("cui2group"):
         map_ents_to_groups(main, cdb)

@@ -35,6 +35,10 @@ class ContextModel:
         self.cdb = cdb
         self.vocab = vocab
         self.config = config
+        # per-CUI unit context vectors, filled lazily by _similarity; one
+        # ContextModel per broadcast model lives in the executor model
+        # cache, so each CUI is normalized once per model per worker
+        self._cui_units: Dict[str, Dict[str, np.ndarray]] = {}
 
     # L1 ---------------------------------------------------------------
     def get_context_tokens(self, entity: Entity, toks: List[Tok],
@@ -91,36 +95,46 @@ class ContextModel:
         return vectors
 
     # L3 ---------------------------------------------------------------
-    def _similarity(self, cui: str, vectors: Dict[str, np.ndarray]) -> float:
+    def _similarity(self, cui: str, units: Dict[str, np.ndarray]) -> float:
         """vector_context_model.py:112-139: weighted sum of per-window
-        cosines; -1 when the CUI has no trained vectors or too few
+        cosines between the entity's unit context vectors ``units`` and
+        the CUI's; -1 when the CUI has no trained vectors or too few
         positive examples (train_count_threshold)."""
         cui_vectors = self.cdb.cui2context_vectors.get(cui, {})
         if cui_vectors and self.cdb.cui2count_train.get(cui, 0) >= \
                 self.config.train_count_threshold:
+            cui_units = self._cui_units.get(cui)
+            if cui_units is None:
+                cui_units = self._cui_units[cui] = {
+                    ct: unitvec(v) for ct, v in cui_vectors.items()}
             similarity = 0.0
             for context_type, weight in self.config.context_vector_weights.items():
-                if context_type in vectors and context_type in cui_vectors:
-                    s = float(np.dot(unitvec(vectors[context_type]),
-                                     unitvec(cui_vectors[context_type])))
+                if context_type in units and context_type in cui_units:
+                    s = float(np.dot(units[context_type],
+                                     cui_units[context_type]))
                     similarity += weight * s
             return similarity
         return -1.0
 
+    def unit_context_vectors(self, entity: Entity, toks: List[Tok]
+                             ) -> Dict[str, np.ndarray]:
+        return {ct: unitvec(v) for ct, v in
+                self.get_context_vectors(entity, toks).items()}
+
     def similarity(self, cui: str, entity: Entity, toks: List[Tok]) -> float:
-        return self._similarity(cui, self.get_context_vectors(entity, toks))
+        return self._similarity(cui, self.unit_context_vectors(entity, toks))
 
     # L4 ---------------------------------------------------------------
     def disambiguate(self, cuis: List[str], entity: Entity, name: str,
                      toks: List[Tok]) -> Tuple[Optional[str], float]:
         """vector_context_model.py:140-185."""
         cfg = self.config
-        vectors = self.get_context_vectors(entity, toks)
+        units = self.unit_context_vectors(entity, toks)
         if cfg.filter_before_disamb:
             cuis = [cui for cui in cuis if cfg.check_filters(cui)]
         if not cuis:
             return None, 0.0
-        similarities = [self._similarity(cui, vectors) for cui in cuis]
+        similarities = [self._similarity(cui, units) for cui in cuis]
         if cfg.prefer_primary_name > 0:
             statuses = self.cdb.name2cuis2status.get(name, {})
             for i, cui in enumerate(cuis):
@@ -146,16 +160,21 @@ class ContextModel:
         vectors = self.get_context_vectors(entity, toks, cui=cui, rng=rng)
         self.cdb.update_context_vector(cui, vectors, negative=negative,
                                        config=self.config)
+        self._cui_units.pop(cui, None)
 
 
 def link_entities(ents: List[Entity], toks: List[Tok], cdb: CdbModel,
-                  vocab: VocabModel, config: EngineConfig) -> List[Entity]:
+                  vocab: VocabModel, config: EngineConfig,
+                  cm: Optional[ContextModel] = None) -> List[Entity]:
     """L5 inference branch (context_based_linker.py:93-131).
 
     Returns the linked subset of ``ents`` (with cui/context_similarity set),
-    still containing overlaps — O1 resolves those.
+    still containing overlaps — O1 resolves those.  ``cm`` is the
+    model's ContextModel (the executor model cache's, so its CUI unit
+    vectors carry over between documents); a fresh one by default.
     """
-    cm = ContextModel(cdb, vocab, config)
+    if cm is None:
+        cm = ContextModel(cdb, vocab, config)
     cnf_l = config
     linked: List[Entity] = []
     for entity in ents:

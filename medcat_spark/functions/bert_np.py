@@ -33,12 +33,18 @@ import numpy as np
 from medcat_spark.functions.scorer import (center_spans, decide, max_pool,
                                            pad_ids, predict_chunked, score)
 
-_erf = np.frompyfunc(math.erf, 1, 1)
+
+def _erf(x: np.ndarray) -> np.ndarray:
+    """``math.erf`` per element as a float64 array of ``x``'s shape: one
+    C call per element over a float list, with no object array between
+    (numpy has no erf, and a vectorised port differs by an ulp)."""
+    return np.fromiter(map(math.erf, x.ravel().tolist()), np.float64,
+                       count=x.size).reshape(x.shape)
 
 
 def gelu(x: np.ndarray) -> np.ndarray:
     """Exact (erf) GELU — the HF 'gelu' act BERT defaults to."""
-    return 0.5 * x * (1.0 + _erf(x / math.sqrt(2.0)).astype(np.float64))
+    return 0.5 * x * (1.0 + _erf(x / math.sqrt(2.0)))
 
 
 def layer_norm(x: np.ndarray, w: np.ndarray, b: np.ndarray,

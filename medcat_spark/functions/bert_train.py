@@ -88,7 +88,7 @@ def _layer_norm_bwd(dy: np.ndarray, cache, w: np.ndarray):
 
 
 def _gelu_bwd(dy: np.ndarray, x: np.ndarray) -> np.ndarray:
-    cdf = 0.5 * (1.0 + _erf(x / _SQRT2).astype(np.float64))
+    cdf = 0.5 * (1.0 + _erf(x / _SQRT2))
     pdf = _INV_SQRT_2PI * np.exp(-0.5 * x * x)
     return dy * (cdf + x * pdf)
 

@@ -565,16 +565,22 @@ class _BiRnn:
         the per-step states (B, L, H) of the forward and of the backward
         cell.  A padded step carries the state through (the
         packed-sequence semantics a torch BiLSTM uses), so ragged batches
-        score like per-sequence calls.  A ``tape`` dict receives both."""
+        score like per-sequence calls; a step no sequence pads skips the
+        carry blend.  A ``tape`` dict receives both."""
         B, L, _ = X.shape
+        full = (mask == 1.0).all(axis=0)
         out = []
         for (Wx, Wh, bh), steps in ((self.fwd, range(L)),
                                     (self.bwd, range(L - 1, -1, -1))):
             h = np.zeros((B, Wh.shape[0]))
             S = np.empty((B, L, Wh.shape[0]))
             for t in steps:
-                m = mask[:, t:t + 1]
-                h = m * np.tanh(X[:, t] @ Wx.T + h @ Wh.T + bh) + (1.0 - m) * h
+                a = np.tanh(X[:, t] @ Wx.T + h @ Wh.T + bh)
+                if full[t]:
+                    h = a
+                else:
+                    m = mask[:, t:t + 1]
+                    h = m * a + (1.0 - m) * h
                 S[:, t] = h
             out.append(S)
         if tape is not None:

@@ -206,10 +206,8 @@ def _context_sums(bc, examples):
     ContextModel and the spell checker (which owns the token memo) come
     from the executor model cache shared with annotate."""
     def body(batches):
-        from medcat_spark.core.linker import ContextModel
         from medcat_spark.pipeline import _get_model
-        cdb, vocab, config, sc = _get_model(bc)
-        cm = ContextModel(cdb, vocab, config)
+        _, _, _, sc, cm = _get_model(bc)
         for rows in batches:
             acc: dict = {}
             for row in rows:

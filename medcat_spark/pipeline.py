@@ -28,6 +28,7 @@ from medcat_spark import worker
 from medcat_spark.config import EngineConfig
 from medcat_spark.core.annotate import annotate_document
 from medcat_spark.core.docs import char_to_span, reconstruct_text, span_index
+from medcat_spark.core.linker import ContextModel
 from medcat_spark.core.model import CdbModel, VocabModel
 from medcat_spark.core.normalizer import SpellChecker
 
@@ -66,15 +67,18 @@ LINEAGE_SCHEMA = StructType([
 _MODEL_CACHE: dict = {}
 
 
-def _get_model(bc) -> Tuple[CdbModel, VocabModel, EngineConfig, SpellChecker]:
+def _get_model(bc) -> Tuple[CdbModel, VocabModel, EngineConfig,
+                             SpellChecker, ContextModel]:
     # the broadcast spill path is unique per broadcast id and stable on
     # the worker (id(bc) is NOT: CPython reuses ids across GC'd objects)
     key = getattr(bc, "_path", None) or id(bc)
     hit = _MODEL_CACHE.get(key)
     if hit is None:
         cdb, vocab, config = bc.value
-        sc = SpellChecker(cdb.vocab, config)   # owns the token memo
-        hit = (cdb, vocab, config, sc)
+        # the spell checker owns the token memo and the delete index, the
+        # context model the CUI unit vectors; both fill lazily
+        hit = (cdb, vocab, config, SpellChecker(cdb.vocab, config),
+               ContextModel(cdb, vocab, config))
         _MODEL_CACHE.clear()   # one model resident at a time
         _MODEL_CACHE[key] = hit
     return hit
@@ -123,7 +127,7 @@ def _annotate_batches(bc, has_spans: bool, keep_overlaps: bool = False,
     the min, max and count of its distinct doc_ids, its row count and
     its mean ``batch_us`` per row."""
     def body(batches):
-        cdb, vocab, config, sc = _get_model(bc)
+        cdb, vocab, config, sc, cm = _get_model(bc)
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         ids, n_rows, cost_us = set(), 0, 0
@@ -142,7 +146,7 @@ def _annotate_batches(bc, has_spans: bool, keep_overlaps: bool = False,
                     text = row["text"] or ""
                     starts = ends = idxs = None
                 ents, _ = annotate_document(text, cdb, vocab, config, sc,
-                                            keep_overlaps=keep_overlaps)
+                                            keep_overlaps, cm)
                 for e in ents:
                     if has_spans:
                         si, so = char_to_span(e.start, starts, ends, idxs)

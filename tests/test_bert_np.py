@@ -153,6 +153,32 @@ def test_token_classifier(tmp_path):
     assert (conf > 0).all() and (conf <= 1).all()
 
 
+def test_gelu_erf_bitwise_equals_the_object_array_form():
+    """``_erf`` maps ``math.erf`` over a float list; the object-array
+    ``frompyfunc`` form it replaced gave the same bits, including on
+    signed zeros, infinities and NaN, in gelu and in its backward."""
+    from medcat_spark.functions.bert_np import _erf, gelu
+    from medcat_spark.functions.bert_train import _gelu_bwd
+
+    def old_erf(x):
+        return np.frompyfunc(math.erf, 1, 1)(x).astype(np.float64)
+
+    rs = np.random.RandomState(7)
+    special = np.array([0.0, -0.0, np.inf, -np.inf, np.nan, 5e-324, 30.0])
+    with np.errstate(invalid="ignore"):   # inf * 0: NaN on both sides
+        for x in (rs.randn(3, 5, 7) * 3, rs.randn(1000), special,
+                  special.reshape(7, 1)):
+            dy = rs.randn(*x.shape)
+            e = old_erf(x / math.sqrt(2.0))
+            cdf = 0.5 * (1.0 + e)
+            pdf = 1.0 / math.sqrt(2.0 * math.pi) * np.exp(-0.5 * x * x)
+            for new, old in ((_erf(x), old_erf(x)),
+                             (gelu(x), 0.5 * x * (1.0 + e)),
+                             (_gelu_bwd(dy, x), dy * (cdf + x * pdf))):
+                assert new.shape == old.shape and new.dtype == np.float64
+                assert new.tobytes() == old.tobytes()
+
+
 def test_bert_nesting_tolerated():
     """BertForTokenClassification saves the encoder under 'bert.'."""
     sd = bert_fixture_state_dict(relcat=False, nclasses=2)

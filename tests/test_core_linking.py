@@ -65,6 +65,38 @@ def test_untrained_cui_similarity_is_minus_one(models):
     assert cm._similarity("C9999", {"short": np.ones(30)}) == -1.0
 
 
+def test_shared_context_model_links_like_fresh_ones_and_follows_training():
+    """The model's ContextModel keeps each CUI's unit vectors across
+    documents: linking through one shared instance gives the same
+    entities and similarities, to the bit, as a fresh one per document,
+    and training a CUI through it drops that CUI's memo."""
+    import random
+
+    from medcat_spark.fixtures import fixture_documents
+    from medcat_spark.core.docs import reconstruct_text
+    cdb, vocab = trained_fixture_models()
+    cfg = EngineConfig()
+    shared = ContextModel(cdb, vocab, cfg)
+    for doc in fixture_documents(60):
+        text = reconstruct_text(doc["spans"])
+        fresh = annotate_document(text, cdb, vocab, cfg)[0]
+        kept = annotate_document(text, cdb, vocab, cfg, context_model=shared)[0]
+        assert [(e.start, e.cui, e.context_similarity) for e in kept] == \
+            [(e.start, e.cui, e.context_similarity) for e in fresh]
+    assert shared._cui_units
+    text = "patient with diabetes mellitus"
+    toks = preprocess(text, cdb, cfg)
+    ent = detect_entities(toks, text, cdb, cfg)[0]
+    cui = ent.link_candidates[0]
+    before = shared.similarity(cui, ent, toks)
+    assert cui in shared._cui_units
+    shared.train(cui, ent, toks, negative=True, rng=random.Random(0))
+    assert cui not in shared._cui_units
+    after = shared.similarity(cui, ent, toks)
+    assert after == ContextModel(cdb, vocab, cfg).similarity(cui, ent, toks)
+    assert after != before
+
+
 def test_direct_link_similarity_one(models):
     # L5: single candidate, status not in {N, PD}, len(name) >= limit
     cdb, vocab = models

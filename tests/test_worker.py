@@ -372,3 +372,66 @@ def test_reused_workers_start_tasks_without_zip_importers(spark, tmp_path):
         assert third, f"no dirtied Python worker was reused ({name})"
         for r in third:
             assert r.zips == 0, (name, r)
+
+
+class _Broadcast:
+    """A broadcast stand-in for running a kernel in process: the model
+    cache reads ``.value`` and keys on ``._path``."""
+
+    def __init__(self, value, path):
+        self.value = value
+        self._path = path
+
+
+def test_spell_index_built_once_per_model_entry_never_on_the_driver(
+        spark, fixture_models, tmp_path, monkeypatch):
+    """The spell checker's delete index is built lazily, once per
+    executor model-cache entry (two tasks of one broadcast share it, a
+    new broadcast gets a new one), and a KG commit never builds one on
+    the driver although its workers do spell-fix."""
+    import pyarrow as pa
+
+    from medcat_spark import pipeline
+    from medcat_spark.config import EngineConfig
+    from medcat_spark.core.annotate import annotate_document
+    from medcat_spark.core.normalizer import SpellChecker
+    from medcat_spark.sources.iceberg import (IcebergKgSink,
+                                              resumable_annotate_iceberg)
+
+    built = []
+    build = SpellChecker._build_index
+    monkeypatch.setattr(SpellChecker, "_build_index",
+                        lambda self: built.append(self) or build(self))
+    cdb, vocab = fixture_models
+    cfg = EngineConfig()
+    texts = ["diabetis mellitus diagnosed last year",
+             "patient with hypertensian and diabetis"]
+    rows = [{"doc_id": f"d{i}", "text": t} for i, t in enumerate(texts)]
+    batches = pa.Table.from_pylist(rows).to_batches(max_chunksize=1)
+
+    def task(bc):
+        return list(pipeline._annotate_batches(bc, False)(iter(batches)))
+
+    a, b = (_Broadcast((cdb, vocab, cfg), p) for p in ("bc-a", "bc-b"))
+    task(a)
+    task(a)
+    assert len(built) == 1
+    assert built[0] is pipeline._MODEL_CACHE["bc-a"][3]
+    index = built[0]._index
+    task(b)
+    assert len(built) == 2 and built[1] is not built[0]
+    assert built[1]._index is not index
+    expect = sorted((r["doc_id"], e.start, e.cui) for r in rows
+                    for e in annotate_document(r["text"], cdb, vocab, cfg)[0])
+    assert ("d0", 0, "C0006") in expect        # linked through the fix
+
+    pipeline._MODEL_CACHE.clear()
+    built.clear()
+    bc = pipeline.broadcast_model(spark, cdb, vocab, cfg)
+    docs = spark.createDataFrame(rows, "doc_id string, text string")
+    m = resumable_annotate_iceberg(spark, docs, bc, str(tmp_path / "kg"))
+    assert m["n_docs"] == 2
+    got = IcebergKgSink(str(tmp_path / "kg")).read_annotations(spark)
+    assert sorted(tuple(r) for r in got.select(
+        "doc_id", "start", "cui").collect()) == expect
+    assert built == [] and pipeline._MODEL_CACHE == {}
