@@ -5,11 +5,13 @@
       --out /path/kg --partitions 512 [--max-docs N]
 
 Writes Iceberg tables under --out: ``annotations``, ``lineage`` and
-``processed_docs`` (sources/iceberg.IcebergKgSink), then the
-``triples/mentions`` and ``triples/cooccurrence`` graph tables.
-Resumable: re-running with the same --out annotates only the docs not
-yet in the committed ``processed_docs`` (one new snapshot per table per
-run).  Build the zip with ``python tools/package.py``.
+``processed_docs`` (one sources/iceberg.IcebergKgSink commit per run;
+a re-run annotates only the docs not yet in ``processed_docs``), then
+``triples/mentions``, ``triples/cooccurrence`` and, with their flags,
+``meta_annotations``, ``triples/relations``, ``embeddings`` and
+``link_candidates`` — each recomputed from all committed annotations
+as one REPLACE snapshot per run.  --export-rdf writes text shards under
+``rdf/``.  Build the zip with ``python tools/package.py``.
 """
 
 from __future__ import annotations
@@ -17,6 +19,79 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+
+
+def _write_derived(spark, args, comps, docs, ann):
+    """Write the derived tables; returns the job line's counts."""
+    from medcat_spark.functions.scorer import score
+    from medcat_spark.sources.iceberg import IcebergTable, overwrite_table
+    from medcat_spark.triples import cooccurrence_triples, mention_triples
+
+    stats = {}
+
+    def replace(table, df):
+        # one REPLACE snapshot; the count is its added-records
+        loc = f"{args.out}/{table}"
+        snap_id = overwrite_table(loc, df)
+        snap = next(s for s in IcebergTable.load(loc).snapshots()
+                    if s["snapshot-id"] == snap_id)
+        return int(snap["summary"]["added-records"])
+
+    replace("triples/mentions", mention_triples(ann, distinct=True))
+    replace("triples/cooccurrence", cooccurrence_triples(ann))
+    if args.meta:
+        # meta heads only: rel_*/trf_* components load under their
+        # prefixed names and are NOT meta-annotation scorers
+        metas = sorted((k, v) for k, v in comps.items()
+                       if k != "_skipped"
+                       and not k.startswith(("rel_", "trf_")))
+        if metas:
+            heads = [(spark.sparkContext.broadcast(model), "centered", name)
+                     for name, model in metas]
+            stats["n_meta_annotations"] = replace(
+                "meta_annotations", score(ann, docs, heads))
+            stats["meta_components"] = [name for name, _ in metas]
+    if args.relations:
+        from medcat_spark.functions.bert_np import relations_bert
+        rel_comps = sorted((k, v) for k, v in comps.items()
+                           if k.startswith("rel_"))
+        if not rel_comps:
+            stats["relations_skipped"] = (
+                "no loadable rel_* component in pack"
+                + (" (see skip_reasons)" if comps.get("_skipped") else ""))
+        else:
+            name, model = rel_comps[0]
+            if len(rel_comps) > 1:
+                stats["relation_components_unused"] = [
+                    k for k, _ in rel_comps[1:]]
+            stats["n_relation_triples"] = replace(
+                "triples/relations", relations_bert(
+                    ann, docs, spark.sparkContext.broadcast(model)))
+            stats["relation_component"] = name
+    if args.export_rdf or args.embeddings or args.link_prediction:
+        # the consumers read the co-occurrence table this run committed
+        cooc = IcebergTable.load(
+            f"{args.out}/triples/cooccurrence").to_df(spark)
+        if args.export_rdf:
+            from medcat_spark.sources.rdf import write_ntriples
+            write_ntriples(cooc, f"{args.out}/rdf")
+            stats["rdf_statements"] = \
+                spark.read.text(f"{args.out}/rdf").count()
+        if args.embeddings:
+            from medcat_spark.functions.graph import (fastrp_embeddings,
+                                                      transe_train)
+            stats["embedding_rows"] = replace(
+                "embeddings",
+                fastrp_embeddings(cooc, dim=8)
+                if args.embeddings == "fastrp"
+                else transe_train(cooc, dim=8, iterations=2))
+            stats["embedding_method"] = args.embeddings
+        if args.link_prediction:
+            from medcat_spark.functions.graph import (knn_graph,
+                                                      link_prediction)
+            stats["link_candidates"] = replace(
+                "link_candidates", link_prediction(knn_graph(cooc, k=2)))
+    return stats
 
 
 def main(argv=None):
@@ -55,11 +130,10 @@ def main(argv=None):
 
     from medcat_spark.pipeline import broadcast_model
     from medcat_spark.session import get_spark
-    from medcat_spark.sources.iceberg import (IcebergKgSink, overwrite_table,
+    from medcat_spark.sources.iceberg import (IcebergKgSink,
                                               resumable_annotate_iceberg)
     from medcat_spark.sources.model_pack import (is_reference_pack,
                                                  load_model_pack)
-    from medcat_spark.triples import cooccurrence_triples, mention_triples
 
     spark = get_spark("medcat-spark-kg", master=args.master)
     # ONE pack load: components come along when --meta asks for them
@@ -101,12 +175,12 @@ def main(argv=None):
                     lambda s: s["text"])).alias("text"))
         else:
             dd = docs.select("doc_id", "text")
-        keepers = (dedup_clusters(dd,
-                                  min_jaccard=args.dedup_min_jaccard)
-                   .where("is_keeper").select("doc_id"))
-        n_before = docs.count()
-        docs = docs.join(keepers, "doc_id")
-        n_after = docs.count()
+        clusters = dedup_clusters(dd, min_jaccard=args.dedup_min_jaccard)
+        # one row per doc: both counts from one aggregate job
+        n_before, n_after = clusters.agg(
+            F.count("*"), F.count_if("is_keeper")).first()
+        docs = docs.join(clusters.where("is_keeper").select("doc_id"),
+                         "doc_id")
         dedup_stats = {"dedup_docs_in": n_before,
                        "dedup_keepers": n_after,
                        "dedup_dropped": n_before - n_after}
@@ -117,108 +191,13 @@ def main(argv=None):
         spark, docs, bc, args.out, num_partitions=args.partitions,
         max_docs=args.max_docs, config=cfg)
     ann = IcebergKgSink(args.out).read_annotations(spark)
-    if ann is not None:
-        # the triples tables are recomputed from all committed
-        # annotations: one REPLACE snapshot per run.  ann is a scan of
-        # committed data files, so cooccurrence skips its defensive
-        # localCheckpoint
-        overwrite_table(f"{args.out}/triples/mentions",
-                        mention_triples(ann, distinct=True))
-        overwrite_table(f"{args.out}/triples/cooccurrence",
-                        cooccurrence_triples(ann, materialize=False))
     meta_stats = {}
-
-    def _docs_with_text():
-        # JVM twin of core/docs.reconstruct_text: each text span PLACED
-        # at its offset, gaps space-filled — annotation char offsets
-        # only align against this exact reconstruction (shared by the
-        # --meta and --relations scorers)
-        from pyspark.sql import functions as F
-        if "spans" not in docs.columns or "text" in docs.columns:
-            return docs
-        return docs.select(
-            "doc_id",
-            F.aggregate(
-                F.filter("spans", lambda s: (s["kind"] == "text")
-                         & s["text"].isNotNull()),
-                F.lit(""),
-                lambda acc, s: F.concat(
-                    F.rpad(acc, F.greatest(F.length(acc), s["offset"]),
-                           " "),
-                    s["text"])).alias("text"))
-
     if (args.meta or args.relations) and comps.get("_skipped"):
         meta_stats["meta_skipped"] = [c[0] for c in comps["_skipped"]]
         meta_stats["skip_reasons"] = {c[0]: c[1]
                                       for c in comps["_skipped"]}
-    if args.meta and ann is not None:
-        from medcat_spark.functions.lstm_meta import meta_annotations_lstm
-        src = _docs_with_text()
-        # meta heads only: rel_*/trf_* components load under their
-        # prefixed names and are NOT meta-annotation scorers
-        meta_comps = {k: v for k, v in comps.items()
-                      if k != "_skipped"
-                      and not k.startswith(("rel_", "trf_"))}
-        metas = None
-        for name, model in sorted(meta_comps.items()):
-            cur = meta_annotations_lstm(
-                ann, src, spark.sparkContext.broadcast(model),
-                meta_name=name)
-            metas = cur if metas is None else metas.unionByName(cur)
-        if metas is not None:
-            metas.write.mode("overwrite") \
-                .parquet(f"{args.out}/meta_annotations")
-            meta_stats["n_meta_annotations"] = \
-                spark.read.parquet(f"{args.out}/meta_annotations").count()
-            meta_stats["meta_components"] = sorted(meta_comps)
-    if args.relations and ann is not None:
-        from medcat_spark.functions.bert_np import relations_bert
-        rel_comps = {k: v for k, v in comps.items()
-                     if k.startswith("rel_")}
-        if not rel_comps:
-            meta_stats["relations_skipped"] = (
-                "no loadable rel_* component in pack"
-                + (" (see skip_reasons)" if comps.get("_skipped") else ""))
-        else:
-            name, model = sorted(rel_comps.items())[0]
-            if len(rel_comps) > 1:
-                meta_stats["relation_components_unused"] = sorted(
-                    rel_comps)[1:]
-            rel = relations_bert(
-                ann, _docs_with_text(),
-                spark.sparkContext.broadcast(model))
-            rel.write.mode("overwrite") \
-                .parquet(f"{args.out}/triples/relations")
-            meta_stats["n_relation_triples"] = spark.read.parquet(
-                f"{args.out}/triples/relations").count()
-            meta_stats["relation_component"] = name
-    if ann is not None and (args.export_rdf or args.embeddings
-                            or args.link_prediction):
-        cooc = cooccurrence_triples(ann)     # shared by the consumers
-        if args.export_rdf:
-            from medcat_spark.sources.rdf import write_ntriples
-            write_ntriples(cooc, f"{args.out}/rdf")
-            meta_stats["rdf_statements"] = \
-                spark.read.text(f"{args.out}/rdf").count()
-        if args.embeddings:
-            from medcat_spark.functions.graph import (fastrp_embeddings,
-                                                      transe_train)
-            emb = (fastrp_embeddings(cooc, dim=8)
-                   if args.embeddings == "fastrp"
-                   else transe_train(cooc, dim=8, iterations=2))
-            emb.write.mode("overwrite") \
-                .parquet(f"{args.out}/embeddings")
-            meta_stats["embedding_rows"] = spark.read.parquet(
-                f"{args.out}/embeddings").count()
-            meta_stats["embedding_method"] = args.embeddings
-        if args.link_prediction:
-            from medcat_spark.functions.graph import (knn_graph,
-                                                      link_prediction)
-            link_prediction(knn_graph(cooc, k=2)) \
-                .write.mode("overwrite") \
-                .parquet(f"{args.out}/link_candidates")
-            meta_stats["link_candidates"] = spark.read.parquet(
-                f"{args.out}/link_candidates").count()
+    if ann is not None:
+        meta_stats.update(_write_derived(spark, args, comps, docs, ann))
     print(json.dumps({**manifest, **dedup_stats, **meta_stats}))
     spark.stop()
 

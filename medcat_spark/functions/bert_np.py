@@ -492,7 +492,7 @@ def mark_pair_sequence(ids, ra, rb, tag_ids, cntx_l: int, cntx_r: int,
 def relations_bert(ann, docs, bc, text_col: str = "text"):
     """Relation rows from the REAL BERT pair classifier (broadcast
     weights, one tokenize per doc, Arrow-batched padded forward)."""
-    return score(ann, docs, bc, "rel_bert", text_col)
+    return score(ann, docs, [(bc, "rel_bert", None)], text_col)
 
 
 def relcat_bert_fixture_model():

@@ -235,7 +235,7 @@ def meta_annotations_lstm(ann: DataFrame, docs: DataFrame, bc,
     broadcast weights, Arrow-batched forward; token-id windows when the
     model carries a tokenizer (reference semantics,
     utils/meta_cat/data_utils.py:80-115 prepare_document)."""
-    return score(ann, docs, bc, "centered", text_col, meta_name)
+    return score(ann, docs, [(bc, "centered", meta_name)], text_col)
 
 
 # ---------------------------------------------------------------------------

@@ -190,33 +190,21 @@ def meta_annotations_model(ann: DataFrame, docs: DataFrame, bc,
                            meta_name: str = "Negation",
                            text_col: str = "text") -> DataFrame:
     """Classify each annotation's token window with the broadcast
-    MetaCatModel → (doc_id, start, cui, meta_name, value, confidence).
-
-    Plan shape: annotations grouped per doc (ONE shuffle bounded by
-    annotation count), broadcast-style text join, one Arrow batch pass
-    tokenizing each doc once for all its entities — the same
-    GPU-stage-separation the reference uses for MetaCAT batching
-    (cat.py:1249-1257).
-    """
-    return score(ann, docs, bc, "linear", text_col, meta_name)
+    MetaCatModel → (doc_id, start, cui, meta_name, value, confidence),
+    in one :func:`scorer.score` pass (one tokenize per doc)."""
+    return score(ann, docs, [(bc, "linear", meta_name)], text_col)
 
 
 def meta_annotations_multi(ann: DataFrame, docs: DataFrame,
                            models: list, text_col: str = "text") -> DataFrame:
     """Run SEVERAL meta-annotation models (the reference pipelines a
     list of MetaCATs — Status, Negation, Experiencer ... — cat.py:
-    meta_cats loop) → unioned (doc_id, start, cui, meta_name, value,
-    confidence) rows, groupable into the meta_anns map by
-    pipeline.project_output(meta=...).
-
-    ``models`` = [(meta_name, broadcast(MetaCatModel))].
-    """
-    out = None
-    for meta_name, bc in models:
-        cur = meta_annotations_model(ann, docs, bc, meta_name=meta_name,
-                                     text_col=text_col)
-        out = cur if out is None else out.unionByName(cur)
-    return out
+    meta_cats loop) → (doc_id, start, cui, meta_name, value, confidence)
+    rows of all of them, groupable into the meta_anns map by
+    pipeline.project_output(meta=...).  ``models`` = [(meta_name,
+    broadcast(MetaCatModel))], all scored in ONE scorer pass."""
+    return score(ann, docs, [(bc, "linear", meta_name)
+                             for meta_name, bc in models], text_col)
 
 
 # ---------------------------------------------------------------------------
@@ -369,7 +357,7 @@ def meta_annotations_mlp(ann: DataFrame, docs: DataFrame, bc,
     """meta_annotations_model with the nonlinear scorer — identical plan
     shape (one groupBy + text join + one mapInArrow), different model;
     any model with ``predict_batch(windows)`` fits."""
-    return score(ann, docs, bc, "pooled", text_col, meta_name)
+    return score(ann, docs, [(bc, "pooled", meta_name)], text_col)
 
 
 def sql_decide(labels: Sequence[str], max_col: str) -> Tuple[str, str]:

@@ -136,7 +136,7 @@ def relations_model(ann: DataFrame, docs: DataFrame, bc,
     grouped per doc, text joined once, one tokenize per doc for ALL its
     pairs inside an Arrow batch.
     """
-    return score(ann, docs, bc, "rel_linear", text_col)
+    return score(ann, docs, [(bc, "rel_linear", None)], text_col)
 
 
 def oracle_sql_for_model(model: RelCatModel, toks_cte: str,
@@ -240,4 +240,4 @@ def relations_rnn(ann: DataFrame, docs: DataFrame, bc,
     """relations_model with the STATEFUL marked-sequence scorer —
     identical plan shape; one padded recurrent forward per Arrow batch
     over all of its pairs' marked windows."""
-    return score(ann, docs, bc, "rel_marked", text_col)
+    return score(ann, docs, [(bc, "rel_marked", None)], text_col)

@@ -7,12 +7,14 @@ entity or one sequence per entity pair, and batch the forward pass.
 Only the model differs, so this module owns everything else:
 
 * :func:`docs_with_ents` — one (doc_id, ents, text) row per document,
-  partitioned by compute rather than bytes;
+  partitioned by compute rather than bytes (the text rebuilt from
+  ``spans`` by :func:`spans_text` when the docs carry no text column);
 * :func:`kernel` — the one ``mapInArrow`` function, run by
-  ``worker.kernel``: index each document's tokens once (a whitespace
-  split, or ``model.tokenizer.encode_with_offsets``), cut windows or
-  pairs, call the head's batched forward once per Arrow batch, and
-  yield one output batch;
+  ``worker.kernel`` for a list of heads of one output schema: index
+  each document's tokens once per distinct tokenizer (a whitespace
+  split, or ``model.tokenizer.encode_with_offsets``), let every head
+  cut its windows or pairs, call each head's batched forward once per
+  Arrow batch, and yield one output batch;
 * :func:`decide` — argmax label and 4-dp softmax confidence, shared by
   every head's batched predict.
 
@@ -30,7 +32,7 @@ from bisect import bisect_right
 from typing import Optional
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, IntegerType, StringType,
                                StructField, StructType)
@@ -111,21 +113,37 @@ def max_pool(seq: np.ndarray, spans) -> np.ndarray:
     return out
 
 
+def spans_text(spans: str = "spans") -> Column:
+    """JVM twin of :func:`core.docs.reconstruct_text`: each text span
+    placed at its ``offset``, the gap space-filled.  The fold carries
+    reconstruct_text's ``pos`` (the last span's end), not the text's
+    length, so overlapping and out-of-order spans agree too."""
+    return F.aggregate(
+        F.filter(spans, lambda s: (s["kind"] == "text")
+                 & s["text"].isNotNull()),
+        F.struct(F.lit("").alias("text"), F.lit(0).alias("pos")),
+        lambda acc, s: F.struct(
+            F.concat(acc["text"], F.rpad(F.lit(""), F.greatest(
+                s["offset"] - acc["pos"], F.lit(0)), " "),
+                s["text"]).alias("text"),
+            (s["offset"] + F.length(s["text"])).alias("pos")),
+        lambda acc: acc["text"])
+
+
 def docs_with_ents(ann, docs, text_col: str = "text",
                    num_partitions: Optional[int] = None):
     """(doc_id, ents, text) scoring input shared by every neural scorer
-    (meta linear/MLP/LSTM/BERT, RelCAT linear/RNN/BERT).
+    (meta linear/MLP/LSTM/BERT, RelCAT linear/RNN/BERT).  Docs with
+    ``spans`` and no ``text_col`` get the text :func:`spans_text`
+    rebuilds, the one the annotate kernel's offsets index.
 
     The explicit repartition is load-bearing: the join output is tiny
-    in BYTES (KBs per doc) but heavy in downstream COMPUTE (a model
-    forward per entity/pair), and AQE coalesces post-shuffle partitions
-    by byte size — at bench scale it folded the whole relation-scoring
-    stage into ONE task (measured: the 4-layer BERT pair bench ran 31
-    minutes single-core before this fix).  Spark cannot see Python-UDF
-    cost, so the stage is partitioned explicitly by doc_id; AQE does
-    not re-coalesce a user-specified partition count.  At 100 TB the
-    same holds: partition count must track document count, not the few
-    bytes of (doc_id, spans) metadata."""
+    in BYTES but heavy in COMPUTE (a model forward per entity/pair), and
+    AQE coalesces post-shuffle partitions by byte size — at bench scale
+    it folded the whole relation-scoring stage into ONE task (the
+    4-layer BERT pair bench ran 31 minutes single-core).  Partition
+    count must track document count; AQE does not re-coalesce a
+    user-specified one."""
     end_col = (F.col("end").cast("int") if "end" in ann.columns
                else F.lit(None).cast("int")).alias("end")
     ents = (ann.select(F.col("doc_id").cast("string").alias("doc_id"),
@@ -133,23 +151,19 @@ def docs_with_ents(ann, docs, text_col: str = "text",
             .groupBy("doc_id")
             .agg(F.collect_list(F.struct("start", "end", "cui"))
                  .alias("ents")))
+    text = (spans_text() if "spans" in docs.columns
+            and text_col not in docs.columns else F.col(text_col))
     src = docs.select(F.col("doc_id").cast("string").alias("doc_id"),
-                      F.col(text_col).alias("text"))
+                      text.alias("text"))
     joined = ents.join(src, "doc_id")
     if num_partitions is None:
         num_partitions = int(ann.sparkSession.conf.get(
             "spark.sql.shuffle.partitions"))
-    # Repartition on xxhash64(doc_id), NOT doc_id: the join output is
-    # already hash-partitioned by doc_id (the groupBy exchange), so a
-    # repartition(n, doc_id) is planned as a no-op (EnsureRequirements
-    # removes the redundant exchange) and AQE then coalesces the
-    # groupBy's own exchange by BYTE size — measured at bench scale the
-    # whole model-forward stage collapsed to ONE task (1.9-2.0 s
-    # single-core out of each scorer's 2.4 s).  Hashing the key makes
-    # the exchange semantically distinct (so it survives planning) and
-    # user-specified (so AQE leaves its partition count alone), which
-    # is the documented intent: partition count must track document
-    # count, not the few bytes of (doc_id, spans) metadata.
+    # xxhash64(doc_id), NOT doc_id: the join output is already
+    # hash-partitioned by doc_id (the groupBy exchange), so
+    # repartition(n, doc_id) is planned away (EnsureRequirements) and
+    # AQE coalesces the groupBy's exchange instead — measured, the
+    # model-forward stage collapsed to ONE task (1.9-2.0 s of 2.4 s)
     return joined.repartition(num_partitions, F.xxhash64("doc_id"))
 
 
@@ -401,41 +415,57 @@ HEADS = {
 # the operator
 
 
-def kernel(bc, head: str, meta_name: Optional[str] = None):
+def _schema(heads) -> StructType:
+    """The one output schema of ``heads``; a list mixing entity and
+    pair heads (or an empty one) is a ValueError."""
+    pairs = {HEADS[head].pairs for _bc, head, _name in heads}
+    if len(pairs) != 1:
+        raise ValueError(
+            "scorer heads must share one output schema (all meta heads "
+            f"or all relation heads), got {[h for _b, h, _n in heads]}")
+    return REL_SCHEMA if pairs.pop() else META_SCHEMA
+
+
+def kernel(heads):
     """The ``worker.kernel`` function scoring (doc_id, ents, text)
-    batches with the broadcast model through ``HEADS[head]``: one row
-    per scored entity (META_SCHEMA, tagged ``meta_name``) or entity pair
-    (REL_SCHEMA); batches with nothing to score yield nothing."""
-    schema = REL_SCHEMA if HEADS[head].pairs else META_SCHEMA
+    batches with each ``(bc, head, meta_name)`` of ``heads`` (the
+    broadcast model through ``HEADS[head]``): one row per scored entity
+    (META_SCHEMA, tagged ``meta_name``) or entity pair (REL_SCHEMA).
+    Each document is indexed once per distinct tokenizer object, and
+    each head runs one batched forward per Arrow batch."""
+    schema = _schema(heads)
 
     def body(batches):
-        h = HEADS[head](bc.value)
+        hs = [(HEADS[head](bc.value), meta_name)
+              for bc, head, meta_name in heads]
         for rows in batches:
-            keys, xs = [], []
+            cuts = [([], []) for _ in hs]
             for r in rows:
-                doc = TokenIndex(r["text"] or "", h.tokenizer)
-                for key, x in h.cut(doc, r["ents"]):
-                    keys.append((str(r["doc_id"]),) + key)
-                    xs.append(x)
-            if not keys:
-                continue
-            cols = [list(c) for c in zip(*keys)]
-            if not h.pairs:
-                cols.append([meta_name] * len(keys))
-            preds = h.forward(xs)
-            cols += [[v for v, _ in preds], [c for _, c in preds]]
-            yield dict(zip(schema.names, cols))
+                index = {}
+                for (h, _name), (keys, xs) in zip(hs, cuts):
+                    tok = id(h.tokenizer)
+                    if tok not in index:
+                        index[tok] = TokenIndex(r["text"] or "", h.tokenizer)
+                    for key, x in h.cut(index[tok], r["ents"]):
+                        keys.append((str(r["doc_id"]),) + key)
+                        xs.append(x)
+            out = []
+            for (h, name), (keys, xs) in zip(hs, cuts):
+                if keys:
+                    tag = () if h.pairs else (name,)
+                    out += [(*k, *tag, *p)
+                            for k, p in zip(keys, h.forward(xs))]
+            yield dict(zip(schema.names, map(list, zip(*out))))
     return worker.kernel(schema, body)
 
 
-def score(ann: DataFrame, docs: DataFrame, bc, head: str,
-          text_col: str = "text", meta_name: Optional[str] = None
+def score(ann: DataFrame, docs: DataFrame, heads, text_col: str = "text"
           ) -> DataFrame:
     """Score every entity window (meta heads) or candidate entity pair
-    (relation heads) of ``docs`` with the broadcast model.  Plan shape:
-    annotations grouped per doc, text joined once, the xxhash64(doc_id)
-    repartition, then ONE mapInArrow — the GPU-stage separation the
-    reference uses for MetaCAT/RelCAT batching (cat.py:1249-1257)."""
-    schema = REL_SCHEMA if HEADS[head].pairs else META_SCHEMA
+    (relation heads) of ``docs`` with each ``(bc, head, meta_name)`` of
+    ``heads``, all of one output schema.  Plan shape: annotations
+    grouped per doc, text joined once, the xxhash64(doc_id) repartition,
+    then ONE mapInArrow for all the heads — the GPU-stage separation
+    the reference uses for MetaCAT/RelCAT batching (cat.py:1249-1257)."""
     return docs_with_ents(ann, docs, text_col).mapInArrow(
-        kernel(bc, head, meta_name), schema=schema)
+        kernel(heads), schema=_schema(heads))

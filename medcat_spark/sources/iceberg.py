@@ -391,6 +391,27 @@ def _edit_struct_fields(node_type: Any, parts: Sequence[str], edit) -> Any:
                      "list 'element', or map 'key'/'value')")
 
 
+def _shift_ids(t: Any, base: int) -> Any:
+    """A copy of Iceberg type ``t`` with every field, element, key and
+    value id raised by ``base``."""
+    if isinstance(t, str):
+        return t
+    t = dict(t)
+    if t["type"] == "struct":
+        t["fields"] = [dict(f, id=f["id"] + base,
+                            type=_shift_ids(f["type"], base))
+                       for f in t["fields"]]
+    elif t["type"] == "list":
+        t["element-id"] += base
+        t["element"] = _shift_ids(t["element"], base)
+    elif t["type"] == "map":
+        t["key-id"] += base
+        t["value-id"] += base
+        t["key"] = _shift_ids(t["key"], base)
+        t["value"] = _shift_ids(t["value"], base)
+    return t
+
+
 def _collect_field_ids(t: Any) -> List[int]:
     """Every field/element/key/value id in an Iceberg type subtree."""
     if isinstance(t, str):
@@ -1413,33 +1434,27 @@ class IcebergTable:
         tmp = spark_schema_to_iceberg(
             T.StructType([T.StructField(leaf, spark_type, True)]))
 
-        def shift(t: Any, base: int) -> Any:
-            if isinstance(t, str):
-                return t
-            t = dict(t)
-            if t["type"] == "struct":
-                t["fields"] = [dict(f, id=f["id"] + base,
-                                    type=shift(f["type"], base))
-                               for f in t["fields"]]
-            elif t["type"] == "list":
-                t["element-id"] += base
-                t["element"] = shift(t["element"], base)
-            elif t["type"] == "map":
-                t["key-id"] += base
-                t["value-id"] += base
-                t["key"] = shift(t["key"], base)
-                t["value"] = shift(t["value"], base)
-            return t
-
         def edit(fields: List[Dict[str, Any]]) -> List[Dict[str, Any]]:
             if any(f["name"] == leaf for f in fields):
                 raise ValueError(f"column exists: {name}")
             # fresh ids past the CURRENT last-column-id (re-read on a
             # retry); _commit_schema raises last-column-id past them
             base = self.metadata["last-column-id"]
-            return fields + shift(tmp, base)["fields"]
+            return fields + _shift_ids(tmp, base)["fields"]
 
         self._commit_schema(parts, edit)
+
+    def replace_schema(self, spark_schema) -> None:
+        """Make ``spark_schema`` the current schema under fresh field
+        ids, the schema half of REPLACE TABLE AS SELECT: no column of a
+        file written before resolves into it.  Unpartitioned tables
+        only, since a partition spec names its source columns by id."""
+        if self.partition_spec()["fields"]:
+            raise ValueError(f"{self.location}: a partitioned table's "
+                             "schema cannot be replaced")
+        new = spark_schema_to_iceberg(spark_schema)
+        self._commit_schema([], lambda _fields: _shift_ids(
+            new, self.metadata["last-column-id"])["fields"])
 
     def _commit_schema(self, parts: Sequence[str], edit) -> None:
         """Commit a new current schema whose struct at path ``parts``
@@ -2802,9 +2817,17 @@ class IcebergKgSink:
 def overwrite_table(location: str, df, partition_by: Sequence[str] = ()
                     ) -> int:
     """Create-or-replace an Iceberg table with ``df`` (REPLACE snapshot
-    if the table exists — previous snapshots stay time-travelable)."""
+    if the table exists — previous snapshots stay time-travelable).  A
+    ``df`` whose column names or types differ from the table's replaces
+    the schema too, as the same job run with another option may write
+    another shape to one table (``run_kg --embeddings``); reads project
+    every snapshot into the current schema, so snapshots from before
+    that replace read as nulls."""
     if IcebergTable.exists(location):
         t = IcebergTable.load(location)
+        if t.spark_schema().simpleString() != _iceberg_to_spark_type(
+                spark_schema_to_iceberg(df.schema)).simpleString():
+            t.replace_schema(df.schema)
         return t.append_dataframe(df, overwrite=True)
     t = IcebergTable.create(location, df.schema, partition_by=partition_by)
     return t.append_dataframe(df)

@@ -48,9 +48,10 @@ def cooccurrence_triples(ann: DataFrame, materialize: bool = True) -> DataFrame:
     ``materialize`` flag had to localCheckpoint).  Per-doc arrays are
     bounded by entities-per-doc, so no row ever exceeds that envelope.
 
-    ``materialize`` is kept for API compatibility; the single-scan plan
-    no longer duplicates the upstream annotate stage, so there is no
-    lineage to truncate.
+    ``materialize`` is a no-op, kept because ``bench.py`` and
+    ``perfbench`` still pass it; the single-scan plan does not
+    duplicate the upstream annotate stage, so there is no lineage to
+    truncate (no ``localCheckpoint``).
     """
     per_doc = (ann.select("doc_id", "cui")
                .groupBy("doc_id")

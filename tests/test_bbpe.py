@@ -108,7 +108,7 @@ def test_token_space_window_extraction(bbpe_lstm):
     rb = pa.RecordBatch.from_pandas(pd.DataFrame({
         "doc_id": ["d1"], "text": [text],
         "ents": [[{"start": start, "end": end, "cui": "C1"}]]}))
-    out = list(kernel(_Bc(), "centered", "Negation")(iter([rb])))
+    out = list(kernel([(_Bc(), "centered", "Negation")])(iter([rb])))
     assert len(out) == 1
     row = out[0].to_pandas().iloc[0]
     assert (row["value"], row["confidence"]) == want
@@ -138,7 +138,7 @@ def test_multitoken_entity_center_range(bbpe_lstm):
     rb = pa.RecordBatch.from_pandas(pd.DataFrame({
         "doc_id": ["d1"], "text": [text],
         "ents": [[{"start": start, "end": end, "cui": "C9"}]]}))
-    out = list(kernel(_Bc(), "centered", "Negation")(iter([rb])))
+    out = list(kernel([(_Bc(), "centered", "Negation")])(iter([rb])))
     row = out[0].to_pandas().iloc[0]
     assert (row["value"], row["confidence"]) == want
 

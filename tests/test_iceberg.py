@@ -515,6 +515,27 @@ def test_overwrite_table_replace_semantics(spark, triples_df, tmp_path):
     assert snaps[1]["summary"]["operation"] == "overwrite"
 
 
+def test_overwrite_table_replaces_a_changed_schema(spark, triples_df,
+                                                   tmp_path):
+    """A REPLACE with other columns (run_kg --embeddings fastrp, then
+    transe, into one table) reads back as the new rows under the new
+    schema; the same columns again add no schema."""
+    from medcat_spark.sources.iceberg import overwrite_table
+    loc = str(tmp_path / "ow")
+    overwrite_table(loc, triples_df)
+    other = triples_df.selectExpr("subj AS node", "length(obj) AS d")
+    for _ in range(2):
+        overwrite_table(loc, other)
+    t = IcebergTable.load(loc)
+    assert [s["schema-id"] for s in t.metadata["schemas"]] == [0, 1]
+    assert t.spark_schema().simpleString() == other.schema.simpleString()
+    assert sorted(t.to_df(spark).collect()) == sorted(other.collect())
+    part = str(tmp_path / "part")
+    overwrite_table(part, triples_df, partition_by=["bucket"])
+    with pytest.raises(ValueError, match="partitioned"):
+        overwrite_table(part, other)
+
+
 def test_rewrite_manifests_compaction(spark, triples_df, tmp_path):
     """Folding N manifests into one preserves contents exactly and
     keeps prior snapshots time-travelable; expire then GCs the old

@@ -1,15 +1,21 @@
 """The one scorer operator (functions/scorer.py): every public scorer
-entry point plans as one MapInArrow behind the xxhash64(doc_id)
-repartition, and the kernel, driven in-process over hand-built Arrow
-batches, agrees with each head's own predict on the edge cases."""
+entry point plans as one MapInArrow behind one xxhash64(doc_id)
+repartition, the kernel, driven in-process over hand-built Arrow
+batches, agrees with each head's own predict on the edge cases, several
+heads in one pass give each head's own rows, and the JVM spans-to-text
+expression equals core.docs.reconstruct_text."""
 
 import copy
+import random
 import re
 
 import numpy as np
 import pyarrow as pa
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
+from medcat_spark.core.docs import reconstruct_text
 from medcat_spark.functions.bert_np import (mark_pair_sequence,
                                             relcat_bert_fixture_model,
                                             relations_bert)
@@ -22,7 +28,8 @@ from medcat_spark.functions.meta_model import (
 from medcat_spark.functions.rel_model import (rel_rnn_fixture_model,
                                               relation_fixture_model,
                                               relations_model, relations_rnn)
-from medcat_spark.functions.scorer import kernel, special_framing
+from medcat_spark.functions.scorer import (kernel, score, spans_text,
+                                          special_framing)
 
 _ENTS = pa.list_(pa.struct([("start", pa.int32()), ("end", pa.int32()),
                             ("cui", pa.string())]))
@@ -55,7 +62,7 @@ class _Bc:
 def _run(model, head, docs, meta_name="Negation"):
     """Kernel output over [docs batch, empty batch] → {key: (label,
     conf)}; asserts the empty batch yields no output batch."""
-    fn = kernel(_Bc(model), head, meta_name)
+    fn = kernel([(_Bc(model), head, meta_name)])
     assert list(fn(iter([_batch([])]))) == []
     out = list(fn(iter([_batch(docs), _batch([])])))
     assert len(out) <= 1
@@ -254,7 +261,8 @@ def test_scorer_entry_points_plan_one_map_in_arrow(spark):
         "meta_annotations_lstm": meta_annotations_lstm(
             ann, docs, sc.broadcast(lstm_fixture_model())),
         "meta_annotations_multi": meta_annotations_multi(
-            ann, docs, [("Negation", neg)]),
+            ann, docs, [("Negation", neg), ("Status", sc.broadcast(
+                negation_fixture_model()))]),
         "relations_model": relations_model(
             ann, docs, sc.broadcast(relation_fixture_model())),
         "relations_rnn": relations_rnn(
@@ -266,6 +274,114 @@ def test_scorer_entry_points_plan_one_map_in_arrow(spark):
         p = _plan(df)
         assert p.count("MapInArrow") == 1, name
         assert "MapInPandas" not in p, name
-        # the compute-sized repartition AQE must not coalesce away
-        assert re.search(r"hashpartitioning\(xxhash64\(doc_id", p), name
+        # the compute-sized repartition AQE must not coalesce away,
+        # once for all the heads of a call
+        assert len(re.findall(r"hashpartitioning\(xxhash64\(doc_id",
+                              p)) == 1, name
         assert df.count() > 0, name
+
+
+# ---------------------------------------------------------------------------
+# several heads in one pass
+
+
+def _corpus(spark, n_docs=40, seed=5):
+    """Whitespace docs over WORDS with entities on token starts (some
+    two-token), spread over several partitions."""
+    rng = random.Random(seed)
+    docs, ann = [], []
+    for d in range(n_docs):
+        words = [rng.choice(WORDS) for _ in range(rng.randint(3, 40))]
+        starts = [sum(len(w) + 1 for w in words[:i])
+                  for i in range(len(words))]
+        docs.append((f"d{d:02d}", " ".join(words)))
+        for i in sorted(rng.sample(range(len(words)),
+                                   min(len(words), rng.randint(1, 6)))):
+            j = min(len(words) - 1, i + rng.randint(0, 1))
+            ann.append((f"d{d:02d}", starts[i], starts[j] + len(words[j]),
+                        f"C{rng.randint(1, 9)}"))
+    return (spark.createDataFrame(docs, "doc_id string, text string")
+            .repartition(3),
+            spark.createDataFrame(
+                ann, "doc_id string, start int, end int, cui string")
+            .repartition(4))
+
+
+def test_fused_heads_equal_separate_passes(spark):
+    sc = spark.sparkContext
+    docs, ann = _corpus(spark)
+    lstm = copy.copy(lstm_fixture_model())
+    lstm.tokenizer = relcat_bert_fixture_model().tokenizer
+    groups = {
+        "meta": [(sc.broadcast(negation_fixture_model()), "linear", "Lin"),
+                 (sc.broadcast(negation_mlp_fixture_model()), "pooled",
+                  "Mlp"),
+                 (sc.broadcast(lstm), "centered", "Lstm")],
+        "pairs": [(sc.broadcast(relation_fixture_model()), "rel_linear",
+                   None),
+                  (sc.broadcast(rel_rnn_fixture_model()), "rel_marked",
+                   None)],
+    }
+    for kind, heads in groups.items():
+        fused = score(ann, docs, heads)
+        assert _plan(fused).count("MapInArrow") == 1, kind
+        got = sorted(map(tuple, fused.collect()))
+        want = []
+        for head in heads:
+            alone = sorted(map(tuple, score(ann, docs, [head]).collect()))
+            assert alone, head[1]
+            if kind == "meta":      # rows tagged per head: compare each
+                assert [r for r in got if r[3] == head[2]] == alone, head
+            want += alone
+        # keys, labels and confidences (as floats) of every head
+        assert got == sorted(want), kind
+
+
+def test_mixed_meta_and_pair_heads_raise(spark):
+    sc = spark.sparkContext
+    docs, ann = _corpus(spark, n_docs=2)
+    heads = [(sc.broadcast(negation_fixture_model()), "linear", "Negation"),
+             (sc.broadcast(relation_fixture_model()), "rel_linear", None)]
+    with pytest.raises(ValueError, match="one output schema"):
+        score(ann, docs, heads)
+    with pytest.raises(ValueError, match="one output schema"):
+        kernel(heads)
+    with pytest.raises(ValueError, match="one output schema"):
+        kernel([])
+
+
+# ---------------------------------------------------------------------------
+# spans -> text: the JVM twin of core.docs.reconstruct_text
+
+_SPAN = st.fixed_dictionaries({
+    "kind": st.sampled_from(["text", "text", "image", "audio"]),
+    "text": st.one_of(st.none(), st.text(alphabet="ab é\U0001f600",
+                                         max_size=6)),
+    "media_ref": st.none(),
+    "offset": st.integers(0, 30),
+})
+_SPANS_DDL = ("doc_id int, spans array<struct<kind:string,text:string,"
+              "media_ref:string,offset:int>>")
+
+
+def _span(kind, text, offset):
+    return {"kind": kind, "text": text, "media_ref": None, "offset": offset}
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(docs=st.lists(st.lists(_SPAN, max_size=6), min_size=1, max_size=12))
+@example(docs=[
+    [],                                                       # empty list
+    [_span("text", None, 0), _span("text", "ab", 3)],         # NULL text
+    [_span("text", "ab", 0), _span("image", None, 2),         # media span
+     _span("text", "cd", 5)],
+    [_span("text", "ab", 0), _span("text", "cd", 2)],         # abutting
+    [_span("text", "abc", 0), _span("text", "xy", 1),         # overlap,
+     _span("text", "z", 4)],                                  # then a gap
+    [_span("text", "late", 9), _span("text", "early", 1)],    # out of order
+])
+def test_spans_text_equals_reconstruct_text(spark, docs):
+    df = spark.createDataFrame(list(enumerate(docs)), _SPANS_DDL)
+    got = dict(df.select("doc_id", spans_text()).collect())
+    assert got == {i: reconstruct_text(s) for i, s in enumerate(docs)}
