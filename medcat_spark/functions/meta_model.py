@@ -580,19 +580,22 @@ def _bptt(cell, X: np.ndarray, S: np.ndarray, dS: np.ndarray,
           reverse: bool):
     """Backprop through one direction of :meth:`_BiRnn.states` with
     every step unmasked: the cell's (dWx, dWh, dbh) from its per-step
-    states ``S`` and the loss gradient ``dS`` on them."""
+    states ``S`` and the loss gradient ``dS`` on them.  The last step
+    gets no state gradient from a later one, and the first step's
+    previous state is the zero state, so neither adds a term."""
     Wx, Wh, bh = cell
     L = X.shape[1]
     steps = range(L - 1, -1, -1) if reverse else range(L)
     dWx, dWh, dbh = np.zeros_like(Wx), np.zeros_like(Wh), np.zeros_like(bh)
-    carry = h0 = np.zeros_like(S[:, 0])
+    dh = dS[:, steps[L - 1]]
     for i in range(L - 1, -1, -1):
         t = steps[i]
-        da = (dS[:, t] + carry) * (1.0 - S[:, t] ** 2)
+        da = dh * (1.0 - S[:, t] ** 2)
         dWx += da.T @ X[:, t]
-        dWh += da.T @ (S[:, steps[i - 1]] if i else h0)
         dbh += da.sum(axis=0)
-        carry = da @ Wh
+        if i:
+            dWh += da.T @ S[:, steps[i - 1]]
+            dh = dS[:, steps[i - 1]] + da @ Wh
     return dWx, dWh, dbh
 
 

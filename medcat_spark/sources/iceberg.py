@@ -895,6 +895,50 @@ def _new_snapshot_id() -> int:
     return int(uuid.uuid4().int % (1 << 62))
 
 
+def _data_summary(manifest: Dict[str, Any]) -> Dict[str, str]:
+    """Snapshot summary of a data manifest's added files and rows."""
+    return {"added-data-files": str(manifest["added_files_count"]),
+            "added-records": str(manifest["added_rows_count"])}
+
+
+def _entry_seq(entry: Dict[str, Any], manifest: Dict[str, Any]) -> int:
+    """A manifest entry's data sequence number: an entry committed with
+    null inherits its manifest's (spec 'Sequence Number Inheritance')."""
+    seq = entry["sequence_number"]
+    return manifest["sequence_number"] if seq is None else seq
+
+
+def _bound_maps(data_file: Dict[str, Any]
+                ) -> Tuple[Dict[int, bytes], Dict[int, bytes]]:
+    """A data file's (lower, upper) serialized bounds by field id."""
+    return tuple({e["key"]: e["value"] for e in (data_file.get(k) or [])}
+                 for k in ("lower_bounds", "upper_bounds"))
+
+
+def _delete_applies(d: Dict[str, Any], data_seq: int,
+                    data_paths: Sequence[str]) -> bool:
+    """Whether delete file ``d`` applies to a group of data files at
+    sequence ``data_seq`` (spec 'Scan Planning'): an equality delete at
+    sequence S to data with sequence < S, a position delete to data with
+    sequence <= S (the MERGE case) whose paths its file_path bounds can
+    hold (write-side truncated, so the test stays conservative)."""
+    if d["content"] == 2:
+        return d["_seq"] > data_seq
+    lower, upper = _bound_maps(d)
+    return d["_seq"] >= data_seq and not all(
+        _outside("string", p, lower.get(POS_DELETE_PATH_ID),
+                 upper.get(POS_DELETE_PATH_ID)) for p in data_paths)
+
+
+def _outside(iceberg_type: str, want: Any, lower: Optional[bytes],
+             upper: Optional[bytes]) -> bool:
+    """Whether ``want`` provably lies outside serialized bounds (a
+    missing bound excludes nothing)."""
+    lo = deserialize_bound(iceberg_type, lower)
+    hi = deserialize_bound(iceberg_type, upper)
+    return (lo is not None and want < lo) or (hi is not None and want > hi)
+
+
 # ---------------------------------------------------------------------------
 # The table
 # ---------------------------------------------------------------------------
@@ -1057,16 +1101,10 @@ class IcebergTable:
     # -- schema / spec accessors --------------------------------------------
 
     def schema(self) -> Dict[str, Any]:
-        sid = self.metadata["current-schema-id"]
-        return next(s for s in self.metadata["schemas"]
-                    if s["schema-id"] == sid)
+        return self._schema_by_id(self.metadata["current-schema-id"])
 
     def spark_schema(self):
-        from pyspark.sql import types as T
-        return T.StructType([
-            T.StructField(f["name"], _iceberg_to_spark_type(f["type"]),
-                          not f["required"])
-            for f in self.schema()["fields"]])
+        return _iceberg_to_spark_type(self.schema())
 
     def partition_spec(self, spec_id: Optional[int] = None
                        ) -> Dict[str, Any]:
@@ -1075,9 +1113,13 @@ class IcebergTable:
         return next(s for s in self.metadata["partition-specs"]
                     if s["spec-id"] == sid)
 
-    def _partition_fields(self, spec_id: Optional[int] = None
+    def _partition_fields(self, spec_id: Optional[int] = None,
+                          schema: Optional[Dict[str, Any]] = None
                           ) -> List[Dict[str, Any]]:
-        by_id = {f["id"]: f for f in self.schema()["fields"]}
+        """Spec ``spec_id``'s fields (default: the table's default
+        spec), their source columns named by ``schema`` (default: the
+        current schema)."""
+        by_id = {f["id"]: f for f in (schema or self.schema())["fields"]}
         out = []
         for pf in self.partition_spec(spec_id)["fields"]:
             src = by_id[pf["source-id"]]
@@ -1127,9 +1169,7 @@ class IcebergTable:
         return self._commit_snapshot(
             manifests=[manifest], snap_id=snap_id,
             operation="overwrite" if overwrite else "append",
-            summary={"added-data-files": str(manifest["added_files_count"]),
-                     "added-records": str(manifest["added_rows_count"]),
-                     **(summary_extra or {})},
+            summary={**_data_summary(manifest), **(summary_extra or {})},
             carry=lambda m: not overwrite, branch=branch)
 
     def _write_data_files(self, df, snap_id: int) -> str:
@@ -1191,20 +1231,9 @@ class IcebergTable:
         eq_ids = self._equality_ids(key_cols)
         snap_id = _new_snapshot_id()
         data_dir = self._write_data_files(df, snap_id)
-        data_m = self._build_data_manifest(data_dir, snap_id)
-        del_m = self._write_deletes(df.select(*key_cols).distinct(),
-                                    snap_id, eq_ids)
-        summary = {"added-data-files": str(data_m["added_files_count"]),
-                   "added-records": str(data_m["added_rows_count"]),
-                   **(summary_extra or {})}
-        if del_m:
-            summary["added-delete-files"] = str(del_m["added_files_count"])
-            summary["added-equality-deletes"] = str(
-                del_m["added_rows_count"])
-        return self._commit_snapshot(
-            manifests=[data_m] + ([del_m] if del_m else []),
-            snap_id=snap_id, operation="overwrite", summary=summary,
-            branch=branch)
+        return self._commit_deletes(
+            df.select(*key_cols).distinct(), snap_id, eq_ids, summary_extra,
+            branch, data_m=self._build_data_manifest(data_dir, snap_id))
 
     def _manifest_entries(self, data_dir: str, snap_id: int, content: int,
                           columns: Dict[str, Tuple[int, str]],
@@ -1763,9 +1792,7 @@ class IcebergTable:
             for e in entries:
                 if e["status"] == 2:  # DELETED: drop tombstones
                     continue
-                seq = e["sequence_number"]
-                if seq is None:  # was inherited from its adding snapshot
-                    seq = mf["sequence_number"]
+                seq = _entry_seq(e, mf)
                 by_key.setdefault((sid, spec), []).append(
                     dict(e, status=0,  # EXISTING
                          sequence_number=seq,
@@ -1803,8 +1830,7 @@ class IcebergTable:
         manifest = self._build_data_manifest(data_dir, snap_id)
         self._commit_snapshot(
             manifests=[manifest], snap_id=snap_id, operation="replace",
-            summary={"added-data-files": str(manifest["added_files_count"]),
-                     "added-records": str(manifest["added_rows_count"]),
+            summary={**_data_summary(manifest),
                      "delete-files-removed": str(n_dels)},
             carry=lambda m: False, required_parent=parent)
         return {"snapshot_id": snap_id,
@@ -1944,6 +1970,39 @@ class IcebergTable:
         _schema, records, _meta = avro_read_container(snap["manifest-list"])
         return records
 
+    def _entries(self, snapshot_id: Optional[int], content: int,
+                 added_by: Optional[set] = None,
+                 manifest_ok: Optional[Callable[[Dict[str, Any], int],
+                                                bool]] = None
+                 ) -> Iterable[Dict[str, Any]]:
+        """The one scan planner (spec 'Scan Planning'): the live files
+        of ``snapshot_id``'s ``content`` manifests (0 data, 1 deletes),
+        each data_file dict tagged with its data sequence number
+        ``_seq`` (inherited when null), its manifest's write-schema id
+        ``_sid`` and partition spec ``_spec``.  ``added_by`` keeps only
+        the files ADDED by those snapshots (an incremental range);
+        ``manifest_ok(record, spec_id)`` prunes a manifest before it is
+        read."""
+        default_spec = self.metadata["default-spec-id"]
+        for mf in self._manifest_files(snapshot_id):
+            if mf.get("content", 0) != content or (
+                    added_by is not None
+                    and mf["added_snapshot_id"] not in added_by):
+                continue
+            spec = mf.get("partition_spec_id", default_spec)
+            if manifest_ok is not None and not manifest_ok(mf, spec):
+                continue
+            _schema, entries, meta = avro_read_container(mf["manifest_path"])
+            sid = int(meta.get("schema-id",
+                               self.metadata["current-schema-id"]))
+            for e in entries:
+                if e["status"] == 2 or (added_by is not None and (
+                        e["status"] != 1
+                        or e["snapshot_id"] not in added_by)):
+                    continue  # DELETED, or not added in the range
+                yield dict(e["data_file"], _seq=_entry_seq(e, mf), _sid=sid,
+                           _spec=spec)
+
     def scan_files(self, snapshot_id: Optional[int] = None,
                    partition_filter: Optional[Dict[str, Any]] = None,
                    value_filter: Optional[Dict[str, Any]] = None
@@ -1963,8 +2022,7 @@ class IcebergTable:
                 if not isinstance(f["type"], str):
                     raise ValueError(f"value_filter on nested type: {col}")
                 vf.append((f["id"], f["type"], want))
-        default_spec = self.metadata["default-spec-id"]
-        # per-spec state: a manifest is planned with the spec it was
+        # per-spec conditions: a manifest is planned with the spec it was
         # written under (partition-spec evolution); filter keys given
         # as SOURCE columns resolve through that spec's transform (an
         # equality predicate on doc_id prunes a bucket[N] partitioning
@@ -1972,66 +2030,41 @@ class IcebergTable:
         # a partition field name pass through as already-transformed
         # values, and keys the spec does not partition by simply don't
         # prune its manifests (conservative)
-        spec_state: Dict[int, Tuple] = {}
+        spec_conds: Dict[int, List[Tuple[int, str, str, Any]]] = {}
 
-        def state(spec_id: int) -> Tuple:
-            if spec_id not in spec_state:
+        def conds(spec_id: int) -> List[Tuple[int, str, str, Any]]:
+            """(tuple index, field name, result type, wanted value)"""
+            if spec_id not in spec_conds:
                 pf = self._partition_fields(spec_id)
                 pidx = {p["name"]: i for i, p in enumerate(pf)}
-                ptype = {p["name"]: p["result_type"] for p in pf}
-                resolved: Dict[str, Any] = {}
-                if partition_filter:
-                    by_src = {p["source_name"]: p for p in pf}
-                    for col, want in partition_filter.items():
-                        if col in pidx and (col not in by_src
-                                            or by_src[col]["name"] == col):
-                            resolved[col] = want
-                        elif col in by_src:
-                            p = by_src[col]
-                            resolved[p["name"]] = apply_transform(
-                                p["transform"], want, p["source_type"])
-                spec_state[spec_id] = (pidx, ptype, resolved)
-            return spec_state[spec_id]
+                by_src = {p["source_name"]: p for p in pf}
+                spec_conds[spec_id] = out = []
+                for col, want in (partition_filter or {}).items():
+                    if col in pidx and (col not in by_src
+                                        or by_src[col]["name"] == col):
+                        p = pf[pidx[col]]
+                    elif col in by_src:
+                        p = by_src[col]
+                        want = apply_transform(p["transform"], want,
+                                               p["source_type"])
+                    else:
+                        continue
+                    out.append((pidx[p["name"]], p["name"],
+                                p["result_type"], want))
+            return spec_conds[spec_id]
 
-        out: List[Dict[str, Any]] = []
-        for mf in self._manifest_files(snapshot_id):
-            if mf.get("content", 0) != 0:
-                continue  # delete manifests planned by scan_delete_files
-            spec_id = mf.get("partition_spec_id", default_spec)
-            pidx, ptype, resolved = state(spec_id)
-            if resolved and mf.get("partitions"):
-                skip = False
-                for col, want in resolved.items():
-                    if col not in pidx:
-                        continue
-                    s = mf["partitions"][pidx[col]]
-                    lo = deserialize_bound(ptype[col], s["lower_bound"])
-                    hi = deserialize_bound(ptype[col], s["upper_bound"])
-                    if lo is not None and want < lo:
-                        skip = True
-                    if hi is not None and want > hi:
-                        skip = True
-                if skip:
-                    continue  # manifest pruned without reading it
-            _schema, entries, _meta = avro_read_container(mf["manifest_path"])
-            sid = int(_meta.get("schema-id",
-                                self.metadata["current-schema-id"]))
-            for e in entries:
-                if e["status"] == 2:  # DELETED
-                    continue
-                d = e["data_file"]
-                if resolved:
-                    if any(d["partition"].get(c) != v
-                           for c, v in resolved.items()
-                           if c in pidx):
-                        continue
-                if vf and self._bounds_exclude(d, vf):
-                    continue
-                seq = e["sequence_number"]
-                if seq is None:  # inherited from the adding snapshot
-                    seq = mf["sequence_number"]
-                out.append(dict(d, _seq=seq, _sid=sid, _spec=spec_id))
-        return out
+        def manifest_ok(mf: Dict[str, Any], spec_id: int) -> bool:
+            summaries = mf.get("partitions")
+            return not summaries or not any(
+                _outside(t, want, summaries[i]["lower_bound"],
+                         summaries[i]["upper_bound"])
+                for i, _name, t, want in conds(spec_id))
+
+        return [d for d in self._entries(snapshot_id, 0,
+                                         manifest_ok=manifest_ok)
+                if all(d["partition"].get(name) == want
+                       for _i, name, _t, want in conds(d["_spec"]))
+                and not (vf and self._bounds_exclude(d, vf))]
 
     def scan_delete_files(self, snapshot_id: Optional[int] = None
                           ) -> List[Dict[str, Any]]:
@@ -2041,39 +2074,14 @@ class IcebergTable:
         equality delete at sequence S removes matching rows from data
         files with sequence < S; a position delete applies to data
         files with sequence <= S — spec 'Scan Planning')."""
-        out: List[Dict[str, Any]] = []
-        for mf in self._manifest_files(snapshot_id):
-            if mf.get("content", 0) != 1:
-                continue
-            _schema, entries, _meta = avro_read_container(
-                mf["manifest_path"])
-            sid = int(_meta.get("schema-id",
-                                self.metadata["current-schema-id"]))
-            for e in entries:
-                if e["status"] == 2:
-                    continue
-                d = e["data_file"]
-                seq = e["sequence_number"]
-                if seq is None:
-                    seq = mf["sequence_number"]
-                out.append(dict(d, _seq=seq, _sid=sid))
-        return out
+        return list(self._entries(snapshot_id, 1))
 
     @staticmethod
     def _bounds_exclude(data_file: Dict[str, Any],
                         vf: List[Tuple[int, str, Any]]) -> bool:
-        lower = {e["key"]: e["value"]
-                 for e in (data_file.get("lower_bounds") or [])}
-        upper = {e["key"]: e["value"]
-                 for e in (data_file.get("upper_bounds") or [])}
-        for fid, t, want in vf:
-            lo = deserialize_bound(t, lower.get(fid))
-            hi = deserialize_bound(t, upper.get(fid))
-            if lo is not None and want < lo:
-                return True
-            if hi is not None and want > hi:
-                return True
-        return False
+        lower, upper = _bound_maps(data_file)
+        return any(_outside(t, want, lower.get(fid), upper.get(fid))
+                   for fid, t, want in vf)
 
     def to_df(self, spark, snapshot_id: Optional[int] = None,
               partition_filter: Optional[Dict[str, Any]] = None,
@@ -2102,70 +2110,72 @@ class IcebergTable:
         ``_pos`` (row ordinal within it) — the inputs a caller needs to
         produce position deletes (see delete_where_positions).
 
-        ``ref`` reads at a named branch/tag head (mutually exclusive
-        with ``snapshot_id``).  ``value_filter`` ({col: value}) prunes
-        data files by their per-column lower/upper bounds before any is
-        opened (Iceberg data skipping) — a conservative pre-filter, NOT
-        a row filter: the caller still applies the predicate to the
-        returned rows."""
+        ``snapshot_id`` reads that snapshot under the schema it was
+        committed with (Iceberg time travel); the current snapshot and
+        ``ref`` read under the current schema.  ``ref`` reads at a named
+        branch/tag head (mutually exclusive with ``snapshot_id``).
+        ``value_filter`` ({col: value}) prunes data files by their
+        per-column lower/upper bounds before any is opened (Iceberg data
+        skipping) — a conservative pre-filter, NOT a row filter: the
+        caller still applies the predicate to the returned rows."""
+        schema = None
         if ref is not None:
             if snapshot_id is not None:
                 raise ValueError("pass snapshot_id OR ref, not both")
             snapshot_id = self.ref_snapshot(ref)
+        elif snapshot_id is not None:
+            schema = self._schema_by_id(
+                self._snapshot(snapshot_id)["schema-id"])
         files = self.scan_files(snapshot_id, partition_filter,
                                 value_filter)
         deletes = self.scan_delete_files(snapshot_id) \
             if apply_deletes else []
-        return self._read_files_df(spark, files, deletes, with_pos)
+        return self._read_files_df(spark, files, deletes, with_pos, schema)
 
     def _read_files_df(self, spark, files: List[Dict[str, Any]],
-                       deletes: List[Dict[str, Any]], with_pos: bool):
-        """Shared file-list → DataFrame resolution used by both full
-        scans (to_df) and incremental scans (incremental_read): group
-        data files by (identity-partition tuple, sequence, write-schema
-        id, spec), read each group with its WRITE-time schema, map to
-        the current schema by field id (rename / widen-cast /
-        null-fill), restore identity-partition constants from metadata,
-        and apply position + equality deletes scoped by sequence."""
+                       deletes: List[Dict[str, Any]], with_pos: bool,
+                       schema: Optional[Dict[str, Any]] = None):
+        """Shared file-list → DataFrame resolution used by full scans
+        (to_df), incremental scans (incremental_read) and changelog:
+        group data files by (identity-partition tuple, sequence,
+        write-schema id, spec), read each group with its WRITE-time
+        schema, map to ``schema`` (default: the current one) by field
+        id (rename / widen-cast / null-fill), restore identity-partition
+        constants from metadata, and apply position + equality deletes
+        scoped by sequence."""
         from pyspark.sql import functions as F
-        pos_deletes = [d for d in deletes if d.get("content") == 1]
-        default_spec = self.metadata["default-spec-id"]
+        from pyspark.sql import types as T
+        schema = schema or self.schema()
+        out_schema = _iceberg_to_spark_type(schema)
+        if not files:
+            return spark.createDataFrame([], T.StructType(
+                out_schema.fields + ([T.StructField("_file_path",
+                                                    T.StringType()),
+                                      T.StructField("_pos", T.LongType())]
+                                     if with_pos else [])))
+        need_pos = with_pos or any(d["content"] == 1 for d in deletes)
         # identity fields per partition spec: files keep the spec they
         # were written under (spec evolution), and a file's identity
         # columns — absent from its bytes, restored from metadata — are
         # the ones of ITS spec, not the table's current default
         ident_of = {
-            s["spec-id"]: [p for p in self._partition_fields(s["spec-id"])
-                           if p["transform"] == "identity"]
-            for s in self.metadata["partition-specs"]}
-        need_pos = with_pos or bool(pos_deletes)
-        from pyspark.sql import types as T
-        if not files:
-            empty_schema = self.spark_schema()
-            if with_pos:
-                empty_schema = T.StructType(
-                    list(empty_schema.fields)
-                    + [T.StructField("_file_path", T.StringType()),
-                       T.StructField("_pos", T.LongType())])
-            return spark.createDataFrame([], empty_schema)
+            spec: [p for p in self._partition_fields(spec, schema)
+                   if p["transform"] == "identity"]
+            for spec in {d["_spec"] for d in files}}
         # group files by (identity-partition tuple, sequence number,
         # write-schema id); the seq component only matters when deletes
         # exist (it scopes anti-join applicability) and the schema
         # component collapses to one group until the schema evolves, so
         # the common case keeps single-read plans
-        cur_sid = self.metadata["current-schema-id"]
         groups: Dict[Tuple, List[str]] = {}
         for d in files:
-            spec = d.get("_spec", default_spec)
             ik = tuple(d["partition"].get(p["name"])
-                       for p in ident_of[spec])
+                       for p in ident_of[d["_spec"]])
             sk = d["_seq"] if deletes else None
-            groups.setdefault((ik, sk, d.get("_sid", cur_sid), spec),
+            groups.setdefault((ik, sk, d["_sid"], d["_spec"]),
                               []).append(d["file_path"])
-        file_schema = self.spark_schema()
-        spark_by_name = {f.name: f.dataType for f in file_schema.fields}
-        cur_fields = self.schema()["fields"]
-        out_cols = [f.name for f in file_schema.fields]
+        spark_by_name = {f.name: f.dataType for f in out_schema.fields}
+        out_cols = [f.name for f in out_schema.fields]
         if need_pos:
             out_cols = out_cols + ["_file_path", "_pos"]
         parts = []
@@ -2175,20 +2185,20 @@ class IcebergTable:
                                 kv[0][1] or 0, kv[0][2], kv[0][3])):
             ident = ident_of[spec]
             part_names = {p["source_name"] for p in ident}
-            if sid == cur_sid:
+            if sid == schema["schema-id"]:
                 read_schema_g = T.StructType(
-                    [f for f in file_schema.fields
+                    [f for f in out_schema.fields
                      if f.name not in part_names])
                 exprs = None
             else:
-                # files written under an OLDER schema: resolve columns
+                # files written under another schema: resolve columns
                 # by FIELD ID (spec projection): read with the names/
                 # types at write time, then rename / cast / null-fill
-                # into the current schema
+                # into the read schema
                 hist_by_id = {f["id"]: f
                               for f in self._schema_by_id(sid)["fields"]}
                 rfields, exprs = [], []
-                for cf in cur_fields:
+                for cf in schema["fields"]:
                     cur_dt = spark_by_name[cf["name"]]
                     if cf["name"] in part_names:
                         exprs.append(F.col(cf["name"]))
@@ -2226,10 +2236,9 @@ class IcebergTable:
                 sel = exprs + ([F.col("_file_path"), F.col("_pos")]
                                if need_pos else [])
                 df = df.select(*sel)
-            if deletes:
-                df = self._apply_pos_deletes(spark, df, sk, pos_deletes,
-                                             paths)
-                df = self._apply_eq_deletes(spark, df, sk, deletes)
+            applying = [d for d in deletes if _delete_applies(d, sk, paths)]
+            for dels, keys in self._delete_frames(spark, applying, schema):
+                df = df.join(dels, on=keys, how="left_anti")
             parts.append(df)
         out = parts[0]
         for p in parts[1:]:
@@ -2238,95 +2247,51 @@ class IcebergTable:
             out = out.drop("_file_path", "_pos")
         return out
 
-    def _apply_pos_deletes(self, spark, df, data_seq: int,
-                           pos_deletes: List[Dict[str, Any]],
-                           data_paths: List[str]):
-        """Anti-join ``df`` (data files at sequence ``data_seq``, which
-        carries _file_path/_pos columns) against applicable position
-        delete files: those with sequence >= data_seq (spec: a position
-        delete must apply to data committed in the SAME sequence, the
-        MERGE case) whose file_path bounds overlap this group's
-        paths."""
-        from pyspark.sql import types as T
-        paths = []
-        for d in pos_deletes:
-            if d["_seq"] < data_seq:
-                continue
-            lower = {e["key"]: e["value"]
-                     for e in (d.get("lower_bounds") or [])}
-            upper = {e["key"]: e["value"]
-                     for e in (d.get("upper_bounds") or [])}
-            lo = deserialize_bound("string", lower.get(POS_DELETE_PATH_ID))
-            hi = deserialize_bound("string", upper.get(POS_DELETE_PATH_ID))
-            # bounds are write-side truncated (lower = prefix, upper =
-            # truncate-incremented), so lo <= p <= hi stays conservative
-            if lo is not None and hi is not None and not any(
-                    lo <= p <= hi for p in data_paths):
-                continue
-            paths.append(d["file_path"])
-        if not paths:
-            return df
-        sub = T.StructType([T.StructField("file_path", T.StringType()),
-                            T.StructField("pos", T.LongType())])
-        dels = (spark.read.schema(sub).parquet(*paths).distinct()
-                .withColumnRenamed("file_path", "_file_path")
-                .withColumnRenamed("pos", "_pos"))
-        return df.join(dels, on=["_file_path", "_pos"], how="left_anti")
-
-    def _apply_eq_deletes(self, spark, df, data_seq: int,
-                          deletes: List[Dict[str, Any]]):
-        """Anti-join ``df`` (data files at sequence ``data_seq``)
-        against every applicable equality-delete file (those with
-        sequence > data_seq), grouped by (equality-id set, write-schema
-        id) so each set is one join.  Delete files are read with the
-        column names/types AT WRITE TIME (field-id resolution), then
-        renamed/cast to the current schema — renames and promotions
-        after a delete keep it applying."""
+    def _delete_frames(self, spark, deletes: List[Dict[str, Any]],
+                       schema: Dict[str, Any]):
+        """The join sides of ``deletes`` as (key-values DataFrame, key
+        column names): the position-delete files as one distinct
+        (_file_path, _pos) frame, then the equality-delete files as one
+        frame per (equality-id set, write-schema id).  Equality deletes
+        are read with the column names/types AT WRITE TIME (field-id
+        resolution), then renamed/cast into ``schema`` — renames and
+        promotions after a delete keep it applying."""
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
-        cur_by_id = {f["id"]: f for f in self.schema()["fields"]}
-        cur_sid = self.metadata["current-schema-id"]
+        pos_paths = [d["file_path"] for d in deletes if d["content"] == 1]
+        if pos_paths:
+            sub = T.StructType([T.StructField("file_path", T.StringType()),
+                                T.StructField("pos", T.LongType())])
+            yield (spark.read.schema(sub).parquet(*pos_paths).distinct()
+                   .withColumnRenamed("file_path", "_file_path")
+                   .withColumnRenamed("pos", "_pos")), ["_file_path", "_pos"]
         groups: Dict[Tuple, List[str]] = {}
         for d in deletes:
-            if d["_seq"] > data_seq and d.get("equality_ids"):
-                groups.setdefault(
-                    (tuple(d["equality_ids"]), d.get("_sid", cur_sid)),
-                    []).append(d["file_path"])
+            if d["content"] == 2:
+                groups.setdefault((tuple(d["equality_ids"]), d["_sid"]),
+                                  []).append(d["file_path"])
+        by_id = {f["id"]: f for f in schema["fields"]}
         for (ids, sid), paths in sorted(groups.items()):
-            vals, keys = self._eq_delete_values(spark, paths, ids, sid)
-            df = df.join(vals, on=keys, how="left_anti")
-        return df
-
-    def _eq_delete_values(self, spark, paths: List[str],
-                          ids: Tuple[int, ...], sid: int):
-        """Read equality-delete files with their WRITE-time column
-        names/types (field-id resolution), renamed/cast to the current
-        schema; returns (distinct key values DataFrame, key col names).
-        Renames and promotions after a delete keep it applying."""
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-        cur_by_id = {f["id"]: f for f in self.schema()["fields"]}
-        if any(i not in cur_by_id for i in ids):
-            raise NotImplementedError(
-                "an equality delete references a dropped column; "
-                "run rewrite_data_files to materialize deletes "
-                "BEFORE dropping their key column")
-        hist_by_id = {f["id"]: f
-                      for f in self._schema_by_id(sid)["fields"]}
-        sub = T.StructType([
-            T.StructField(hist_by_id[i]["name"],
-                          _iceberg_to_spark_type(hist_by_id[i]["type"]),
-                          True) for i in ids])
-        sel = []
-        for i in ids:
-            h, c = hist_by_id[i], cur_by_id[i]
-            e = F.col(h["name"])
-            if h["type"] != c["type"]:
-                e = e.cast(_iceberg_to_spark_type(c["type"]))
-            sel.append(e.alias(c["name"]))
-        vals = (spark.read.schema(sub).parquet(*paths)
-                .select(*sel).distinct())
-        return vals, [cur_by_id[i]["name"] for i in ids]
+            if any(i not in by_id for i in ids):
+                raise NotImplementedError(
+                    "an equality delete references a dropped column; "
+                    "run rewrite_data_files to materialize deletes "
+                    "BEFORE dropping their key column")
+            hist_by_id = {f["id"]: f
+                          for f in self._schema_by_id(sid)["fields"]}
+            sub = T.StructType([
+                T.StructField(hist_by_id[i]["name"],
+                              _iceberg_to_spark_type(hist_by_id[i]["type"]),
+                              True) for i in ids])
+            sel = []
+            for i in ids:
+                h, c = hist_by_id[i], by_id[i]
+                e = F.col(h["name"])
+                if h["type"] != c["type"]:
+                    e = e.cast(_iceberg_to_spark_type(c["type"]))
+                sel.append(e.alias(c["name"]))
+            yield (spark.read.schema(sub).parquet(*paths).select(*sel)
+                   .distinct(), [by_id[i]["name"] for i in ids])
 
     def _equality_ids(self, cols: Sequence[str]) -> List[int]:
         """Field ids of top-level primitive ``cols`` (equality-delete
@@ -2379,48 +2344,55 @@ class IcebergTable:
                      summary_extra: Optional[Dict[str, str]],
                      branch: str) -> Optional[int]:
         eq_ids = self._equality_ids(equality_cols)
-        snap_id = _new_snapshot_id()
-        manifest = self._write_deletes(
-            keys_df.select(*equality_cols).distinct(), snap_id, eq_ids)
-        if manifest is None:
-            return None
-        return self._commit_snapshot(
-            manifests=[manifest], snap_id=snap_id, operation="delete",
-            branch=branch,
-            summary={"added-delete-files":
-                     str(manifest["added_files_count"]),
-                     "added-equality-deletes":
-                     str(manifest["added_rows_count"]),
-                     **(summary_extra or {})})
+        return self._commit_deletes(
+            keys_df.select(*equality_cols).distinct(), _new_snapshot_id(),
+            eq_ids, summary_extra, branch)
 
-    def _write_deletes(self, rows, snap_id: int,
-                       equality_ids: Optional[List[int]] = None
-                       ) -> Optional[Dict[str, Any]]:
-        """Write delete files for ``snap_id`` and their content=1
-        manifest; returns its manifest-list record, or None when
-        ``rows`` is empty.  Equality deletes (``equality_ids`` given)
-        carry the key columns; position deletes carry (file_path, pos)
-        under the spec's reserved ids, sorted within each file as the
-        spec requires, with file_path bounds so scans can skip delete
-        files whose path range cannot touch a data-file group."""
+    def _commit_deletes(self, rows, snap_id: int,
+                        equality_ids: Optional[List[int]],
+                        summary_extra: Optional[Dict[str, str]] = None,
+                        branch: str = "main",
+                        data_m: Optional[Dict[str, Any]] = None
+                        ) -> Optional[int]:
+        """Write ``rows`` as the delete files of ``snap_id`` and commit
+        them in a ``delete`` snapshot — or, with an upsert's data
+        manifest ``data_m``, in one ``overwrite`` snapshot with it.
+        Equality deletes (``equality_ids`` given) carry the key columns;
+        position deletes carry (file_path, pos) under the spec's
+        reserved ids, sorted within each file as the spec requires,
+        with file_path bounds so scans can skip delete files whose path
+        range cannot touch a data-file group.  Returns the snapshot id,
+        or None when there is nothing to commit (no empty snapshots)."""
         if equality_ids is None:
-            kind, content = "posdeletes", 1
+            kind, content, ddir = "position", 1, "posdeletes"
             columns = {"file_path": (POS_DELETE_PATH_ID, "string")}
             rows = rows.sortWithinPartitions("file_path", "pos")
         else:
-            kind, content, columns = "deletes", 2, {}
+            kind, content, ddir, columns = "equality", 2, "deletes", {}
         ddir = os.path.join(self.location, "data",
-                            f"snap-{snap_id:x}-{kind}")
+                            f"snap-{snap_id:x}-{ddir}")
         rows.write.mode("error").parquet(ddir)
         entries = self._manifest_entries(ddir, snap_id, content, columns,
                                          equality_ids)
-        if not entries:
+        manifests, summary = [], {}
+        if data_m is not None:
+            manifests, summary = [data_m], _data_summary(data_m)
+        if entries:
+            del_m = self._write_manifest(entries, 1,
+                                         self.partition_spec()["spec-id"],
+                                         self.metadata["current-schema-id"])
+            manifests.append(del_m)
+            summary["added-delete-files"] = str(del_m["added_files_count"])
+            summary[f"added-{kind}-deletes"] = str(del_m["added_rows_count"])
+        else:
             import shutil
             shutil.rmtree(ddir, ignore_errors=True)
-            return None
-        return self._write_manifest(entries, 1,
-                                    self.partition_spec()["spec-id"],
-                                    self.metadata["current-schema-id"])
+            if data_m is None:
+                return None
+        return self._commit_snapshot(
+            manifests=manifests, snap_id=snap_id,
+            operation="delete" if data_m is None else "overwrite",
+            summary={**summary, **(summary_extra or {})}, branch=branch)
 
     def delete_where_positions(self, spark, condition,
                                summary_extra: Optional[Dict[str, str]]
@@ -2451,22 +2423,13 @@ class IcebergTable:
         the caller already knows the ordinals (e.g. from a
         ``to_df(with_pos=True)`` scan it ran anyway)."""
         from pyspark.sql import functions as F
-        snap_id = _new_snapshot_id()
         matches = (pos_df
                    .select(F.col("file_path").cast("string"),
                            F.col("pos").cast("long"))
                    .distinct()
                    .sort("file_path", "pos"))
-        manifest = self._write_deletes(matches, snap_id)
-        if manifest is None:
-            return None
-        return self._commit_snapshot(
-            manifests=[manifest], snap_id=snap_id, operation="delete",
-            summary={"added-delete-files":
-                     str(manifest["added_files_count"]),
-                     "added-position-deletes":
-                     str(manifest["added_rows_count"]),
-                     **(summary_extra or {})})
+        return self._commit_deletes(matches, _new_snapshot_id(), None,
+                                    summary_extra)
 
     # -- metadata tables (the $files / $snapshots / $manifests / $history
     #    analogues: Iceberg metadata exposed as queryable DataFrames) ----
@@ -2545,43 +2508,29 @@ class IcebergTable:
             cur = by_id[cur].get("parent-snapshot-id")
         return out
 
-    def incremental_files(self, from_snapshot_id: int,
-                          to_snapshot_id: Optional[int] = None
-                          ) -> List[Dict[str, Any]]:
-        """Data files ADDED by snapshots after ``from_snapshot_id`` up
-        to ``to_snapshot_id`` (default: current) — append-only
-        changelog planning from manifests alone.  from must be an
-        ancestor of to (otherwise the delta is undefined — same rule as
-        Iceberg's incremental scan)."""
+    def _added_between(self, from_snapshot_id: int,
+                       to_snapshot_id: Optional[int]) -> Tuple[int, set]:
+        """``to`` (default: current) and the ids of the snapshots after
+        ``from`` up to it.  from must be an ancestor of to (otherwise
+        the delta is undefined — same rule as Iceberg's incremental
+        scan)."""
         to_id = to_snapshot_id if to_snapshot_id is not None \
             else self.current_snapshot_id()
         chain = self._ancestors(to_id)
         if from_snapshot_id not in chain:
             raise ValueError(
                 f"{from_snapshot_id} is not an ancestor of {to_id}")
-        new_ids = set(chain[:chain.index(from_snapshot_id)])
-        default_spec = self.metadata["default-spec-id"]
-        out = []
-        for mf in self._manifest_files(to_id):
-            if mf.get("content", 0) != 0:
-                continue
-            if mf["added_snapshot_id"] not in new_ids:
-                continue  # manifest written by an already-seen snapshot
-            _s, entries, _m = avro_read_container(mf["manifest_path"])
-            sid = int(_m.get("schema-id",
-                             self.metadata["current-schema-id"]))
-            spec = mf.get("partition_spec_id", default_spec)
-            for e in entries:
-                if e["status"] != 1:  # only ADDED rows are the delta
-                    continue
-                if e["snapshot_id"] not in new_ids:
-                    continue
-                seq = e["sequence_number"]
-                if seq is None:
-                    seq = mf["sequence_number"]
-                out.append(dict(e["data_file"], _sid=sid, _spec=spec,
-                                _seq=seq))
-        return out
+        return to_id, set(chain[:chain.index(from_snapshot_id)])
+
+    def incremental_files(self, from_snapshot_id: int,
+                          to_snapshot_id: Optional[int] = None
+                          ) -> List[Dict[str, Any]]:
+        """Data files ADDED by snapshots after ``from_snapshot_id`` up
+        to ``to_snapshot_id`` (default: current) — append-only
+        changelog planning from manifests alone."""
+        to_id, new_ids = self._added_between(from_snapshot_id,
+                                             to_snapshot_id)
+        return list(self._entries(to_id, 0, added_by=new_ids))
 
     def incremental_read(self, spark, from_snapshot_id: int,
                          to_snapshot_id: Optional[int] = None):
@@ -2598,29 +2547,6 @@ class IcebergTable:
         only ADDED rows, deletes in the range are not replayed."""
         files = self.incremental_files(from_snapshot_id, to_snapshot_id)
         return self._read_files_df(spark, files, [], False)
-
-    def _delete_files_added_in(self, new_ids: set,
-                               to_snapshot_id: int
-                               ) -> List[Dict[str, Any]]:
-        """Delete files COMMITTED by snapshots in ``new_ids`` (planned
-        from content=1 manifests added in the range)."""
-        out: List[Dict[str, Any]] = []
-        for mf in self._manifest_files(to_snapshot_id):
-            if mf.get("content", 0) != 1:
-                continue
-            if mf["added_snapshot_id"] not in new_ids:
-                continue
-            _s, entries, _m = avro_read_container(mf["manifest_path"])
-            sid = int(_m.get("schema-id",
-                             self.metadata["current-schema-id"]))
-            for e in entries:
-                if e["status"] != 1 or e["snapshot_id"] not in new_ids:
-                    continue
-                seq = e["sequence_number"]
-                if seq is None:
-                    seq = mf["sequence_number"]
-                out.append(dict(e["data_file"], _seq=seq, _sid=sid))
-        return out
 
     def changelog(self, spark, from_snapshot_id: int,
                   to_snapshot_id: Optional[int] = None):
@@ -2641,57 +2567,32 @@ class IcebergTable:
         rewritten by compaction (REPLACE snapshots) are not changes and
         do not appear."""
         from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-        to_id = to_snapshot_id if to_snapshot_id is not None \
-            else self.current_snapshot_id()
-        chain = self._ancestors(to_id)
-        if from_snapshot_id not in chain:
-            raise ValueError(
-                f"{from_snapshot_id} is not an ancestor of {to_id}")
-        new_ids = set(chain[:chain.index(from_snapshot_id)])
+        to_id, new_ids = self._added_between(from_snapshot_id,
+                                             to_snapshot_id)
         cols = [f.name for f in self.spark_schema().fields]
-        new_dels = self._delete_files_added_in(new_ids, to_id)
-        ins_files = self.incremental_files(from_snapshot_id, to_id)
-        inserts = self._read_files_df(spark, ins_files, new_dels, False)
+        new_dels = list(self._entries(to_id, 1, added_by=new_ids))
+        inserts = self._read_files_df(
+            spark, list(self._entries(to_id, 0, added_by=new_ids)),
+            new_dels, False)
         out = inserts.select(F.lit("INSERT").alias("_change_type"),
                              *cols)
         base_files = self.scan_files(from_snapshot_id)
         if new_dels and base_files:
-            before = self._read_files_df(spark, base_files, [], True)
-            hits = []
-            pos_paths = [d["file_path"] for d in new_dels
-                         if d.get("content") == 1]
-            if pos_paths:
-                sub = T.StructType(
-                    [T.StructField("file_path", T.StringType()),
-                     T.StructField("pos", T.LongType())])
-                dels = (spark.read.schema(sub).parquet(*pos_paths)
-                        .distinct()
-                        .withColumnRenamed("file_path", "_file_path")
-                        .withColumnRenamed("pos", "_pos"))
-                hits.append(before.join(dels, ["_file_path", "_pos"],
-                                        "left_semi"))
-            eq_groups: Dict[Tuple, List[str]] = {}
-            cur_sid = self.metadata["current-schema-id"]
-            for d in new_dels:
-                if d.get("content") != 1 and d.get("equality_ids"):
-                    eq_groups.setdefault(
-                        (tuple(d["equality_ids"]),
-                         d.get("_sid", cur_sid)),
-                        []).append(d["file_path"])
-            for (ids, sid), paths in sorted(eq_groups.items()):
-                vals, keys = self._eq_delete_values(spark, paths, ids,
-                                                    sid)
-                hits.append(before.join(vals, keys, "left_semi"))
-            if hits:
-                removed = hits[0]
-                for h in hits[1:]:
-                    removed = removed.unionByName(h)
-                # (_file_path, _pos) is the physical row identity — a
-                # row hit by several delete files is one DELETE
-                removed = removed.dropDuplicates(["_file_path", "_pos"])
-                out = out.unionByName(removed.select(
-                    F.lit("DELETE").alias("_change_type"), *cols))
+            # the rows present at from: its own deletes applied, so a
+            # row an older delete removed is not removed again
+            before = self._read_files_df(
+                spark, base_files, self.scan_delete_files(from_snapshot_id),
+                True)
+            hits = [before.join(dels, keys, "left_semi") for dels, keys
+                    in self._delete_frames(spark, new_dels, self.schema())]
+            removed = hits[0]
+            for h in hits[1:]:
+                removed = removed.unionByName(h)
+            # (_file_path, _pos) is the physical row identity — a
+            # row hit by several delete files is one DELETE
+            removed = removed.dropDuplicates(["_file_path", "_pos"])
+            out = out.unionByName(removed.select(
+                F.lit("DELETE").alias("_change_type"), *cols))
         return out
 
 
@@ -2767,9 +2668,6 @@ class IcebergKgSink:
     def read_lineage(self, spark):
         return self._read(spark, "lineage")
 
-    def table(self, name: str) -> Optional[IcebergTable]:
-        return self._table(name)
-
     def stage(self, doc_ids) -> Dict[str, Any]:
         """Write ``doc_ids`` as the ``processed_docs`` data files of the
         next commit, unread until ``publish`` commits them."""
@@ -2820,9 +2718,9 @@ def overwrite_table(location: str, df, partition_by: Sequence[str] = ()
     if the table exists — previous snapshots stay time-travelable).  A
     ``df`` whose column names or types differ from the table's replaces
     the schema too, as the same job run with another option may write
-    another shape to one table (``run_kg --embeddings``); reads project
-    every snapshot into the current schema, so snapshots from before
-    that replace read as nulls."""
+    another shape to one table (``run_kg --embeddings``); a snapshot
+    from before that replace reads under the schema it was committed
+    with (``to_df(spark, snapshot_id=...)``)."""
     if IcebergTable.exists(location):
         t = IcebergTable.load(location)
         if t.spark_schema().simpleString() != _iceberg_to_spark_type(
@@ -2891,7 +2789,7 @@ def resumable_annotate_iceberg(spark, docs, bc, out_path: str,
     subset = docs.join(chosen, "doc_id", "left_semi")
     ann, lineage = annotate_with_lineage(subset, bc, num_partitions)
     ids = sink.publish(staged, ann, lineage, summary=hashes)
-    added = sink.table("annotations")._snapshot(ids["annotations"])
+    added = sink._table("annotations")._snapshot(ids["annotations"])
     manifest["n_annotations"] = int(added["summary"]["added-records"])
     manifest["wall_sec"] = time.monotonic() - t0
     manifest["snapshot_ids"] = ids

@@ -519,10 +519,11 @@ def test_overwrite_table_replaces_a_changed_schema(spark, triples_df,
                                                    tmp_path):
     """A REPLACE with other columns (run_kg --embeddings fastrp, then
     transe, into one table) reads back as the new rows under the new
-    schema; the same columns again add no schema."""
+    schema; the same columns again add no schema; time travel reads the
+    first snapshot under the schema it was committed with."""
     from medcat_spark.sources.iceberg import overwrite_table
     loc = str(tmp_path / "ow")
-    overwrite_table(loc, triples_df)
+    first = overwrite_table(loc, triples_df)
     other = triples_df.selectExpr("subj AS node", "length(obj) AS d")
     for _ in range(2):
         overwrite_table(loc, other)
@@ -530,6 +531,9 @@ def test_overwrite_table_replaces_a_changed_schema(spark, triples_df,
     assert [s["schema-id"] for s in t.metadata["schemas"]] == [0, 1]
     assert t.spark_schema().simpleString() == other.schema.simpleString()
     assert sorted(t.to_df(spark).collect()) == sorted(other.collect())
+    old = t.to_df(spark, snapshot_id=first)
+    assert old.schema.simpleString() == triples_df.schema.simpleString()
+    assert sorted(old.collect()) == sorted(triples_df.collect())
     part = str(tmp_path / "part")
     overwrite_table(part, triples_df, partition_by=["bucket"])
     with pytest.raises(ValueError, match="partitioned"):

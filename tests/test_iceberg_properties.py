@@ -5,7 +5,7 @@ the op log predicts (rename carries values, add null-fills, promote
 widens, drop removes without resurfacing)."""
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from medcat_spark.sources.iceberg import IcebergTable
@@ -103,6 +103,70 @@ def test_nested_evolution_any_op_sequence(spark, tmp_path_factory, ops):
             got[r.doc_id] = [None if sp is None else sp.asDict()
                              for sp in r.spans]
     assert got == _expected(a_name, b_present, added)
+
+
+# row-level ops on a (k, v) table; each commits at most one snapshot
+# (a delete that matches nothing commits none)
+ROW_OPS = st.lists(
+    st.tuples(st.sampled_from(["append", "delete_where",
+                               "delete_positions", "upsert"]),
+              st.integers(0, 3)),
+    min_size=1, max_size=3)
+
+
+def _run_row_op(spark, t: IcebergTable, step: int, op: str, k: int):
+    from pyspark.sql import functions as F
+    if op == "append":
+        t.append_dataframe(spark.createDataFrame(
+            [(k, f"a{step}"), (k + 1, f"a{step}")], "k int, v string"))
+    elif op == "delete_where":
+        t.delete_where(spark, F.col("k") == k, equality_cols=["k"])
+    elif op == "delete_positions":
+        t.delete_where_positions(spark, F.col("k") == k)
+    else:
+        t.upsert_dataframe(spark, spark.createDataFrame(
+            [(k, f"u{step}")], "k int, v string"), key_cols=["k"])
+
+
+@pytest.mark.usefixtures("spark")
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(ops=ROW_OPS)
+# a key deleted, then upserted: the upsert's equality delete must not
+# emit the row the first delete already removed
+@example(ops=[("delete_where", 1), ("upsert", 1)])
+def test_changelog_agrees_with_time_travel(spark, tmp_path_factory, ops):
+    """For every pair of snapshots i < j, as multisets: the DELETE rows
+    of changelog(i, j) are rows of to_df(i), and to_df(j) = to_df(i) -
+    DELETE + INSERT; over a range with no delete, incremental_read(i, j)
+    is the INSERT rows."""
+    from collections import Counter
+    loc = str(tmp_path_factory.mktemp("cdc") / "t")
+    base = spark.createDataFrame(
+        [(0, "x"), (1, "x"), (1, "y"), (2, "x")], "k int, v string")
+    t = IcebergTable.create(loc, base.schema)
+    t.append_dataframe(base)
+    for step, (op, k) in enumerate(ops):
+        _run_row_op(spark, t, step, op, k)
+    t = IcebergTable.load(loc)
+    snaps = t.snapshots()
+    rows = [Counter(tuple(r) for r in
+                    t.to_df(spark, snapshot_id=s["snapshot-id"]).collect())
+            for s in snaps]
+    for i, si in enumerate(snaps):
+        for j in range(i + 1, len(snaps)):
+            sj = snaps[j]["snapshot-id"]
+            cl = t.changelog(spark, si["snapshot-id"], sj).collect()
+            ins = Counter((r.k, r.v) for r in cl
+                          if r._change_type == "INSERT")
+            dels = Counter((r.k, r.v) for r in cl
+                           if r._change_type == "DELETE")
+            assert not dels - rows[i], (ops, i, j)
+            assert rows[i] - dels + ins == rows[j], (ops, i, j)
+            if all(s["summary"]["operation"] == "append"
+                   for s in snaps[i + 1:j + 1]):
+                inc = t.incremental_read(spark, si["snapshot-id"], sj)
+                assert Counter(tuple(r) for r in inc.collect()) == ins
 
 
 def test_bucket_transform_vectorized_matches_scalar():
